@@ -1,12 +1,11 @@
 from .scd1 import Scd1Result, scd1_changes, scd1_merge
 from .facts import append_dedup
-from .meta import watermark_of, upsert_watermark
+from .meta import upsert_watermark
 
 __all__ = [
     "Scd1Result",
     "scd1_changes",
     "scd1_merge",
     "append_dedup",
-    "watermark_of",
     "upsert_watermark",
 ]

@@ -31,8 +31,10 @@ def empty_meta(spark: SparkSession) -> DataFrame:
 
 def watermark_of(stg: DataFrame) -> object:
     """``coalesce(max(update_dt), max(create_dt))`` — the reference's
-    single aggregate (F1, main.py:362-364). Returns a python datetime
-    or None; collecting one scalar is the sanctioned driver-side read.
+    single aggregate (F1, main.py:362-364), as one eager job. Returns a
+    python datetime or None. ``pipeline.run_day`` observes the same two
+    maxima on its merge write instead; this form is the standalone
+    reference for that observation.
     """
     row = stg.agg(
         F.coalesce(F.max("update_dt"), F.max("create_dt")).alias("wm")

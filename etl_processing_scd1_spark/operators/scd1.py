@@ -15,25 +15,30 @@ where ``kept``    = dim rows whose key is in the snapshot and whose
                     history destroyed, the defining SCD1 property),
       ``new``     = staged keys absent from the dim.
 
-Scale design: one shuffle on the natural key serves all three legs —
-the dim⋈stg full-outer join below computes insert/update/delete
-classification in a single pass instead of the reference's three
-separate scans. Duplicate staging keys (undefined in the reference —
-Postgres UPDATE-from-join picks an arbitrary match) are resolved by
-an explicit deterministic policy: highest ``coalesce(update_dt,
-create_dt)``, then arbitrary-but-stable max over remaining columns.
-At 100 TB: the dim and snapshot co-shuffle on the key; with bucketed
-dim storage the exchange on the dim side disappears entirely.
+Scale design: ONE pass. The dim⋈stg full-outer join classifies every
+key as insert/update/delete/keep (one shuffle on the natural key
+instead of the reference's three scans), and the new dimension is a
+single filter + per-column ``when(marker …)`` projection over that
+classification — no union of per-leg branches, no cache. The per-leg
+counts ride on the same pass as an ``Observation``, so writing the
+merged frame is the only action a merge costs. Duplicate staging keys
+(undefined in the reference — Postgres UPDATE-from-join picks an
+arbitrary match) are resolved by an explicit deterministic policy:
+highest ``coalesce(update_dt, create_dt)``, then arbitrary-but-stable
+max over remaining columns. At 100 TB: the dim and snapshot co-shuffle
+on the key; with bucketed dim storage the exchange on the dim side
+disappears entirely.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions import null_safe_differs
+from ..observe import ensure_ran, observed
 
 _MARKER = "__scd1_action__"
 
@@ -57,34 +62,29 @@ def _dedup_staging(stg: DataFrame, key: str, order_col: Column) -> DataFrame:
 
 @dataclass
 class Scd1Result:
-    """Merged dimension plus per-leg row classification.
+    """Merged dimension plus the per-leg row classification.
 
-    ``cached`` is the persisted classification frame all four legs
-    share; callers MUST call :meth:`unpersist` once the legs are
-    materialized (counts read, merged frame written) — otherwise each
-    merge leaks one dim-sized cache for the session lifetime, which
-    under a streaming foreachBatch sink accumulates per micro-batch.
+    ``merged`` is the new dimension: one filter + projection over the
+    classification join, carrying an ``Observation`` of the leg counts.
+    Writing it is the only action a merge needs; :meth:`counts` then
+    reads the observation. ``inserted``/``updated``/``deleted`` are
+    lazy filters over the same classification for callers that want
+    the legs themselves (each is its own scan when acted on). Nothing
+    is cached, so there is nothing to release.
     """
 
     merged: DataFrame
     inserted: DataFrame
     updated: DataFrame
     deleted: DataFrame
-    cached: DataFrame | None = None
+    observation: Observation
 
     def counts(self) -> dict[str, int]:
-        return {
-            "inserted": self.inserted.count(),
-            "updated": self.updated.count(),
-            "deleted": self.deleted.count(),
-            "rows": self.merged.count(),
-        }
-
-    def unpersist(self) -> None:
-        """Release the shared classification cache (idempotent)."""
-        if self.cached is not None:
-            self.cached.unpersist()
-            self.cached = None
+        """Leg and output row counts, from the observation on
+        ``merged`` — free after ``merged`` was written; otherwise it
+        runs ``merged`` once through the ``noop`` sink."""
+        ensure_ran(self.observation, self.merged)
+        return observed(self.observation, inserted=0, updated=0, deleted=0, rows=0)
 
 
 def scd1_changes(
@@ -155,58 +155,62 @@ def scd1_merge(
     stg = _dedup_staging(stg, key, order_col)
 
     changes = scd1_changes(dim, stg, key, compare_cols)
-    # One wide classification frame feeds all four legs; cache it so
-    # the join executes once even though four outputs consume it.
-    changes = changes.persist()
+    action = F.col(_MARKER)
+    is_insert, is_update, is_delete = (
+        action == "insert", action == "update", action == "delete"
+    )
+    null_ts = F.lit(None).cast("timestamp")
 
-    business = [key] + compare_cols
-
-    def stg_side(extra: list[Column]) -> list[Column]:
-        return [F.col(f"stg__{c}").alias(c) for c in business] + extra
-
-    inserted = changes.filter(F.col(_MARKER) == "insert").select(
-        stg_side(
+    # per output column: its value on an inserted and on an updated
+    # row; kept (and, without delete_missing, deleted) rows keep dim__*
+    stg_side = {c: F.col(f"stg__{c}") for c in [key] + compare_cols}
+    on_insert = {
+        **stg_side,
+        "create_dt": (
+            F.coalesce(F.col("stg__update_dt"), F.col("stg__create_dt"))
+            if has_tech
+            else null_ts
+        ),
+        "update_dt": null_ts,
+        "processed_dt": processed_dt,
+    }
+    on_update = {
+        **stg_side,
+        "create_dt": F.col("dim__create_dt"),
+        "update_dt": F.col("stg__update_dt") if has_tech else null_ts,
+        "processed_dt": processed_dt,
+    }
+    observation = Observation()
+    survives = ~is_delete if delete_missing else F.lit(True)
+    merged = (
+        changes.observe(
+            observation,
+            F.count(F.when(is_insert, 1)).alias("inserted"),
+            F.count(F.when(is_update, 1)).alias("updated"),
+            F.count(F.when(is_delete, 1)).alias("deleted"),
+            F.count(F.when(survives, 1)).alias("rows"),
+        )
+        .filter(survives)
+        .select(
             [
-                (
-                    F.coalesce(F.col("stg__update_dt"), F.col("stg__create_dt"))
-                    if has_tech
-                    else F.lit(None).cast("timestamp")
-                ).alias("create_dt"),
-                F.lit(None).cast("timestamp").alias("update_dt"),
-                processed_dt.alias("processed_dt"),
+                F.when(is_insert, on_insert[c])
+                .when(is_update, on_update[c])
+                .otherwise(F.col(f"dim__{c}"))
+                .alias(c)
+                for c in dim.columns
             ]
         )
     )
-    updated = changes.filter(F.col(_MARKER) == "update").select(
-        stg_side(
-            [
-                F.col("dim__create_dt").alias("create_dt"),
-                (
-                    F.col("stg__update_dt")
-                    if has_tech
-                    else F.lit(None).cast("timestamp")
-                ).alias("update_dt"),
-                processed_dt.alias("processed_dt"),
-            ]
-        )
-    )
-    kept = changes.filter(F.col(_MARKER) == "keep").select(
-        [F.col(f"dim__{c}").alias(c) for c in dim.columns]
-    )
-    deleted = changes.filter(F.col(_MARKER) == "delete").select(
-        [F.col(f"dim__{c}").alias(c) for c in dim.columns]
-    )
-
-    out_cols = dim.columns
-    merged = kept.select(out_cols).unionByName(updated.select(out_cols)).unionByName(
-        inserted.select(out_cols)
-    )
-    if not delete_missing:
-        merged = merged.unionByName(deleted.select(out_cols))
     return Scd1Result(
         merged=merged,
-        inserted=inserted,
-        updated=updated,
-        deleted=deleted,
-        cached=changes,
+        inserted=changes.filter(is_insert).select(
+            [e.alias(c) for c, e in on_insert.items()]
+        ),
+        updated=changes.filter(is_update).select(
+            [e.alias(c) for c, e in on_update.items()]
+        ),
+        deleted=changes.filter(is_delete).select(
+            [F.col(f"dim__{c}").alias(c) for c in dim.columns]
+        ),
+        observation=observation,
     )

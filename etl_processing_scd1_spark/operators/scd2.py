@@ -46,8 +46,7 @@ class Scd2Result:
     """Merged dimension plus the per-leg version movements.
 
     ``cached`` is the persisted classification all legs share —
-    callers MUST :meth:`unpersist` once the legs are materialized
-    (same contract as :class:`Scd1Result`)."""
+    callers MUST :meth:`unpersist` once the legs are materialized."""
 
     merged: DataFrame
     opened: DataFrame

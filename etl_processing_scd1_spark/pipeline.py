@@ -18,13 +18,16 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StructField, StructType
 
 from . import schemas
-from .operators import append_dedup, scd1_merge, upsert_watermark, watermark_of
+from .observe import observed
+from .operators import append_dedup, scd1_merge, upsert_watermark
 from .operators.meta import empty_meta
 from .plans import fraud_type1, fraud_type2, fraud_type3
+from .plans.fraud import EVENT_TYPES
 from .sources import read_blacklist_excel, read_transactions_csv, read_xlsx
 from .sources.readers import archive_file, scan_drop_dir
 from .storage import Warehouse
@@ -114,27 +117,31 @@ def run_day(
             staged[name] = src
 
     # ---- transform: SCD1 merge per dimension (G1-G3) --------------------
+    # One action per output table — its write. Every report number is
+    # an Observation riding on that write, not a count()/agg job.
     for dim_name in ("terminals", "clients", "accounts", "cards"):
         if dim_name not in staged:
             continue
         dim = warehouse.read(dim_name, schemas.WAREHOUSE[dim_name])
+        # watermark per staging table (G5) — and unlike the reference,
+        # consumed next run to bound the extract. Observed on the RAW
+        # staged frame, as the reference aggregates its staging table:
+        # after the merge's duplicate-key dedup the dropped rows'
+        # timestamps would no longer count.
+        wm = Observation()
         res = scd1_merge(
             dim,
-            staged[dim_name],
+            staged[dim_name].observe(
+                wm, F.coalesce(F.max("update_dt"), F.max("create_dt")).alias("wm")
+            ),
             key=schemas.DIM_KEYS[dim_name],
             compare_cols=schemas.compare_cols(dim_name),
             processed_dt=processed,
         )
-        report.dim_counts[dim_name] = res.counts()
         warehouse.stage(dim_name, res.merged)
-        # counts + stage materialized every leg — release the shared
-        # classification cache (leaks one dim-sized cache per merge
-        # otherwise)
-        res.unpersist()
-        # watermark per staging table (G5) — and unlike the reference,
-        # consumed next run to bound the extract.
+        report.dim_counts[dim_name] = res.counts()
         meta = upsert_watermark(
-            spark, meta, "warehouse", dim_name, watermark_of(staged[dim_name])
+            spark, meta, "warehouse", dim_name, observed(wm, wm=None)["wm"]
         )
 
     # ---- facts: append-dedup (G4) ---------------------------------------
@@ -145,34 +152,29 @@ def run_day(
     for fact_name, id_col in fact_specs.items():
         if fact_name not in staged:
             continue
-        fact = warehouse.read(fact_name, schemas.WAREHOUSE[fact_name])
-        # Incremental dedup: the anti join's fact side is pruned to
-        # the staged batch's day range (directory-level partition
-        # pruning on p_day). Exact under the source protocol —
-        # re-deliveries carry the same business dates (pdf p.5); a
-        # same-id-different-date corruption would bypass this prune.
-        fact_filter = None
-        if fact_name == "transactions" and "p_day" in fact.columns:
-            rng = staged[fact_name].agg(
-                F.min(F.to_date("trans_date")).alias("lo"),
-                F.max(F.to_date("trans_date")).alias("hi"),
-            ).first()
-            if rng["lo"] is not None:
-                fact_filter = F.col("p_day").between(rng["lo"], rng["hi"])
-        new_rows = append_dedup(
-            fact, staged[fact_name], id_col=id_col, fact_filter=fact_filter
-        )
-        report.fact_appended[fact_name] = new_rows.count()
+        batch = staged[fact_name]
+        schema, partition_cols, fact_filter = schemas.WAREHOUSE[fact_name], None, None
         if fact_name == "transactions":
-            # day-partitioned fact: scans filtered on p_day prune at
-            # the directory level (rule windows, incremental dedup)
-            warehouse.stage_append(
-                fact_name,
-                new_rows.withColumn("p_day", F.to_date("trans_date")),
-                partition_cols=["p_day"],
+            # Day-partitioned fact: scans filtered on p_day prune at the
+            # directory level (rule windows, incremental dedup). The
+            # anti join's fact side is pruned to the batch's day range;
+            # the bounds are scalar subqueries, evaluated inside the
+            # write's own execution. Exact under the source protocol —
+            # re-deliveries carry the same business dates (pdf p.5); a
+            # same-id-different-date corruption would bypass this prune.
+            batch = batch.withColumn("p_day", F.to_date("trans_date"))
+            schema = StructType(schema.fields + [StructField("p_day", DateType())])
+            partition_cols = ["p_day"]
+            fact_filter = F.col("p_day").between(
+                batch.select(F.min("p_day")).scalar(),
+                batch.select(F.max("p_day")).scalar(),
             )
-        else:
-            warehouse.stage_append(fact_name, new_rows)
+        appended = Observation()
+        new_rows = append_dedup(
+            warehouse.read(fact_name, schema), batch, id_col=id_col, fact_filter=fact_filter
+        ).observe(appended, F.count(F.lit(1)).alias("rows"))
+        warehouse.stage_append(fact_name, new_rows, partition_cols=partition_cols)
+        report.fact_appended[fact_name] = observed(appended, rows=0)["rows"]
 
     warehouse.stage("meta", meta)
 
@@ -196,15 +198,20 @@ def run_day(
         current("terminals"),
         current("blacklist"),
     )
+    events = Observation()
     new_events = (
         fraud_type1(tx, cards, accounts, clients, blacklist)
         .unionByName(fraud_type2(tx, cards, accounts, clients))
         .unionByName(fraud_type3(tx, cards, accounts, clients, terminals))
+        .observe(
+            events,
+            *[F.count(F.when(F.col("event_type") == t, 1)).alias(t) for t in EVENT_TYPES],
+        )
     )
-    for row in new_events.groupBy("event_type").count().collect():
-        report.fraud_events[row["event_type"]] = row["count"]
     # accumulating report: append-only, O(new events) per run (A10)
     warehouse.stage_append("rep_fraud", new_events)
+    # zero counts omitted, as a groupBy over the events would
+    report.fraud_events = {t: n for t, n in observed(events).items() if n}
 
     # ---- commit (G6) -----------------------------------------------------
     warehouse.publish(run_id=run_ts.strftime("%Y%m%d%H%M%S"))

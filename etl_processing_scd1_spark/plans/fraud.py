@@ -30,6 +30,7 @@ from ..functions import day_of, fio, hours_between, normalize_card_num, trim_key
 EVENT_EXPIRED_OR_BLACKLISTED = "1"
 EVENT_EXPIRED_CONTRACT = "2"
 EVENT_CITY_VELOCITY = "3"
+EVENT_TYPES = (EVENT_EXPIRED_OR_BLACKLISTED, EVENT_EXPIRED_CONTRACT, EVENT_CITY_VELOCITY)
 
 
 def star_denormalize(

@@ -26,9 +26,9 @@ QUERIES, ORACLES, register = make_registry()
 def _leg(frame: DataFrame, res) -> DataFrame:
     """Ride the merge's persisted classification frame on the returned
     leg via the attach/release contract — evidence queries hand out one
-    leg of an Scd1Result/Scd2Result, and without the attachment the
-    persist outlives the consumer's action until the ContextCleaner
-    happens to GC it."""
+    leg of an Scd2Result, and without the attachment the persist
+    outlives the consumer's action until the ContextCleaner happens to
+    GC it."""
     if res.cached is not None:
         return attach_cache(frame, res.cached)
     return frame
@@ -109,8 +109,7 @@ def scd1_insert_new(spark: SparkSession, sf_dir: str) -> DataFrame:
     (main.py:146-161). create_dt := coalesce(stg.update_dt,
     stg.create_dt) = NULL here because file-style staging carries no
     technical columns (the reference's terminals behave identically)."""
-    res = _merge(spark, sf_dir)
-    return _leg(res.inserted, res)
+    return _merge(spark, sf_dir).inserted
 
 
 @register(
@@ -133,8 +132,7 @@ def scd1_update_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     (main.py:183-324, the reference's largest SQL block, 142 lines
     for 4 dims — here one parametrized operator). Overwrite
     semantics: staged values win, create_dt preserved."""
-    res = _merge(spark, sf_dir)
-    return _leg(res.updated, res)
+    return _merge(spark, sf_dir).updated
 
 
 @register(
@@ -154,8 +152,7 @@ def scd1_delete_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
     full snapshot (main.py:329-343; the reference stages a key-only
     ``*_del`` copy first, unnecessary here — the anti join runs on
     the staging frame directly, SURVEY §4)."""
-    res = _merge(spark, sf_dir)
-    return _leg(res.deleted, res)
+    return _merge(spark, sf_dir).deleted
 
 
 @register(
@@ -191,8 +188,7 @@ def scd1_merge_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ONE recompute with a single key shuffle (SURVEY §2.G). This is
     the engine's replacement for the reference's three-statement
     in-place mutation."""
-    res = _merge(spark, sf_dir)
-    return _leg(res.merged, res)
+    return _merge(spark, sf_dir).merged
 
 
 SCD2_HIST_FROM = "2019-01-01 00:00:00"

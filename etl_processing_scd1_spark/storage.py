@@ -123,16 +123,22 @@ class Warehouse:
         """Live table; empty frame with ``schema`` when absent (first
         run bootstraps every table from empty).
 
+        The table is read with the schema recorded beside its data
+        (``_schema.json``, written at stage time and moved with the
+        data at publish), so a read runs no Parquet footer-inference
+        job; a table without the record (written by something other
+        than this class) falls back to inference.
+
         When ``schema`` is given and the table exists, the stored
         frame is ALIGNED to it — schema evolution support: columns
         added to a dimension since the last publish read as typed
         NULLs from the old snapshot (so the next scd1_merge classifies
         them as ordinary updates instead of crashing on resolution),
         stored-but-no-longer-requested columns are dropped, and column
-        order follows the schema. Physical types are left untouched —
-        a true type CHANGE (e.g. int→string) is a migration, not
-        evolution, and should fail loudly at the consumer rather than
-        be silently cast here.
+        order follows the schema. A true type CHANGE (e.g. int→date)
+        is a migration, not evolution: it raises TypeError here — a
+        Parquet scan told to read an int column as a date would
+        silently return day offsets from 1970 instead.
 
         The only silently-tolerated degenerate state is a directory
         holding NO parquet parts (an append-created table whose first
@@ -148,13 +154,19 @@ class Warehouse:
         if self.exists(name):
             live = self._live(name)
             if self._has_parquet_parts(live):
-                df = self.spark.read.parquet(live)
-                if schema is not None and df.columns != [f.name for f in schema.fields]:
-                    stored = set(df.columns)
+                stored = self._recorded_schema(live)
+                reader = self.spark.read if stored is None else self.spark.read.schema(stored)
+                df = reader.parquet(live)
+                if schema is None:
+                    return df
+                stored = stored or df.schema
+                _check_types(name, stored, schema)
+                if df.columns != [f.name for f in schema.fields]:
+                    have = set(df.columns)
                     df = df.select(
                         *[
                             F.col(f.name)
-                            if f.name in stored
+                            if f.name in have
                             else F.lit(None).cast(f.dataType).alias(f.name)
                             for f in schema.fields
                         ]
@@ -163,6 +175,37 @@ class Warehouse:
         if schema is None:
             raise FileNotFoundError(f"table {name} absent and no schema given")
         return self.spark.createDataFrame([], schema=schema)
+
+    _SCHEMA = "_schema.json"
+
+    def _recorded_schema(self, path: str) -> StructType | None:
+        side = os.path.join(path, self._SCHEMA)
+        if not os.path.isfile(side):
+            return None
+        with open(side) as fh:
+            return StructType.fromJson(json.load(fh))
+
+    def _record_schema(self, path: str, schema: StructType) -> None:
+        # underscore-prefixed: Spark/Hadoop readers skip it as hidden
+        tmp = os.path.join(path, "._schema.tmp")
+        with open(tmp, "w") as fh:
+            json.dump(schema.jsonValue(), fh)
+        os.replace(tmp, os.path.join(path, self._SCHEMA))
+
+    def _append_schema(self, name: str, batch: StructType) -> StructType:
+        """Schema of append table ``name`` once ``batch`` is added: the
+        live record plus the columns the batch adds (older files read
+        them as NULL). A column whose type changed raises TypeError —
+        before any file is written when called from stage_append."""
+        live = self._live(name)
+        prior = self._recorded_schema(live)
+        if prior is None and self._has_parquet_parts(live):
+            prior = self.spark.read.parquet(live).schema  # unrecorded table: infer once
+        if prior is None:
+            return batch
+        _check_types(name, prior, batch)
+        have = set(prior.names)
+        return StructType(prior.fields + [f for f in batch.fields if f.name not in have])
 
     def staged_view(self, name: str) -> DataFrame | None:
         """Read-back of a table staged in THIS run (full-table stage
@@ -185,7 +228,7 @@ class Warehouse:
             if name.endswith("@append"):
                 return None
             return self.spark.createDataFrame([], schema=self._staged_schema[name])
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(self._staged_schema[name]).parquet(path)
 
     # -- staged writes + atomic publish ------------------------------------
 
@@ -193,9 +236,11 @@ class Warehouse:
         """Materialize ``df`` into the staging area (executor-parallel
         Parquet write — the bulk replacement for the reference's
         row-at-a-time executemany, main.py:64-66). Published as a
-        full-table swap."""
+        full-table swap; the schema record rides in the same directory,
+        so the swap never pairs data with another run's schema."""
         path = os.path.join(self.root, ".staging", name)
         df.write.mode("overwrite").parquet(path)
+        self._record_schema(path, df.schema)
         self._staged[name] = path
         self._staged_schema[name] = df.schema
 
@@ -355,11 +400,13 @@ class Warehouse:
         O(touched days).
         """
         path = os.path.join(self.root, ".staging", f"{name}@append")
+        self._append_schema(name, df.schema)  # a type change fails before the write
         writer = df.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(path)
         self._staged[f"{name}@append"] = path
+        self._staged_schema[f"{name}@append"] = df.schema
 
     _INFLIGHT = "_inflight.json"
 
@@ -442,8 +489,14 @@ class Warehouse:
         inflight = self._begin_publish(run_id, prev_run_id)
         for name, staged in self._staged.items():
             if name.endswith("@append"):
-                live = self._live(name[: -len("@append")])
+                table = name[: -len("@append")]
+                live = self._live(table)
                 os.makedirs(live, exist_ok=True)
+                # record first: a crash before the moves leaves a
+                # superset schema, whose extra columns read as NULL
+                self._record_schema(
+                    live, self._append_schema(table, self._staged_schema[name])
+                )
                 moved = 0
                 # walk preserves hive partition subdirectories
                 # (day=2021-03-01/part-...) so pruning works live
@@ -705,6 +758,9 @@ class Warehouse:
             for f in list(os.listdir(staged)):
                 if not f.endswith(".parquet"):
                     os.remove(os.path.join(staged, f))
+            if rel == "." and os.path.isfile(os.path.join(dirpath, self._SCHEMA)):
+                # the leaf is the table root: keep its schema record
+                shutil.copy2(os.path.join(dirpath, self._SCHEMA), staged)
             # preserve append-run stamps: outputs inherit the NEWEST
             # source stamp so read_as_of keeps working for runs ≥ it
             matches = [stamp.fullmatch(f) for f in parts]
@@ -748,3 +804,19 @@ class Warehouse:
 
     def _live(self, name: str) -> str:
         return os.path.join(self.root, name)
+
+
+def _check_types(name: str, stored: StructType, wanted: StructType) -> None:
+    """Raise TypeError when a column of ``wanted`` exists in ``stored``
+    with another type (nullability and field metadata aside)."""
+    have = {f.name: f.dataType.simpleString() for f in stored.fields}
+    changed = [
+        f"{f.name}: {have[f.name]} -> {f.dataType.simpleString()}"
+        for f in wanted.fields
+        if f.name in have and have[f.name] != f.dataType.simpleString()
+    ]
+    if changed:
+        raise TypeError(
+            f"table {name!r}: column type change is a migration, not schema "
+            f"evolution ({', '.join(changed)})"
+        )

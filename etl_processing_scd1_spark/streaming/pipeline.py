@@ -114,16 +114,12 @@ def streaming_scd1_sink(
     batch and streaming."""
 
     def merge_batch(batch: DataFrame, _batch_id: int) -> None:
-        res = scd1_merge(
-            read_dim(), batch, key=key, compare_cols=compare_cols,
-            delete_missing=False,
+        write_dim(
+            scd1_merge(
+                read_dim(), batch, key=key, compare_cols=compare_cols,
+                delete_missing=False,
+            ).merged
         )
-        try:
-            write_dim(res.merged)
-        finally:
-            # without this every micro-batch leaks one cached
-            # classification frame for the life of the stream
-            res.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(merge_batch)

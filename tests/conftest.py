@@ -22,6 +22,21 @@ def persistent_rdd_ids(spark) -> set[int]:
     }
 
 
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group (AQE stage
+    jobs inherit it from the submitting thread)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{id(fn)}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store trails the jobs
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from etl_processing_scd1_spark.session import get_spark

@@ -13,6 +13,7 @@ import pytest
 
 from etl_processing_scd1_spark.pipeline import run_day
 from etl_processing_scd1_spark.storage import Warehouse
+from .conftest import spark_jobs
 from .xlsx_util import write_xlsx
 
 DAYS = [dt.date(2021, 3, 1), dt.date(2021, 3, 2), dt.date(2021, 3, 3)]
@@ -191,3 +192,64 @@ def test_backlog_single_run_processes_all_days(spark, tmp_path, bank):
     assert terms["P3"]["terminal_address"] == "addr3-NEWER"
     # velocity rule sees the full 3-day history in one pass
     assert rep.fraud_events.get("3", 0) == 3
+
+
+#: jobs the same day cost (local[4]) while run_day still probed its
+#: numbers with jobs of their own: a count() per SCD1 leg, an agg per
+#: watermark, a count per fact, a groupBy of the fraud events and a
+#: schema-inference job per table read
+PROBE_JOBS_PER_DAY = 113
+
+
+def test_run_day_job_count(spark, tmp_path, bank):
+    """One action per output table: a non-bootstrap run_day writes 4
+    dims, meta, 2 fact increments and the fraud report, and reads every
+    number it reports from Observations on those writes."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    drop = str(tmp_path / "drop")
+    os.makedirs(drop)
+    for i in (0, 1):
+        _write_day_files(drop, i)
+
+    def day(i: int):
+        return run_day(
+            spark, wh, drop_dir=drop, bank_sources=bank,
+            run_ts=dt.datetime.combine(DAYS[i], dt.time(23, 55)), day=DAYS[i],
+        )
+
+    day(0)  # bootstrap
+    jobs = spark_jobs(spark, lambda: day(1))
+    assert jobs <= 0.4 * PROBE_JOBS_PER_DAY, jobs
+
+
+def test_fact_anti_join_prunes_fact_days(spark, tmp_path, bank):
+    """The incremental dedup's anti join scans only the fact days the
+    staged batch covers: the fact-side scan of the transactions table
+    carries a p_day partition filter (bounded by the batch's min/max
+    day, evaluated as subqueries inside the write)."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    drop = str(tmp_path / "drop")
+    os.makedirs(drop)
+    plans = {}
+    stage_append = wh.stage_append
+
+    def spy(name, df, partition_cols=None):
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        stage_append(name, df, partition_cols=partition_cols)
+
+    wh.stage_append = spy
+    for i in (0, 1):
+        _write_day_files(drop, i)
+        report = run_day(
+            spark, wh, drop_dir=drop, bank_sources=bank,
+            run_ts=dt.datetime.combine(DAYS[i], dt.time(23, 55)), day=DAYS[i],
+        )
+    # the increment's only Parquet scan is the fact side of the anti join
+    fact_scans = [
+        line for line in plans["transactions"].splitlines() if "FileScan parquet" in line
+    ]
+    assert len(fact_scans) == 1, plans["transactions"]
+    partition_filters = fact_scans[0].split("PartitionFilters: [", 1)[1]
+    assert partition_filters.startswith("isnotnull(p_day#"), fact_scans[0]
+    assert "(p_day#" in partition_filters and ">= Subquery" in partition_filters
+    assert report.fact_appended["transactions"] == 10

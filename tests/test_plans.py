@@ -59,9 +59,10 @@ def test_orderby_limit_avoids_global_sort(spark):
 
 def test_scd1_merge_is_single_join_pass(spark):
     plan = plan_of(spark, "scd1_merge_full")
-    # one full-outer join classifies all four legs; the union must not
-    # re-join per leg (the reference runs three separate statements)
-    assert plan.count("FullOuter") <= 3  # one per union branch, same cached join
+    # one full-outer join classifies all four legs and one projection
+    # over it builds the new dim (the reference runs three statements)
+    assert plan.count("FullOuter") == 1
+    assert "InMemoryTableScan" not in plan  # nothing cached
 
 
 def test_velocity_rule_single_window_shuffle(spark):

@@ -22,7 +22,10 @@ from etl_processing_scd1_spark.storage import Warehouse
 from .conftest import persistent_rdd_ids
 
 
-def test_scd1_merge_unpersists_cache(spark):
+def test_scd1_merge_counts_and_write_persist_nothing(spark, tmp_path):
+    """One pass, no cache: a merge, its counts and the write of the
+    merged frame leave no new persisted RDD behind — there is nothing
+    for a caller (or a streaming micro-batch) to release."""
     dim = spark.createDataFrame(
         [(1, "a", dt.datetime(2021, 3, 1), None, dt.datetime(2021, 3, 1))],
         "k int, v string, create_dt timestamp, update_dt timestamp, processed_dt timestamp",
@@ -36,10 +39,9 @@ def test_scd1_merge_unpersists_cache(spark):
     )
     before = persistent_rdd_ids(spark)
     res = scd1_merge(dim, stg, key="k", compare_cols=["v"])
+    res.merged.write.parquet(str(tmp_path / "merged"))
     assert res.counts() == {"inserted": 1, "updated": 1, "deleted": 0, "rows": 2}
-    assert persistent_rdd_ids(spark) - before  # cache live while legs consumed
-    res.unpersist()
-    res.unpersist()  # idempotent
+    assert spark.read.parquet(str(tmp_path / "merged")).count() == 2
     assert persistent_rdd_ids(spark) - before == set()
 
 

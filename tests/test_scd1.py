@@ -47,7 +47,6 @@ def test_snapshot_merge_classifies_all_legs(spark):
     assert merged["A2"]["terminal_address"] == "CHANGED"  # overwrite (SCD1)
     assert merged["A1"]["create_dt"] == TS                # kept untouched
     assert merged["A9"]["update_dt"] is None              # G1: insert update_dt NULL
-    res.unpersist()
 
 
 def test_idempotence_same_snapshot_is_noop(spark):
@@ -60,8 +59,6 @@ def test_idempotence_same_snapshot_is_noop(spark):
     assert sorted(map(tuple, first.merged.collect())) == sorted(
         map(tuple, second.merged.collect())
     )
-    first.unpersist()
-    second.unpersist()
 
 
 def test_null_transition_detected(spark):
@@ -72,7 +69,6 @@ def test_null_transition_detected(spark):
     res = scd1_merge(dim, stg, "terminal_id", COMPARE, processed_dt=_p())
     assert res.counts()["updated"] == 1
     assert res.merged.collect()[0]["terminal_address"] is None
-    res.unpersist()
 
 
 def test_duplicate_staging_keys_deterministic(spark):
@@ -89,7 +85,6 @@ def test_duplicate_staging_keys_deterministic(spark):
     for _ in range(3):
         res = scd1_merge(dim, stg, "terminal_id", COMPARE, processed_dt=_p())
         assert [r["terminal_address"] for r in res.merged.collect()] == ["fresh"]
-        res.unpersist()
 
 
 def test_delete_missing_false_keeps_absent_keys(spark):
@@ -99,4 +94,3 @@ def test_delete_missing_false_keeps_absent_keys(spark):
         dim, stg, "terminal_id", COMPARE, processed_dt=_p(), delete_missing=False
     )
     assert res.merged.count() == 2  # A2 survives increment-style staging
-    res.unpersist()

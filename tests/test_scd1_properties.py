@@ -74,7 +74,6 @@ def test_merge_matches_model(spark, dim, stg):
     assert n_upd == sum(
         1 for k in set(dim) & set(stg) if dim[k] != stg[k]
     )
-    res.unpersist()
 
 
 @settings(
@@ -96,4 +95,3 @@ def test_merge_self_snapshot_is_identity(spark, table):
     # audit columns untouched on kept rows
     for r in res.merged.collect():
         assert r["create_dt"] == TS and r["processed_dt"] == TS
-    res.unpersist()

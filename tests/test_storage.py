@@ -8,6 +8,8 @@ import os
 
 from etl_processing_scd1_spark.storage import Warehouse
 
+from .conftest import spark_jobs
+
 
 def test_swap_and_append_publish(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
@@ -164,6 +166,7 @@ def test_compact_unpartitioned_append_table(spark, tmp_path):
     stats = wh.compact("rep", max_files=1)
     assert stats["partitions_compacted"] == 1
     assert len(_parquet_files(live)) == 1
+    assert os.path.isfile(os.path.join(live, "_schema.json"))  # the swap kept the record
     assert sorted(r["x"] for r in wh.read("rep").collect()) == [0, 1, 2, 3, 4]
     # and the table is still append-able afterwards
     wh.stage_append("rep", spark.createDataFrame([(9,)], "x int"))
@@ -468,3 +471,62 @@ def test_compact_preserves_run_stamps_for_time_travel(spark, tmp_path):
         wh.read_as_of("facts", "r1")
     # plain reads unaffected by the floor sidecar
     assert wh.read("facts").count() == 7
+
+
+def test_read_rejects_type_change(spark, tmp_path):
+    """A stored ``id int`` requested as ``id date`` is a migration: the
+    read raises instead of handing the mismatch to a Parquet scan,
+    which (told the column is a date) returns day offsets from 1970."""
+    import datetime as dt
+
+    import pytest
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.stage("dim", spark.createDataFrame([(1, "a")], "id int, v string"))
+    wh.publish(run_id="r1")
+    live = str(tmp_path / "wh" / "dim")
+    # what a schema-on-read scan does with the mismatch on its own
+    assert spark.read.schema("id date, v string").parquet(live).collect()[0]["id"] == dt.date(1970, 1, 2)
+    with pytest.raises(TypeError, match="id: int -> date"):
+        wh.read("dim", "id date, v string")
+    # appending a batch that changes a column's type fails before any write
+    wh.stage_append("fact", spark.createDataFrame([(1,)], "x int"))
+    wh.publish(run_id="r2")
+    with pytest.raises(TypeError, match="x: int -> string"):
+        wh.stage_append("fact", spark.createDataFrame([("1",)], "x string"))
+
+
+def test_reads_run_no_schema_inference_job(spark, tmp_path):
+    """Tables are read with the schema recorded at stage time: a live
+    read (full or append table, partitioned or not) and a same-run
+    staged read start no Spark job."""
+    import datetime as dt
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    dim = spark.createDataFrame([(1, "a")], "id int, v string")
+    fact = spark.createDataFrame([(1, dt.date(2021, 3, 1))], "x int, p_day date")
+    wh.stage("dim", dim)
+    wh.stage_append("fact", fact, partition_cols=["p_day"])
+    wh.publish(run_id="r1")
+    wh.stage("dim", dim)
+    wh.stage_append("fact", fact, partition_cols=["p_day"])
+    frames = []
+    jobs = spark_jobs(
+        spark,
+        lambda: frames.extend(
+            [
+                wh.read("dim", "id int, v string"),
+                wh.read("fact"),
+                wh.read("fact", "x int, p_day date"),
+                wh.staged_view("dim"),
+                wh.staged_view("fact@append"),
+            ]
+        ),
+    )
+    assert jobs == 0
+    dim_cols, fact_cols = ["id", "v"], ["x", "p_day"]
+    assert [f.columns for f in frames] == [dim_cols, fact_cols, fact_cols, dim_cols, fact_cols]
+    assert frames[1].schema["p_day"].dataType.simpleString() == "date"
+    assert [f.count() for f in frames] == [1, 1, 1, 1, 1]
+    wh.publish(run_id="r2")
+    assert wh.read("fact").count() == 2
