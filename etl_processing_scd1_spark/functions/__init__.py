@@ -6,7 +6,6 @@ from .scalars import (
     filename_business_date,
     hours_between,
     normalize_card_num,
-    null_safe_differs,
     trim_key,
 )
 
@@ -18,6 +17,5 @@ __all__ = [
     "filename_business_date",
     "hours_between",
     "normalize_card_num",
-    "null_safe_differs",
     "trim_key",
 ]

@@ -10,9 +10,6 @@ into the surrounding codegen stage and add no shuffle at any scale.
 
 from __future__ import annotations
 
-from functools import reduce
-from typing import Iterable
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
@@ -99,17 +96,3 @@ def hours_between(ts_a: Column | str, ts_b: Column | str) -> Column:
     a = F.col(ts_a) if isinstance(ts_a, str) else ts_a
     b = F.col(ts_b) if isinstance(ts_b, str) else ts_b
     return (F.unix_timestamp(a) - F.unix_timestamp(b)) / F.lit(3600.0)
-
-
-def null_safe_differs(left_prefix_cols: Iterable[tuple[Column, Column]]) -> Column:
-    """OR-fold of per-column null-safe inequality.
-
-    Reference B4 (main.py:201-209 etc.) hand-expands
-    ``a <> b OR (a IS NULL AND b IS NOT NULL) OR ...`` per column;
-    Spark's ``eqNullSafe`` (``<=>``) collapses each clause to
-    ``~(a <=> b)``. Used by the SCD1 update-detection join.
-    """
-    clauses = [~a.eqNullSafe(b) for a, b in left_prefix_cols]
-    if not clauses:
-        return F.lit(False)
-    return reduce(lambda x, y: x | y, clauses)

@@ -8,17 +8,22 @@ never uses them; this engine's extract path (sources.read_jdbc_table)
 and fact pruning (facts.append_dedup fact_filter) consume them — the
 watermark actually makes loads incremental here.
 
-The meta table is tiny (one row per table): kept as a driver-side
-recompute — union the new watermark row, groupBy max — and written
-atomically. No scale concern by construction.
+The meta table is tiny (one row per table): kept as a recompute —
+one run's watermarks enter as ONE driver-side seed relation (an Arrow
+``LocalRelation``, no Python worker), unioned onto the stored rows and
+reduced by one groupBy max (one shuffle per run, not one per table) —
+and written atomically. No scale concern by construction.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 SENTINEL = dt.datetime(1900, 1, 1)
 
@@ -26,7 +31,7 @@ _META_SCHEMA = "schema_name string, table_name string, max_update_dt timestamp"
 
 
 def empty_meta(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schema=_META_SCHEMA)
+    return local_frame(spark, [], _META_SCHEMA)
 
 
 def watermark_of(stg: DataFrame) -> object:
@@ -46,14 +51,19 @@ def upsert_watermark(
     spark: SparkSession,
     meta: DataFrame,
     schema_name: str,
-    table_name: str,
-    new_wm: dt.datetime | None,
+    watermarks: Mapping[str, dt.datetime | None],
 ) -> DataFrame:
     """Seed-if-absent (B7 NOT EXISTS → union distinct on key) then
     advance ``max_update_dt`` monotonically (never regress — re-runs
-    with stale staging keep the high-water mark)."""
-    seed = spark.createDataFrame(
-        [(schema_name, table_name, new_wm or SENTINEL)], schema=_META_SCHEMA
+    with stale staging keep the high-water mark), for every
+    ``table_name → watermark`` of one run at once: a NULL watermark
+    seeds ``SENTINEL``. One seed relation, one groupBy."""
+    if not watermarks:
+        return meta
+    seed = local_frame(
+        spark,
+        [(schema_name, table, wm or SENTINEL) for table, wm in watermarks.items()],
+        _META_SCHEMA,
     )
     return (
         meta.unionByName(seed)

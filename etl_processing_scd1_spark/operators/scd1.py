@@ -18,7 +18,7 @@ where ``kept``    = dim rows whose key is in the snapshot and whose
 Scale design: ONE pass. The dim⋈stg full-outer join classifies every
 key as insert/update/delete/keep (one shuffle on the natural key
 instead of the reference's three scans), and the new dimension is a
-single filter + per-column ``when(marker …)`` projection over that
+single filter + per-column ``CASE marker …`` projection over that
 classification — no union of per-leg branches, no cache. The per-leg
 counts ride on the same pass as an ``Observation``, so writing the
 merged frame is the only action a merge costs. Duplicate staging keys
@@ -28,36 +28,53 @@ highest ``coalesce(update_dt, create_dt)``, then arbitrary-but-stable
 max over remaining columns. At 100 TB: the dim and snapshot co-shuffle
 on the key; with bucketed dim storage the exchange on the dim side
 disappears entirely.
+
+Every expression is SQL text — the marker one ``CASE`` over an
+OR-fold of ``NOT (a <=> b)``, the dedup one ``row_number() OVER``,
+the projection one ``selectExpr`` — so a merge build makes a few
+hundred py4j round trips instead of a dozen per column per
+``when``/``col``/``alias`` (each PySpark Column call captures its
+call site). Column names from the inputs are backtick-quoted by
+``_q`` alone.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..functions import null_safe_differs
 from ..observe import ensure_ran, observed
 
 _MARKER = "__scd1_action__"
+_PROCESSED = "__scd1_processed_dt__"
+_NULL_TS = "CAST(NULL AS TIMESTAMP)"
 
 
-def _dedup_staging(stg: DataFrame, key: str, order_col: Column) -> DataFrame:
+def _q(name: str) -> str:
+    """``name`` as a SQL identifier: backtick-quoted, inner backticks
+    doubled — the one place SQL text meets a column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _dedup_staging(stg: DataFrame, key: str, has_tech: bool) -> DataFrame:
     """Deterministic duplicate-key policy for staging input.
 
-    ``row_number`` over (key / order desc) keeps exactly one row per
-    key — the freshest by effective-change timestamp, tie-broken by
-    all remaining columns descending so the result is stable across
-    runs and partitionings.
+    ``row_number`` over (key / effective-change timestamp desc) keeps
+    exactly one row per key — the freshest by
+    ``coalesce(update_dt, create_dt)``, tie-broken by all remaining
+    columns descending so the result is stable across runs and
+    partitionings.
     """
-    others = [F.col(c).desc_nulls_last() for c in stg.columns]
-    w = Window.partitionBy(key).orderBy(order_col.desc_nulls_last(), *others)
-    return (
-        stg.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") == 1)
-        .drop("__rn__")
+    order = ["coalesce(`update_dt`, `create_dt`)"] if has_tech else []
+    order += [_q(c) for c in stg.columns]
+    rn = (
+        f"row_number() OVER (PARTITION BY {_q(key)} ORDER BY "
+        + ", ".join(f"{o} DESC NULLS LAST" for o in order)
+        + ") AS `__rn__`"
     )
+    return stg.selectExpr("*", rn).filter("`__rn__` = 1").drop("__rn__")
 
 
 @dataclass
@@ -99,23 +116,23 @@ def scd1_changes(
     Returns dim-side and stg-side columns prefixed ``dim__``/``stg__``
     plus the classification marker column. ``compare_cols`` are
     diffed with null-safe equality (B4: the reference hand-expands
-    the three-clause NULL expansion per column; ``eqNullSafe`` is the
-    Spark-native collapse).
+    the three-clause NULL expansion per column; ``NOT (a <=> b)`` is
+    the Spark-native collapse, OR-folded inside the marker's
+    ``CASE``).
     """
-    d = dim.select([F.col(c).alias(f"dim__{c}") for c in dim.columns])
-    s = stg.select([F.col(c).alias(f"stg__{c}") for c in stg.columns])
-    joined = d.join(s, d[f"dim__{key}"] == s[f"stg__{key}"], "full_outer")
-
-    differs = null_safe_differs(
-        [(F.col(f"dim__{c}"), F.col(f"stg__{c}")) for c in compare_cols]
+    d = dim.toDF(*[f"dim__{c}" for c in dim.columns])
+    s = stg.toDF(*[f"stg__{c}" for c in stg.columns])
+    dim_key, stg_key = _q(f"dim__{key}"), _q(f"stg__{key}")
+    joined = d.join(s, F.expr(f"{dim_key} = {stg_key}"), "full_outer")
+    differs = " OR ".join(
+        f"NOT ({_q(f'dim__{c}')} <=> {_q(f'stg__{c}')})" for c in compare_cols
+    ) or "false"
+    return joined.selectExpr(
+        "*",
+        f"CASE WHEN {dim_key} IS NULL THEN 'insert' "
+        f"WHEN {stg_key} IS NULL THEN 'delete' "
+        f"WHEN {differs} THEN 'update' ELSE 'keep' END AS {_q(_MARKER)}",
     )
-    action = (
-        F.when(F.col(f"dim__{key}").isNull(), F.lit("insert"))
-        .when(F.col(f"stg__{key}").isNull(), F.lit("delete"))
-        .when(differs, F.lit("update"))
-        .otherwise(F.lit("keep"))
-    )
-    return joined.withColumn(_MARKER, action)
 
 
 def scd1_merge(
@@ -147,70 +164,63 @@ def scd1_merge(
         processed_dt = F.current_timestamp()
 
     has_tech = "create_dt" in stg.columns
-    order_col = (
-        F.coalesce(F.col("update_dt"), F.col("create_dt"))
-        if has_tech
-        else F.lit(None).cast("timestamp")
-    )
-    stg = _dedup_staging(stg, key, order_col)
-
-    changes = scd1_changes(dim, stg, key, compare_cols)
-    action = F.col(_MARKER)
-    is_insert, is_update, is_delete = (
-        action == "insert", action == "update", action == "delete"
-    )
-    null_ts = F.lit(None).cast("timestamp")
+    # processed_dt is the one Column-valued input: appended once, then
+    # referenced by name from the SQL text below
+    changes = scd1_changes(
+        dim, _dedup_staging(stg, key, has_tech), key, compare_cols
+    ).withColumn(_PROCESSED, processed_dt)
+    marker = _q(_MARKER)
 
     # per output column: its value on an inserted and on an updated
     # row; kept (and, without delete_missing, deleted) rows keep dim__*
-    stg_side = {c: F.col(f"stg__{c}") for c in [key] + compare_cols}
+    stg_side = {c: _q(f"stg__{c}") for c in [key] + compare_cols}
     on_insert = {
         **stg_side,
-        "create_dt": (
-            F.coalesce(F.col("stg__update_dt"), F.col("stg__create_dt"))
-            if has_tech
-            else null_ts
-        ),
-        "update_dt": null_ts,
-        "processed_dt": processed_dt,
+        "create_dt": "coalesce(`stg__update_dt`, `stg__create_dt`)" if has_tech else _NULL_TS,
+        "update_dt": _NULL_TS,
+        "processed_dt": _q(_PROCESSED),
     }
     on_update = {
         **stg_side,
-        "create_dt": F.col("dim__create_dt"),
-        "update_dt": F.col("stg__update_dt") if has_tech else null_ts,
-        "processed_dt": processed_dt,
+        "create_dt": "`dim__create_dt`",
+        "update_dt": "`stg__update_dt`" if has_tech else _NULL_TS,
+        "processed_dt": _q(_PROCESSED),
     }
     observation = Observation()
-    survives = ~is_delete if delete_missing else F.lit(True)
+    survives = f"{marker} <> 'delete'" if delete_missing else "true"
     merged = (
         changes.observe(
             observation,
-            F.count(F.when(is_insert, 1)).alias("inserted"),
-            F.count(F.when(is_update, 1)).alias("updated"),
-            F.count(F.when(is_delete, 1)).alias("deleted"),
-            F.count(F.when(survives, 1)).alias("rows"),
+            *[
+                F.expr(f"count_if({cond}) AS {name}")
+                for name, cond in (
+                    ("inserted", f"{marker} = 'insert'"),
+                    ("updated", f"{marker} = 'update'"),
+                    ("deleted", f"{marker} = 'delete'"),
+                    ("rows", survives),
+                )
+            ],
         )
         .filter(survives)
-        .select(
-            [
-                F.when(is_insert, on_insert[c])
-                .when(is_update, on_update[c])
-                .otherwise(F.col(f"dim__{c}"))
-                .alias(c)
+        .selectExpr(
+            *[
+                f"CASE {marker} WHEN 'insert' THEN {on_insert[c]} "
+                f"WHEN 'update' THEN {on_update[c]} "
+                f"ELSE {_q(f'dim__{c}')} END AS {_q(c)}"
                 for c in dim.columns
             ]
         )
     )
+
+    def leg(action: str, exprs: dict[str, str]) -> DataFrame:
+        return changes.filter(f"{marker} = '{action}'").selectExpr(
+            *[f"{e} AS {_q(c)}" for c, e in exprs.items()]
+        )
+
     return Scd1Result(
         merged=merged,
-        inserted=changes.filter(is_insert).select(
-            [e.alias(c) for c, e in on_insert.items()]
-        ),
-        updated=changes.filter(is_update).select(
-            [e.alias(c) for c, e in on_update.items()]
-        ),
-        deleted=changes.filter(is_delete).select(
-            [F.col(f"dim__{c}").alias(c) for c in dim.columns]
-        ),
+        inserted=leg("insert", on_insert),
+        updated=leg("update", on_update),
+        deleted=leg("delete", {c: _q(f"dim__{c}") for c in dim.columns}),
         observation=observation,
     )

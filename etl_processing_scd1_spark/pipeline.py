@@ -119,6 +119,7 @@ def run_day(
     # ---- transform: SCD1 merge per dimension (G1-G3) --------------------
     # One action per output table — its write. Every report number is
     # an Observation riding on that write, not a count()/agg job.
+    watermarks: dict[str, dt.datetime | None] = {}
     for dim_name in ("terminals", "clients", "accounts", "cards"):
         if dim_name not in staged:
             continue
@@ -140,9 +141,9 @@ def run_day(
         )
         warehouse.stage(dim_name, res.merged)
         report.dim_counts[dim_name] = res.counts()
-        meta = upsert_watermark(
-            spark, meta, "warehouse", dim_name, observed(wm, wm=None)["wm"]
-        )
+        watermarks[dim_name] = observed(wm, wm=None)["wm"]
+    # one seed relation for every dim: one union+groupBy, one shuffle
+    meta = upsert_watermark(spark, meta, "warehouse", watermarks)
 
     # ---- facts: append-dedup (G4) ---------------------------------------
     # Only NEW rows are written (stage_append): the daily fact write

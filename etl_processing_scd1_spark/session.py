@@ -12,8 +12,10 @@ the 200-partition default.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Defaults that matter at every scale. At 100 TB one would raise
 # shuffle.partitions (or let AQE coalesce from a high initial count)
@@ -85,3 +87,43 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence[object]], schema: StructType | str
+) -> DataFrame:
+    """Driver-side rows as a ``LocalRelation``: one Arrow table, no
+    Python worker. ``createDataFrame(list)`` plans a ``LogicalRDD``
+    over ``sc.parallelize``, so every action on it waits on a Python
+    worker per partition; an Arrow table under
+    ``spark.sql.execution.arrow.localRelationThreshold`` is inlined
+    into the plan instead.
+
+    Values go through the type's own ``toInternal`` first, exactly as
+    on the list path: a naive ``datetime`` is local time, a date is
+    an epoch day. A row whose length differs from the schema raises.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    width = len(schema.fields)
+    for r in rows:
+        if len(r) != width:
+            raise ValueError(f"row of {len(r)} values for a {width}-column schema: {r!r}")
+    columns = list(zip(*rows)) if rows else [()] * width
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(
+                [None if v is None else f.dataType.toInternal(v) for v in values]
+                if f.dataType.needConversion()
+                else list(values),
+                type=t,
+            )
+            for f, t, values in zip(schema.fields, arrow.types, columns)
+        ],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

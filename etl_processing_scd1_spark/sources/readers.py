@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import comma_decimal, excel_serial_to_date
 from .. import schemas
+from ..session import local_frame
 
 
 def read_transactions_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -167,7 +168,10 @@ def read_xlsx(spark: SparkSession, path: str, columns: list[str] | None = None) 
     First row is the header unless ``columns`` overrides it. All
     values are surfaced as strings (numbers via repr) — downstream
     casts are explicit, mirroring the positional-alignment-then-coerce
-    flow of the reference (main.py:61-62).
+    flow of the reference (main.py:61-62). The parsed rows enter the
+    plan as an Arrow ``LocalRelation`` (``session.local_frame``): no
+    stage over it waits on a Python worker. A row wider than the
+    header raises.
     """
     rows = _xlsx_rows(path)
     if not rows:
@@ -178,7 +182,7 @@ def read_xlsx(spark: SparkSession, path: str, columns: list[str] | None = None) 
         [None if v is None else str(v) for v in r] + [None] * (len(header) - len(r))
         for r in body
     ]
-    return spark.createDataFrame(data, schema=", ".join(f"`{c}` string" for c in header))
+    return local_frame(spark, data, ", ".join(f"`{c}` string" for c in header))
 
 
 def _binary_files(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -313,10 +317,12 @@ def write_xlsx(path: str, rows: list[list[object]]) -> None:
         'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/'
         'relationships"/></sheets></workbook>'
     )
+    # entries keep ZipInfo's fixed 1980-01-01 stamp, not the wall
+    # clock: the same rows give the same bytes
     with zipfile.ZipFile(path, "w") as zf:
-        zf.writestr("[Content_Types].xml", content_types)
-        zf.writestr("xl/workbook.xml", workbook)
-        zf.writestr("xl/worksheets/sheet1.xml", sheet)
+        zf.writestr(zipfile.ZipInfo("[Content_Types].xml"), content_types)
+        zf.writestr(zipfile.ZipInfo("xl/workbook.xml"), workbook)
+        zf.writestr(zipfile.ZipInfo("xl/worksheets/sheet1.xml"), sheet)
 
 
 def read_blacklist_excel(spark: SparkSession, path: str) -> DataFrame:

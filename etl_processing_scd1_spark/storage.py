@@ -28,6 +28,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .session import local_frame
+
 
 class Warehouse:
     """A directory of versioned Parquet tables with atomic multi-table
@@ -174,7 +176,7 @@ class Warehouse:
                 return df
         if schema is None:
             raise FileNotFoundError(f"table {name} absent and no schema given")
-        return self.spark.createDataFrame([], schema=schema)
+        return local_frame(self.spark, [], schema)
 
     _SCHEMA = "_schema.json"
 
@@ -227,7 +229,7 @@ class Warehouse:
         if not self._has_parquet_parts(path):
             if name.endswith("@append"):
                 return None
-            return self.spark.createDataFrame([], schema=self._staged_schema[name])
+            return local_frame(self.spark, [], self._staged_schema[name])
         return self.spark.read.schema(self._staged_schema[name]).parquet(path)
 
     # -- staged writes + atomic publish ------------------------------------

@@ -22,9 +22,10 @@ def persistent_rdd_ids(spark) -> set[int]:
     }
 
 
-def spark_jobs(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted through a job group (AQE stage
-    jobs inherit it from the submitting thread)."""
+def spark_jobs_and_tasks(spark, fn) -> tuple[int, int]:
+    """Spark jobs ``fn()`` runs and the tasks they complete, counted
+    through a job group (AQE stage jobs inherit it from the submitting
+    thread)."""
     sc = spark.sparkContext
     group = f"count-jobs-{id(fn)}"
     sc.setJobGroup(group, "job-count probe")
@@ -34,7 +35,15 @@ def spark_jobs(spark, fn) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store trails the jobs
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    return len(jobs), sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs (see :func:`spark_jobs_and_tasks`)."""
+    return spark_jobs_and_tasks(spark, fn)[0]
 
 
 @pytest.fixture(scope="session")

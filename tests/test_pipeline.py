@@ -11,9 +11,12 @@ import os
 
 import pytest
 
+from etl_processing_scd1_spark import schemas
+from etl_processing_scd1_spark.operators.meta import SENTINEL, watermark_of
 from etl_processing_scd1_spark.pipeline import run_day
+from etl_processing_scd1_spark.session import local_frame
 from etl_processing_scd1_spark.storage import Warehouse
-from .conftest import spark_jobs
+from .conftest import spark_jobs_and_tasks
 from .xlsx_util import write_xlsx
 
 DAYS = [dt.date(2021, 3, 1), dt.date(2021, 3, 2), dt.date(2021, 3, 3)]
@@ -63,32 +66,45 @@ def _blacklist_for_day(day_idx: int) -> list[list[object]]:
     return rows
 
 
+CLIENTS = (
+    "client_id string, last_name string, first_name string, patronymic string, "
+    "date_of_birth date, passport_num string, passport_valid_to date, phone string, "
+    "create_dt timestamp, update_dt timestamp"
+)
+ACCOUNTS = "account_num string, valid_to date, client string, create_dt timestamp, update_dt timestamp"
+CARDS = "card_num string, account_num string, create_dt timestamp, update_dt timestamp"
+
+
 @pytest.fixture(scope="module")
 def bank(spark):
-    clients = spark.createDataFrame(
+    """Bank extracts as the engine receives them in production — JVM
+    relations (JDBC, Parquet), not Python RDDs — so every plan of a
+    run is free of Python-worker stages."""
+    clients = local_frame(
+        spark,
         [
             ("C1", "Ivanov", "Ivan", "I", dt.date(1980, 1, 1), "1111 111111",
              dt.date(2020, 1, 1), "+7 111", dt.datetime(2021, 1, 1), None),
             ("C2", "Petrov", "Petr", "P", dt.date(1990, 2, 2), "9000 000000",
              dt.date(2030, 1, 1), "+7 222", dt.datetime(2021, 1, 1), None),
         ],
-        "client_id string, last_name string, first_name string, patronymic string, "
-        "date_of_birth date, passport_num string, passport_valid_to date, phone string, "
-        "create_dt timestamp, update_dt timestamp",
+        CLIENTS,
     )
-    accounts = spark.createDataFrame(
+    accounts = local_frame(
+        spark,
         [
             ("ACC1", dt.date(2030, 1, 1), "C1", dt.datetime(2021, 1, 1), None),
             ("ACC2", dt.date(2020, 6, 1), "C2", dt.datetime(2021, 1, 1), None),
         ],
-        "account_num string, valid_to date, client string, create_dt timestamp, update_dt timestamp",
+        ACCOUNTS,
     )
-    cards = spark.createDataFrame(
+    cards = local_frame(
+        spark,
         [
             ("1111 2222 3333 4444", "ACC1", dt.datetime(2021, 1, 1), None),
             ("5555 6666 7777 8888", "ACC2", dt.datetime(2021, 1, 1), None),
         ],
-        "card_num string, account_num string, create_dt timestamp, update_dt timestamp",
+        CARDS,
     )
     return {"clients": clients, "accounts": accounts, "cards": cards}
 
@@ -199,6 +215,11 @@ def test_backlog_single_run_processes_all_days(spark, tmp_path, bank):
 #: watermark, a count per fact, a groupBy of the fraud events and a
 #: schema-inference job per table read
 PROBE_JOBS_PER_DAY = 113
+#: the same day completed 67 tasks (local[4]) while the XLSX rows and
+#: every watermark seed entered through createDataFrame(list) — one
+#: Python-worker task per partition — and the watermarks took four
+#: chained shuffles; as LocalRelations with one upsert it takes 52
+MAX_TASKS_PER_DAY = 59
 
 
 def test_run_day_job_count(spark, tmp_path, bank):
@@ -218,8 +239,9 @@ def test_run_day_job_count(spark, tmp_path, bank):
         )
 
     day(0)  # bootstrap
-    jobs = spark_jobs(spark, lambda: day(1))
+    jobs, tasks = spark_jobs_and_tasks(spark, lambda: day(1))
     assert jobs <= 0.4 * PROBE_JOBS_PER_DAY, jobs
+    assert tasks <= MAX_TASKS_PER_DAY, tasks
 
 
 def test_fact_anti_join_prunes_fact_days(spark, tmp_path, bank):
@@ -253,3 +275,92 @@ def test_fact_anti_join_prunes_fact_days(spark, tmp_path, bank):
     assert partition_filters.startswith("isnotnull(p_day#"), fact_scans[0]
     assert "(p_day#" in partition_filters and ">= Subquery" in partition_filters
     assert report.fact_appended["transactions"] == 10
+
+
+def test_run_day_writes_no_python_rdd(spark, tmp_path, bank):
+    """Driver-side rows (the XLSX snapshots, the watermark seed, the
+    empty tables of the bootstrap) enter as LocalRelations: no plan
+    run_day writes, on the bootstrap day or after it, scans a Python
+    RDD — no stage of the run waits on a Python worker."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    drop = str(tmp_path / "drop")
+    os.makedirs(drop)
+    plans: list[tuple[str, str]] = []
+
+    def spying(write):
+        def spy(name, df, **kwargs):
+            plans.append((name, df._jdf.queryExecution().toString()))
+            write(name, df, **kwargs)
+        return spy
+
+    wh.stage, wh.stage_append = spying(wh.stage), spying(wh.stage_append)
+    for i in (0, 1):
+        _write_day_files(drop, i)
+        run_day(
+            spark, wh, drop_dir=drop, bank_sources=bank,
+            run_ts=dt.datetime.combine(DAYS[i], dt.time(23, 55)), day=DAYS[i],
+        )
+    written = sorted({name for name, _ in plans})
+    assert written == sorted(schemas.WAREHOUSE), written
+    for name, plan in plans:
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, (name, plan)
+
+
+def _bank_at(spark, clients_ts, accounts_ts, cards_ts):
+    """One-row bank extracts whose audit columns sit at the given
+    ``(create_dt, update_dt)`` pairs."""
+    return {
+        "clients": local_frame(
+            spark,
+            [("C1", "Ivanov", "Ivan", "I", dt.date(1980, 1, 1), "1111 111111",
+              dt.date(2030, 1, 1), "+7 111", *clients_ts)],
+            CLIENTS,
+        ),
+        "accounts": local_frame(spark, [("ACC1", dt.date(2030, 1, 1), "C1", *accounts_ts)], ACCOUNTS),
+        "cards": local_frame(spark, [("1111 2222 3333 4444", "ACC1", *cards_ts)], CARDS),
+    }
+
+
+def test_watermarks_upserted_once_per_run(spark, tmp_path):
+    """All of a run's watermarks land in ONE upsert: meta then holds
+    exactly one row per staged dim, each the staging table's
+    watermark (SENTINEL for a NULL one); a later run with older
+    staging moves none of them back, and a newer one advances it."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    drop = str(tmp_path / "drop")
+    os.makedirs(drop)
+    _write_day_files(drop, 0)
+
+    def meta():
+        rows = wh.read("meta", schemas.META).collect()
+        assert {r["schema_name"] for r in rows} == {"warehouse"}
+        assert len(rows) == len({r["table_name"] for r in rows}), rows
+        return {r["table_name"]: r["max_update_dt"] for r in rows}
+
+    first = _bank_at(
+        spark,
+        (dt.datetime(2021, 1, 1), dt.datetime(2021, 1, 5)),
+        (dt.datetime(2021, 1, 3), None),
+        (None, None),  # a NULL watermark seeds the sentinel
+    )
+    run_day(spark, wh, drop_dir=drop, bank_sources=first,
+            run_ts=dt.datetime(2021, 3, 1, 23, 55), day=DAYS[0])
+    want = {name: watermark_of(df) or SENTINEL for name, df in first.items()}
+    want["terminals"] = dt.datetime(2021, 3, 1)  # file date: create_dt, no update_dt
+    assert want["cards"] == SENTINEL
+    assert meta() == want
+
+    later = _bank_at(
+        spark,
+        (dt.datetime(2020, 12, 1), None),                    # older: kept
+        (dt.datetime(2021, 1, 1), dt.datetime(2021, 2, 1)),  # newer: advances
+        (dt.datetime(2021, 1, 2), None),                     # past the sentinel
+    )
+    run_day(spark, wh, bank_sources=later,
+            run_ts=dt.datetime(2021, 3, 2, 23, 55), day=DAYS[1])
+    assert meta() == {
+        "terminals": dt.datetime(2021, 3, 1),   # not staged: untouched
+        "clients": dt.datetime(2021, 1, 5),
+        "accounts": dt.datetime(2021, 2, 1),
+        "cards": dt.datetime(2021, 1, 2),
+    }

@@ -94,3 +94,46 @@ def test_delete_missing_false_keeps_absent_keys(spark):
         dim, stg, "terminal_id", COMPARE, processed_dt=_p(), delete_missing=False
     )
     assert res.merged.count() == 2  # A2 survives increment-style staging
+
+
+def test_identifiers_are_quoted_in_the_sql_text(spark):
+    """The merge is SQL text over column names: a key with a space and
+    compare columns with a space and a backtick resolve as the names
+    they are, in the marker, the dedup window and every projection."""
+    cols = "`term id` string, `term city` string, `a``b` string, create_dt timestamp, update_dt timestamp"
+    dim = spark.createDataFrame(
+        [
+            ("T1", "Moscow", "x", TS, None, TS),
+            ("T2", "Kazan", "y", TS, None, TS),
+            ("T3", "Omsk", "o", TS, None, TS),
+            ("T5", "Sochi", None, TS, None, TS),
+        ],
+        cols + ", processed_dt timestamp",
+    )
+    d2, d5 = dt.datetime(2021, 3, 2), dt.datetime(2021, 3, 5)
+    stg = spark.createDataFrame(
+        [
+            ("T1", "Moscow", "x", d2, None),  # keep
+            ("T2", "Kazan", "y2", TS, d2),    # update
+            ("T4", "Tver", "z-old", TS, None),  # duplicate key: older, dropped
+            ("T4", "Tver", "z", d5, None),    # insert
+            ("T5", "Sochi", "w", d2, None),   # NULL → value: update
+        ],                                    # T3 absent → delete
+        cols,
+    )
+    res = scd1_merge(dim, stg, "term id", ["term city", "a`b"], processed_dt=_p())
+    p = dt.datetime(2021, 3, 2)
+    assert res.merged.columns == ["term id", "term city", "a`b", "create_dt", "update_dt", "processed_dt"]
+    assert sorted(map(tuple, res.merged.collect())) == [
+        ("T1", "Moscow", "x", TS, None, TS),
+        ("T2", "Kazan", "y2", TS, d2, p),
+        ("T4", "Tver", "z", d5, None, p),
+        ("T5", "Sochi", "w", TS, None, p),
+    ]
+    assert res.counts() == {"inserted": 1, "updated": 2, "deleted": 1, "rows": 4}
+    assert [tuple(r) for r in res.inserted.collect()] == [("T4", "Tver", "z", d5, None, p)]
+    assert sorted(tuple(r) for r in res.updated.collect()) == [
+        ("T2", "Kazan", "y2", TS, d2, p),
+        ("T5", "Sochi", "w", TS, None, p),
+    ]
+    assert [tuple(r) for r in res.deleted.collect()] == [("T3", "Omsk", "o", TS, None, TS)]

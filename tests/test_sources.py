@@ -7,7 +7,11 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 import os
+import time
 
+import pytest
+
+from etl_processing_scd1_spark.session import local_frame
 from etl_processing_scd1_spark.sources import (
     read_blacklist_excel,
     read_transactions_csv,
@@ -21,6 +25,10 @@ CSV_BODY = (
     "10000000001;2021-03-01 07:10:15;1046,40;4513 5880 2369 1799;PAYMENT;SUCCESS;A1023\n"
     "10000000002;2021-03-01 08:00:00;10000,00;7432 6538 1679 4340;WITHDRAW;REJECT;P2077\n"
 )
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
 
 
 def test_transactions_csv_comma_decimal(spark, tmp_path):
@@ -65,6 +73,76 @@ def test_xlsx_reader_and_cyrillic(spark, tmp_path):
     rows = sorted(map(tuple, df.collect()))
     assert rows[0] == ("A1023", "ATM", "Москва", "ул. Ленина 1")
     assert df.columns == ["terminal_id", "terminal_type", "terminal_city", "terminal_address"]
+    assert "LogicalRDD" not in _analyzed(df)  # parsed rows enter as a LocalRelation
+
+
+def test_write_xlsx_bytes_do_not_depend_on_the_clock(tmp_path, monkeypatch):
+    """Same rows, same bytes: the benchmark's seeded inputs are
+    byte-identical only if no entry carries the wall-clock time."""
+    from etl_processing_scd1_spark.sources.readers import write_xlsx as write
+
+    rows = [["terminal_id", "terminal_city"], ["A1", "Москва"], [1, 2.5]]
+    write(str(tmp_path / "a.xlsx"), rows)
+    now = time.time()
+    monkeypatch.setattr(time, "time", lambda: now + 3600)
+    write(str(tmp_path / "b.xlsx"), rows)
+    assert (tmp_path / "a.xlsx").read_bytes() == (tmp_path / "b.xlsx").read_bytes()
+
+
+LOCAL_SCHEMA = "s string, i int, amt decimal(18,5), d date, ts timestamp"
+
+
+@pytest.fixture
+def novosibirsk_tz():
+    """The Python process in a non-UTC zone (UTC+7, no DST); the
+    session time zone stays UTC."""
+    before = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Novosibirsk"
+    time.tzset()
+    yield
+    if before is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = before
+    time.tzset()
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [
+            ("a", 1, decimal.Decimal("1046.4"), dt.date(2021, 3, 1), dt.datetime(2021, 3, 1, 7, 10, 15)),
+            ("Москва", -2, decimal.Decimal("0.00001"), dt.date(1969, 12, 31), dt.datetime(1970, 1, 1, 0, 0, 0, 5)),
+            (None, None, None, None, None),
+        ],
+        [],
+    ],
+    ids=["typed_rows_and_nulls", "empty"],
+)
+def test_local_frame_matches_create_dataframe(spark, novosibirsk_tz, rows):
+    """local_frame collects exactly what createDataFrame(list) does —
+    a naive datetime is process-local time on both paths — but plans
+    as a LocalRelation, not a Python RDD."""
+    arrow, listed = local_frame(spark, rows, LOCAL_SCHEMA), spark.createDataFrame(rows, LOCAL_SCHEMA)
+    assert arrow.schema == listed.schema
+    assert arrow.collect() == listed.collect()
+    as_utc = "date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS')"  # session zone: UTC
+    assert arrow.selectExpr(as_utc).collect() == listed.selectExpr(as_utc).collect()
+    plan = _analyzed(arrow)
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_local_frame_naive_datetime_is_local_time(spark, novosibirsk_tz):
+    df = local_frame(spark, [(dt.datetime(2021, 3, 1, 12, 0),)], "ts timestamp")
+    # 12:00 in UTC+7 is 05:00 UTC
+    assert df.selectExpr("date_format(ts, 'HH:mm')").first()[0] == "05:00"
+
+
+def test_local_frame_rejects_a_row_of_another_width(spark):
+    with pytest.raises(ValueError, match="3 values for a 2-column schema"):
+        local_frame(spark, [("a", 1), ("b", 2, "extra")], "s string, i int")
+    with pytest.raises(ValueError):
+        local_frame(spark, [("a",)], "s string, i int")
 
 
 def test_blacklist_serial_dates_and_dirty_rows(spark, tmp_path):
