@@ -21,6 +21,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# byte budget of the compact final stdout line, which must fit whole
+# in a 2000-byte stdout tail (see the comment at its use)
+LINE_BYTES = 1900
+
 HEADLINE = [
     "groupby_agg",          # TPC-H Q1 shape: scan + partial agg
     "star_join_chain",      # broadcast star join, zero fact shuffles
@@ -421,7 +425,6 @@ def main() -> None:
     # nothing), which roughly doubles queries_shown. The COMPLETE
     # 4-decimal map is deterministic in BENCH_full.json ("detail"),
     # committed after the final run, and on the all_queries line below.
-    budget = int(os.environ.get("SPARK_GRAFT_BENCH_LINE_BYTES", "1900"))
 
     def compact_line(top_n: int) -> str:
         top = {
@@ -452,7 +455,7 @@ def main() -> None:
 
     n = len(full_map)
     line = compact_line(n)
-    while n > 0 and len(line.encode()) > budget:
+    while n > 0 and len(line.encode()) > LINE_BYTES:
         n -= 1
         line = compact_line(n)
     print(line)

@@ -605,8 +605,8 @@ def dbscan_grid(
     Scale: the only pair-generating step is the grid join (bucketed,
     skew-capped by cell granularity); degree/border steps are
     groupBys on node id; component rounds shuffle O(E_core) each.
-    No driver-side state beyond dedup_clusters' per-round changed
-    flag."""
+    Driver-side work per component round (connected_components_star):
+    one edge count and one anti-join emptiness probe."""
     from .dedup import attach_cache, checkpoint_handle
     from .graph import connected_components_star
 

@@ -38,28 +38,23 @@ def star_denormalize(
     cards: DataFrame,
     accounts: DataFrame,
     clients: DataFrame,
-    terminals: DataFrame | None = None,
 ) -> DataFrame:
-    """fact ⟕ cards ⟕ accounts ⟕ clients [⟕ terminals] (C5).
+    """fact ⟕ cards ⟕ accounts ⟕ clients (C5).
 
     Key normalization per the reference: card join on trim (C6,
-    main.py:407), account join on trim (main.py:409), terminal join
-    on raw id. All dims broadcast explicitly — their statistics may
-    be absent when read from fresh staging.
+    main.py:407), account join on trim (main.py:409). All dims
+    broadcast explicitly — their statistics may be absent when read
+    from fresh staging. Rule 3 joins terminals itself, on raw id.
     """
     t = transactions.alias("ft")
     dc = F.broadcast(cards.alias("dc"))
     da = F.broadcast(accounts.alias("da"))
     dcl = F.broadcast(clients.alias("dcl"))
-    out = (
+    return (
         t.join(dc, trim_key(F.col("ft.card_num")) == trim_key(F.col("dc.card_num")), "left")
         .join(da, trim_key(F.col("dc.account_num")) == trim_key(F.col("da.account_num")), "left")
         .join(dcl, F.col("da.client") == F.col("dcl.client_id"), "left")
     )
-    if terminals is not None:
-        dt_ = F.broadcast(terminals.alias("dt"))
-        out = out.join(dt_, F.col("ft.terminal") == F.col("dt.terminal_id"), "left")
-    return out
 
 
 def _report_projection(event_type: str) -> list[Column]:

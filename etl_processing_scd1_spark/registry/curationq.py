@@ -790,12 +790,12 @@ def web_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH skew guard; the DSIR model broadcast keeps the scoring join
     shuffle-free; the final per-lang top-k is a bounded window over
     the surviving representatives only."""
-    from ..operators.dedup import (
-        attach_cache, dedup_clusters, keep_best_per_cluster, near_dedup_minhash,
-    )
+    from ..operators.dedup import attach_cache, keep_best_per_cluster
     from ..operators.dsir import dsir_bucket_counts, dsir_model, dsir_score
     from ..operators.text import gopher_rules
     from pyspark.sql import Window
+
+    from .extensions import minhash_clusters
 
     docs = table(spark, sf_dir, "documents")
     g_ids = (
@@ -811,11 +811,7 @@ def web_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     eligible = docs.join(g_ids, "doc_id", "left_semi").join(
         bl_ids, "doc_id", "left_semi"
     )
-    pairs = near_dedup_minhash(
-        eligible, id_col="doc_id", text_col="text",
-        shingle_k=8, bands=4, rows_per_band=2, min_jaccard_pct=50,
-    )
-    clusters = dedup_clusters(eligible, pairs, id_col="doc_id")
+    clusters = minhash_clusters(eligible)
     reps = keep_best_per_cluster(
         clusters, eligible.select("doc_id", "n_chars", "lang"), "doc_id", "n_chars"
     ).select("doc_id", "cluster_id", "cluster_size", "n_chars", "lang")

@@ -2541,6 +2541,21 @@ DEDUP_CLUSTERS_ORACLE = f"""
 """
 
 
+def minhash_clusters(docs: DataFrame) -> DataFrame:
+    """The registry's near-dup cluster chain over ``docs``
+    (``doc_id``, ``text``): MinHash LSH pairs (8-shingles, 4 bands ×
+    2 rows, Jaccard ≥ 50%) → connected components
+    (``operators.dedup.dedup_clusters``) — the pipeline
+    ``DEDUP_CLUSTERS_ORACLE`` replays in DuckDB."""
+    from ..operators.dedup import dedup_clusters
+
+    pairs = near_dedup_minhash(
+        docs, id_col="doc_id", text_col="text",
+        shingle_k=8, bands=4, rows_per_band=2, min_jaccard_pct=50,
+    )
+    return dedup_clusters(docs, pairs, id_col="doc_id")
+
+
 @register("dedup_clusters", oracle=DEDUP_CLUSTERS_ORACLE)
 def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2 end-game: near-dup pairs → connected components → canonical
@@ -2548,14 +2563,7 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterated min-label propagation). Genuinely iterative — the oracle
     still verifies it exactly via a recursive transitive-closure CTE
     over the same MinHash pipeline."""
-    from ..operators.dedup import dedup_clusters
-
-    docs = table(spark, sf_dir, "documents")
-    pairs = near_dedup_minhash(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=8, bands=4, rows_per_band=2, min_jaccard_pct=50,
-    )
-    return dedup_clusters(docs, pairs, id_col="doc_id")
+    return minhash_clusters(table(spark, sf_dir, "documents"))
 
 
 DEDUP_APPLY_ORACLE = (
@@ -2589,14 +2597,8 @@ def dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     back the lazy plan, so their release handles are re-attached to
     THIS result — consumers materialize under
     ``dedup.consuming(...)`` and nothing outlives the action."""
-    from ..operators.dedup import dedup_clusters
-
     docs = table(spark, sf_dir, "documents")
-    pairs = near_dedup_minhash(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=8, bands=4, rows_per_band=2, min_jaccard_pct=50,
-    )
-    clusters = dedup_clusters(docs, pairs, id_col="doc_id")
+    clusters = minhash_clusters(docs)
     keep = clusters.filter(F.col("doc_id") == F.col("cluster_id")).select(
         "doc_id", "cluster_size"
     )
@@ -2642,14 +2644,10 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the deterministic (score, id) sort order makes the selection
     reproducible under any partitioning (the tiebreak contract is
     documented on :func:`~..operators.dedup.keep_best_per_cluster`)."""
-    from ..operators.dedup import dedup_clusters, keep_best_per_cluster
+    from ..operators.dedup import keep_best_per_cluster
 
     docs = table(spark, sf_dir, "documents")
-    pairs = near_dedup_minhash(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=8, bands=4, rows_per_band=2, min_jaccard_pct=50,
-    )
-    clusters = dedup_clusters(docs, pairs, id_col="doc_id")
+    clusters = minhash_clusters(docs)
     out = keep_best_per_cluster(
         clusters, docs.select("doc_id", "n_chars", "lang"), "doc_id", "n_chars"
     ).select("doc_id", "cluster_id", "cluster_size", "n_chars", "lang")
@@ -2706,14 +2704,8 @@ def golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     numeric rules ride the same groupBy. The cluster checkpoints
     back the lazy plan, so their release handles re-attach to THIS
     result (materialize under ``dedup.consuming``)."""
-    from ..operators.dedup import dedup_clusters
-
     docs = table(spark, sf_dir, "documents")
-    pairs = near_dedup_minhash(
-        docs, id_col="doc_id", text_col="text",
-        shingle_k=8, bands=4, rows_per_band=2, min_jaccard_pct=50,
-    )
-    clusters = dedup_clusters(docs, pairs, id_col="doc_id")
+    clusters = minhash_clusters(docs)
     members = clusters.select("doc_id", "cluster_id").join(
         docs.select("doc_id", "lang", "n_chars"), "doc_id"
     )

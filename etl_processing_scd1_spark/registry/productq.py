@@ -317,11 +317,13 @@ def streaming_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     first batch to pure inserts — then a merge-on-read DV DELETE
     commits at v1 and the SAME checkpoint drains again, so the second
     micro-batch must carry exactly the deletion-vector delta as
-    row-level 'delete' events (``sources/deltalog_datasource.py::
-    _DeltaCdfStreamReader`` over the shared ``_plan_changes``
-    planner). The two drains land in one result table; a source that
-    re-emitted the DV re-add as inserts, skipped the delete events, or
-    replayed batch 1 on resume fails the per-change-type hash."""
+    row-level 'delete' events (``sources/log_datasource.py``'s
+    version-offset stream reader over
+    ``DeltaLogDataSource.changed_files`` and the shared
+    ``_plan_changes`` planner). The two drains land in one result
+    table; a source that re-emitted the DV re-add as inserts, skipped
+    the delete events, or replayed batch 1 on resume fails the
+    per-change-type hash."""
     import os
     import shutil
 

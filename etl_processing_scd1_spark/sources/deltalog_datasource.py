@@ -13,9 +13,10 @@ Python DataSource API (``pyspark.sql.datasource``, public) wrapping
   actions are compaction/overwrite bookkeeping the appends-stream
   consumer skips, and anything else needs CDF via ``delta_changes``).
 
-Scale shape: the driver touches only the LOG (file lists); one
-``InputPartition`` per data file, read executor-side with pyarrow →
-Arrow RecordBatches (zero row-by-row Python). Partition-column
+The readers, writers and executor read are the shared
+``log_datasource`` family; this module supplies the Delta side:
+log-replay planning, deletion vectors, column-mapping resolution,
+hive partition layout, per-file stats and the log commit. Partition
 values (hive-dir encoded, absent from the files) are reattached per
 partition from the add-action's ``partitionValues`` — constants,
 cast per the table's schemaString.
@@ -29,183 +30,10 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
-)
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from .delta import _replay, delta_table_version
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, file_path: str, partition_values: dict,
-                 delete_positions: list | None = None,
-                 column_mapping: dict | None = None,
-                 field_ids: dict | None = None):
-        self.file_path = file_path
-        self.partition_values = partition_values
-        # deletion vector: dead row indexes of THIS file, decoded
-        # driver-side at planning, shipped per partition
-        self.delete_positions = delete_positions
-        # column mapping (name/id mode): logical -> physical names;
-        # the file's columns and partitionValues keys are physical
-        self.column_mapping = column_mapping
-        # id mode only: logical -> delta.columnMapping.id — files are
-        # matched by parquet footer field id FIRST (the spec's id-mode
-        # rule; physicalName is the fallback for id-less files)
-        self.field_ids = field_ids
-
-
-def _snap_field_ids(snap) -> dict | None:
-    """logical -> field id, ONLY for id-mode tables (the spec scopes
-    field-id matching to mode=id; name mode matches physical names
-    even when ids are present in the footers)."""
-    mode = (snap.metadata.get("configuration") or {}).get(
-        "delta.columnMapping.mode", "none"
-    )
-    return snap.column_mapping_ids if mode == "id" else None
-
-
-def _fid_to_column(tbl) -> dict[int, str]:
-    """parquet field id → column name from an Arrow table's schema
-    metadata (pyarrow surfaces the footer ids as
-    ``PARQUET:field_id``)."""
-    out: dict[int, str] = {}
-    for f in tbl.schema:
-        v = (f.metadata or {}).get(b"PARQUET:field_id")
-        if v is not None:
-            try:
-                out[int(v)] = f.name
-            except ValueError:
-                pass
-    return out
-
-
-def _physical_column(field_name: str, part, fid_to_col: dict) -> str:
-    """The file column holding logical ``field_name``: field-id match
-    first (id mode), then the mapped physical name, then the logical
-    name itself."""
-    fids = getattr(part, "field_ids", None)
-    if fids and field_name in fids and fids[field_name] in fid_to_col:
-        return fid_to_col[fids[field_name]]
-    return (part.column_mapping or {}).get(field_name, field_name)
-
-
-def _read_file_batches(schema: StructType, part: _FilePartition):
-    """Executor-side: one data file → Arrow RecordBatches carrying
-    ALL schema columns (hive partition values reattached as
-    constants, typed per the log's authoritative schema); the file's
-    deletion-vector rows (if any) dropped by index before batching;
-    column-mapped files read by physical name, emitted logical."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    want = to_arrow_schema(schema)
-    tbl = pq.read_table(part.file_path)
-    fid_to_col = _fid_to_column(tbl) if getattr(part, "field_ids", None) \
-        else {}
-    if part.delete_positions:
-        import numpy as np
-
-        dead = np.asarray(sorted(part.delete_positions), dtype=np.int64)
-        keep = np.setdiff1d(
-            np.arange(tbl.num_rows, dtype=np.int64), dead, assume_unique=True
-        )
-        tbl = tbl.take(pa.array(keep))
-    n = tbl.num_rows
-    arrays = []
-    for field in want:
-        phys = _physical_column(field.name, part, fid_to_col)
-        if phys in tbl.column_names:
-            col = tbl.column(phys)
-            if col.type != field.type:
-                col = col.cast(field.type)
-            arrays.append(col)
-        else:
-            raw = part.partition_values.get(phys)
-            if raw is None:
-                arrays.append(pa.nulls(n, field.type))
-            else:
-                scalar = pa.scalar(raw, type=pa.string()).cast(field.type)
-                arrays.append(pa.repeat(scalar, n))
-    out = pa.table(arrays, schema=want)
-    yield from out.to_batches(max_chunksize=1 << 16)
-
-
-def filters_to_ranges(filters) -> tuple[dict, list]:
-    """Comparison filters on top-level columns → ``{col: (lo, hi)}``
-    inclusive ranges for metadata file-skipping. Returns the ranges
-    and the pushed filters (a file-skipping push is a SUPERSET
-    guarantee, so every filter is also returned to Spark for exact
-    row evaluation — the API's partial-pushdown contract)."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    ranges: dict = {}
-    pushed = []
-
-    def merge(col, lo, hi):
-        cur_lo, cur_hi = ranges.get(col, (None, None))
-        if lo is not None and (cur_lo is None or lo > cur_lo):
-            cur_lo = lo
-        if hi is not None and (cur_hi is None or hi < cur_hi):
-            cur_hi = hi
-        ranges[col] = (cur_lo, cur_hi)
-
-    for f in filters:
-        if len(getattr(f, "attribute", ())) != 1:
-            continue
-        col = f.attribute[0]
-        v = getattr(f, "value", None)
-        if not isinstance(v, (int, float, str, bool)):
-            continue
-        if isinstance(f, EqualTo):
-            merge(col, v, v)
-        elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-            merge(col, v, None)  # strict vs inclusive: superset either way
-        elif isinstance(f, (LessThan, LessThanOrEqual)):
-            merge(col, None, v)
-        else:
-            continue
-        pushed.append(f)
-    return ranges, pushed
-
-
-def pushdown_enabled() -> bool:
-    """True iff the ACTIVE session allows Python DataSource filter
-    pushdown. pyspark hard-fails planning with
-    ``[DATA_SOURCE_PUSHDOWN_DISABLED]`` whenever a reader merely
-    OVERRIDES ``DataSourceReader.pushFilters`` while
-    ``spark.sql.python.filterPushdown.enabled`` is false — and false
-    is the default, so a plain SparkSession (the driver's) would
-    error on the read. Pushdown is an optimization; correctness must
-    never depend on a session conf, so ``reader()`` consults this and
-    hands back a reader class that does NOT override ``pushFilters``
-    when the conf is off (file-skipping is skipped, every file is
-    read, Spark still filters rows — same answer, more IO)."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return False
-    try:
-        val = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-    except Exception:
-        return False
-    return str(val).lower() == "true"
+from .log_datasource import LogDataSource, LogFile, hive_dirs
 
 
 def _hive_eq(value, raw: str):
@@ -229,694 +57,277 @@ def _hive_eq(value, raw: str):
     return None  # float et al: Java vs Python repr differ
 
 
-class _DeltaBatchReader(DataSourceReader):
-    """Plain snapshot reader — deliberately does NOT override
-    ``pushFilters``, so it plans on any session regardless of
-    ``spark.sql.python.filterPushdown.enabled`` (see
-    ``pushdown_enabled``). ``_DeltaBatchPushdownReader`` adds the
-    file-skipping path for opted-in sessions."""
-
-    def __init__(self, path: str, schema: StructType, version: int | None):
-        self.path = path
-        self.schema_ = schema
-        self.version = version
-        self.predicates: dict = {}
-
-    def partitions(self):
-        from .delta import _stats_prune
-
-        # _replay is log-file-only (its spark param is unused — the
-        # snapshot is driver-side metadata); None keeps this planner
-        # independent of an active session
-        snap = _replay(None, self.path, self.version)
-        # stats and partitionValues are keyed by PHYSICAL names on a
-        # column-mapped table; pushed filters use logical ones
-        preds = snap.to_physical(self.predicates)
-
-        def part_prune(add) -> bool:
-            pv = add.get("partitionValues") or {}
-            for col, (lo, hi) in preds.items():
-                if (
-                    col in pv
-                    and pv[col] is not None
-                    and lo is not None
-                    and lo == hi
-                    and _hive_eq(lo, pv[col]) is False
-                ):
-                    return True
-            return False
-
-        from .delta import read_deletion_vector
-
-        return [
-            _FilePartition(
-                os.path.join(self.path, p),
-                add.get("partitionValues") or {},
-                read_deletion_vector(self.path, add["deletionVector"])
-                if add.get("deletionVector") else None,
-                snap.column_mapping,
-                _snap_field_ids(snap),
-            )
-            for p, add in sorted(snap.files.items())
-            if not _stats_prune(add, preds) and not part_prune(add)
-        ]
-
-    def read(self, partition):
-        yield from _read_file_batches(self.schema_, partition)
-
-
-class _DeltaBatchPushdownReader(_DeltaBatchReader):
-    """Snapshot reader + planning-time file skipping — only handed
-    out when the active session sets
-    ``spark.sql.python.filterPushdown.enabled`` (overriding
-    ``pushFilters`` on a session without it is a planning ERROR)."""
-
-    def pushFilters(self, filters):
-        """File-skipping pushdown: comparison filters become stat
-        ranges evaluated against each add-action's ``stats`` and
-        partitionValues at planning time. All filters are returned —
-        skipping is a superset guarantee, Spark still filters rows."""
-        self.predicates, _ = filters_to_ranges(filters)
-        return filters
-
-
-class _CdfPartition(InputPartition):
-    """One data file's contribution to a change-feed window:
-    ``include_positions`` set → emit ONLY those row indexes (a
-    deletion-vector delta); else emit the file minus
-    ``exclude_positions`` (the relevant ENDPOINT's deletion vector)."""
-
-    def __init__(self, file_path: str, partition_values: dict,
-                 change_type: str, commit_version: int,
-                 include_positions: list | None = None,
-                 exclude_positions: list | None = None,
-                 column_mapping: dict | None = None,
-                 field_ids: dict | None = None):
-        self.file_path = file_path
-        self.partition_values = partition_values
-        self.change_type = change_type
-        self.commit_version = commit_version
-        self.include_positions = include_positions
-        self.exclude_positions = exclude_positions
-        self.column_mapping = column_mapping
-        self.field_ids = field_ids
-
-
-def _read_cdf_batches(schema: StructType, part: _CdfPartition):
-    """Executor-side change-feed read: position filter first, then the
-    same column assembly as ``_read_file_batches`` plus the two
-    constant CDF columns."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    want = to_arrow_schema(schema)
-    tbl = pq.read_table(part.file_path)
-    fid_to_col = _fid_to_column(tbl) if getattr(part, "field_ids", None) \
-        else {}
-    if part.include_positions is not None:
-        tbl = tbl.take(pa.array(
-            np.asarray(sorted(part.include_positions), dtype=np.int64)
-        ))
-    elif part.exclude_positions:
-        dead = np.asarray(sorted(part.exclude_positions), dtype=np.int64)
-        keep = np.setdiff1d(
-            np.arange(tbl.num_rows, dtype=np.int64), dead, assume_unique=True
-        )
-        tbl = tbl.take(pa.array(keep))
-    n = tbl.num_rows
-    arrays = []
-    for field in want:
-        if field.name == "_change_type":
-            arrays.append(pa.repeat(
-                pa.scalar(part.change_type, type=field.type), n
-            ))
-            continue
-        if field.name == "_commit_version":
-            arrays.append(pa.repeat(
-                pa.scalar(int(part.commit_version), type=field.type), n
-            ))
-            continue
-        phys = _physical_column(field.name, part, fid_to_col)
-        if phys in tbl.column_names:
-            col = tbl.column(phys)
-            if col.type != field.type:
-                col = col.cast(field.type)
-            arrays.append(col)
-        else:
-            raw = part.partition_values.get(phys)
-            if raw is None:
-                arrays.append(pa.nulls(n, field.type))
-            else:
-                scalar = pa.scalar(raw, type=pa.string()).cast(field.type)
-                arrays.append(pa.repeat(scalar, n))
-    yield from pa.table(arrays, schema=want).to_batches(max_chunksize=1 << 16)
-
-
-def _cdf_partitions(path: str, from_v: int, to_v: int) -> list:
-    """Driver-side change-feed planning for one ``(from_v, to_v]``
-    window → ``_CdfPartition`` list (same semantics as
-    ``delta_changes``, partition-shaped for executor reads)."""
-    from .delta import _dv_positions, _plan_changes
-
-    snap, start_snap, added, removed, row_dels = _plan_changes(
-        path, from_v, to_v
-    )
-    cm = snap.column_mapping
-    fids = _snap_field_ids(snap)
-    parts = []
-    for files, change, src, dv_src in (
-        (added, "insert", snap, snap),
-        (removed, "delete", start_snap, start_snap),
-    ):
-        for p, v in sorted(files.items()):
-            add = (src.files if src is not None else {}).get(p) or {}
-            excl = _dv_positions(path, dv_src, p)
-            parts.append(_CdfPartition(
-                os.path.join(path, p),
-                add.get("partitionValues") or {},
-                change, v, None, sorted(excl) if excl else None, cm, fids,
-            ))
-    for v, per_path in sorted(row_dels.items()):
-        for p, poss in sorted(per_path.items()):
-            add = snap.files.get(p) or {}
-            parts.append(_CdfPartition(
-                os.path.join(path, p),
-                add.get("partitionValues") or {},
-                "delete", v, sorted(poss), None, cm, fids,
-            ))
-    return parts
-
-
-class _DeltaCdfBatchReader(DataSourceReader):
-    """Batch change feed: Delta's ``startingVersion`` (INCLUSIVE) /
-    ``endingVersion`` option pair over the shared planner."""
-
-    def __init__(self, path: str, schema: StructType,
-                 starting: int, ending: int | None):
-        self.path = path
-        self.schema_ = schema
-        self.starting = starting
-        self.ending = ending
-
-    def partitions(self):
-        to_v = (
-            self.ending if self.ending is not None
-            else delta_table_version(self.path)
-        )
-        return _cdf_partitions(self.path, self.starting - 1, to_v) \
-            or [_CdfPartition("", {}, "", -1)]
-
-    def read(self, partition):
-        if not partition.file_path:
-            return iter(())
-        return _read_cdf_batches(self.schema_, partition)
-
-
-class _RateLimitedOffsets:
-    """``maxVersionsPerBatch`` rate limiting (the ``maxFilesPerTrigger``
-    analog for version-offset sources): ``latestOffset`` advances at
-    most N versions past the newest offset Spark has shown us, so a
-    drain splits into incremental micro-batches instead of one giant
-    batch.
-
-    This is also the supported stand-in for ``Trigger.AvailableNow``:
-    Spark 4.1.2's JVM wrapper for EVERY Python DataSource
-    (``PythonMicroBatchStream``) implements only ``MicroBatchStream``
-    + ``AcceptsLatestSeenOffset`` — not
-    ``SupportsTriggerAvailableNow`` — so availableNow ALWAYS falls
-    back to a single batch up to the start-time latest offset (still
-    exactly-once, just coarse); no Python-side code can change that.
-    Incremental drains here use a short processingTime trigger with
-    this cap and stop when caught up.
-
-    Restart safety: capping from a base BELOW the checkpointed
-    offset would re-plan already-committed versions and replay data,
-    and the runner protocol never calls ``initialOffset`` on restart.
-    But ``PythonMicroBatchStream`` implements
-    ``AcceptsLatestSeenOffset`` by forwarding the restored offset as
-    a degenerate ``partitions(restored, restored)`` call before the
-    first ``latestOffset`` — so ``partitions`` ratchets the base to
-    the restored offset (the base only ever moves FORWARD), and the
-    construction-time seed of ``startingVersion`` is safe on both
-    fresh starts and restarts."""
-
-    def _init_rate_limit(self, max_per_batch: int | None,
-                         starting: int) -> None:
-        if max_per_batch is not None and int(max_per_batch) < 1:
-            raise ValueError("maxVersionsPerBatch must be >= 1")
-        self._max_per_batch = (
-            int(max_per_batch) if max_per_batch is not None else None
-        )
-        self._offset_base: int | None = int(starting)
-
-    def _advance_base(self, version: int) -> None:
-        if self._offset_base is None or version > self._offset_base:
-            self._offset_base = int(version)
-
-    def _capped(self, current: int) -> int:
-        if self._max_per_batch is None or self._offset_base is None:
-            return current
-        return min(current, self._offset_base + self._max_per_batch)
-
-
-class _DeltaCdfStreamReader(_RateLimitedOffsets, DataSourceStreamReader):
-    """Streaming change feed: offsets are log versions; each micro
-    batch carries the window's row-level changes (file adds as
-    inserts, DV deltas as row deletes) — the ``readChangeFeed``
-    stream contract, checkpoint-resumed."""
-
-    def __init__(self, path: str, schema: StructType, starting_version: int,
-                 max_per_batch: int | None = None):
-        self.path = path
-        self.schema_ = schema
-        self.starting = starting_version
-        self._init_rate_limit(max_per_batch, starting_version)
-
-    def initialOffset(self):
-        self._advance_base(self.starting)
-        return {"version": self.starting}
-
-    def latestOffset(self):
-        v = self._capped(delta_table_version(self.path))
-        self._advance_base(v)
-        return {"version": v}
-
-    def partitions(self, start: dict, end: dict):
-        self._advance_base(end["version"])
-        if end["version"] <= start["version"]:
-            return [_CdfPartition("", {}, "", -1)]
-        return _cdf_partitions(self.path, start["version"], end["version"]) \
-            or [_CdfPartition("", {}, "", -1)]
-
-    def read(self, partition):
-        if not partition.file_path:
-            return iter(())
-        return _read_cdf_batches(self.schema_, partition)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the query checkpoint; the log is immutable
-
-    def stop(self) -> None:
-        pass
-
-
-class _DeltaStreamReader(_RateLimitedOffsets, DataSourceStreamReader):
-    """Offsets are log versions: batch (start, end] = files ADDED by
-    those commits. Structured Streaming persists the offsets in its
-    checkpoint, which is what makes restart/replay exactly-once."""
-
-    def __init__(self, path: str, schema: StructType, starting_version: int,
-                 max_per_batch: int | None = None):
-        self.path = path
-        self.schema_ = schema
-        self.starting = starting_version
-        self._init_rate_limit(max_per_batch, starting_version)
-
-    def initialOffset(self):
-        self._advance_base(self.starting)
-        return {"version": self.starting}
-
-    def latestOffset(self):
-        v = self._capped(delta_table_version(self.path))
-        self._advance_base(v)
-        return {"version": v}
-
-    def partitions(self, start: dict, end: dict):
-        from .delta import _commit_file, _read_actions
-
-        self._advance_base(end["version"])
-        if end["version"] > start["version"]:
-            snap = _replay(None, self.path, end["version"])
-            cm, fids = snap.column_mapping, _snap_field_ids(snap)
-        else:
-            cm, fids = None, None
-        parts = []
-        for v in range(start["version"] + 1, end["version"] + 1):
-            f = _commit_file(self.path, v)
-            if not os.path.exists(f):
-                continue
-            with open(f) as fh:
-                for action in _read_actions(fh):
-                    if "add" in action:
-                        if action["add"].get("deletionVector"):
-                            # DV re-add = row-removal bookkeeping, not
-                            # an append; the appends-stream consumer
-                            # skips it (ignoreDeletes contract)
-                            continue
-                        parts.append(
-                            _FilePartition(
-                                os.path.join(self.path, action["add"]["path"]),
-                                action["add"].get("partitionValues") or {},
-                                None,
-                                cm,
-                                fids,
-                            )
-                        )
-        # Structured Streaming requires >= 1 partition per batch; an
-        # empty range yields one empty-file sentinel handled in read()
-        return parts or [_FilePartition("", {})]
-
-    def read(self, partition):
-        if not partition.file_path:
-            return iter(())
-        return _read_file_batches(self.schema_, partition)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the query checkpoint; the log is immutable
-
-    def stop(self) -> None:
-        pass
-
-
-class DeltaLogDataSource(DataSource):
+class DeltaLogDataSource(LogDataSource):
     """``format("deltalog")`` — see module docstring. Options:
     ``path`` (required), ``versionAsOf`` (batch time travel),
     ``startingVersion`` (stream start; default −1 = from the
     beginning, i.e. the first batch carries the current snapshot's
-    whole history of adds), ``maxVersionsPerBatch`` (stream rate
-    limit — see ``_RateLimitedOffsets``; also the incremental-drain
-    stand-in for availableNow, which Spark's Python DataSource
-    wrapper downgrades to a single batch)."""
+    whole history of adds; change-feed batch default 0),
+    ``maxVersionsPerBatch`` (stream rate limit), ``partitionBy``
+    (write) and ``txnAppId`` (stream writer identity; default
+    'deltalog-stream')."""
+
+    stream_start = -1
+    cdf_start = 0
+    app_id_option = "txnappid"
 
     @classmethod
     def name(cls) -> str:
         return "deltalog"
 
-    def _path(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("deltalog requires .load(<table path>)")
-        return path
+    def table_schema(self) -> StructType:
+        snap = _replay(None, self._path(), self._version())
+        return StructType.fromJson(json.loads(snap.metadata["schemaString"]))
 
-    def _cdf(self) -> bool:
-        return str(self.options.get("readchangefeed", "false")).lower() \
-            == "true"
+    def latest_version(self) -> int:
+        return delta_table_version(self._path())
 
-    def schema(self):
-        version = self.options.get("versionasof")
-        snap = _replay(
-            None, self._path(), int(version) if version is not None else None
+    def _files(self, snap):
+        """``(rel, add, **kw) -> LogFile`` for data files of ``snap``'s
+        table. On a column-mapped table, files, ``partitionValues``
+        keys and stats use PHYSICAL names, so the read resolves them
+        to logical ones — by parquet footer field id first in id mode
+        (the spec's id-mode rule; name mode matches physical names
+        even when ids are present in the footers), else by
+        physicalName."""
+        cm = snap.column_mapping or {}
+        mode = (snap.metadata.get("configuration") or {}).get(
+            "delta.columnMapping.mode", "none"
         )
-        base = StructType.fromJson(json.loads(snap.metadata["schemaString"]))
-        if self._cdf():
-            return StructType(
-                list(base.fields)
-                + [StructField("_change_type", StringType()),
-                   StructField("_commit_version", LongType())]
+        ids = (snap.column_mapping_ids or {}) if mode == "id" else {}
+        logical = {p: c for c, p in cm.items()}
+        resolve = {c: (ids.get(c), [p]) for c, p in cm.items()} or None
+        root = self._path()
+        return lambda rel, add, **kw: LogFile(
+            os.path.join(root, rel),
+            {logical.get(k, k): v
+             for k, v in (add.get("partitionValues") or {}).items()},
+            resolve, **kw,
+        )
+
+    def snapshot_files(self, predicates: dict) -> list:
+        from .delta import _stats_prune, read_deletion_vector
+
+        path = self._path()
+        # _replay is log-file-only (its spark param is unused — the
+        # snapshot is driver-side metadata); None keeps this planner
+        # independent of an active session
+        snap = _replay(None, path, self._version())
+        # stats and partitionValues are keyed by PHYSICAL names on a
+        # column-mapped table; pushed filters use logical ones
+        preds = snap.to_physical(predicates)
+
+        def part_prune(add) -> bool:
+            pv = add.get("partitionValues") or {}
+            return any(
+                col in pv and pv[col] is not None and lo is not None
+                and lo == hi and _hive_eq(lo, pv[col]) is False
+                for col, (lo, hi) in preds.items()
             )
-        return base
 
-    def reader(self, schema: StructType) -> DataSourceReader:
-        if self._cdf():
-            return _DeltaCdfBatchReader(
-                self._path(), schema,
-                int(self.options.get("startingversion", 0)),
-                int(self.options["endingversion"])
-                if "endingversion" in self.options else None,
+        file = self._files(snap)
+        return [
+            file(
+                p, add,
+                exclude=read_deletion_vector(path, add["deletionVector"])
+                if add.get("deletionVector") else None,
             )
-        version = self.options.get("versionasof")
-        cls = (
-            _DeltaBatchPushdownReader if pushdown_enabled()
-            else _DeltaBatchReader
-        )
-        return cls(
-            self._path(), schema, int(version) if version is not None else None
-        )
+            for p, add in sorted(snap.files.items())
+            if not _stats_prune(add, preds) and not part_prune(add)
+        ]
 
-    def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        starting = int(self.options.get("startingversion", -1))
-        mvb = self.options.get("maxversionsperbatch")
-        mvb = int(mvb) if mvb is not None else None
-        if self._cdf():
-            return _DeltaCdfStreamReader(self._path(), schema, starting, mvb)
-        return _DeltaStreamReader(self._path(), schema, starting, mvb)
+    def appended_files(self, lo: int, hi: int) -> list:
+        from .delta import _commit_file, _read_actions
 
-    def _writer_partitioning(self, schema: StructType) -> list[str]:
+        file = self._files(_replay(None, self._path(), hi))
+        parts = []
+        for v in range(lo + 1, hi + 1):
+            f = _commit_file(self._path(), v)
+            if not os.path.exists(f):
+                continue
+            with open(f) as fh:
+                # a DV re-add is row-removal bookkeeping, not an
+                # append; the appends-stream consumer skips it
+                # (ignoreDeletes contract)
+                parts += [
+                    file(a["add"]["path"], a["add"])
+                    for a in _read_actions(fh)
+                    if "add" in a and not a["add"].get("deletionVector")
+                ]
+        return parts
+
+    def changed_files(self, lo: int, hi: int) -> list:
+        """Change-feed planning for one ``(lo, hi]`` window (same
+        semantics as ``delta_changes``): file adds as inserts and
+        removes as deletes, each minus the relevant ENDPOINT's
+        deletion vector; deletion-vector deltas as exact row
+        deletes."""
+        from .delta import _dv_positions, _plan_changes
+
+        path = self._path()
+        snap, start_snap, added, removed, row_dels = _plan_changes(
+            path, lo, hi
+        )
+        file = self._files(snap)
+        parts = []
+        for files, change, src in (
+            (added, "insert", snap), (removed, "delete", start_snap),
+        ):
+            for p, v in sorted(files.items()):
+                add = (src.files if src is not None else {}).get(p) or {}
+                excl = _dv_positions(path, src, p)
+                parts.append(file(
+                    p, add, change=(change, int(v)),
+                    exclude=sorted(excl) if excl else None,
+                ))
+        for v, per_path in sorted(row_dels.items()):
+            for p, poss in sorted(per_path.items()):
+                parts.append(file(
+                    p, snap.files.get(p) or {},
+                    change=("delete", int(v)), include=sorted(poss),
+                ))
+        return parts
+
+    def write_plan(self, schema: StructType) -> tuple[list[str], None]:
         """Validate a write against the log BEFORE executors write a
-        single file (mirrors _IceWriter) — append without partitionBy
-        must inherit the table's spec, or foreign Delta readers
-        reconstructing partition columns from partitionValues would
-        see an unpartitioned corruption."""
-        from .delta import _list_versions
+        single file — append without partitionBy must inherit the
+        table's spec, or foreign Delta readers reconstructing
+        partition columns from partitionValues would see an
+        unpartitioned corruption."""
+        from .delta import _generated_exprs, _identity_specs, _list_versions
 
         part = self.options.get("partitionby")
         partition_by = [c.strip() for c in part.split(",")] if part else []
-        if _list_versions(self._path()):
-            snap = _replay(None, self._path(), None)
-            if snap.column_mapping:
-                # executors write files named by the DataFrame's
-                # logical columns — physically wrong for a mapped
-                # table; write_delta_table handles the renames
-                raise ValueError(
-                    "deltalog write: column-mapped tables are not "
-                    "writable through the DataSource — use "
-                    "write_delta_table (it renames columns to their "
-                    "physicalNames)"
-                )
-            # executor-side Arrow tasks can't evaluate the table's SQL
-            # enforcement expressions; committing unvalidated rows would
-            # silently break the CHECK / generation contract — refuse
-            # loudly and point at the enforcing writer
-            from .delta import _generated_exprs
-
-            cfg = snap.metadata.get("configuration") or {}
-            ck = sorted(
-                k.split("delta.constraints.", 1)[1]
-                for k in cfg if k.startswith("delta.constraints.")
+        if not _list_versions(self._path()):
+            return partition_by, None
+        snap = _replay(None, self._path(), None)
+        if snap.column_mapping:
+            # executors write files named by the DataFrame's logical
+            # columns — physically wrong for a mapped table;
+            # write_delta_table handles the renames
+            raise ValueError(
+                "deltalog write: column-mapped tables are not "
+                "writable through the DataSource — use "
+                "write_delta_table (it renames columns to their "
+                "physicalNames)"
             )
-            if ck:
-                raise ValueError(
-                    f"deltalog write: table carries CHECK constraint(s) "
-                    f"{ck}, which this writer cannot enforce — use "
-                    "write_delta_table"
-                )
-            gen = _generated_exprs(snap.metadata)
-            if gen:
-                raise ValueError(
-                    f"deltalog write: table has generated column(s) "
-                    f"{sorted(gen)}, which this writer cannot compute or "
-                    "validate — use write_delta_table"
-                )
-            from .delta import _identity_specs
-
-            ident = _identity_specs(snap.metadata)
-            if ident:
-                raise ValueError(
-                    f"deltalog write: table has identity column(s) "
-                    f"{sorted(ident)} (GENERATED ALWAYS) — executor-side "
-                    "tasks cannot allocate high-water-mark-correct "
-                    "values; use write_delta_table"
-                )
-            table_schema = StructType.fromJson(
-                json.loads(snap.metadata["schemaString"])
+        # executor-side Arrow tasks can't evaluate the table's SQL
+        # enforcement expressions; committing unvalidated rows would
+        # silently break the CHECK / generation contract — refuse
+        # loudly and point at the enforcing writer
+        cfg = snap.metadata.get("configuration") or {}
+        ck = sorted(
+            k.split("delta.constraints.", 1)[1]
+            for k in cfg if k.startswith("delta.constraints.")
+        )
+        if ck:
+            raise ValueError(
+                f"deltalog write: table carries CHECK constraint(s) "
+                f"{ck}, which this writer cannot enforce — use "
+                "write_delta_table"
             )
-            if [f.name for f in schema.fields] != \
-                    [f.name for f in table_schema.fields]:
-                raise ValueError(
-                    "deltalog write: DataFrame columns "
-                    f"{[f.name for f in schema.fields]} do not match the "
-                    f"table schema {[f.name for f in table_schema.fields]}"
-                )
-            if not partition_by:
-                partition_by = list(snap.partition_columns)
-            elif partition_by != list(snap.partition_columns):
-                raise ValueError(
-                    f"deltalog write: partitionBy {partition_by} conflicts "
-                    f"with the table's spec {list(snap.partition_columns)}"
-                )
-        return partition_by
+        gen = _generated_exprs(snap.metadata)
+        if gen:
+            raise ValueError(
+                f"deltalog write: table has generated column(s) "
+                f"{sorted(gen)}, which this writer cannot compute or "
+                "validate — use write_delta_table"
+            )
+        ident = _identity_specs(snap.metadata)
+        if ident:
+            raise ValueError(
+                f"deltalog write: table has identity column(s) "
+                f"{sorted(ident)} (GENERATED ALWAYS) — executor-side "
+                "tasks cannot allocate high-water-mark-correct "
+                "values; use write_delta_table"
+            )
+        names = [f.name for f in schema.fields]
+        table_names = [
+            f["name"] for f in json.loads(snap.metadata["schemaString"])["fields"]
+        ]
+        if names != table_names:
+            raise ValueError(
+                f"deltalog write: DataFrame columns {names} do not match "
+                f"the table schema {table_names}"
+            )
+        if not partition_by:
+            partition_by = list(snap.partition_columns)
+        elif partition_by != list(snap.partition_columns):
+            raise ValueError(
+                f"deltalog write: partitionBy {partition_by} conflicts "
+                f"with the table's spec {list(snap.partition_columns)}"
+            )
+        return partition_by, None
 
-    def writer(self, schema: StructType, overwrite: bool):
-        return _DeltaWriter(
-            self._path(), schema, overwrite, self._writer_partitioning(schema)
-        )
-
-    def streamWriter(self, schema: StructType, overwrite: bool):
-        return _DeltaStreamWriter(
-            self._path(), schema, overwrite,
-            self._writer_partitioning(schema),
-            self.options.get("txnappid", "deltalog-stream"),
-        )
-
-
-class _DeltaCommitMessage(WriterCommitMessage):
-    def __init__(self, files: list):
-        # (rel_path, size, partition_values, stats_json) per written file
-        self.files = files
-
-
-class _DeltaWriter(DataSourceArrowWriter):
-    """The cluster-correct Delta commit protocol, which the API maps
-    onto exactly: every EXECUTOR task streams its Arrow batches into
-    uniquely-named parquet files under the table root and reports
-    them in its commit message; the DRIVER then turns the collected
-    messages into one put-if-absent log commit (``commit``) or
-    deletes the orphans (``abort``) — no staging directory, no
-    renames, and a lost race leaves only unreferenced files (the
-    spec's own failure mode)."""
-
-    def __init__(self, path: str, schema: StructType,
-                 overwrite: bool, partition_by: list[str]):
-        self.path = path
-        self.schema_ = schema
-        self.overwrite = overwrite
-        self.partition_by = partition_by
-
-    def write(self, iterator):
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+    @staticmethod
+    def data_file(writer, kv: dict, piece) -> tuple:
+        """Executor-side: hive-dir layout, partition columns dropped
+        from the file → ``(rel_path, size, partitionValues,
+        stats_json)``."""
         from .delta import _file_stats_json
 
-        batches = list(iterator)
-        files: list = []
-        if batches:
-            tbl = pa.Table.from_batches(batches)
-            groups: list[tuple[dict, "pa.Table"]] = []
-            if self.partition_by:
-                import pyarrow.compute as pc
-
-                keys = tbl.group_by(self.partition_by).aggregate([]).to_pylist()
-                for kv in keys:
-                    mask = None
-                    for c, v in kv.items():
-                        col = tbl.column(c)
-                        m = pc.is_null(col) if v is None \
-                            else pc.equal(col, pa.scalar(v))
-                        mask = m if mask is None else pc.and_(mask, m)
-                    part = {c: (None if v is None else str(v)) for c, v in kv.items()}
-                    groups.append((part, tbl.filter(mask).drop_columns(self.partition_by)))
-            else:
-                groups.append(({}, tbl))
-            for part, piece in groups:
-                if piece.num_rows == 0:
-                    continue
-                segs = [f"{k}={v if v is not None else '__HIVE_DEFAULT_PARTITION__'}"
-                        for k, v in sorted(part.items())]
-                rel_dir = "/".join(segs)
-                rel = (f"{rel_dir}/" if rel_dir else "") + \
-                    f"part-{_uuid.uuid4().hex}.parquet"
-                dest = os.path.join(self.path, rel)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                pq.write_table(piece, dest)
-                files.append(
-                    (rel, os.path.getsize(dest), part, _file_stats_json(dest))
-                )
-        return _DeltaCommitMessage(files)
-
-    def commit(self, messages) -> None:
-        self._do_commit(messages)
-
-    def _do_commit(self, messages, txn: dict | None = None,
-                   operation: str = "WRITE") -> None:
-        import time as _time
-
-        from .delta import (
-            _atomic_commit,
-            _list_versions,
-            _replay,
+        rel, dest = writer.put(
+            "/".join(hive_dirs(kv)), piece.drop_columns(writer.partition_by)
         )
-        import uuid as _uuid
+        part = {c: (None if v is None else str(v)) for c, v in kv.items()}
+        return rel, os.path.getsize(dest), part, _file_stats_json(dest)
 
-        now_ms = int(_time.time() * 1000)
-        versions = _list_versions(self.path)
-        new_version = (versions[-1] + 1) if versions else 0
+    def commit_files(self, writer, files: list, stream) -> None:
+        """One put-if-absent log commit of ``files`` (protocol +
+        metaData on a first commit, removes of every live file on
+        overwrite); a stream commit carries the spec's ``txn``
+        watermark ``(appId, version=batchId)``."""
+        import time
+        import uuid
+
+        from .delta import _atomic_commit, _list_versions, _remove_action
+
+        path = self._path()
+        now_ms = int(time.time() * 1000)
+        versions = _list_versions(path)
         actions: list[dict] = []
         if not versions:
             actions.append(
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
-            actions.append(
-                {
-                    "metaData": {
-                        "id": str(_uuid.uuid4()),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": self.schema_.json(),
-                        "partitionColumns": self.partition_by,
-                        "configuration": {},
-                        "createdTime": now_ms,
-                    }
-                }
-            )
-        elif self.overwrite:
-            from .delta import _remove_action
+            actions.append({"metaData": {
+                "id": str(uuid.uuid4()),
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": writer.schema_.json(),
+                "partitionColumns": writer.partition_by,
+                "configuration": {},
+                "createdTime": now_ms,
+            }})
+        elif writer.overwrite:
+            snap = _replay(None, path, versions[-1])
+            actions += [
+                {"remove": _remove_action(p, snap.files[p], now_ms)}
+                for p in sorted(snap.files)
+            ]
+        actions += [
+            {"add": {
+                "path": rel,
+                "partitionValues": part,
+                "size": size,
+                "modificationTime": now_ms,
+                "dataChange": True,
+                "stats": stats,
+            }}
+            for rel, size, part, stats in files
+        ]
+        if stream is not None:
+            actions.append({"txn": {"appId": stream[0], "version": stream[1]}})
+        actions.append({"commitInfo": {
+            "timestamp": now_ms,
+            "operation": "STREAMING UPDATE" if stream else "WRITE",
+            "operationParameters": {
+                "mode": "overwrite" if writer.overwrite else "append"
+            },
+            "engineInfo": "etl-processing-scd1-spark deltalog datasource",
+        }})
+        _atomic_commit(path, (versions[-1] + 1) if versions else 0, actions)
 
-            snap = _replay(None, self.path, versions[-1])
-            for p in sorted(snap.files):
-                actions.append(
-                    {"remove": _remove_action(p, snap.files[p], now_ms)}
-                )
-        for m in messages:
-            for rel, size, part, stats in (m.files if m else []):
-                actions.append(
-                    {
-                        "add": {
-                            "path": rel,
-                            "partitionValues": part,
-                            "size": size,
-                            "modificationTime": now_ms,
-                            "dataChange": True,
-                            "stats": stats,
-                        }
-                    }
-                )
-        if txn is not None:
-            actions.append({"txn": txn})
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": operation,
-                    "operationParameters": {
-                        "mode": "overwrite" if self.overwrite else "append"
-                    },
-                    "engineInfo": "etl-processing-scd1-spark deltalog datasource",
-                }
-            }
-        )
-        _atomic_commit(self.path, new_version, actions)
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            for rel, _size, _part, _stats in (m.files if m else []):
-                f = os.path.join(self.path, rel)
-                if os.path.exists(f):
-                    os.unlink(f)
-
-
-class _DeltaStreamWriter(_DeltaWriter, DataSourceStreamArrowWriter):
-    """``df.writeStream.format("deltalog")`` — the EXACTLY-ONCE
-    streaming sink as a first-class stream writer: executors reuse
-    the batch writer's Arrow file path verbatim; the driver commit
-    records the spec's ``txn`` watermark ``(appId, version=batchId)``
-    in the same atomic commit, and a REPLAYED micro-batch (restart
-    between sink commit and checkpoint write) is detected via
-    ``delta_last_txn_version`` and dropped — its duplicate files are
-    deleted, nothing double-counts. ``option("txnAppId", ...)`` names
-    the writer identity (stable across restarts of one query; default
-    'deltalog-stream')."""
-
-    def __init__(self, path: str, schema: StructType,
-                 overwrite: bool, partition_by: list[str], app_id: str):
-        _DeltaWriter.__init__(self, path, schema, overwrite, partition_by)
-        self.app_id = app_id
-
-    def commit(self, messages, batchId: int) -> None:
+    def last_batch_id(self, app_id: str) -> int:
         from .delta import delta_last_txn_version
 
-        if delta_last_txn_version(None, self.path, self.app_id) >= batchId:
-            _DeltaWriter.abort(self, messages)  # replayed batch: drop dupes
-            return
-        self._do_commit(
-            messages,
-            txn={"appId": self.app_id, "version": batchId},
-            operation="STREAMING UPDATE",
-        )
-
-    def abort(self, messages, batchId: int) -> None:
-        _DeltaWriter.abort(self, messages)
+        return delta_last_txn_version(None, self._path(), app_id)

@@ -4518,9 +4518,9 @@ def _plan_ice_changes(path: str, from_version: int,
     events: list[dict] = []
     # Delete-descriptor key columns resolve against the WINDOW-END
     # schema: the changelog executor renames every data file's
-    # columns to end-of-window logical names (_ice_cdf_partitions
-    # passes _resolve_map(end_meta)), so the merge keys must match
-    # those — and end meta's name-mapping is a superset of every
+    # columns to end-of-window logical names (the DataSource's
+    # changed_files passes _resolve_map(end_meta)), so the merge keys
+    # must match those — and end meta's name-mapping is a superset of every
     # in-window version's, so physical resolution covers all files.
     end_meta = _load_metadata(path, to_version)
     end_by_id = _field_names_by_id(end_meta)

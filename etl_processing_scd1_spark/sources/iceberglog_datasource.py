@@ -3,20 +3,21 @@ Python DataSource API twin of ``deltalog_datasource``:
 
 - batch: ``spark.read.format("iceberglog").load(path)`` — snapshot
   read planned from the manifest tree (options ``versionAsOf`` /
-  ``snapshotId`` time-travel);
+  ``snapshotId`` / ``ref`` time-travel);
 - streaming: ``spark.readStream.format("iceberglog").load(path)``
   — incremental appends: offsets are METADATA VERSIONS; a micro
   batch carries exactly the data files whose manifest entries were
   ADDED by snapshots committed in ``(start, end]`` (the
   appends-stream contract — overwrite/replace snapshots surface
-  their added files too; row-level deletes don't exist in v1 and
-  gate in the reader).
+  their added files too; row-level deletes are skipped).
 
-Scale shape matches the Delta twin: planning walks metadata only;
-one ``InputPartition`` per data file, read executor-side with
-pyarrow into Arrow RecordBatches; identity-partition constants are
-reattached from the manifest's typed partition tuple when a file
-omits the column (hive-migrated layouts).
+The readers, writers and executor read are the shared
+``log_datasource`` family; this module supplies the Iceberg side:
+manifest planning, position/equality delete files and deletion
+vectors, field-id + name-mapping resolution, the ``data/`` layout
+with footer bounds, and the snapshot commit. Identity-partition
+constants are reattached from the manifest's typed partition tuple
+when a file omits the column (hive-migrated layouts).
 
 Register per session:
 ``spark.dataSource.register(IcebergLogDataSource)``.
@@ -24,19 +25,9 @@ Register per session:
 
 from __future__ import annotations
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceStreamArrowWriter,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
-)
 from pyspark.sql.types import StructType
 
 from .avro import load_avro
-from .deltalog_datasource import _RateLimitedOffsets
 from .iceberg import (
     _field_names_by_id,
     _load_metadata,
@@ -46,6 +37,7 @@ from .iceberg import (
     _spark_schema,
     iceberg_table_version,
 )
+from .log_datasource import LogDataSource, LogFile, hive_dirs
 
 
 def _exact_pd(tbl):
@@ -67,296 +59,13 @@ def _exact_pd(tbl):
     return tbl.to_pandas(types_mapper=mapper)
 
 
-def _resolve_map(meta: dict) -> dict:
-    """logical name → (field_id, [historical names]) for rename-safe
-    executor-side column resolution."""
-    cands = _name_candidates(meta)
-    return {
-        name: (fid, cands.get(name, [name]))
-        for fid, name in _field_names_by_id(meta).items()
-    }
-
-
-class _IcePartition(InputPartition):
-    def __init__(self, file_path: str, partition_values: dict,
-                 delete_positions: list | None = None,
-                 eq_deletes: list | None = None,
-                 resolve: dict | None = None,
-                 defaults: dict | None = None):
-        self.file_path = file_path
-        self.partition_values = partition_values
-        # v3 §Default Values: column -> initial-default for columns
-        # this file may predate (filled ONLY when the footer lacks
-        # the column — newer files' explicit NULLs stay NULL)
-        self.defaults = defaults
-        # v2 merge-on-read: row positions deleted from THIS file
-        # (planned driver-side from the snapshot's position-delete
-        # files, shipped per partition so each executor task filters
-        # only its own file's vector)
-        self.delete_positions = delete_positions
-        # v2 equality deletes that apply to THIS file (the planner
-        # ships only deletes whose sequence number is strictly
-        # greater than the file's): (delete_parquet_path, key_column
-        # names) — the executor anti-joins the small delete file
-        # against its own data file
-        self.eq_deletes = eq_deletes
-        # rename-safe column resolution: current logical name ->
-        # (field_id, [historical names, current first]) — the spec's
-        # match-by-field-id rule with the name-mapping fallback for
-        # files written without parquet field ids
-        self.resolve = resolve
-
-
-def _resolve_columns(tbl, res: dict | None):
-    """Rename a data file's physical columns to the CURRENT logical
-    names (spec §Column Projection): match by parquet ``field_id``
-    metadata first — files written by id-stamping engines survive ANY
-    rename — then by the ``schema.name-mapping.default`` history.
-    Files already carrying the current names pass through untouched."""
-    if not res:
-        return tbl
-    fid_to_col = {}
-    for f in tbl.schema:
-        v = (f.metadata or {}).get(b"PARQUET:field_id")
-        if v is not None:
-            try:
-                fid_to_col[int(v)] = f.name
-            except ValueError:
-                pass
-    renames = {}
-    for logical, (fid, cands) in res.items():
-        src = fid_to_col.get(fid) if fid is not None else None
-        if src is None:
-            src = next((c for c in cands if c in tbl.column_names), None)
-        if src is not None and src != logical:
-            renames[src] = logical
-    if renames:
-        tbl = tbl.rename_columns(
-            [renames.get(c, c) for c in tbl.column_names]
-        )
-    return tbl
-
-
-def _read_batches(schema: StructType, part: _IcePartition):
-    """Executor-side: one parquet data file → Arrow RecordBatches in
-    the table schema; partition-tuple constants fill columns a
-    foreign file omits (values are already typed in the manifest);
-    the file's position-delete vector (if any) is dropped by row
-    index before batching."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    want = to_arrow_schema(schema)
-    tbl = _resolve_columns(pq.read_table(part.file_path), part.resolve)
-    if part.delete_positions:
-        import numpy as np
-
-        dead = np.asarray(sorted(part.delete_positions), dtype=np.int64)
-        keep = np.setdiff1d(
-            np.arange(tbl.num_rows, dtype=np.int64), dead, assume_unique=True
-        )
-        tbl = tbl.take(pa.array(keep))
-    for dpath, sel in part.eq_deletes or []:
-        # equality delete: vectorized anti-join of the (small) delete
-        # file's keys against this data file. pandas merge matches
-        # NaN==NaN on join keys — Iceberg's null-equals-null delete
-        # semantics. ``sel`` maps current logical key name → the
-        # file's PHYSICAL column (resolved by the planner through
-        # footer field ids / name-mapping, like data files).
-        import numpy as np
-
-        cols = list(sel)
-        keys_pd = _exact_pd(
-            pq.read_table(dpath, columns=list(sel.values()))
-        ).rename(columns={p: c for c, p in sel.items()})
-        keys_pd = keys_pd.drop_duplicates()
-        # a pre-evolution data file may LACK a key column added
-        # later: its rows carry NULL there (spec read semantics),
-        # and NULL matches a NULL delete key
-        present = [c for c in cols if c in tbl.column_names]
-        data_pd = _exact_pd(tbl.select(present))
-        for c in cols:
-            if c not in present:
-                data_pd[c] = keys_pd[c].iloc[0:0].reindex(
-                    range(len(data_pd))
-                )
-        data_pd["__idx"] = np.arange(len(data_pd), dtype=np.int64)
-        merged = data_pd.merge(keys_pd, on=list(cols), how="left",
-                               indicator=True)
-        keep_idx = np.sort(
-            merged.loc[merged["_merge"] == "left_only", "__idx"].to_numpy()
-        )
-        if len(keep_idx) != tbl.num_rows:
-            tbl = tbl.take(pa.array(keep_idx))
-    n = tbl.num_rows
-    arrays = []
-    for field in want:
-        if field.name in tbl.column_names:
-            col = tbl.column(field.name)
-            if col.type != field.type:
-                col = col.cast(field.type)
-            arrays.append(col)
-        else:
-            raw = part.partition_values.get(field.name)
-            if raw is None and getattr(part, "defaults", None):
-                raw = part.defaults.get(field.name)
-            if raw is None:
-                arrays.append(pa.nulls(n, field.type))
-            else:
-                arrays.append(pa.repeat(pa.scalar(raw).cast(field.type), n))
-    yield from pa.table(arrays, schema=want).to_batches(max_chunksize=1 << 16)
-
-
-class _IceBatchReader(DataSourceReader):
-    """Plain snapshot reader — deliberately does NOT override
-    ``pushFilters`` so it plans on sessions without
-    ``spark.sql.python.filterPushdown.enabled`` (overriding the
-    method there is a planning error — see
-    ``deltalog_datasource.pushdown_enabled``).
-    ``_IceBatchPushdownReader`` adds manifest-bounds skipping for
-    opted-in sessions."""
-
-    def __init__(self, path: str, schema: StructType,
-                 version: int | None, snapshot_id: int | None):
-        self.path = path
-        self.schema_ = schema
-        self.version = version
-        self.snapshot_id = snapshot_id
-        self.predicates: dict = {}
-
-    def partitions(self):
-        meta = _load_metadata(self.path, self.version)
-        _, files, deletes = _snapshot_files(
-            self.path, meta, self.snapshot_id, self.predicates
-        )
-        by_file: dict[str, list[int]] = {}
-        dvs = [d for d in deletes if d.get("dv")]
-        if dvs:
-            # format v3 deletion vectors: newest sequence per data
-            # file wins; blobs are bitmap-scale driver reads
-            from .puffin import decode_dv_blob, read_blob
-
-            best: dict[str, dict] = {}
-            for d in sorted(dvs, key=lambda d: (d["seq"], d["path"])):
-                best[_norm_path(str(d["dv"]["referenced"]), self.path)] = d
-            for ref, d in best.items():
-                by_file.setdefault(ref, []).extend(
-                    decode_dv_blob(read_blob(
-                        d["path"], d["dv"]["offset"], d["dv"]["size"]
-                    ))
-                )
-        pos_paths = sorted(
-            d["path"] for d in deletes
-            if d["content"] == 1 and not d.get("dv")
-        )
-        if pos_paths:
-            # Delete files are metadata-scale (one (path, pos) row per
-            # deleted row, heavily compressed); the driver reads them
-            # once at planning time and ships each data file ONLY its
-            # own vector — same planning contract as native clients.
-            import pyarrow.parquet as pq
-
-            for dp in pos_paths:
-                t = pq.read_table(dp, columns=["file_path", "pos"])
-                for fp, pos in zip(
-                    t.column("file_path").to_pylist(),
-                    t.column("pos").to_pylist(),
-                ):
-                    by_file.setdefault(
-                        _norm_path(str(fp), self.path), []
-                    ).append(int(pos))
-        eq_dels = [d for d in deletes if d["content"] == 2]
-        by_id = _field_names_by_id(meta) if eq_dels else {}
-        # column resolution (field ids / name-mapping → the file's
-        # physical names) happens HERE on the driver, once per delete
-        # file, so renames never orphan a live delete
-        from .iceberg import _resolve_delete_file_columns
-
-        eq_sel = {
-            d["path"]: _resolve_delete_file_columns(
-                d["path"], d["equality_ids"], by_id, meta
-            )
-            for d in eq_dels
-        }
-
-        def eq_for(file_seq: int):
-            # strict bound: an equality delete erases only rows of
-            # data files with a SMALLER sequence number
-            out = [
-                (d["path"], eq_sel[d["path"]])
-                for d in sorted(eq_dels, key=lambda d: (d["seq"], d["path"]))
-                if d["seq"] > file_seq
-            ]
-            return out or None
-
-        resolve = _resolve_map(meta)
-        from .iceberg import _field_defaults
-
-        defaults = {c: v for c, (v, _t) in _field_defaults(meta).items()} \
-            or None
-        return [
-            _IcePartition(p, part or {}, by_file.get(p), eq_for(seq), resolve,
-                          defaults)
-            for p, part, seq in sorted(files)
-        ]
-
-    def read(self, partition):
-        yield from _read_batches(self.schema_, partition)
-
-
-class _IceBatchPushdownReader(_IceBatchReader):
-    """Snapshot reader + manifest-bounds file skipping — only handed
-    out when the active session enables Python DataSource pushdown."""
-
-    def pushFilters(self, filters):
-        """File-skipping pushdown through the MANIFEST bounds (the
-        format's planning-time pruning): comparison filters become
-        the same ``{col: (lo, hi)}`` ranges ``iceberg_plan_files``
-        takes. All filters are returned for exact row evaluation —
-        bounds skipping is a superset guarantee."""
-        from .deltalog_datasource import filters_to_ranges
-
-        self.predicates, _ = filters_to_ranges(filters)
-        return filters
-
-
-class _IceCdfPartition(InputPartition):
-    """One data file's contribution to a changelog window:
-    ``include_positions`` set → emit ONLY those rows (a
-    position-delete delta); else the file minus
-    ``exclude_positions``. Equality-delete interplay is deferred
-    here from the planner (metadata-only) to the executor task:
-    ``eq_prior`` (delete_path, key_cols) pairs re-establish which
-    rows were still ALIVE at the window start (anti-join), and
-    ``eq_new`` — set only for 'eq_row_delete' events — selects the
-    rows the commit's fresh equality delete erased (semi-join)."""
-
-    def __init__(self, file_path: str, partition_values: dict,
-                 change_type: str, commit_version: int,
-                 include_positions: list | None = None,
-                 exclude_positions: list | None = None,
-                 resolve: dict | None = None,
-                 eq_prior: list | None = None,
-                 eq_new: list | None = None):
-        self.file_path = file_path
-        self.partition_values = partition_values
-        self.change_type = change_type
-        self.commit_version = commit_version
-        self.include_positions = include_positions
-        self.exclude_positions = exclude_positions
-        self.resolve = resolve
-        self.eq_prior = eq_prior
-        self.eq_new = eq_new
-
-
 def _eq_match_idx(tbl, dpath: str, sel: dict):
     """Row indexes of ``tbl`` whose key columns appear in the
     equality-delete parquet at ``dpath`` (``sel``: current logical
-    name → the file's physical column, planner-resolved). pandas
-    merge matches NaN==NaN on join keys — Iceberg's null-equals-null
-    delete rule."""
+    name → the file's physical column, planner-resolved through
+    footer field ids / name-mapping, like data files). pandas merge
+    matches NaN==NaN on join keys — Iceberg's null-equals-null delete
+    rule."""
     import numpy as np
     import pyarrow.parquet as pq
 
@@ -369,7 +78,9 @@ def _eq_match_idx(tbl, dpath: str, sel: dict):
     data_pd = _exact_pd(tbl.select(present))
     for c in cols:
         if c not in present:
-            # pre-evolution file: the key column reads NULL per spec
+            # a pre-evolution data file may LACK a key column added
+            # later: its rows carry NULL there (spec read semantics),
+            # and NULL matches a NULL delete key
             data_pd[c] = keys_pd[c].iloc[0:0].reindex(range(len(data_pd)))
     data_pd["__idx"] = np.arange(len(data_pd), dtype=np.int64)
     merged = data_pd.merge(keys_pd, on=list(cols), how="left",
@@ -401,284 +112,49 @@ def _eq_filter(tbl, descriptors: list, keep_matches: bool):
     return tbl.take(pa.array(np.sort(keep)))
 
 
-def _read_ice_cdf_batches(schema: StructType, part: _IceCdfPartition):
-    """Executor-side changelog read: rename-safe column resolution,
-    position filter, table-schema assembly, plus the two constant CDF
-    columns."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    want = to_arrow_schema(schema)
-    tbl = _resolve_columns(pq.read_table(part.file_path), part.resolve)
-    if part.include_positions is not None:
-        tbl = tbl.take(pa.array(
-            np.asarray(sorted(part.include_positions), dtype=np.int64)
-        ))
-    elif part.exclude_positions:
-        dead = np.asarray(sorted(part.exclude_positions), dtype=np.int64)
-        keep = np.setdiff1d(
-            np.arange(tbl.num_rows, dtype=np.int64), dead, assume_unique=True
-        )
-        tbl = tbl.take(pa.array(keep))
-    if getattr(part, "eq_prior", None):
-        # rows erased by equality deletes BEFORE the window: not part
-        # of any change this window emits
-        tbl = _eq_filter(tbl, part.eq_prior, keep_matches=False)
-    if getattr(part, "eq_new", None):
-        # 'eq_row_delete': only rows the commit's fresh equality
-        # delete actually erased
-        tbl = _eq_filter(tbl, part.eq_new, keep_matches=True)
-    n = tbl.num_rows
-    arrays = []
-    for field in want:
-        if field.name == "_change_type":
-            arrays.append(pa.repeat(
-                pa.scalar(part.change_type, type=field.type), n
-            ))
-            continue
-        if field.name == "_commit_version":
-            arrays.append(pa.repeat(
-                pa.scalar(int(part.commit_version), type=field.type), n
-            ))
-            continue
-        if field.name in tbl.column_names:
-            col = tbl.column(field.name)
-            if col.type != field.type:
-                col = col.cast(field.type)
-            arrays.append(col)
-        else:
-            raw = part.partition_values.get(field.name)
-            if raw is None and getattr(part, "defaults", None):
-                raw = part.defaults.get(field.name)
-            if raw is None:
-                arrays.append(pa.nulls(n, field.type))
-            else:
-                arrays.append(pa.repeat(pa.scalar(raw).cast(field.type), n))
-    yield from pa.table(arrays, schema=want).to_batches(max_chunksize=1 << 16)
-
-
-def _ice_cdf_partitions(path: str, from_v: int, to_v: int) -> list:
-    from .iceberg import _plan_ice_changes
-
-    if to_v < 1:
-        return []
-    end_meta = _load_metadata(path, to_v)
-    resolve = _resolve_map(end_meta)
-    kind = {
-        "insert": "insert",
-        "delete": "delete",
-        "row_delete": "delete",
-        "eq_row_delete": "delete",
+def _resolve_map(meta: dict) -> dict:
+    """logical name → (field_id, [historical names]) for rename-safe
+    executor-side column resolution: the spec's match-by-field-id
+    rule with the ``schema.name-mapping.default`` fallback for files
+    written without parquet field ids."""
+    cands = _name_candidates(meta)
+    return {
+        name: (fid, cands.get(name, [name]))
+        for fid, name in _field_names_by_id(meta).items()
     }
-    return [
-        _IceCdfPartition(
-            e["path"], e["partition"], kind[e["type"]], e["version"],
-            e.get("include"), e.get("exclude"), resolve,
-            e.get("eq_prior"), e.get("eq_new"),
-        )
-        for e in _plan_ice_changes(path, from_v, to_v)
-    ]
 
 
-class _IceCdfBatchReader(DataSourceReader):
-    """Batch changelog: ``startingVersion`` (INCLUSIVE metadata
-    version) / ``endingVersion``."""
-
-    def __init__(self, path: str, schema: StructType,
-                 starting: int, ending: int | None):
-        self.path = path
-        self.schema_ = schema
-        self.starting = starting
-        self.ending = ending
-
-    def partitions(self):
-        to_v = (
-            self.ending if self.ending is not None
-            else iceberg_table_version(self.path)
-        )
-        return _ice_cdf_partitions(self.path, self.starting - 1, to_v) \
-            or [_IceCdfPartition("", {}, "", -1)]
-
-    def read(self, partition):
-        if not partition.file_path:
-            return iter(())
-        return _read_ice_cdf_batches(self.schema_, partition)
-
-
-class _IceCdfStreamReader(_RateLimitedOffsets, DataSourceStreamReader):
-    """Streaming changelog: offsets are metadata versions; each micro
-    batch carries its window's per-snapshot changes."""
-
-    def __init__(self, path: str, schema: StructType, starting_version: int,
-                 max_per_batch: int | None = None):
-        self.path = path
-        self.schema_ = schema
-        self.starting = starting_version
-        self._init_rate_limit(max_per_batch, starting_version)
-
-    def initialOffset(self):
-        self._advance_base(self.starting)
-        return {"version": self.starting}
-
-    def latestOffset(self):
-        v = self._capped(iceberg_table_version(self.path))
-        self._advance_base(v)
-        return {"version": v}
-
-    def partitions(self, start: dict, end: dict):
-        self._advance_base(end["version"])
-        if end["version"] <= start["version"]:
-            return [_IceCdfPartition("", {}, "", -1)]
-        return _ice_cdf_partitions(
-            self.path, start["version"], end["version"]
-        ) or [_IceCdfPartition("", {}, "", -1)]
-
-    def read(self, partition):
-        if not partition.file_path:
-            return iter(())
-        return _read_ice_cdf_batches(self.schema_, partition)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the query checkpoint
-
-    def stop(self) -> None:
-        pass
-
-
-class _IceStreamReader(_RateLimitedOffsets, DataSourceStreamReader):
-    """Offsets are metadata versions; batch (start, end] = files whose
-    manifest entries were ADDED by the snapshots those commits
-    created. Structured Streaming's checkpoint persists the offsets —
-    restart resumes at the committed version."""
-
-    def __init__(self, path: str, schema: StructType, starting_version: int,
-                 max_per_batch: int | None = None):
-        self.path = path
-        self.schema_ = schema
-        self.starting = starting_version
-        self._init_rate_limit(max_per_batch, starting_version)
-
-    def initialOffset(self):
-        self._advance_base(self.starting)
-        return {"version": self.starting}
-
-    def latestOffset(self):
-        v = self._capped(iceberg_table_version(self.path))
-        self._advance_base(v)
-        return {"version": v}
-
-    def partitions(self, start: dict, end: dict):
-        self._advance_base(end["version"])
-        if end["version"] <= start["version"]:
-            return [_IcePartition("", {})]
-        end_meta = _load_metadata(self.path, end["version"])
-        try:
-            start_meta = _load_metadata(self.path, start["version"]) \
-                if start["version"] >= 1 else None
-        except ValueError:
-            start_meta = None  # expired metadata: treat as from-scratch
-        seen = {
-            s["snapshot-id"] for s in (start_meta or {}).get("snapshots", [])
-        }
-        new_snaps = [
-            s for s in end_meta.get("snapshots", [])
-            if s["snapshot-id"] not in seen
-        ]
-        parts = []
-        resolve = _resolve_map(end_meta)
-        for s in new_snaps:
-            sid = s["snapshot-id"]
-            _, manifests = load_avro(_norm_path(s["manifest-list"], self.path))
-            for mf in manifests:
-                if mf.get("added_snapshot_id") != sid:
-                    continue  # carried manifest from an earlier snapshot
-                if mf.get("content", 0) == 1:
-                    # v2 delete manifest: the appends-stream consumer
-                    # skips row-level deletes (same contract as
-                    # deltalog's implied ignoreDeletes)
-                    continue
-                _, entries = load_avro(
-                    _norm_path(mf["manifest_path"], self.path)
-                )
-                for e in entries:
-                    if e["status"] != 0 or e.get("snapshot_id") != sid:
-                        continue
-                    df_ = e["data_file"]
-                    if df_.get("content", 0) != 0:
-                        continue
-                    parts.append(
-                        _IcePartition(
-                            _norm_path(df_["file_path"], self.path),
-                            df_.get("partition") or {},
-                            None, None, resolve,
-                        )
-                    )
-        return parts or [_IcePartition("", {})]
-
-    def read(self, partition):
-        if not partition.file_path:
-            return iter(())
-        return _read_batches(self.schema_, partition)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    def stop(self) -> None:
-        pass
-
-
-class IcebergLogDataSource(DataSource):
+class IcebergLogDataSource(LogDataSource):
     """``format("iceberglog")`` — see module docstring. Options:
     ``path`` (required); batch: ``versionAsOf`` (metadata version),
-    ``snapshotId``; streaming: ``startingVersion`` (default 0 = from
-    the beginning — the first batch carries every snapshot's adds)
-    and ``maxVersionsPerBatch`` (rate limit / incremental-drain
-    stand-in for availableNow — see
-    ``deltalog_datasource._RateLimitedOffsets``)."""
+    ``snapshotId``, ``ref`` (tag/branch); streaming:
+    ``startingVersion`` (default 0 = from the beginning — the first
+    batch carries every snapshot's adds; change-feed batch default 1)
+    and ``maxVersionsPerBatch``; write: ``partitionBy`` and ``appId``
+    (stream writer identity; default 'iceberglog-stream')."""
+
+    stream_start = 0
+    cdf_start = 1
+    app_id_option = "appid"
 
     @classmethod
     def name(cls) -> str:
         return "iceberglog"
 
-    def _path(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("iceberglog requires .load(<table path>)")
-        return path
+    def table_schema(self) -> StructType:
+        return _spark_schema(_load_metadata(self._path(), self._version()))
 
-    def _version(self):
-        v = self.options.get("versionasof")
-        return int(v) if v is not None else None
+    def latest_version(self) -> int:
+        return iceberg_table_version(self._path())
 
-    def _cdf(self) -> bool:
-        return str(self.options.get("readchangefeed", "false")).lower() \
-            == "true"
+    def snapshot_files(self, predicates: dict) -> list:
+        from .iceberg import (
+            _field_defaults,
+            _resolve_delete_file_columns,
+            iceberg_ref_snapshot,
+        )
 
-    def schema(self):
-        base = _spark_schema(_load_metadata(self._path(), self._version()))
-        if self._cdf():
-            from pyspark.sql.types import (
-                LongType, StringType, StructField,
-            )
-
-            return StructType(
-                list(base.fields)
-                + [StructField("_change_type", StringType()),
-                   StructField("_commit_version", LongType())]
-            )
-        return base
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        if self._cdf():
-            return _IceCdfBatchReader(
-                self._path(), schema,
-                int(self.options.get("startingversion", 1)),
-                int(self.options["endingversion"])
-                if "endingversion" in self.options else None,
-            )
+        path = self._path()
         sid = self.options.get("snapshotid")
         ref = self.options.get("ref")
         if ref is not None:
@@ -689,46 +165,171 @@ class IcebergLogDataSource(DataSource):
                     "iceberglog: 'ref' is exclusive with 'snapshotId' "
                     "and 'versionAsOf'"
                 )
-            from .iceberg import iceberg_ref_snapshot
+            sid = iceberg_ref_snapshot(path, ref)
+        meta = _load_metadata(path, self._version())
+        _, files, deletes = _snapshot_files(
+            path, meta, int(sid) if sid is not None else None, predicates
+        )
+        by_file: dict[str, list[int]] = {}
+        dvs = [d for d in deletes if d.get("dv")]
+        if dvs:
+            # format v3 deletion vectors: newest sequence per data
+            # file wins; blobs are bitmap-scale driver reads
+            from .puffin import decode_dv_blob, read_blob
 
-            sid = iceberg_ref_snapshot(self._path(), ref)
-        from .deltalog_datasource import pushdown_enabled
+            best: dict[str, dict] = {}
+            for d in sorted(dvs, key=lambda d: (d["seq"], d["path"])):
+                best[_norm_path(str(d["dv"]["referenced"]), path)] = d
+            for ref_path, d in best.items():
+                by_file.setdefault(ref_path, []).extend(
+                    decode_dv_blob(read_blob(
+                        d["path"], d["dv"]["offset"], d["dv"]["size"]
+                    ))
+                )
+        pos_paths = sorted(
+            d["path"] for d in deletes
+            if d["content"] == 1 and not d.get("dv")
+        )
+        if pos_paths:
+            # Delete files are metadata-scale (one (path, pos) row per
+            # deleted row, heavily compressed); the driver reads them
+            # once at planning time and ships each data file ONLY its
+            # own vector — same planning contract as native clients.
+            import pyarrow.parquet as pq
 
-        cls = _IceBatchPushdownReader if pushdown_enabled() else _IceBatchReader
-        return cls(
-            self._path(), schema, self._version(),
-            int(sid) if sid is not None else None,
+            for dp in pos_paths:
+                t = pq.read_table(dp, columns=["file_path", "pos"])
+                for fp, pos in zip(
+                    t.column("file_path").to_pylist(),
+                    t.column("pos").to_pylist(),
+                ):
+                    by_file.setdefault(_norm_path(str(fp), path), []) \
+                        .append(int(pos))
+        eq_dels = sorted(
+            (d for d in deletes if d["content"] == 2),
+            key=lambda d: (d["seq"], d["path"]),
+        )
+        by_id = _field_names_by_id(meta) if eq_dels else {}
+        # column resolution (field ids / name-mapping → the file's
+        # physical names) happens HERE on the driver, once per delete
+        # file, so renames never orphan a live delete
+        eq_sel = {
+            d["path"]: _resolve_delete_file_columns(
+                d["path"], d["equality_ids"], by_id, meta
+            )
+            for d in eq_dels
+        }
+
+        def eq_for(file_seq: int):
+            # strict bound: an equality delete erases only rows of
+            # data files with a SMALLER sequence number
+            out = [(d["path"], eq_sel[d["path"]])
+                   for d in eq_dels if d["seq"] > file_seq]
+            return (out, None) if out else None
+
+        resolve = _resolve_map(meta)
+        # v3 §Default Values: column -> initial-default for columns
+        # this file may predate (filled ONLY when the footer lacks the
+        # column — newer files' explicit NULLs stay NULL)
+        defaults = {c: v for c, (v, _t) in _field_defaults(meta).items()}
+        return [
+            LogFile(
+                p,
+                {**defaults,
+                 **{c: v for c, v in (part or {}).items() if v is not None}},
+                resolve, exclude=by_file.get(p), row_filter=eq_for(seq),
+            )
+            for p, part, seq in sorted(files)
+        ]
+
+    def appended_files(self, lo: int, hi: int) -> list:
+        path = self._path()
+        end_meta = _load_metadata(path, hi)
+        try:
+            start_meta = _load_metadata(path, lo) if lo >= 1 else None
+        except ValueError:
+            start_meta = None  # expired metadata: treat as from-scratch
+        seen = {
+            s["snapshot-id"] for s in (start_meta or {}).get("snapshots", [])
+        }
+        resolve = _resolve_map(end_meta)
+        parts = []
+        for s in end_meta.get("snapshots", []):
+            sid = s["snapshot-id"]
+            if sid in seen:
+                continue
+            _, manifests = load_avro(_norm_path(s["manifest-list"], path))
+            for mf in manifests:
+                if mf.get("added_snapshot_id") != sid:
+                    continue  # carried manifest from an earlier snapshot
+                if mf.get("content", 0) == 1:
+                    # v2 delete manifest: the appends-stream consumer
+                    # skips row-level deletes (same contract as
+                    # deltalog's implied ignoreDeletes)
+                    continue
+                _, entries = load_avro(_norm_path(mf["manifest_path"], path))
+                parts += [
+                    LogFile(_norm_path(e["data_file"]["file_path"], path),
+                            e["data_file"].get("partition"), resolve)
+                    for e in entries
+                    if e["status"] == 0 and e.get("snapshot_id") == sid
+                    and e["data_file"].get("content", 0) == 0
+                ]
+        return parts
+
+    def changed_files(self, lo: int, hi: int) -> list:
+        """Per-snapshot changes of ``(lo, hi]`` (``_plan_ice_changes``).
+        Equality-delete interplay is deferred from the planner
+        (metadata-only) to the executor task: ``eq_prior`` (delete
+        path, key columns) pairs re-establish which rows were still
+        ALIVE at the window start (anti-join), and ``eq_new`` — set
+        only for 'eq_row_delete' events — selects the rows the
+        commit's fresh equality delete erased (semi-join)."""
+        from .iceberg import _plan_ice_changes
+
+        if hi < 1:
+            return []
+        resolve = _resolve_map(_load_metadata(self._path(), hi))
+        return [
+            LogFile(
+                e["path"], e["partition"], resolve,
+                include=e.get("include"), exclude=e.get("exclude"),
+                change=("insert" if e["type"] == "insert" else "delete",
+                        int(e["version"])),
+                row_filter=(e.get("eq_prior"), e.get("eq_new")),
+            )
+            for e in _plan_ice_changes(self._path(), lo, hi)
+        ]
+
+    def filter_rows(self, tbl, row_filter):
+        """Equality deletes: ``(anti, semi)`` lists of (delete file,
+        key columns) — rows erased before the window dropped, then
+        (changelog 'eq_row_delete') only the freshly erased rows
+        kept."""
+        anti, semi = row_filter or (None, None)
+        if anti:
+            tbl = _eq_filter(tbl, anti, keep_matches=False)
+        if semi:
+            tbl = _eq_filter(tbl, semi, keep_matches=True)
+        return tbl
+
+    def write_plan(self, schema: StructType) -> tuple[list[str], dict]:
+        """``partitionBy`` validated DRIVER-SIDE (an executor-side
+        KeyError on a nested/unknown partition column would surface as
+        an opaque task failure after data was already staged), and
+        field ids resolved from the table metadata so executor-computed
+        footer bounds key correctly on evolved tables (positional only
+        for a first commit)."""
+        from .iceberg import (
+            _list_meta_versions,
+            _resolved_field_ids,
+            _scalar_ice_types,
         )
 
-    def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        starting = int(self.options.get("startingversion", 0))
-        mvb = self.options.get("maxversionsperbatch")
-        mvb = int(mvb) if mvb is not None else None
-        if self._cdf():
-            return _IceCdfStreamReader(self._path(), schema, starting, mvb)
-        return _IceStreamReader(self._path(), schema, starting, mvb)
-
-    def _resolved_ids(self, schema: StructType) -> dict | None:
-        """Resolve field ids from the table metadata (driver-side) so
-        executor-computed footer bounds key correctly on evolved
-        tables; None (positional) only for a first commit."""
-        from .iceberg import _list_meta_versions, _resolved_field_ids
-
-        if not _list_meta_versions(self._path()):
-            return None
-        return _resolved_field_ids(_load_metadata(self._path(), None), schema)
-
-    @staticmethod
-    def _parse_partition_by(options, schema: StructType) -> list[str]:
-        part = options.get("partitionby")
+        part = self.options.get("partitionby")
         partition_by = [c.strip() for c in part.split(",")] if part else []
-        from .iceberg import _scalar_ice_types
-
         scalars = _scalar_ice_types(schema)
         for c in partition_by:
-            # validated DRIVER-SIDE: an executor-side KeyError on a
-            # nested/unknown partition column would surface as an
-            # opaque task failure after data was already staged
             if c not in scalars:
                 raise ValueError(
                     f"partitionBy column {c!r} is not a scalar column "
@@ -736,139 +337,58 @@ class IcebergLogDataSource(DataSource):
                     "identity partitioning applies to scalar columns "
                     "only"
                 )
-        return partition_by
-
-    def writer(self, schema: StructType, overwrite: bool):
-        partition_by = self._parse_partition_by(self.options, schema)
-        return _IceWriter(
-            self._path(), schema, overwrite, partition_by,
-            self._resolved_ids(schema),
-        )
-
-    def streamWriter(self, schema: StructType, overwrite: bool):
-        partition_by = self._parse_partition_by(self.options, schema)
-        return _IceStreamWriter(
-            self._path(), schema, partition_by,
-            self.options.get("appid", "iceberglog-stream"),
-            self._resolved_ids(schema),
-        )
-
-
-class _IceCommitMessage(WriterCommitMessage):
-    def __init__(self, files: list):
-        # (abs_path, partition_values, record_count, size, lo, hi)
-        self.files = files
-
-
-class _IceWriter(DataSourceArrowWriter):
-    """Write half of ``format("iceberglog")`` — the same split as the
-    deltalog writer: executors stream Arrow batches into parquet
-    files under ``data/`` (grouped by identity-partition values,
-    footer bounds computed per file) and report them in commit
-    messages; the driver folds the messages into one manifest +
-    manifest list + snapshot + put-if-absent metadata commit
-    (``_commit_snapshot`` — shared with the batch writer). Appends
-    require the DataFrame schema to equal the table schema (the
-    evolution path lives in ``write_iceberg_table``)."""
-
-    def __init__(self, path: str, schema: StructType,
-                 overwrite: bool, partition_by: list[str],
-                 field_ids: dict | None = None):
-        self.path = path
-        self.schema_ = schema
-        self.overwrite = overwrite
-        self.partition_by = partition_by
-        # resolved DRIVER-SIDE from table metadata: footer bounds are
-        # keyed by field id, and a positional executor-side derivation
-        # would mis-key them on an evolved table (wrong pruning)
-        self.field_ids = field_ids or {
+        ids = None
+        if _list_meta_versions(self._path()):
+            ids = _resolved_field_ids(_load_metadata(self._path(), None), schema)
+        return partition_by, ids or {
             f.name: i + 1 for i, f in enumerate(schema.fields)
         }
 
-    def write(self, iterator):
+    @staticmethod
+    def data_file(writer, kv: dict, piece) -> tuple:
+        """Executor-side: files under ``data/`` KEEP all columns
+        (identity sources are data columns per the spec; dirs use
+        shadow names), footer bounds keyed by the driver-resolved
+        field ids → ``(abs_path, partition_values, record_count, size,
+        lo, hi)``."""
         import os
-        import uuid as _uuid
 
-        import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        from .iceberg import (
-            _footer_bounds,
-            _scalar_ice_types,
-            _typed_part_value,
-        )
+        from .iceberg import _footer_bounds, _scalar_ice_types, _typed_part_value
 
         # scalar columns only: nested columns get no footer bounds and
         # cannot be identity-partition sources (same contract as the
         # batch writer's _stage_data_files)
-        ice_types = _scalar_ice_types(self.schema_)
-        field_ids = self.field_ids
-        batches = list(iterator)
-        files: list = []
-        if batches:
-            tbl = pa.Table.from_batches(batches)
-            groups: list[tuple[dict, "pa.Table"]] = []
-            if self.partition_by:
-                keys = tbl.group_by(self.partition_by).aggregate([]).to_pylist()
-                for kv in keys:
-                    mask = None
-                    for c, v in kv.items():
-                        col = tbl.column(c)
-                        m = pc.is_null(col) if v is None \
-                            else pc.equal(col, pa.scalar(v))
-                        mask = m if mask is None else pc.and_(mask, m)
-                    # files KEEP all columns (identity sources are data
-                    # columns per the spec); dirs use shadow names
-                    groups.append((kv, tbl.filter(mask)))
-            else:
-                groups.append(({}, tbl))
-            for kv, piece in groups:
-                if piece.num_rows == 0:
-                    continue
-                segs = [
-                    f"_p_{c}={v if v is not None else '__HIVE_DEFAULT_PARTITION__'}"
-                    for c, v in sorted(kv.items())
-                ]
-                rel_dir = "/".join(["data"] + segs)
-                dest = os.path.join(
-                    self.path, rel_dir, f"part-{_uuid.uuid4().hex}.parquet"
-                )
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                pq.write_table(piece, dest)
-                md = pq.read_metadata(dest)
-                lo, hi = _footer_bounds(md, field_ids, ice_types)
-                part_values = {
-                    c: (None if v is None
-                        else _typed_part_value(str(v), ice_types[c]))
-                    for c, v in kv.items()
-                }
-                files.append(
-                    (dest, part_values, md.num_rows, os.path.getsize(dest),
-                     lo, hi)
-                )
-        return _IceCommitMessage(files)
+        ice_types = _scalar_ice_types(writer.schema_)
+        _, dest = writer.put("/".join(["data"] + hive_dirs(kv, "_p_")), piece)
+        md = pq.read_metadata(dest)
+        lo, hi = _footer_bounds(md, writer.ctx, ice_types)
+        part_values = {
+            c: (None if v is None else _typed_part_value(str(v), ice_types[c]))
+            for c, v in kv.items()
+        }
+        return dest, part_values, md.num_rows, os.path.getsize(dest), lo, hi
 
-    def commit(self, messages) -> None:
-        self._do_commit(messages)
-
-    def _do_commit(self, messages, extra_summary: dict | None = None) -> None:
+    def commit_files(self, writer, files: list, stream) -> None:
+        """One manifest + manifest list + snapshot + put-if-absent
+        metadata commit (``_commit_snapshot`` — shared with the batch
+        writer). Appends require the DataFrame schema to equal the
+        table schema (the evolution path lives in
+        ``write_iceberg_table``). A stream commit always appends and
+        records ``streaming-app-id`` / ``streaming-batch-id`` in the
+        snapshot summary (the watermark Flink's Iceberg sink uses)."""
         import os
 
-        from .iceberg import (
-            _commit_snapshot,
-            _spark_schema,
-            IcebergProtocolError,
-        )
+        from .iceberg import IcebergProtocolError, _commit_snapshot
 
-        hint = os.path.join(self.path, "metadata", "version-hint.text")
+        hint = os.path.join(self._path(), "metadata", "version-hint.text")
         if os.path.exists(hint):
             with open(hint) as fh:
                 base = int(fh.read().strip())
-            prev = _load_metadata(self.path, base)
-            table_schema = _spark_schema(prev)
-            if [f.name for f in table_schema.fields] != \
-                    [f.name for f in self.schema_.fields]:
+            prev = _load_metadata(self._path(), base)
+            if [f.name for f in _spark_schema(prev).fields] != \
+                    [f.name for f in writer.schema_.fields]:
                 raise IcebergProtocolError(
                     "iceberglog writer appends require the DataFrame schema "
                     "to match the table schema (use write_iceberg_table for "
@@ -890,58 +410,20 @@ class _IceWriter(DataSourceArrowWriter):
                 )
             partition_by = [f["name"] for f in spec_fields]
         else:
-            base = 0
-            prev = None
-            partition_by = self.partition_by
-        new_files = [f for m in messages for f in (m.files if m else [])]
+            base, prev, partition_by = 0, None, writer.partition_by
         _commit_snapshot(
-            self.path,
-            self.schema_,
+            self._path(),
+            writer.schema_,
             partition_by,
-            "overwrite" if self.overwrite else "append",
-            new_files,
-            extra_summary,
+            "overwrite" if writer.overwrite and stream is None else "append",
+            files,
+            {"streaming-app-id": stream[0], "streaming-batch-id": stream[1]}
+            if stream else None,
             base,
             prev,
         )
 
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            for dest, *_rest in (m.files if m else []):
-                if os.path.exists(dest):
-                    os.unlink(dest)
-
-
-class _IceStreamWriter(_IceWriter, DataSourceStreamArrowWriter):
-    """``df.writeStream.format("iceberglog")`` — exactly-once via the
-    snapshot-summary watermark (the same contract Flink's Iceberg
-    sink uses): the commit records ``streaming-app-id`` /
-    ``streaming-batch-id`` in the snapshot summary, and a REPLAYED
-    micro-batch is detected via ``iceberg_last_batch_id`` and
-    dropped, its duplicate files deleted. ``option("appId", ...)``
-    names the writer identity (default 'iceberglog-stream')."""
-
-    def __init__(self, path: str, schema: StructType,
-                 partition_by: list[str], app_id: str,
-                 field_ids: dict | None = None):
-        _IceWriter.__init__(self, path, schema, False, partition_by, field_ids)
-        self.app_id = app_id
-
-    def commit(self, messages, batchId: int) -> None:
+    def last_batch_id(self, app_id: str) -> int:
         from .iceberg import iceberg_last_batch_id
 
-        if iceberg_last_batch_id(self.path, self.app_id) >= batchId:
-            _IceWriter.abort(self, messages)  # replayed batch: drop dupes
-            return
-        self._do_commit(
-            messages,
-            extra_summary={
-                "streaming-app-id": self.app_id,
-                "streaming-batch-id": batchId,
-            },
-        )
-
-    def abort(self, messages, batchId: int) -> None:
-        _IceWriter.abort(self, messages)
+        return iceberg_last_batch_id(self._path(), app_id)

@@ -38,7 +38,11 @@ def spark_jobs_and_tasks(spark, fn) -> tuple[int, int]:
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
-    return len(jobs), sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+    # Past spark.ui.retainedStages the status store evicts SKIPPED
+    # stages first (their completion time is -1), so a stage of these
+    # jobs with no info left is one that was skipped: it ran no tasks.
+    infos = [tracker.getStageInfo(s) for s in stages]
+    return len(jobs), sum(i.numCompletedTasks for i in infos if i is not None)
 
 
 def spark_jobs(spark, fn) -> int:

@@ -86,7 +86,9 @@ class TestConfGatedReaderSelection:
 
         from etl_processing_scd1_spark.sources.deltalog_datasource import (
             DeltaLogDataSource,
-            _DeltaBatchPushdownReader,
+        )
+        from etl_processing_scd1_spark.sources.log_datasource import (
+            _PushdownSnapshotReader,
             pushdown_enabled,
         )
 
@@ -101,7 +103,7 @@ class TestConfGatedReaderSelection:
         _toggle(spark, "true")
         assert pushdown_enabled()
         r = ds.reader(schema)
-        assert isinstance(r, _DeltaBatchPushdownReader)
+        assert isinstance(r, _PushdownSnapshotReader)
         assert self._overrides_pushdown(r)
 
     def test_iceberglog_reader_classes(self, pushdown_conf, tmp_path):
@@ -109,7 +111,9 @@ class TestConfGatedReaderSelection:
 
         from etl_processing_scd1_spark.sources.iceberglog_datasource import (
             IcebergLogDataSource,
-            _IceBatchPushdownReader,
+        )
+        from etl_processing_scd1_spark.sources.log_datasource import (
+            _PushdownSnapshotReader,
         )
 
         spark = pushdown_conf
@@ -121,7 +125,7 @@ class TestConfGatedReaderSelection:
 
         _toggle(spark, "true")
         r = ds.reader(schema)
-        assert isinstance(r, _IceBatchPushdownReader)
+        assert isinstance(r, _PushdownSnapshotReader)
         assert self._overrides_pushdown(r)
 
     def test_filtered_read_correct_without_pushdown(

@@ -732,7 +732,6 @@ class TestDeltaStatsPruning:
         from etl_processing_scd1_spark.sources.delta import delta_plan_files
         from etl_processing_scd1_spark.sources.deltalog_datasource import (
             DeltaLogDataSource,
-            _DeltaBatchPushdownReader,
         )
 
         spark.dataSource.register(DeltaLogDataSource)
@@ -744,7 +743,7 @@ class TestDeltaStatsPruning:
         assert len(delta_plan_files(path)) == 8
         pruned = delta_plan_files(path, predicates={"k": (100, 150)})
         assert 1 <= len(pruned) < 8
-        r = _DeltaBatchPushdownReader(path, df.schema, None)
+        r = DeltaLogDataSource({"path": path}).reader(df.schema)
         r.pushFilters([GreaterThanOrEqual(("k",), 100),
                        LessThanOrEqual(("k",), 150)])
         assert len(r.partitions()) == len(pruned)
@@ -762,9 +761,9 @@ class TestDeltaStatsPruning:
         # partitionValues equality pruning (no stats for hive columns)
         path2 = str(tmp_path / "pf2")
         write_delta_table(df, path2, partition_by=["part"])
-        r_all = _DeltaBatchPushdownReader(path2, df.schema, None)
+        r_all = DeltaLogDataSource({"path": path2}).reader(df.schema)
         n_all = len(r_all.partitions())
-        r_eq = _DeltaBatchPushdownReader(path2, df.schema, None)
+        r_eq = DeltaLogDataSource({"path": path2}).reader(df.schema)
         r_eq.pushFilters([EqualTo(("part",), "2")])
         assert 1 <= len(r_eq.partitions()) < n_all
         got3 = spark.read.format("deltalog").load(path2).filter("part = '2'")
@@ -1823,14 +1822,18 @@ class TestDeltaLogStreamWriter:
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        from pyspark.sql.datasource import CaseInsensitiveDict
+
         from etl_processing_scd1_spark.sources.deltalog_datasource import (
-            _DeltaStreamWriter,
+            DeltaLogDataSource,
         )
 
         spark = registered
         path = str(tmp_path / "replay")
         schema = _df(spark, 0, 0).schema
-        w = _DeltaStreamWriter(path, schema, False, [], "app-1")
+        w = DeltaLogDataSource(
+            CaseInsensitiveDict({"path": path, "txnAppId": "app-1"})
+        ).streamWriter(schema, False)
         tbl = pa.table(
             {"k": [1, 2], "v": [10, 20], "part": ["1", "2"]},
             schema=to_arrow_schema(schema),

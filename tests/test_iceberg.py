@@ -676,7 +676,7 @@ class TestIcebergLogDataSource:
         """maxVersionsPerBatch=1: one micro-batch per metadata version
         — the incremental-drain stand-in for availableNow (Spark's
         Python DataSource wrapper downgrades availableNow to a single
-        batch; see deltalog_datasource._RateLimitedOffsets)."""
+        batch; see log_datasource._VersionStreamReader)."""
         import time
 
         spark = registered
@@ -723,7 +723,6 @@ class TestIcebergSourcePushdown:
 
         from etl_processing_scd1_spark.sources.iceberglog_datasource import (
             IcebergLogDataSource,
-            _IceBatchPushdownReader,
         )
 
         spark.dataSource.register(IcebergLogDataSource)
@@ -732,9 +731,9 @@ class TestIcebergSourcePushdown:
             F.col("id").alias("k"), (F.col("id") * 2).alias("v")
         )
         write_iceberg_table(df.repartitionByRange(8, "k"), path)
-        r_all = _IceBatchPushdownReader(path, df.schema, None, None)
+        r_all = IcebergLogDataSource({"path": path}).reader(df.schema)
         assert len(r_all.partitions()) == 8
-        r = _IceBatchPushdownReader(path, df.schema, None, None)
+        r = IcebergLogDataSource({"path": path}).reader(df.schema)
         r.pushFilters([GreaterThanOrEqual(("k",), 100),
                        LessThanOrEqual(("k",), 150)])
         assert 1 <= len(r.partitions()) < 8
@@ -2081,14 +2080,18 @@ class TestIcebergLogStreamWriter:
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        from pyspark.sql.datasource import CaseInsensitiveDict
+
         from etl_processing_scd1_spark.sources.iceberglog_datasource import (
-            _IceStreamWriter,
+            IcebergLogDataSource,
         )
 
         spark = registered
         path = str(tmp_path / "replay")
         schema = _df(spark, 0, 0).schema
-        w = _IceStreamWriter(path, schema, [], "app-1")
+        w = IcebergLogDataSource(
+            CaseInsensitiveDict({"path": path, "appId": "app-1"})
+        ).streamWriter(schema, False)
         tbl = pa.table(
             {"k": [1, 2], "v": [10, 20], "part": ["1", "2"]},
             schema=to_arrow_schema(schema),

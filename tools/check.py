@@ -17,7 +17,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -69,6 +70,12 @@ def main() -> int:
         "under session.py defaults is a driver-contract bug",
     )
     args = ap.parse_args()
+    # Spark's Python workers unpickle the DataSource classes by module
+    # name, so they need the package importable too: they inherit
+    # PYTHONPATH from this process, set before the session starts.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
 
     import duckdb
 
