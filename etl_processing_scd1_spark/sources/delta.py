@@ -62,6 +62,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .table_files import (
+    FooterStats,
+    as_nullable,
+    cluster_files,
+    put_if_absent,
+    scan_footers_distributed,
+    stage_files,
+    sweep_orphans,
+    walk_hive_parquet,
+    with_scan_keys,
+)
+
 _LOG = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
 
@@ -173,28 +185,6 @@ def _latest_checkpoint_at_or_before(path: str, version: int) -> int | None:
     return best
 
 
-def _as_nullable(dt):
-    """Recursively relax nullability (struct fields, array elements,
-    map values). The log's schemaString may declare nested fields NOT
-    NULL (e.g. built from ``F.lit``), but Spark's parquet scan always
-    returns nullable nested types, and a nullable→non-nullable cast
-    is an analysis error — so every READ materializes the relaxed
-    form. The schemaString in the log keeps the writer's declaration.
-    Field metadata (generation expressions, mapping ids) is kept."""
-    if isinstance(dt, StructType):
-        return StructType([
-            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
-            for f in dt.fields
-        ])
-    if isinstance(dt, ArrayType):
-        return ArrayType(_as_nullable(dt.elementType), True)
-    if isinstance(dt, MapType):
-        return MapType(
-            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
-        )
-    return dt
-
-
 def _has_nested(schema: StructType) -> bool:
     return any(
         isinstance(f.dataType, (StructType, ArrayType, MapType))
@@ -225,7 +215,7 @@ class DeltaSnapshot:
 
     @property
     def schema(self) -> StructType:
-        return _as_nullable(
+        return as_nullable(
             StructType.fromJson(json.loads(self.metadata["schemaString"]))
         )
 
@@ -725,16 +715,8 @@ def _external_scan(spark: SparkSession, path: str, snap: DeltaSnapshot,
     full = _physical_read_schema(snap)
     data_fields = [f for f in full.fields if f.name not in part_phys]
     paths = sorted(os.path.abspath(os.path.join(path, p)) for p in files)
-    df = (
+    df = with_scan_keys(
         spark.read.schema(StructType(data_fields)).parquet(*paths)
-        .withColumn(
-            "__fp",
-            F.regexp_replace(
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:", ""),
-                "^/+", "/",
-            ),
-        )
-        .withColumn("__pos", F.col("_metadata.row_index"))
     )
     if not part_phys:
         return df
@@ -785,20 +767,10 @@ def _visible_scan(spark: SparkSession, path: str, snap: DeltaSnapshot,
                 + [StructField(mat[0], LongType()),
                    StructField(mat[1], LongType())]
             )
-        df = (
+        df = with_scan_keys(
             spark.read.option("basePath", path)
             .schema(read_schema)
             .parquet(*sorted(abs_to_rel))
-            .withColumn(
-                "__fp",
-                F.regexp_replace(
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:", ""
-                    ),
-                    "^/+", "/",
-                ),
-            )
-            .withColumn("__pos", F.col("_metadata.row_index"))
         )
     dead_keys = [
         (ap, pos)
@@ -1457,15 +1429,7 @@ def read_delta_table(
                     f"files without baseRowId (pre-enablement snapshot?): "
                     f"{missing_base[:3]}"
                 )
-            df = df.withColumn(
-                "__fp",
-                F.regexp_replace(
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:", ""
-                    ),
-                    "^/+", "/",
-                ),
-            ).withColumn("__pos", F.col("_metadata.row_index"))
+            df = with_scan_keys(df)
             base_rows = [
                 (os.path.abspath(os.path.join(path, p)),
                  int(a["baseRowId"]), int(a["defaultRowCommitVersion"]))
@@ -1494,15 +1458,7 @@ def read_delta_table(
             dv_keys, "__del_fp string, __del_pos long"
         )
         if "__fp" not in df.columns:  # external scans carry them already
-            df = df.withColumn(
-                "__fp",
-                F.regexp_replace(
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:", ""
-                    ),
-                    "^/+", "/",
-                ),
-            ).withColumn("__pos", F.col("_metadata.row_index"))
+            df = with_scan_keys(df)
         df = (
             df.join(
                 F.broadcast(kdf),
@@ -1556,70 +1512,30 @@ def delta_history(path: str) -> list[dict]:
     return out
 
 
-def _footer_stats_dict(md) -> dict:
-    """Pure footer → spec-shaped stats dict (numRecords + minValues/
-    maxValues/nullCount over top-level scalar columns). Executor-safe:
-    the distributed footer scan (:func:`_scan_footers_distributed`)
-    calls it inside mapInPandas."""
+def _stats_json(fs: FooterStats) -> str:
+    """A file's footer stats in the spec's ``stats`` shape —
+    numRecords + minValues/maxValues/nullCount for top-level scalar
+    columns, dates and timestamps as ISO strings. The reader's
+    predicate pruning and the ``deltalog`` data source's filter
+    pushdown both plan from these, which is the spec's file-skipping
+    mechanism."""
     import datetime
 
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for c in range(g.num_columns):
-            col = g.column(c)
-            name = col.path_in_schema
-            if "." in name:
-                # nested leaf (struct member / list element / map
-                # entry): the spec's stats shape nests minValues by
-                # struct — a dotted flat key would be off-spec, and
-                # range pruning only consults top-level scalars
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            try:
-                mn, mx = st.min, st.max
-            except Exception:
-                # pyarrow cannot cast statistics for every physical
-                # type (e.g. some decimal encodings) — skip the
-                # column, stats are an optimization not a contract
-                continue
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
-                except UnicodeDecodeError:
-                    continue
-            if isinstance(mn, (datetime.date, datetime.datetime)):
-                mn, mx = mn.isoformat(), mx.isoformat()
-            if not isinstance(mn, (int, float, str, bool)):
-                continue
-            if name not in mins or mn < mins[name]:
-                mins[name] = mn
-            if name not in maxs or mx > maxs[name]:
-                maxs[name] = mx
-            nulls[name] = nulls.get(name, 0) + (st.null_count or 0)
-    return {
-        "numRecords": md.num_rows,
-        "minValues": mins,
-        "maxValues": maxs,
-        "nullCount": nulls,
-    }
+    def enc(vals: dict) -> dict:
+        out = {}
+        for c, v in vals.items():
+            if isinstance(v, (datetime.date, datetime.datetime)):
+                v = v.isoformat()
+            if isinstance(v, (int, float, str, bool)):
+                out[c] = v
+        return out
 
-
-def _file_stats_json(dest: str) -> str:
-    """Per-file statistics from the parquet FOOTER (no data read) in
-    the spec's ``stats`` shape — numRecords + minValues/maxValues/
-    nullCount for scalar columns. The reader's predicate pruning and
-    the ``deltalog`` data source's filter pushdown both plan from
-    these, which is the spec's file-skipping mechanism."""
-    import pyarrow.parquet as pq
-
-    return json.dumps(
-        _footer_stats_dict(pq.read_metadata(dest)), separators=(",", ":")
-    )
+    return json.dumps({
+        "numRecords": fs.num_rows,
+        "minValues": enc(fs.mins),
+        "maxValues": enc(fs.maxs),
+        "nullCount": fs.nulls,
+    }, separators=(",", ":"))
 
 
 def _stats_prune(add: dict, predicates: dict | None) -> bool:
@@ -1724,19 +1640,12 @@ def _stamp_ict(path: str, version: int, actions: list[dict]) -> list[dict]:
 
 def _atomic_commit(path: str, version: int, actions: list[dict]) -> None:
     os.makedirs(_log_dir(path), exist_ok=True)
-    target = _commit_file(path, version)
     actions = _stamp_ict(path, version, actions)
-    payload = "".join(json.dumps(a, separators=(",", ":")) + "\n" for a in actions)
-    try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaConcurrentCommit(
-            f"version {version} already committed at {path}"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
-        fh.flush()
-        os.fsync(fh.fileno())
+    put_if_absent(
+        _commit_file(path, version),
+        "".join(json.dumps(a, separators=(",", ":")) + "\n" for a in actions),
+        DeltaConcurrentCommit(f"version {version} already committed at {path}"),
+    )
 
 
 def write_delta_table(
@@ -2004,19 +1913,17 @@ def _stage_delta_files(df: DataFrame, path: str,
                        partition_by: list[str] | None,
                        cm: dict[str, str], now_ms: int,
                        cm_ids: dict[str, int] | None = None) -> list[dict]:
-    """Stage ``df`` with Spark's distributed writer under a unique
-    prefix, then MOVE the parquet files into the table's standard
-    layout (partition dirs at the root, unique file names) —
-    rename-only metadata ops, and a lost commit race leaves only
-    unreferenced files (Delta's own orphan semantics). Returns one
-    add-action dict per written file (partitionValues + footer
-    stats). Column-mapped tables (``cm`` non-empty) write PHYSICAL
-    column names and directory keys; id-mode tables (``cm_ids``)
-    additionally stamp each column's mapping id into the parquet
-    footer via the ``parquet.field.id`` metadata Spark's writer
-    honors (``spark.sql.parquet.fieldId.write.enabled``, default
-    on) — the match key the spec requires id-mode readers to use."""
-    stage_abs = os.path.join(path, f"_staged-{uuid.uuid4().hex}")
+    """Stage ``df`` into the table's layout (:func:`stage_files`:
+    partition dirs at the root, unique file names; a lost commit race
+    leaves only unreferenced files — Delta's own orphan semantics).
+    Returns one add-action dict per written file (decoded
+    partitionValues + footer stats). Column-mapped tables (``cm``
+    non-empty) write PHYSICAL column names and directory keys;
+    id-mode tables (``cm_ids``) additionally stamp each column's
+    mapping id into the parquet footer via the ``parquet.field.id``
+    metadata Spark's writer honors
+    (``spark.sql.parquet.fieldId.write.enabled``, default on) — the
+    match key the spec requires id-mode readers to use."""
     staged = df
     if cm:
         unknown = [c for c in df.columns if c not in cm]
@@ -2041,47 +1948,19 @@ def _stage_delta_files(df: DataFrame, path: str,
                 for c in df.columns
             ]
         )
-    phys_parts = [cm.get(c, c) for c in (partition_by or [])]
-    writer = staged.write.mode("overwrite")
-    if phys_parts:
-        writer = writer.partitionBy(*phys_parts)
-    writer.parquet(stage_abs)
-
-    import shutil
-
-    adds: list[dict] = []
-    for root, _dirs, fns in os.walk(stage_abs):
-        for fn in sorted(fns):
-            if not fn.endswith(".parquet"):
-                continue
-            abs_f = os.path.join(root, fn)
-            part_rel = os.path.relpath(root, stage_abs)
-            part_values = {}
-            for seg in () if part_rel == "." else part_rel.split(os.sep):
-                if "=" in seg:
-                    k, _, val = seg.partition("=")
-                    part_values[k] = val
-            final_name = f"part-{uuid.uuid4().hex}.parquet"
-            rel_f = (
-                final_name
-                if part_rel == "."
-                else os.path.join(part_rel, final_name)
-            )
-            dest = os.path.join(path, rel_f)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(abs_f, dest)
-            adds.append(
-                {
-                    "path": rel_f.replace(os.sep, "/"),
-                    "partitionValues": part_values,
-                    "size": os.path.getsize(dest),
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                    "stats": _file_stats_json(dest),
-                }
-            )
-    shutil.rmtree(stage_abs, ignore_errors=True)
-    return adds
+    return [
+        {
+            "path": f.rel,
+            "partitionValues": f.partition,
+            "size": f.size,
+            "modificationTime": now_ms,
+            "dataChange": True,
+            "stats": _stats_json(f.stats),
+        }
+        for f in stage_files(
+            staged, path, [cm.get(c, c) for c in (partition_by or [])]
+        )
+    ]
 
 
 _ROW_TRACKING_DOMAIN = "delta.rowTracking"
@@ -2635,13 +2514,7 @@ def delta_changes(
     def _with_keys(df: DataFrame) -> DataFrame:
         if "__fp" in df.columns:  # external scans carry them already
             return df
-        return df.withColumn(
-            "__fp",
-            F.regexp_replace(
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:", ""),
-                "^/+", "/",
-            ),
-        ).withColumn("__pos", F.col("_metadata.row_index"))
+        return with_scan_keys(df)
 
     def _scan(rels, action_src: DeltaSnapshot | None) -> DataFrame:
         # absolute add paths (shallow clones): no basePath across
@@ -2719,99 +2592,6 @@ def delta_changes(
     return out
 
 
-def _with_zorder(df: DataFrame, cols: list[str], out: str = "__z"):
-    """Adds an ``out`` Z-ORDER key column: equi-depth bucket each
-    column into 256 ranks (boundaries from one approxQuantile — a
-    bounded 255-value driver collect per column), then bit-interleave
-    the 8-bit ranks so rows close in EVERY dimension land close in
-    the sort. All row-level work is vectorized JVM expressions (an
-    F.aggregate fold over the boundary array literal), never Python.
-
-    The bucket rank is MATERIALIZED as one projected column per
-    dimension before the interleave: a Column-expression version that
-    inlined the 255-step fold at every one of the 8 bit references
-    produced an ~8k-node expression tree whose optimizer/codegen pass
-    alone cost ~20 s regardless of data size."""
-    from pyspark.sql import types as _T
-
-    bad = [
-        c for c in cols
-        if not isinstance(df.schema[c].dataType, _T.NumericType)
-    ]
-    if bad:
-        raise ValueError(
-            f"zorder_by supports numeric columns only, got {bad} "
-            "(equi-depth ranks come from approxQuantile)"
-        )
-    n_bits = 8
-    # ONE quantile pass for every column: a single percentile_approx
-    # Catalyst aggregate (one whole-stage scan, one 255-value row per
-    # column on the driver). df.stat.approxQuantile computes the same
-    # thing through the legacy RDD StatFunctions path — measured ~15 s
-    # at sf0.1 where this aggregate is sub-second.
-    probs = [i / 256 for i in range(1, 256)]
-    qrow = df.agg(
-        *[
-            # accuracy 2000 → rank error 1/2000, 8× finer than the
-            # 1/256 bucket width; equi-depth bucketing needs no more
-            F.percentile_approx(
-                F.col(c).cast("double"), F.lit(probs), F.lit(2000)
-            ).alias(f"__q{j}")
-            for j, c in enumerate(cols)
-        ]
-    ).collect()[0]
-    all_bounds = [list(qrow[f"__q{j}"] or []) for j in range(len(cols))]
-    # Branchless BINARY SEARCH over the sorted boundary array, 8
-    # chained projected steps per column: rank r grows by `step` when
-    # bounds[r+step] <= value. Each step is a tiny codegen'd CaseWhen
-    # + element_at over the array LITERAL — 8 compares per row per
-    # column, all inside one WholeStageCodegen span. (The previous
-    # F.aggregate fold was evaluated INTERPRETED per array element —
-    # 255 steps × rows × columns × 2 passes made sf0.1 z-orders cost
-    # ~45 s of pure expression evaluation.) The per-step columns stay
-    # materialized: each is referenced twice by the next step and the
-    # pointed-to expression is non-cheap, so CollapseProject keeps
-    # the boundaries.
-    tmp = []
-    for j, (c, bounds) in enumerate(zip(cols, all_bounds)):
-        name = f"__zb_{j}"
-        if not bounds:  # empty input: approxQuantile returns []
-            df = df.withColumn(name, F.lit(0))
-            tmp.append(name)
-            continue
-        arr = F.lit([float(b) for b in bounds])
-        n = len(bounds)
-        cur = F.lit(0)
-        step = 256
-        s = 0
-        while step > 1:
-            step //= 2
-            nxt = f"__zb_{j}_{s}"
-            idx = cur + F.lit(step)
-            df = df.withColumn(
-                nxt,
-                F.when(
-                    (idx <= F.lit(n))
-                    & (F.col(c).cast("double") >= F.element_at(arr, idx)),
-                    idx,
-                ).otherwise(cur),
-            )
-            cur = F.col(nxt)
-            s += 1
-        df = df.withColumn(name, cur).drop(
-            *[f"__zb_{j}_{k}" for k in range(s)]
-        )
-        tmp.append(name)
-    z = F.lit(0).cast("long")
-    for bit in range(n_bits):
-        for j, t in enumerate(tmp):
-            z = z + F.shiftleft(
-                (F.shiftright(F.col(t), bit).cast("long") % 2),
-                bit * len(cols) + j,
-            )
-    return df.withColumn(out, z).drop(*tmp)
-
-
 def optimize_delta_table(spark: SparkSession, path: str,
                          target_files: int = 1,
                          zorder_by: list[str] | None = None) -> int:
@@ -2831,7 +2611,7 @@ def optimize_delta_table(spark: SparkSession, path: str,
 
     ``zorder_by`` (OPTIMIZE ZORDER BY): cluster the rewrite on the
     bit-interleave of the named columns' equi-depth ranks
-    (``_with_zorder``), range-partitioned into ``target_files`` —
+    (``with_zorder``), range-partitioned into ``target_files`` —
     every output file then carries TIGHT min/max footer stats on ALL
     the named dimensions simultaneously, so stats pruning skips files
     for predicates on any of them. One range shuffle; the multi-
@@ -2860,20 +2640,8 @@ def optimize_delta_table(spark: SparkSession, path: str,
         # liquid clustering: OPTIMIZE on a CLUSTER BY table clusters
         # on the declared columns (the incremental maintenance loop)
         zorder_by = _clustering_columns(snap) or None
-    if zorder_by:
-        missing = [c for c in zorder_by if c not in df.columns]
-        if missing:
-            raise ValueError(f"zorder_by columns {missing} not in table")
-        df = (
-            _with_zorder(df, zorder_by)
-            .repartitionByRange(target_files, F.col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-    else:
-        df = df.coalesce(target_files)
     adds = _stage_delta_files(
-        df,
+        cluster_files(df, target_files, zorder_by),
         path, snap.partition_columns, snap.column_mapping or {}, now_ms,
         (snap.column_mapping_ids or {}) if id_mode else None,
     )
@@ -3836,7 +3604,7 @@ def vacuum_delta_table(
         with open(_commit_file(path, v)) as fh:
             for action in _read_actions(fh):
                 if "add" in action:
-                    keep.add(os.path.normpath(action["add"]["path"]))
+                    keep.add(os.path.join(path, action["add"]["path"]))
     # checkpoints are part of the log: after expire_delta_log the
     # JSON commits before a checkpoint are GONE, so files referenced
     # only by the checkpointed snapshot would look unreferenced and
@@ -3853,120 +3621,13 @@ def vacuum_delta_table(
             for row in _load_checkpoint_actions(path, v):
                 add = row.get("add")
                 if add is not None and add.get("path"):
-                    keep.add(os.path.normpath(add["path"]))
-    cutoff = time.time() - retention_hours * 3600.0
-    deleted = []
-    for root, _dirs, fns in os.walk(path):
-        segs = os.path.relpath(root, path).split(os.sep)
-        if _LOG in segs or any(s.startswith("_staged-") for s in segs):
-            continue
-        for fn in fns:
-            if not fn.endswith(".parquet"):
-                continue
-            abs_f = os.path.join(root, fn)
-            rel = os.path.normpath(os.path.relpath(abs_f, path))
-            if rel not in keep and os.path.getmtime(abs_f) <= cutoff:
-                os.unlink(abs_f)
-                deleted.append(rel)
-    return sorted(deleted)
+                    keep.add(os.path.join(path, add["path"]))
+    return sweep_orphans(path, _LOG, keep, retention_hours)
 
 
 # --------------------------------------------------------------------------
 # CONVERT TO DELTA (in-place migration of an existing parquet layout)
 # --------------------------------------------------------------------------
-
-def _walk_hive_parquet(path: str) -> list[tuple[str, dict[str, str | None]]]:
-    """Discover a hive-layout parquet directory: (relative file path,
-    {partition column: string value or None}) per data file, skipping
-    log/metadata/staging directories and hidden files. Partition
-    directory names are URL-unescaped the way Spark writes them;
-    ``__HIVE_DEFAULT_PARTITION__`` maps to None. Raises when files
-    disagree on the partition column set — a mixed layout cannot be
-    registered as one table."""
-    from urllib.parse import unquote
-
-    out: list[tuple[str, dict[str, str | None]]] = []
-    part_keys: list[str] | None = None
-    for root, _dirs, fns in os.walk(path):
-        segs = (
-            [] if os.path.abspath(root) == os.path.abspath(path)
-            else os.path.relpath(root, path).split(os.sep)
-        )
-        if any(
-            s.startswith(("_", ".")) for s in segs
-        ):
-            continue
-        pv: dict[str, str | None] = {}
-        for s in segs:
-            if "=" not in s:
-                raise ValueError(
-                    f"non-hive directory {s!r} under {path} — CONVERT "
-                    "expects a flat or hive-partitioned parquet layout"
-                )
-            k, _, v = s.partition("=")
-            v = unquote(v)
-            pv[unquote(k)] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-        for fn in sorted(fns):
-            if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
-                continue
-            keys = list(pv)
-            if part_keys is None:
-                part_keys = keys
-            elif keys != part_keys:
-                raise ValueError(
-                    f"inconsistent partition layout: {keys} vs "
-                    f"{part_keys} under {path}"
-                )
-            out.append((
-                os.path.join(*segs, fn) if segs else fn, dict(pv)
-            ))
-    return sorted(out)
-
-
-def _scan_footers_distributed(
-    spark: SparkSession, paths: list[str]
-) -> dict[str, tuple[int, int, dict]]:
-    """abs path → (num_rows, size_bytes, stats dict) with the footer
-    reads running ON EXECUTORS via Arrow ``mapInPandas`` — a 100 TB
-    convert has 1e5–1e6 files, and the driver must only collect one
-    metadata-scale row per file, never open a million footers
-    serially."""
-    import pandas as pd
-
-    def scan(batches):
-        import json as _json
-        import os as _os
-
-        import pandas as _pd
-        import pyarrow.parquet as _pq
-
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                md = _pq.read_metadata(p)
-                rows.append((
-                    p,
-                    md.num_rows,
-                    _os.path.getsize(p),
-                    _json.dumps(
-                        _footer_stats_dict(md), separators=(",", ":")
-                    ),
-                ))
-            yield _pd.DataFrame(
-                rows, columns=["path", "num_rows", "size", "stats"]
-            )
-
-    src = spark.createDataFrame(
-        pd.DataFrame({"path": paths})
-    ).repartition(max(1, min(len(paths), 64)))
-    got = src.mapInPandas(
-        scan, "path string, num_rows long, size long, stats string"
-    ).collect()
-    return {
-        r["path"]: (int(r["num_rows"]), int(r["size"]), json.loads(r["stats"]))
-        for r in got
-    }
-
 
 def convert_parquet_to_delta(
     spark: SparkSession,
@@ -3978,7 +3639,7 @@ def convert_parquet_to_delta(
     IN PLACE: no data file is read, moved, or rewritten. Version 0
     carries protocol + metaData + one ``add`` per discovered file,
     with spec-shaped ``stats`` from the parquet FOOTERS (read
-    executor-side, :func:`_scan_footers_distributed`) so predicate
+    executor-side, :func:`scan_footers_distributed`) so predicate
     pruning works from the first commit.
 
     Schema comes from Spark's own parquet+directory inference;
@@ -3992,7 +3653,7 @@ def convert_parquet_to_delta(
     instead be REGISTERED once and evolved transactionally."""
     if _list_versions(path):
         raise ValueError(f"{path} is already a Delta table")
-    files = _walk_hive_parquet(path)
+    files = walk_hive_parquet(path)
     if not files:
         raise ValueError(f"no parquet files under {path}")
     part_cols = list(files[0][1])
@@ -4006,7 +3667,7 @@ def convert_parquet_to_delta(
         fields.append(fj)
     schema_string = json.dumps({"type": "struct", "fields": fields})
 
-    stats = _scan_footers_distributed(
+    stats = scan_footers_distributed(
         spark, [os.path.join(path, rel) for rel, _ in files]
     )
     now_ms = int(time.time() * 1000)
@@ -4024,7 +3685,7 @@ def convert_parquet_to_delta(
         },
     ]
     for rel, pv in files:
-        n, size, st = stats[os.path.join(path, rel)]
+        fs, size = stats[os.path.join(path, rel)]
         actions.append({
             "add": {
                 "path": rel.replace(os.sep, "/"),
@@ -4032,7 +3693,7 @@ def convert_parquet_to_delta(
                 "size": size,
                 "modificationTime": now_ms,
                 "dataChange": True,
-                "stats": json.dumps(st, separators=(",", ":")),
+                "stats": _stats_json(fs),
             }
         })
     _atomic_commit(path, 0, actions)

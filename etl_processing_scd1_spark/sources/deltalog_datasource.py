@@ -264,13 +264,14 @@ class DeltaLogDataSource(LogDataSource):
         """Executor-side: hive-dir layout, partition columns dropped
         from the file → ``(rel_path, size, partitionValues,
         stats_json)``."""
-        from .delta import _file_stats_json
+        from .delta import _stats_json
+        from .table_files import footer_stats
 
         rel, dest = writer.put(
             "/".join(hive_dirs(kv)), piece.drop_columns(writer.partition_by)
         )
         part = {c: (None if v is None else str(v)) for c, v in kv.items()}
-        return rel, os.path.getsize(dest), part, _file_stats_json(dest)
+        return rel, os.path.getsize(dest), part, _stats_json(footer_stats(dest))
 
     def commit_files(self, writer, files: list, stream) -> None:
         """One put-if-absent log commit of ``files`` (protocol +

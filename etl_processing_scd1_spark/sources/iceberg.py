@@ -57,6 +57,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .avro import dump_avro, load_avro
+from .table_files import (
+    FooterStats,
+    as_nullable,
+    cluster_files,
+    file_key,
+    put_if_absent,
+    scan_footers_distributed,
+    stage_files,
+    sweep_orphans,
+    walk_hive_parquet,
+    with_scan_keys,
+)
 
 _META = "metadata"
 _DATA = "data"
@@ -266,9 +278,7 @@ def _write_castable(src: T.DataType, dst: T.DataType) -> bool:
     scale — recursively through nested types). Anything else must
     raise: Spark's non-ANSI cast would otherwise null out
     incompatible values silently."""
-    from .delta import _as_nullable
-
-    if _as_nullable(src) == _as_nullable(dst):
+    if as_nullable(src) == as_nullable(dst):
         return True
     if isinstance(src, T.IntegerType) and isinstance(dst, T.LongType):
         return True
@@ -300,12 +310,10 @@ def _align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     reads of the very snapshot being committed. Only lossless
     promotions are cast (:func:`_write_castable`); anything lossy
     raises instead of silently nulling values."""
-    from .delta import _as_nullable
-
     needs = [f.name for f in schema.fields] != df.columns
     for f in schema.fields:
         src = df.schema[f.name].dataType
-        if _as_nullable(src) != _as_nullable(f.dataType):
+        if as_nullable(src) != as_nullable(f.dataType):
             if not _write_castable(src, f.dataType):
                 raise IcebergProtocolError(
                     f"column {f.name!r}: cannot write "
@@ -385,8 +393,6 @@ def _schema_struct(schema: T.StructType,
         next_id += 1
         return next_id
 
-    from .delta import _as_nullable
-
     prev_attrs = {
         f["name"]: {
             k: v for k, v in f.items()
@@ -400,7 +406,7 @@ def _schema_struct(schema: T.StructType,
             node = prev_types.get(f.name)
             if not (
                 isinstance(node, dict)
-                and _iceberg_to_spark(node) == _as_nullable(f.dataType)
+                and _iceberg_to_spark(node) == as_nullable(f.dataType)
             ):
                 node = _spark_to_iceberg_node(f.dataType, alloc)
         else:
@@ -511,17 +517,25 @@ def _list_meta_versions(path: str) -> list[int]:
     return sorted(out)
 
 
+def _latest_version(path: str, missing_ok: bool = False) -> int:
+    """The metadata version the hint points at, else the newest one
+    listed. A path without metadata is version 0 when ``missing_ok``
+    (the next commit creates the table), else FileNotFoundError."""
+    hint = os.path.join(_meta_dir(path), _HINT)
+    if os.path.exists(hint):
+        with open(hint) as fh:
+            return int(fh.read().strip())
+    versions = _list_meta_versions(path)
+    if versions:
+        return versions[-1]
+    if missing_ok:
+        return 0
+    raise FileNotFoundError(f"not an Iceberg table: {path}")
+
+
 def _load_metadata(path: str, version: int | None = None) -> dict:
     if version is None:
-        hint = os.path.join(_meta_dir(path), _HINT)
-        if os.path.exists(hint):
-            with open(hint) as fh:
-                version = int(fh.read().strip())
-        else:
-            versions = _list_meta_versions(path)
-            if not versions:
-                raise FileNotFoundError(f"not an Iceberg table (no {_META}/): {path}")
-            version = versions[-1]
+        version = _latest_version(path)
     f = _meta_file(path, version)
     if not os.path.exists(f):
         raise ValueError(f"metadata version {version} not present at {path}")
@@ -1252,7 +1266,7 @@ def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
     )
     dvs = [d for d in deletes if d.get("dv")]
     eq_dels = [d for d in deletes if d["content"] == 2]
-    df = df.withColumn("__mor_fp", _norm_fp(F.col("_metadata.file_path")))
+    df = df.withColumn("__mor_fp", file_key())
     if pos_paths or dvs:
         keys = None
         if pos_paths:
@@ -1547,7 +1561,7 @@ def read_iceberg_table(
                 + [_SF(f"__pv_{c}", _Str()) for c in fill]
             ),
         )
-        df = df.withColumn("__pv_fp", _norm_fp(F.col("_metadata.file_path")))
+        df = df.withColumn("__pv_fp", file_key())
         df = df.join(
             F.broadcast(pv_df),
             F.col("__pv_fp") == F.col("__pv_key"),
@@ -1589,7 +1603,7 @@ def read_iceberg_table(
                       + [f"__has_{i} int" for i in range(len(defaults))]),
         )
         df = df.withColumn(
-            "__dflt_key", _norm_fp(F.col("_metadata.file_path"))
+            "__dflt_key", file_key()
         ).join(
             F.broadcast(pres_df),
             F.col("__dflt_key") == F.col("__dflt_fp"), "left",
@@ -1621,7 +1635,7 @@ def read_iceberg_table(
             else F.lit(None).cast("long")
         )
         df = df.withColumn(
-            "__rl_fp", _norm_fp(F.col("_metadata.file_path"))
+            "__rl_fp", file_key()
         ).withColumn(
             "__rl_pos", F.col("_metadata.row_index")
         ).join(
@@ -1821,6 +1835,8 @@ def _encode_bound(v, ice: str) -> bytes | None:
     if ice == "string":
         return str(v).encode("utf-8")
     if ice == "date":
+        if isinstance(v, str):  # ISO date (Delta stats)
+            v = datetime.date.fromisoformat(v)
         if isinstance(v, datetime.date):
             v = (v - datetime.date(1970, 1, 1)).days
         return _s.pack("<i", int(v))
@@ -1892,25 +1908,20 @@ _MANIFEST_LIST_SCHEMA_V2 = json.dumps(
 def _put_metadata(path: str, new_version: int, meta: dict) -> None:
     """Put-if-absent write of ``v<N>.metadata.json`` + hint update —
     the HadoopTables commit primitive shared by every commit path."""
-    target = _meta_file(path, new_version)
-    payload = json.dumps(meta, indent=1)
-    try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise IcebergConcurrentCommit(
+    put_if_absent(
+        _meta_file(path, new_version),
+        json.dumps(meta, indent=1),
+        IcebergConcurrentCommit(
             f"metadata version {new_version} already committed at {path}"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
-        fh.flush()
-        os.fsync(fh.fileno())
+        ),
+    )
     with open(os.path.join(_meta_dir(path), _HINT), "w") as fh:
         fh.write(str(new_version))
 
 
 def _typed_part_value(raw: str, ice: str):
-    """Hive directory segment string → typed manifest value."""
-    if raw in ("__HIVE_DEFAULT_PARTITION__", ""):
+    """Partition value string (None: NULL) → typed manifest value."""
+    if raw in (None, "__HIVE_DEFAULT_PARTITION__", ""):
         return None
     if ice in ("int", "long"):
         return int(raw)
@@ -1925,36 +1936,16 @@ def _typed_part_value(raw: str, ice: str):
     return raw
 
 
-def _footer_bounds(md, field_ids: dict, ice_types: dict):
-    """Per-file column bounds from the parquet FOOTER (no data read):
-    min/max across row groups for columns whose Iceberg type has a
-    single-value serialization, as spec-shaped key/value lists keyed
-    by field id."""
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for c in range(g.num_columns):
-            col = g.column(c)
-            name = col.path_in_schema
-            st = col.statistics
-            if name not in field_ids or st is None or not st.has_min_max:
-                continue
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
-                except UnicodeDecodeError:
-                    continue
-            if name not in mins or mn < mins[name]:
-                mins[name] = mn
-            if name not in maxs or mx > maxs[name]:
-                maxs[name] = mx
+def _footer_bounds(fs: FooterStats, field_ids: dict, ice_types: dict):
+    """A file's footer stats (min/max across row groups) as the
+    manifest's lower/upper bounds: spec-shaped key/value lists keyed
+    by field id, for columns whose Iceberg type has a single-value
+    serialization."""
     lo, hi = [], []
     for name, fid in field_ids.items():
-        if name in mins:
-            b_lo = _encode_bound(mins[name], ice_types[name])
-            b_hi = _encode_bound(maxs[name], ice_types[name])
+        if name in fs.mins and name in ice_types:
+            b_lo = _encode_bound(fs.mins[name], ice_types[name])
+            b_hi = _encode_bound(fs.maxs[name], ice_types[name])
             if b_lo is not None and b_hi is not None:
                 lo.append({"key": fid, "value": b_lo})
                 hi.append({"key": fid, "value": b_hi})
@@ -2049,14 +2040,9 @@ def write_iceberg_table(
 
     # Base the commit on the version the hint points at (falling back
     # to the newest listed) and attempt exactly base+1: if a racer got
-    # there first the O_EXCL below fails — the HadoopTables protocol.
-    hint = os.path.join(_meta_dir(path), _HINT)
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            base = int(fh.read().strip())
-    else:
-        listed = _list_meta_versions(path)
-        base = listed[-1] if listed else 0
+    # there first the put-if-absent commit fails — the HadoopTables
+    # protocol.
+    base = _latest_version(path, missing_ok=True)
     if base:
         prev = _load_metadata(path, base)
         # v1 and v2 both writable: v2 commits carry sequence numbers
@@ -2202,8 +2188,8 @@ def _stage_data_files(df: DataFrame, path: str, spec_entries: list,
                       ice_types: dict, field_ids: dict,
                       sort_cols: list[str] | None = None,
                       schema_node: dict | None = None) -> list:
-    """Write ``df``'s rows as parquet under ``data/`` (distributed
-    write into a staged directory, rename-only move). Files keep ALL
+    """Write ``df``'s rows as parquet under ``data/``
+    (:func:`stage_files`). Files keep ALL
     schema columns (transform sources are ordinary data columns per
     the spec); hive-style dirs come from shadow columns carrying the
     TRANSFORMED values (identity/bucket/truncate/temporal — the
@@ -2215,7 +2201,6 @@ def _stage_data_files(df: DataFrame, path: str, spec_entries: list,
     upper_bounds)`` per file — partition values typed per the
     transform's RESULT type."""
     spec_entries = _coerce_entries(spec_entries, ice_types)
-    stage_abs = os.path.join(path, f"_staged-{uuid.uuid4().hex}")
     nested_nodes = {
         f["name"]: f["type"]
         for f in (schema_node or {}).get("fields", [])
@@ -2284,40 +2269,18 @@ def _stage_data_files(df: DataFrame, path: str, spec_entries: list,
         writer_df = writer_df.sortWithinPartitions(
             *[F.col(c) for c in sort_cols]
         )
-    writer = writer_df.write.mode("overwrite")
-    if shadow:
-        writer = writer.partitionBy(*shadow.values())
-    writer.parquet(stage_abs)
-
-    import pyarrow.parquet as pq
-    import shutil
-
-    os.makedirs(os.path.join(path, _DATA), exist_ok=True)
     new_files = []
-    for root, _dirs, fns in os.walk(stage_abs):
-        for fn in sorted(fns):
-            if not fn.endswith(".parquet"):
-                continue
-            abs_f = os.path.join(root, fn)
-            part_rel = os.path.relpath(root, stage_abs)
-            part_values = {}
-            for seg in () if part_rel == "." else part_rel.split(os.sep):
-                if "=" in seg:
-                    k, _, val = seg.partition("=")
-                    col = k[len("_p_"):] if k.startswith("_p_") else k
-                    part_values[col] = _typed_part_value(
-                        val, part_types.get(col, ice_types.get(col, "string"))
-                    )
-            rel_dir = os.path.join(_DATA, *(() if part_rel == "." else (part_rel,)))
-            dest = os.path.join(path, rel_dir, f"part-{uuid.uuid4().hex}.parquet")
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(abs_f, dest)
-            md = pq.read_metadata(dest)
-            lo, hi = _footer_bounds(md, field_ids, ice_types)
-            new_files.append(
-                (dest, part_values, md.num_rows, os.path.getsize(dest), lo, hi)
+    for f in stage_files(writer_df, path, list(shadow.values()), _DATA):
+        part_values = {}
+        for k, val in f.partition.items():
+            col = k[len("_p_"):] if k.startswith("_p_") else k
+            part_values[col] = _typed_part_value(
+                val, part_types.get(col, ice_types.get(col, "string"))
             )
-    shutil.rmtree(stage_abs, ignore_errors=True)
+        lo, hi = _footer_bounds(f.stats, field_ids, ice_types)
+        new_files.append(
+            (f.path, part_values, f.stats.num_rows, f.size, lo, hi)
+        )
     return new_files
 
 
@@ -2627,27 +2590,12 @@ def delete_iceberg_rows(spark: SparkSession, path: str, condition: str) -> int:
     correct unless a foreign writer re-uses a deleted file's path for
     NEW rows after the delete, which no known writer does (uuid file
     names)."""
-    import pyarrow.parquet as pq
-
-    hint = os.path.join(_meta_dir(path), _HINT)
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            base = int(fh.read().strip())
-    else:
-        listed = _list_meta_versions(path)
-        if not listed:
-            raise FileNotFoundError(f"not an Iceberg table: {path}")
-        base = listed[-1]
-    prev = _load_metadata(path, base)
+    base, prev = _load_latest(path)
     parent_id, files, existing = _snapshot_files(path, prev, None, None)
     if not files:
         return base
 
-    scan = (
-        _merged_scan(spark, sorted(p for p, _, _ in files))
-        .withColumn("__fp", _norm_fp(F.col("_metadata.file_path")))
-        .withColumn("__pos", F.col("_metadata.row_index"))
-    )
+    scan = with_scan_keys(_merged_scan(spark, sorted(p for p, _, _ in files)))
     # renamed columns: fold historical names into the current ones so
     # the caller's condition (current names) reaches pre-rename files
     scan = _unify_renamed(scan, _name_candidates(prev))
@@ -2899,31 +2847,14 @@ def _pos_delete_manifest(hits: DataFrame, path: str, prev: dict,
     (manifest-list row, n_deleted), or (None, 0) when nothing
     matched. The delete file spans partitions: null partition tuple
     (readers apply position deletes by exact path, never by tuple)."""
-    import shutil
-
-    import pyarrow.parquet as pq
-
     # spec: position delete files are sorted by (file_path, pos)
-    stage = os.path.join(path, f"_staged-{uuid.uuid4().hex}")
-    (
-        hits.repartition(1)
-        .sortWithinPartitions("file_path", "pos")
-        .write.mode("overwrite")
-        .parquet(stage)
-    )
-    part = next(
-        os.path.join(r, fn)
-        for r, _d, fns in os.walk(stage)
-        for fn in sorted(fns)
-        if fn.endswith(".parquet")
-    )
-    dest = os.path.join(path, _DATA, f"delete-{uuid.uuid4().hex}.parquet")
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    os.replace(part, dest)
-    shutil.rmtree(stage, ignore_errors=True)
-    n_deleted = pq.read_metadata(dest).num_rows
+    staged = stage_files(
+        hits.repartition(1).sortWithinPartitions("file_path", "pos"),
+        path, dest_dir=_DATA, prefix="delete",
+    )[0]
+    n_deleted = staged.stats.num_rows
     if n_deleted == 0:
-        os.unlink(dest)
+        os.unlink(staged.path)
         return None, 0
 
     spec_fields = _spec_fields(prev)
@@ -2942,11 +2873,11 @@ def _pos_delete_manifest(hits: DataFrame, path: str, prev: dict,
                 "snapshot_id": snapshot_id,
                 "data_file": {
                     "content": 1,
-                    "file_path": dest,
+                    "file_path": staged.path,
                     "file_format": "PARQUET",
                     "partition": {name: None for name, _i, _f in part_fields},
                     "record_count": n_deleted,
-                    "file_size_in_bytes": os.path.getsize(dest),
+                    "file_size_in_bytes": staged.size,
                     "block_size_in_bytes": 64 * 1024 * 1024,
                     "lower_bounds": None,
                     "upper_bounds": None,
@@ -2990,16 +2921,7 @@ def update_iceberg_rows(spark: SparkSession, path: str, condition: str,
     both halves (position deletes apply by exact file path, so the
     new files are untouched by construction). Returns the new
     metadata version (unchanged when nothing matches)."""
-    hint = os.path.join(_meta_dir(path), _HINT)
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            base = int(fh.read().strip())
-    else:
-        listed = _list_meta_versions(path)
-        if not listed:
-            raise FileNotFoundError(f"not an Iceberg table: {path}")
-        base = listed[-1]
-    prev = _load_metadata(path, base)
+    base, prev = _load_latest(path)
     parent_id, files, existing = _snapshot_files(path, prev, None, None)
     if not files:
         return base
@@ -3009,11 +2931,7 @@ def update_iceberg_rows(spark: SparkSession, path: str, condition: str,
     if unknown:
         raise ValueError(f"SET columns {unknown} not in table schema {cols}")
 
-    scan = (
-        _merged_scan(spark, sorted(p for p, _, _ in files))
-        .withColumn("__fp", _norm_fp(F.col("_metadata.file_path")))
-        .withColumn("__pos", F.col("_metadata.row_index"))
-    )
+    scan = with_scan_keys(_merged_scan(spark, sorted(p for p, _, _ in files)))
     scan = _unify_renamed(scan, _name_candidates(prev))
     scan = _apply_deletes(spark, scan, files, existing, prev)
     hits = scan.filter(condition)
@@ -3218,15 +3136,7 @@ def _commit_v2_tail(path: str, base: int, prev: dict, parent_id,
 
 
 def _load_latest(path: str) -> tuple[int, dict]:
-    hint = os.path.join(_meta_dir(path), _HINT)
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            base = int(fh.read().strip())
-    else:
-        listed = _list_meta_versions(path)
-        if not listed:
-            raise FileNotFoundError(f"not an Iceberg table: {path}")
-        base = listed[-1]
+    base = _latest_version(path)
     return base, _load_metadata(path, base)
 
 
@@ -4011,16 +3921,7 @@ def rename_iceberg_column(path: str, old: str, new: str) -> int:
     this commit records (the spec's §Column Projection / name-mapping
     fallback for files without field ids — our own writer's files).
     Returns the new metadata version."""
-    hint = os.path.join(_meta_dir(path), _HINT)
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            base = int(fh.read().strip())
-    else:
-        listed = _list_meta_versions(path)
-        if not listed:
-            raise FileNotFoundError(f"not an Iceberg table: {path}")
-        base = listed[-1]
-    prev = _load_metadata(path, base)
+    base, prev = _load_latest(path)
     schema = prev.get("schema") or {}
     fields = [dict(f) for f in schema.get("fields", [])]
     names = [f["name"] for f in fields]
@@ -4123,16 +4024,7 @@ def drop_iceberg_column(path: str, name: str) -> int:
     support: survivors keep their ids, so manifest bounds keys and
     ``equality_ids`` stay valid across the drop
     (:func:`_resolved_field_ids`)."""
-    hint = os.path.join(_meta_dir(path), _HINT)
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            base = int(fh.read().strip())
-    else:
-        listed = _list_meta_versions(path)
-        if not listed:
-            raise FileNotFoundError(f"not an Iceberg table: {path}")
-        base = listed[-1]
-    prev = _load_metadata(path, base)
+    base, prev = _load_latest(path)
     schema = prev.get("schema") or {}
     fields = [dict(f) for f in schema.get("fields", [])]
     names = [f["name"] for f in fields]
@@ -4239,18 +4131,10 @@ def upsert_iceberg_table(df: DataFrame, path: str, key_cols: list[str]) -> int:
     upsert cost is O(batch), never O(table). First commit on a
     missing table degrades to a plain create. Returns the new
     metadata version."""
-    import pyarrow.parquet as pq
-
     spark = df.sparkSession
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
-    hint = os.path.join(_meta_dir(path), _HINT)
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            base = int(fh.read().strip())
-    else:
-        listed = _list_meta_versions(path)
-        base = listed[-1] if listed else 0
+    base = _latest_version(path, missing_ok=True)
     if not base:
         for c in key_cols:
             if c not in df.columns:
@@ -4329,10 +4213,7 @@ def upsert_iceberg_table(df: DataFrame, path: str, key_cols: list[str]) -> int:
 
     # ---- equality-delete file: distinct incoming keys (sorted —
     # deterministic bytes; spec only asks for the key columns)
-    import shutil
-
-    stage = os.path.join(path, f"_staged-{uuid.uuid4().hex}")
-    (
+    staged = stage_files(
         # field ids in the footer: the delete file's keys then resolve
         # by id after any future rename, same as data files
         df.select(*[
@@ -4340,21 +4221,10 @@ def upsert_iceberg_table(df: DataFrame, path: str, key_cols: list[str]) -> int:
             for c in key_cols
         ]).distinct()
         .repartition(1)
-        .sortWithinPartitions(*key_cols)
-        .write.mode("overwrite")
-        .parquet(stage)
-    )
-    part = next(
-        os.path.join(r, fn)
-        for r, _d, fns in os.walk(stage)
-        for fn in sorted(fns)
-        if fn.endswith(".parquet")
-    )
-    dest = os.path.join(path, _DATA, f"eq-delete-{uuid.uuid4().hex}.parquet")
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    os.replace(part, dest)
-    shutil.rmtree(stage, ignore_errors=True)
-    n_keys = pq.read_metadata(dest).num_rows
+        .sortWithinPartitions(*key_cols),
+        path, dest_dir=_DATA, prefix="eq-delete",
+    )[0]
+    n_keys = staged.stats.num_rows
 
     entry_schema = _manifest_entry_schema_json(part_fields, with_content=True)
     manifest_meta = {
@@ -4388,13 +4258,13 @@ def upsert_iceberg_table(df: DataFrame, path: str, key_cols: list[str]) -> int:
                     "snapshot_id": snapshot_id,
                     "data_file": {
                         "content": 2,
-                        "file_path": dest,
+                        "file_path": staged.path,
                         "file_format": "PARQUET",
                         # delete spans partitions: null tuple (readers
                         # apply equality deletes by key + seq bound)
                         "partition": {name: None for name, _i, _f in part_fields},
                         "record_count": n_keys,
-                        "file_size_in_bytes": os.path.getsize(dest),
+                        "file_size_in_bytes": staged.size,
                         "block_size_in_bytes": 64 * 1024 * 1024,
                         "lower_bounds": None,
                         "upper_bounds": None,
@@ -4420,7 +4290,7 @@ def upsert_iceberg_table(df: DataFrame, path: str, key_cols: list[str]) -> int:
             "min_sequence_number": seq,
         })
     else:
-        os.unlink(dest)
+        os.unlink(staged.path)
 
     return _commit_v2_tail(
         path, base, prev, parent_id, snapshot_id, seq, now_ms,
@@ -4633,21 +4503,9 @@ def compact_iceberg_table(
     # _last_updated_sequence_number columns (reads coalesce them
     # before the first_row_id + position derivation)
     df = read_iceberg_table(spark, path, with_row_ids=fv3)
-    if zorder_by:
-        from .delta import _with_zorder
-
-        missing = [c for c in zorder_by if c not in df.columns]
-        if missing:
-            raise ValueError(f"zorder_by columns {missing} not in table")
-        df = (
-            _with_zorder(df, zorder_by)
-            .repartitionByRange(target_files, F.col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-    else:
-        df = df.coalesce(target_files)
-    return write_iceberg_table(df, path, mode="replace")
+    return write_iceberg_table(
+        cluster_files(df, target_files, zorder_by), path, mode="replace"
+    )
 
 
 def rewrite_iceberg_manifests(path: str) -> int:
@@ -4812,16 +4670,7 @@ def rollback_iceberg_table(path: str, snapshot_id: int) -> int:
     ones) stays in the log and time-travelable; the next append
     parents off the restored snapshot and carries its manifests.
     Returns the new metadata version."""
-    hint = os.path.join(_meta_dir(path), _HINT)
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            base = int(fh.read().strip())
-    else:
-        listed = _list_meta_versions(path)
-        if not listed:
-            raise FileNotFoundError(f"not an Iceberg table: {path}")
-        base = listed[-1]
-    prev = _load_metadata(path, base)
+    base, prev = _load_latest(path)
     snaps = {s["snapshot-id"] for s in prev.get("snapshots", [])}
     if snapshot_id not in snaps:
         raise ValueError(
@@ -4872,26 +4721,13 @@ def vacuum_iceberg_table(path: str, retention_hours: float = 168.0) -> list[str]
                     continue
                 _, entries = load_avro(mp)
                 for e in entries:
-                    keep.add(os.path.normpath(
-                        _norm_path(e["data_file"]["file_path"], path)
-                    ))
-    cutoff = time.time() - retention_hours * 3600.0
-    deleted = []
-    for root, _dirs, fns in os.walk(path):
-        segs = os.path.relpath(root, path).split(os.sep)
-        if _META in segs or any(s.startswith("_staged-") for s in segs):
-            continue
-        for fn in fns:
-            # v3 deletion vectors live in .puffin files referenced by
-            # delete manifests — orphaned ones (superseded DV commits
-            # whose snapshots expired) are reclaimable the same way
-            if not fn.endswith((".parquet", ".puffin")):
-                continue
-            abs_f = os.path.normpath(os.path.join(root, fn))
-            if abs_f not in keep and os.path.getmtime(abs_f) <= cutoff:
-                os.unlink(abs_f)
-                deleted.append(os.path.relpath(abs_f, path))
-    return sorted(deleted)
+                    keep.add(_norm_path(e["data_file"]["file_path"], path))
+    # v3 deletion vectors live in .puffin files referenced by delete
+    # manifests — orphaned ones (superseded DV commits whose snapshots
+    # expired) are reclaimable the same way
+    return sweep_orphans(
+        path, _META, keep, retention_hours, (".parquet", ".puffin")
+    )
 
 
 def expire_snapshots(path: str, keep_last: int) -> int:
@@ -4945,19 +4781,7 @@ def expire_snapshots(path: str, keep_last: int) -> int:
         e for e in meta.get("snapshot-log", []) if e["snapshot-id"] in keep_ids
     ]
     base = iceberg_table_version(path)
-    target = _meta_file(path, base + 1)
-    try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise IcebergConcurrentCommit(
-            f"metadata version {base + 1} already committed at {path}"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(json.dumps(new_meta, indent=1))
-        fh.flush()
-        os.fsync(fh.fileno())
-    with open(os.path.join(_meta_dir(path), _HINT), "w") as fh:
-        fh.write(str(base + 1))
+    _put_metadata(path, base + 1, new_meta)
 
     for f in sorted((drop_l - keep_l) | (drop_m - keep_m) | (drop_d - keep_d)):
         if os.path.exists(f):
@@ -4992,9 +4816,7 @@ def add_parquet_files_iceberg(
     ``partition_schema`` overrides directory-inferred partition
     column types (inference types ``part=0`` as int where the writer
     may have meant string)."""
-    from .delta import _scan_footers_distributed, _walk_hive_parquet
-
-    files = _walk_hive_parquet(src_dir)
+    files = walk_hive_parquet(src_dir)
     if not files:
         raise ValueError(f"no parquet files under {src_dir}")
     part_cols = list(files[0][1])
@@ -5008,13 +4830,7 @@ def add_parquet_files_iceberg(
         fields.append(T.StructField(f.name, dt, True))
     schema = T.StructType(fields)
 
-    hint = os.path.join(_meta_dir(path), _HINT)
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            base = int(fh.read().strip())
-    else:
-        listed = _list_meta_versions(path)
-        base = listed[-1] if listed else 0
+    base = _latest_version(path, missing_ok=True)
     if base:
         prev = _load_metadata(path, base)
         existing = _spark_schema(prev)
@@ -5056,38 +4872,17 @@ def add_parquet_files_iceberg(
 
     ice_types = _scalar_ice_types(schema)
     field_ids = _resolved_field_ids(prev, schema)
-    stats = _scan_footers_distributed(
+    stats = scan_footers_distributed(
         spark, [os.path.join(src_dir, rel) for rel, _ in files]
     )
-
-    import datetime
-
-    def typed_bound(v, ice: str):
-        if isinstance(v, str) and ice == "date":
-            return datetime.date.fromisoformat(v)
-        return v
-
     new_files = []
     for rel, pv in files:
         abs_p = os.path.join(src_dir, rel)
-        n, size, st = stats[abs_p]
-        lo, hi = [], []
-        for name, fid in field_ids.items():
-            ice = ice_types.get(name)
-            if ice is None or name not in (st.get("minValues") or {}):
-                continue
-            b_lo = _encode_bound(typed_bound(st["minValues"][name], ice), ice)
-            b_hi = _encode_bound(typed_bound(st["maxValues"][name], ice), ice)
-            if b_lo is not None and b_hi is not None:
-                lo.append({"key": fid, "value": b_lo})
-                hi.append({"key": fid, "value": b_hi})
-        part_vals = {
-            c: (None if pv[c] is None
-                else _typed_part_value(pv[c], ice_types[c]))
-            for c in part_cols
-        }
+        fs, size = stats[abs_p]
+        part_vals = {c: _typed_part_value(pv[c], ice_types[c]) for c in part_cols}
         new_files.append(
-            (abs_p, part_vals, n, size, lo or None, hi or None)
+            (abs_p, part_vals, fs.num_rows, size,
+             *_footer_bounds(fs, field_ids, ice_types))
         )
 
     # name-mapping: REQUIRED for the added files — they carry no
@@ -5138,8 +4933,6 @@ def uniform_iceberg_metadata(spark: SparkSession, delta_path: str) -> int:
     the dead rows — compact/OPTIMIZE the Delta table first, which
     materializes DVs away) and column mapping (physical-name files
     need per-field mapping this sync does not emit yet)."""
-    import datetime
-
     from .delta import _replay
 
     snap = _replay(spark, delta_path, None)
@@ -5175,42 +4968,24 @@ def uniform_iceberg_metadata(spark: SparkSession, delta_path: str) -> int:
         for i, c in enumerate(part_cols)
     ]
 
-    listed = _list_meta_versions(delta_path)
-    base = listed[-1] if listed else 0
+    base = _latest_version(delta_path, missing_ok=True)
     prev = _load_metadata(delta_path, base) if base else None
     field_ids = _resolved_field_ids(prev, schema)
-
-    def typed_bound(v, ice: str):
-        if isinstance(v, str) and ice == "date":
-            return datetime.date.fromisoformat(v)
-        return v
 
     new_files = []
     for rel, add in sorted(snap.files.items()):
         st = json.loads(add.get("stats") or "{}")
-        lo, hi = [], []
-        for name, fid in field_ids.items():
-            ice = ice_types.get(name)
-            if ice is None or name not in (st.get("minValues") or {}):
-                continue
-            b_lo = _encode_bound(typed_bound(st["minValues"][name], ice), ice)
-            b_hi = _encode_bound(typed_bound(st["maxValues"][name], ice), ice)
-            if b_lo is not None and b_hi is not None:
-                lo.append({"key": fid, "value": b_lo})
-                hi.append({"key": fid, "value": b_hi})
+        # the Delta stats ARE a footer fold (dates as ISO strings)
+        fs = FooterStats(int(st.get("numRecords") or 0),
+                         st.get("minValues") or {}, st.get("maxValues") or {},
+                         st.get("nullCount") or {})
         pv = add.get("partitionValues") or {}
-        part_vals = {
-            c: (None if pv.get(c) is None
-                else _typed_part_value(pv[c], ice_types[c]))
-            for c in part_cols
-        }
         new_files.append((
             os.path.abspath(os.path.join(delta_path, rel)),
-            part_vals,
-            int(st.get("numRecords") or 0),
+            {c: _typed_part_value(pv.get(c), ice_types[c]) for c in part_cols},
+            fs.num_rows,
             int(add.get("size") or 0),
-            lo or None,
-            hi or None,
+            *_footer_bounds(fs, field_ids, ice_types),
         ))
 
     # Delta data files carry no Iceberg field ids, and partitioned

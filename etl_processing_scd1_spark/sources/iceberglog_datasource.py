@@ -353,22 +353,21 @@ class IcebergLogDataSource(LogDataSource):
         lo, hi)``."""
         import os
 
-        import pyarrow.parquet as pq
-
         from .iceberg import _footer_bounds, _scalar_ice_types, _typed_part_value
+        from .table_files import footer_stats
 
         # scalar columns only: nested columns get no footer bounds and
         # cannot be identity-partition sources (same contract as the
         # batch writer's _stage_data_files)
         ice_types = _scalar_ice_types(writer.schema_)
         _, dest = writer.put("/".join(["data"] + hive_dirs(kv, "_p_")), piece)
-        md = pq.read_metadata(dest)
-        lo, hi = _footer_bounds(md, writer.ctx, ice_types)
+        fs = footer_stats(dest)
         part_values = {
             c: (None if v is None else _typed_part_value(str(v), ice_types[c]))
             for c, v in kv.items()
         }
-        return dest, part_values, md.num_rows, os.path.getsize(dest), lo, hi
+        return (dest, part_values, fs.num_rows, os.path.getsize(dest),
+                *_footer_bounds(fs, writer.ctx, ice_types))
 
     def commit_files(self, writer, files: list, stream) -> None:
         """One manifest + manifest list + snapshot + put-if-absent
@@ -378,14 +377,14 @@ class IcebergLogDataSource(LogDataSource):
         ``write_iceberg_table``). A stream commit always appends and
         records ``streaming-app-id`` / ``streaming-batch-id`` in the
         snapshot summary (the watermark Flink's Iceberg sink uses)."""
-        import os
+        from .iceberg import (
+            IcebergProtocolError,
+            _commit_snapshot,
+            _latest_version,
+        )
 
-        from .iceberg import IcebergProtocolError, _commit_snapshot
-
-        hint = os.path.join(self._path(), "metadata", "version-hint.text")
-        if os.path.exists(hint):
-            with open(hint) as fh:
-                base = int(fh.read().strip())
+        base = _latest_version(self._path(), missing_ok=True)
+        if base:
             prev = _load_metadata(self._path(), base)
             if [f.name for f in _spark_schema(prev).fields] != \
                     [f.name for f in writer.schema_.fields]:
@@ -410,7 +409,7 @@ class IcebergLogDataSource(LogDataSource):
                 )
             partition_by = [f["name"] for f in spec_fields]
         else:
-            base, prev, partition_by = 0, None, writer.partition_by
+            prev, partition_by = None, writer.partition_by
         _commit_snapshot(
             self._path(),
             writer.schema_,

@@ -2,7 +2,7 @@
 formats: ``convert_parquet_to_delta`` (CONVERT TO DELTA) and
 ``add_parquet_files_iceberg`` (the snapshot / add_files procedures).
 No data file is read, moved, or rewritten — footers only, scanned
-executor-side (`_scan_footers_distributed`). The migrated tables must
+executor-side (`table_files.scan_footers_distributed`). The migrated tables must
 be full citizens: stats/bounds pruning from the first commit, DML,
 upsert (Iceberg resolves the foreign id-less files via
 ``schema.name-mapping.default``), and byte-identical reads through
