@@ -62,6 +62,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
+from . import row_dml
 from .table_files import (
     FooterStats,
     as_nullable,
@@ -70,6 +72,7 @@ from .table_files import (
     scan_footers_distributed,
     stage_files,
     sweep_orphans,
+    typed_columns,
     walk_hive_parquet,
     with_scan_keys,
 )
@@ -639,45 +642,9 @@ def delete_delta_rows(spark: SparkSession, path: str, condition: str) -> int:
     any existing DV); the commit upgrades the protocol to
     minReaderVersion 3 / readerFeatures [deletionVectors] the first
     time. Returns the new version (current version unchanged when
-    nothing matches).
-
-    The matching ``(file, pos)`` keys are computed DISTRIBUTED from
-    the scan's ``_metadata`` columns; only the keys land on the
-    driver for bitmap serialization — bitmap-scale, the same contract
-    as Delta's own DV writer."""
-    snap = _replay(spark, path, None)
-    _gate_writer_features(snap.protocol)
-    if not snap.files:
-        return snap.version
-    _gate_append_only(snap.metadata, "DELETE")
-    df, abs_to_rel = _visible_scan(spark, path, snap)
-    hits = (
-        df.filter(condition)
-        .groupBy("__fp")
-        .agg(F.collect_list("__pos").alias("positions"))
-        .collect()
-    )
-    if not hits:
-        return snap.version
-    per_file_hits = {
-        abs_to_rel[r["__fp"]]: [int(x) for x in r["positions"]] for r in hits
-    }
-
-    now_ms = int(time.time() * 1000)
-    actions = _dv_actions(path, snap, per_file_hits, now_ms)
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": condition},
-                "engineInfo": "etl-processing-scd1-spark delta deletion vectors",
-            }
-        }
-    )
-    new_version = snap.version + 1
-    _atomic_commit(path, new_version, actions)
-    return new_version
+    nothing matches). The statement itself is :func:`row_dml.delete`."""
+    return row_dml.delete(_DeltaLog(spark, path, _replay(spark, path, None)),
+                          condition)
 
 
 def _physical_read_schema(snap: DeltaSnapshot) -> StructType:
@@ -727,8 +694,8 @@ def _external_scan(spark: SparkSession, path: str, snap: DeltaSnapshot,
         )
         for p, a in files.items()
     ]
-    pv_df = spark.createDataFrame(
-        pv_rows,
+    pv_df = local_frame(
+        spark, pv_rows,
         StructType(
             [StructField("__pv_key", StringType())]
             + [StructField(c, StringType()) for c in part_phys]
@@ -740,25 +707,38 @@ def _external_scan(spark: SparkSession, path: str, snap: DeltaSnapshot,
 
 
 def _visible_scan(spark: SparkSession, path: str, snap: DeltaSnapshot,
-                  with_row_ids: bool = False):
-    """Distributed scan of the snapshot's VISIBLE rows with ``__fp``/
-    ``__pos`` helper columns (normalized ``_metadata`` keys) and
-    LOGICAL column names: rows already dead in a deletion vector are
-    anti-joined away, column-mapped physical names renamed back.
-    ``with_row_ids`` adds ``__row_id``/``__row_ver`` (row tracking:
-    materialized columns first, else baseRowId + position).
-    → (DataFrame, {abs file path: rel path})."""
-    mat = _rt_mat_cols(snap.metadata) if with_row_ids else None
-    abs_to_rel = {
-        os.path.abspath(os.path.join(path, p)): p for p in snap.files
-    }
-    if any(os.path.isabs(p) for p in snap.files):
-        if with_row_ids:
+                  files: dict[str, dict] | None = None, keys: bool = False,
+                  row_ids: bool = False) -> DataFrame:
+    """Distributed scan of the VISIBLE rows of ``files`` (default: the
+    whole snapshot) — the one scan behind :func:`read_delta_table` and
+    the row-level DML of :mod:`row_dml`. Columns are the log's logical
+    schema, typed per schemaString (Spark's partition directory
+    inference types "part=0" as int where the log may say string).
+
+    - Deletion vectors (minReaderVersion 3): each carrying file's dead
+      row indexes are anti-joined away on the scan's ``_metadata``
+      keys — DV sidecars are bitmap-scale, so the keys side is a
+      broadcast local relation.
+    - Column mapping (``delta.columnMapping.mode=name``): parquet
+      columns and partition directories carry PHYSICAL names, renamed
+      back to logical ones here.
+    - ``keys`` adds the ``__fp``/``__pos`` scan keys; ``row_ids`` adds
+      ``_row_id``/``_row_commit_version`` (row tracking: materialized
+      columns first, else baseRowId + position / the file's
+      defaultRowCommitVersion).
+
+    A scan of files in the table root with neither keys nor DVs nor row
+    ids plans no ``_metadata`` column and no join."""
+    files = snap.files if files is None else files
+    mat = _rt_mat_cols(snap.metadata) if row_ids else None
+    abs_to_rel = {os.path.abspath(os.path.join(path, p)): p for p in files}
+    if any(os.path.isabs(p) for p in files):
+        if row_ids:
             raise DeltaProtocolError(
-                "row-id scans over absolute-path (cloned) file entries "
+                "row-id reads over absolute-path (cloned) file entries "
                 "are not supported"
             )
-        df = _external_scan(spark, path, snap, snap.files)  # has __fp/__pos
+        df = _external_scan(spark, path, snap, files)  # has __fp/__pos
     else:
         read_schema = _physical_read_schema(snap)
         if mat:
@@ -767,44 +747,39 @@ def _visible_scan(spark: SparkSession, path: str, snap: DeltaSnapshot,
                 + [StructField(mat[0], LongType()),
                    StructField(mat[1], LongType())]
             )
-        df = with_scan_keys(
-            spark.read.option("basePath", path)
-            .schema(read_schema)
+        df = spark.read.option("basePath", path).schema(read_schema) \
             .parquet(*sorted(abs_to_rel))
-        )
     dead_keys = [
         (ap, pos)
-        for p, add in snap.files.items()
-        if add.get("deletionVector")
-        for ap in [os.path.abspath(os.path.join(path, p))]
-        for pos in read_deletion_vector(path, add["deletionVector"])
+        for ap, rel in abs_to_rel.items()
+        if files[rel].get("deletionVector")
+        for pos in read_deletion_vector(path, files[rel]["deletionVector"])
     ]
+    if "__fp" not in df.columns and (keys or dead_keys or mat):
+        df = with_scan_keys(df)
     if dead_keys:
-        kdf = spark.createDataFrame(dead_keys, "__del_fp string, __del_pos long")
-        # dead keys are bitmap-scale by contract; hint it (a local
-        # relation has no size stats for the auto-broadcast threshold)
+        kdf = local_frame(spark, dead_keys, "__del_fp string, __del_pos long")
+        # dead keys are bitmap-scale by contract: always broadcast
         df = df.join(
             F.broadcast(kdf),
             (F.col("__fp") == F.col("__del_fp"))
             & (F.col("__pos") == F.col("__del_pos")),
             "left_anti",
         )
-    for lg, ph in (snap.column_mapping or {}).items():
-        if ph != lg:
-            df = df.withColumnRenamed(ph, lg)
+    extra = ["__fp", "__pos"] if keys else []
     if mat:
         missing_base = sorted(
-            p for p, a in snap.files.items() if a.get("baseRowId") is None
+            p for p, a in files.items() if a.get("baseRowId") is None
         )
         if missing_base:
             raise DeltaProtocolError(
                 f"files without baseRowId (pre-enablement snapshot?): "
                 f"{missing_base[:3]}"
             )
-        bdf = spark.createDataFrame(
-            [
-                (ap, int(snap.files[rel]["baseRowId"]),
-                 int(snap.files[rel]["defaultRowCommitVersion"]))
+        bdf = local_frame(
+            spark, [
+                (ap, int(files[rel]["baseRowId"]),
+                 int(files[rel]["defaultRowCommitVersion"]))
                 for ap, rel in abs_to_rel.items()
             ],
             "__base_fp string, __base_id long, __base_ver long",
@@ -812,75 +787,91 @@ def _visible_scan(spark: SparkSession, path: str, snap: DeltaSnapshot,
         df = df.join(
             F.broadcast(bdf), F.col("__fp") == F.col("__base_fp"), "left"
         ).withColumn(
-            "__row_id",
+            "_row_id",
             F.coalesce(F.col(mat[0]), F.col("__base_id") + F.col("__pos")),
         ).withColumn(
-            "__row_ver",
+            "_row_commit_version",
             F.coalesce(F.col(mat[1]), F.col("__base_ver")),
-        ).drop("__base_fp", "__base_id", "__base_ver", mat[0], mat[1])
-    return df, abs_to_rel
-
-
-def _commit_dml(spark: SparkSession, path: str, snap: DeltaSnapshot,
-                kill_rows: list, abs_to_rel: dict, insert_df: DataFrame | None,
-                operation: str, params: dict,
-                extra_actions: list[dict] | None = None) -> int:
-    """Shared merge-on-read DML commit tail (UPDATE / MERGE): DV-kill
-    the collected ``(__fp, positions)`` rows, stage ``insert_df``'s
-    rows as new data files (empty output files are dropped, not
-    committed), and write ONE atomic commit. ``extra_actions`` lead
-    the commit (a schema-evolving MERGE's metaData action rides the
-    same commit as its data — and is committed even when no row
-    changed, matching stock autoMerge)."""
-    now_ms = int(time.time() * 1000)
-    _gate_writer_features(snap.protocol)
-    per_file_hits = {
-        abs_to_rel[r["__fp"]]: [int(x) for x in r["positions"]]
-        for r in kill_rows
-    }
-    if per_file_hits:
-        _gate_append_only(snap.metadata, operation)
-    actions = list(extra_actions or [])
-    actions += (
-        _dv_actions(path, snap, per_file_hits, now_ms) if per_file_hits else []
+        )
+        extra += ["_row_id", "_row_commit_version"]
+    return df.select(
+        *typed_columns(df, snap.schema, snap.column_mapping), *extra
     )
-    if insert_df is not None:
-        _enforce_constraints(insert_df, snap.metadata)
-        id_mode = (snap.metadata.get("configuration") or {}).get(
-            "delta.columnMapping.mode"
-        ) == "id"
-        adds = _stage_delta_files(
-            insert_df, path, snap.partition_columns,
-            snap.column_mapping or {}, now_ms,
-            (snap.column_mapping_ids or {}) if id_mode else None,
-        )
-        live_adds = []
-        for a in adds:
-            if json.loads(a["stats"])["numRecords"] == 0:
-                os.unlink(os.path.join(path, a["path"]))
-                continue
-            live_adds.append(a)
-        actions.extend(
-            _assign_row_ids(snap, live_adds, snap.version + 1)
-        )
-        actions.extend({"add": a} for a in live_adds)
-    if not actions:
-        return snap.version
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": operation,
-                "operationParameters": {
-                    str(k): str(v) for k, v in params.items()
-                },
-                "engineInfo": "etl-processing-scd1-spark delta merge-on-read",
+
+
+class _DeltaLog:
+    """:class:`row_dml.TableLog` over one Delta snapshot: kills become
+    deletion-vector actions, inserts staged add actions, both in ONE
+    atomic commit. ``extra_actions`` lead that commit (a
+    schema-evolving MERGE's metaData action rides the same commit as
+    its data — and is committed even when no row changed, matching
+    stock autoMerge)."""
+
+    def __init__(self, spark: SparkSession, path: str, snap: DeltaSnapshot,
+                 extra_actions: list[dict] | None = None):
+        _gate_writer_features(snap.protocol)
+        self.spark, self.path, self.snap = spark, path, snap
+        self.schema, self.version = snap.schema, snap.version
+        self.row_ids = _rt_mat_cols(snap.metadata) is not None
+        self.extra_actions = list(extra_actions or [])
+
+    def scan(self, keys: bool, row_ids: bool) -> DataFrame | None:
+        if not self.snap.files:
+            return None
+        return _visible_scan(self.spark, self.path, self.snap,
+                             keys=keys, row_ids=row_ids)
+
+    def commit(self, kills: dict[str, list[int]], inserts: DataFrame | None,
+               operation: str, params: dict) -> int:
+        path, snap = self.path, self.snap
+        now_ms = int(time.time() * 1000)
+        actions = list(self.extra_actions)
+        if kills:
+            _gate_append_only(snap.metadata, operation)
+            rel = {os.path.abspath(os.path.join(path, p)): p for p in snap.files}
+            actions += _dv_actions(
+                path, snap, {rel[fp]: pos for fp, pos in kills.items()}, now_ms
+            )
+        if inserts is not None:
+            _enforce_constraints(inserts, snap.metadata)
+            mat = _rt_mat_cols(snap.metadata)
+            if mat:
+                # a rewritten row keeps its row id in the materialized
+                # column; its commit version becomes this commit's,
+                # which is exactly defaultRowCommitVersion
+                inserts = inserts.withColumnRenamed("_row_id", mat[0])
+            id_mode = (snap.metadata.get("configuration") or {}).get(
+                "delta.columnMapping.mode"
+            ) == "id"
+            adds = _stage_delta_files(
+                inserts, path, snap.partition_columns,
+                snap.column_mapping or {}, now_ms,
+                (snap.column_mapping_ids or {}) if id_mode else None,
+            )
+            live_adds = []
+            for a in adds:
+                if json.loads(a["stats"])["numRecords"] == 0:
+                    os.unlink(os.path.join(path, a["path"]))
+                    continue
+                live_adds.append(a)
+            actions.extend(_assign_row_ids(snap, live_adds, snap.version + 1))
+            actions.extend({"add": a} for a in live_adds)
+        if not actions:
+            return snap.version
+        actions.append(
+            {
+                "commitInfo": {
+                    "timestamp": now_ms,
+                    "operation": operation,
+                    "operationParameters": {
+                        str(k): str(v) for k, v in params.items()
+                    },
+                    "engineInfo": "etl-processing-scd1-spark delta merge-on-read",
+                }
             }
-        }
-    )
-    new_version = snap.version + 1
-    _atomic_commit(path, new_version, actions)
-    return new_version
+        )
+        _atomic_commit(path, snap.version + 1, actions)
+        return snap.version + 1
 
 
 def update_delta_rows(spark: SparkSession, path: str, condition: str,
@@ -890,68 +881,32 @@ def update_delta_rows(spark: SparkSession, path: str, condition: str,
     expression over the old row) — untouched files are never
     rewritten, so update cost is O(matched rows), never O(table).
     One atomic commit carries both halves. Returns the new version
-    (unchanged when nothing matches)."""
+    (unchanged when nothing matches). The statement itself is
+    :func:`row_dml.update`; an updated row keeps its row id."""
     snap = _replay(spark, path, None)
-    if not snap.files:
-        return snap.version
-    cols = [f.name for f in snap.schema.fields]
-    unknown = [c for c in set_exprs if c not in cols]
-    if unknown:
-        raise ValueError(f"SET columns {unknown} not in table schema {cols}")
     ident = sorted(set(set_exprs) & set(_identity_specs(snap.metadata)))
     if ident:
         raise DeltaProtocolError(
             f"cannot UPDATE identity column(s) {ident} — they are "
             "GENERATED ALWAYS (PROTOCOL.md §Identity Columns)"
         )
-    mat = _rt_mat_cols(snap.metadata)
-    scan, abs_to_rel = _visible_scan(
-        spark, path, snap, with_row_ids=bool(mat)
-    )
-    hits = scan.filter(condition)
-    kill_rows = (
-        hits.groupBy("__fp")
-        .agg(F.collect_list("__pos").alias("positions"))
-        .collect()
-    )
-    if not kill_rows:
-        return snap.version
-    # row tracking: an updated row keeps its row id — materialize it
-    # into the rewritten file (its commit version becomes the new
-    # commit's, which is exactly defaultRowCommitVersion, so only the
-    # id column is carried)
-    keep_id = [F.col("__row_id").alias(mat[0])] if mat else []
-    updated = hits.select(
-        *[
-            (F.expr(set_exprs[f.name]) if f.name in set_exprs
-             else F.col(f.name)).cast(f.dataType).alias(f.name)
-            for f in snap.schema.fields
-        ],
-        *keep_id,
-    )
     gen = _generated_exprs(snap.metadata)
-    if gen:
+    types = {f.name: f.dataType for f in snap.schema.fields}
+
+    def regenerate(updated: DataFrame) -> DataFrame:
         # an UPDATE whose SET touches a generation input must not
         # leave the generated column stale: recompute every generated
         # column over the POST-SET row (stock Delta's behavior);
         # explicitly-SET generated columns are validated instead
-        updated = updated.select(
-            *[
-                (
-                    F.expr(gen[f.name])
-                    if f.name in gen and f.name not in set_exprs
-                    else F.col(f.name)
-                ).cast(f.dataType).alias(f.name)
-                for f in snap.schema.fields
-            ],
-            *([F.col(mat[0])] if mat else []),
+        for c in sorted(set(gen) - set(set_exprs)):
+            updated = updated.withColumn(c, F.expr(gen[c]).cast(types[c]))
+        return _apply_generated(
+            updated, {c: gen[c] for c in set_exprs if c in gen}
         )
-        explicit = {c: gen[c] for c in set_exprs if c in gen}
-        if explicit:
-            updated = _apply_generated(updated, explicit)
-    return _commit_dml(
-        spark, path, snap, kill_rows, abs_to_rel, updated, "UPDATE",
-        {"predicate": condition, "set": json.dumps(set_exprs, sort_keys=True)},
+
+    return row_dml.update(
+        _DeltaLog(spark, path, snap), condition, set_exprs,
+        derive=regenerate if gen else None,
     )
 
 
@@ -1200,87 +1155,19 @@ def merge_delta_table(spark: SparkSession, source: DataFrame, path: str,
             snap.metadata, source.schema, new_cols
         )
         evolve_action = [{"metaData": snap.metadata}]
-        cols = [f.name for f in snap.schema.fields]
     source = source.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name)
           for f in snap.schema.fields]
     )
-    # SQL MERGE INTO raises when one target row matches several source
-    # rows; without this probe two same-key source rows would DV-kill
-    # the target row once and insert BOTH, silently duplicating the
-    # key. groupBy treats NULL keys as equal — the same equivalence as
-    # the eqNullSafe match below. Cost: one agg on the (small,
-    # changed-rows-sized) source, short-circuited by limit(1).
-    dup = (
-        source.groupBy(*keys).agg(F.count(F.lit(1)).alias("__dup_n"))
-        .filter(F.col("__dup_n") > 1)
-        .limit(1).collect()
-    )
-    if dup:
-        dup_key = {k: dup[0][k] for k in keys}
-        raise ValueError(
-            f"merge source has duplicate rows for key {dup_key} — "
-            "MERGE requires key-unique sources (dedupe upstream, e.g. "
-            "keep the latest row per key)"
-        )
     if not snap.files:
+        row_dml.require_unique_keys(source, keys)
         return write_delta_table(source, path, mode="append")
-    payload = [c for c in cols if c not in keys]
-
-    scan, abs_to_rel = _visible_scan(spark, path, snap)
-    # pre-evolution files read NULL for freshly-added columns: the
-    # scan projection is the OLD column set, the diff below compares
-    # against a typed NULL so any non-NULL source value marks the row
-    # changed
-    t = scan.select(
-        *[c for c in cols if c not in new_cols],
-        *[
-            F.lit(None).cast(source.schema[c].dataType).alias(c)
-            for c in new_cols
-        ],
-        "__fp", "__pos",
-    ).alias("t")
-    s = source.alias("s")
-    key_cond = None
-    for k in keys:
-        c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-        key_cond = c if key_cond is None else (key_cond & c)
-    j = t.join(s, key_cond, "inner")
-    if payload:
-        types = {f.name: f.dataType for f in snap.schema.fields}
-
-        def cmp_form(side: str, c: str):
-            # maps have no equality in Spark: compare the canonical
-            # sorted entry list instead (entry structs sort by key —
-            # map keys are always orderable scalars)
-            if isinstance(types.get(c), MapType):
-                return F.array_sort(F.map_entries(F.col(f"{side}.{c}")))
-            return F.col(f"{side}.{c}")
-
-        diff = None
-        for c in payload:
-            d = ~cmp_form("t", c).eqNullSafe(cmp_form("s", c))
-            diff = d if diff is None else (diff | d)
-        changed = j.filter(diff)
-    else:
-        changed = j.filter(F.lit(False))
-    kills = changed.select(F.col("t.__fp").alias("__fp"),
-                           F.col("t.__pos").alias("__pos"))
-    if delete_missing:
-        gone = t.join(s, key_cond, "left_anti").select("__fp", "__pos")
-        kills = kills.unionByName(gone)
-    kill_rows = (
-        kills.groupBy("__fp")
-        .agg(F.collect_list("__pos").alias("positions"))
-        .collect()
-    )
-    upserts = changed.select(*[F.col(f"s.{c}").alias(c) for c in cols])
-    inserts = s.join(t, key_cond, "left_anti").select(*cols)
-    return _commit_dml(
-        spark, path, snap, kill_rows, abs_to_rel,
-        upserts.unionByName(inserts), "MERGE",
-        {"keys": ",".join(keys), "deleteMissing": delete_missing},
-        extra_actions=evolve_action,
+    # pre-evolution files read NULL for freshly-added columns (the scan
+    # reads the evolved schema), so any non-NULL source value there
+    # marks the row changed
+    return row_dml.merge(
+        _DeltaLog(spark, path, snap, extra_actions=evolve_action),
+        source, keys, delete_missing,
     )
 
 
@@ -1364,16 +1251,10 @@ def read_delta_table(
     still applies the exact row filter; a file's stats describe its
     PHYSICAL rows, so deletion vectors never un-prune anything).
 
-    Deletion vectors (minReaderVersion 3): each carrying file's dead
-    row indexes are dropped at scan time via an anti-join on the
-    scan's ``_metadata`` columns — DV sidecars are bitmap-scale, so
-    the keys side stays small and AQE broadcasts it.
-
-    Column mapping (``delta.columnMapping.mode=name``): parquet
-    columns, partition directories, and stats carry PHYSICAL names;
-    the final projection renames them back to the log's logical
-    schema, and pruning predicates are translated before the stats
-    compare."""
+    Rows dead in a deletion vector, column-mapped names and row ids
+    are resolved by :func:`_visible_scan`, the scan the row-level DML
+    shares; pruning predicates on a column-mapped table are translated
+    to physical names before the stats compare."""
     if timestamp_ms is not None:
         if version is not None:
             raise ValueError("version and timestamp_ms are exclusive")
@@ -1383,8 +1264,7 @@ def read_delta_table(
     files = {
         p: a for p, a in snap.files.items() if not _stats_prune(a, predicates)
     }
-    mat = _rt_mat_cols(snap.metadata) if with_row_ids else None
-    if with_row_ids and mat is None:
+    if with_row_ids and _rt_mat_cols(snap.metadata) is None:
         raise DeltaProtocolError(
             "with_row_ids requires delta.enableRowTracking "
             "(enable_row_tracking)"
@@ -1398,87 +1278,7 @@ def read_delta_table(
                    StructField("_row_commit_version", LongType())]
             )
         return spark.createDataFrame([], schema)
-    from pyspark.sql import functions as F
-
-    if any(os.path.isabs(p) for p in files):
-        if with_row_ids:
-            raise DeltaProtocolError(
-                "row-id reads over absolute-path (cloned) file entries "
-                "are not supported"
-            )
-        # shallow-clone / absolute add paths: partition values attach
-        # from the log, not from directory inference
-        df = _external_scan(spark, path, snap, files)
-    else:
-        paths = [os.path.join(path, p) for p in sorted(files)]
-        read_schema = _physical_read_schema(snap)
-        if mat:
-            read_schema = StructType(
-                read_schema.fields
-                + [StructField(mat[0], LongType()),
-                   StructField(mat[1], LongType())]
-            )
-        reader = spark.read.option("basePath", path).schema(read_schema)
-        df = reader.parquet(*paths)
-        if with_row_ids:
-            missing_base = sorted(
-                p for p, a in files.items() if a.get("baseRowId") is None
-            )
-            if missing_base:
-                raise DeltaProtocolError(
-                    f"files without baseRowId (pre-enablement snapshot?): "
-                    f"{missing_base[:3]}"
-                )
-            df = with_scan_keys(df)
-            base_rows = [
-                (os.path.abspath(os.path.join(path, p)),
-                 int(a["baseRowId"]), int(a["defaultRowCommitVersion"]))
-                for p, a in files.items()
-            ]
-            bdf = spark.createDataFrame(
-                base_rows, "__base_fp string, __base_id long, __base_ver long"
-            )
-            df = df.join(
-                F.broadcast(bdf), F.col("__fp") == F.col("__base_fp"), "left"
-            ).withColumn(
-                "_row_id",
-                F.coalesce(F.col(mat[0]), F.col("__base_id") + F.col("__pos")),
-            ).withColumn(
-                "_row_commit_version",
-                F.coalesce(F.col(mat[1]), F.col("__base_ver")),
-            ).drop("__base_fp", "__base_id", "__base_ver")
-    dv_keys = [
-        (os.path.abspath(os.path.join(path, p)), pos)
-        for p, a in files.items()
-        if a.get("deletionVector")
-        for pos in read_deletion_vector(path, a["deletionVector"])
-    ]
-    if dv_keys:
-        kdf = spark.createDataFrame(
-            dv_keys, "__del_fp string, __del_pos long"
-        )
-        if "__fp" not in df.columns:  # external scans carry them already
-            df = with_scan_keys(df)
-        df = (
-            df.join(
-                F.broadcast(kdf),
-                (F.col("__fp") == F.col("__del_fp"))
-                & (F.col("__pos") == F.col("__del_pos")),
-                "left_anti",
-            )
-        )
-    # column order AND types per the table schema: Spark's partition
-    # directory inference types "part=0" as int, but the log's
-    # schemaString is authoritative (e.g. a string partition column);
-    # column-mapped tables project physical → logical here
-    cm = snap.column_mapping or {}
-    out_cols = [
-        F.col(cm.get(f.name, f.name)).cast(f.dataType).alias(f.name)
-        for f in snap.schema.fields
-    ]
-    if with_row_ids:
-        out_cols += [F.col("_row_id"), F.col("_row_commit_version")]
-    return df.select(*out_cols)
+    return _visible_scan(spark, path, snap, files, row_ids=with_row_ids)
 
 
 def delta_last_txn_version(spark: SparkSession, path: str, app_id: str) -> int:
@@ -2496,50 +2296,29 @@ def delta_changes(
         path, from_version, to_version
     )
 
-    def dv_positions(s: DeltaSnapshot | None, p: str) -> set[int]:
-        return _dv_positions(path, s, p)
-
-    cm = snap.column_mapping or {}
-
-    def _project(df: DataFrame, change: str, v: int) -> DataFrame:
-        return (
-            df.select(
-                *[F.col(cm.get(f.name, f.name)).cast(f.dataType).alias(f.name)
-                  for f in snap.schema.fields]
+    def _scan(rels, dv_src: DeltaSnapshot | None, keys: bool = False):
+        # the END snapshot's schema, never sampled: files written
+        # before an ADD-COLUMN evolution read NULL for the new columns;
+        # rows dead in ``dv_src``'s deletion vectors (the relevant
+        # ENDPOINT) were never visible to this window's consumer; add
+        # actions of absolute (clone) paths carry the partition values
+        files = {}
+        for p in rels:
+            add = dict(
+                (dv_src.files.get(p) if dv_src else None)
+                or snap.files.get(p) or {}
             )
-            .withColumn("_change_type", F.lit(change))
-            .withColumn("_commit_version", F.lit(v).cast("long"))
+            if dv_src is None or p not in dv_src.files:
+                add.pop("deletionVector", None)
+            files[p] = add
+        return _visible_scan(spark, path, snap, files, keys=keys)
+
+    def _tag(df: DataFrame, change: str, v: int) -> DataFrame:
+        return df.select(
+            *snap.schema.fieldNames(),
+            F.lit(change).alias("_change_type"),
+            F.lit(v).cast("long").alias("_commit_version"),
         )
-
-    def _with_keys(df: DataFrame) -> DataFrame:
-        if "__fp" in df.columns:  # external scans carry them already
-            return df
-        return with_scan_keys(df)
-
-    def _scan(rels, action_src: DeltaSnapshot | None) -> DataFrame:
-        # absolute add paths (shallow clones): no basePath across
-        # roots — partition values attach from the owning snapshot's
-        # add actions instead of directory inference
-        if any(os.path.isabs(p) for p in rels):
-            sub = {
-                p: (
-                    (action_src.files.get(p) if action_src else None)
-                    or snap.files.get(p)
-                    or {}
-                )
-                for p in rels
-            }
-            return _external_scan(spark, path, snap, sub)
-        return spark.read.option("basePath", path).schema(
-            _physical_read_schema(snap)
-        ).parquet(*sorted(os.path.join(path, p) for p in rels))
-
-    def _key_df(keys: list[tuple[str, int]]):
-        return spark.createDataFrame(keys, "__del_fp string, __del_pos long")
-
-    _key_cond = (F.col("__fp") == F.col("__del_fp")) & (
-        F.col("__pos") == F.col("__del_pos")
-    )
 
     pieces = []
     for files, change, dv_src in (
@@ -2549,34 +2328,24 @@ def delta_changes(
         for p, v in files.items():
             by_version.setdefault(v, []).append(p)
         for v, rels in sorted(by_version.items()):
-            # explicit END-snapshot physical schema, never sampled:
-            # files written before an ADD-COLUMN evolution lack the
-            # new columns and must read NULL for them (sampling one
-            # of those files would fail the projection instead)
-            df = _scan(rels, dv_src)
-            dead = [
-                (os.path.abspath(os.path.join(path, p)), pos)
-                for p in rels
-                for pos in dv_positions(dv_src, p)
-            ]
-            if dead:
-                # rows already dead at the relevant ENDPOINT were
-                # never visible to this window's consumer
-                df = _with_keys(df).join(
-                    F.broadcast(_key_df(dead)), _key_cond, "left_anti"
-                )
-            pieces.append(_project(df, change, v))
+            pieces.append(_tag(_scan(rels, dv_src), change, v))
     for v, per_path in sorted(row_dels.items()):
-        df = _scan(sorted(per_path), snap)
-        keys = [
-            (os.path.abspath(os.path.join(path, p)), pos)
-            for p, poss in per_path.items()
-            for pos in sorted(poss)
-        ]
-        df = _with_keys(df).join(
-            F.broadcast(_key_df(keys)), _key_cond, "left_semi"
+        keys = local_frame(
+            spark,
+            [
+                (os.path.abspath(os.path.join(path, p)), pos)
+                for p, poss in per_path.items()
+                for pos in sorted(poss)
+            ],
+            "__del_fp string, __del_pos long",
         )
-        pieces.append(_project(df, "delete", v))
+        df = _scan(sorted(per_path), None, keys=True).join(
+            F.broadcast(keys),
+            (F.col("__fp") == F.col("__del_fp"))
+            & (F.col("__pos") == F.col("__del_pos")),
+            "left_semi",
+        )
+        pieces.append(_tag(df, "delete", v))
     if not pieces:
         from pyspark.sql import types as T
 

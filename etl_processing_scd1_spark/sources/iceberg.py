@@ -56,16 +56,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+from . import row_dml
 from .avro import dump_avro, load_avro
 from .table_files import (
     FooterStats,
     as_nullable,
     cluster_files,
-    file_key,
     put_if_absent,
     scan_footers_distributed,
     stage_files,
     sweep_orphans,
+    typed_columns,
     walk_hive_parquet,
     with_scan_keys,
 )
@@ -1244,8 +1246,8 @@ def _resolve_delete_file_columns(d_path: str, ids: list[int],
 def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
                    deletes: list[dict], meta: dict) -> DataFrame:
     """Apply a snapshot's v2 merge-on-read delete files to a parquet
-    scan that still carries ``_metadata`` (shared by
-    :func:`read_iceberg_table` and :func:`delete_iceberg_rows`).
+    scan carrying the ``__fp``/``__pos`` scan keys (a step of
+    :func:`_visible_scan`).
 
     - POSITION deletes (content=1): distributed anti-join on
       ``(file_path, pos)`` against ``_metadata`` — the delete side is
@@ -1266,7 +1268,6 @@ def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
     )
     dvs = [d for d in deletes if d.get("dv")]
     eq_dels = [d for d in deletes if d["content"] == 2]
-    df = df.withColumn("__mor_fp", file_key())
     if pos_paths or dvs:
         keys = None
         if pos_paths:
@@ -1290,34 +1291,28 @@ def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
                     read_blob(d["path"], d["dv"]["offset"], d["dv"]["size"])
                 )
             ]
-            kdf = spark.createDataFrame(
-                rows, "__del_fp string, __del_pos long"
-            )
-            # bitmap-scale by contract; local relations have no size
-            # stats for the auto-broadcast threshold
-            kdf = F.broadcast(kdf)
+            # bitmap-scale by contract: always broadcast
+            kdf = F.broadcast(local_frame(
+                spark, rows, "__del_fp string, __del_pos long"
+            ))
             keys = kdf if keys is None else keys.unionByName(kdf)
-        df = (
-            df.withColumn("__mor_pos", F.col("_metadata.row_index"))
-            .join(
-                keys,
-                (F.col("__mor_fp") == F.col("__del_fp"))
-                & (F.col("__mor_pos") == F.col("__del_pos")),
-                "left_anti",
-            )
-            .drop("__mor_pos")
+        df = df.join(
+            keys,
+            (F.col("__fp") == F.col("__del_fp"))
+            & (F.col("__pos") == F.col("__del_pos")),
+            "left_anti",
         )
     if eq_dels:
         by_id = _field_names_by_id(meta)
-        seq_df = spark.createDataFrame(
-            [(p, int(s)) for p, _part, s in files],
+        seq_df = local_frame(
+            spark, [(p, int(s)) for p, _part, s in files],
             T.StructType([
                 T.StructField("__seq_fp", T.StringType(), False),
                 T.StructField("__data_seq", T.LongType(), False),
             ]),
         )
         df = df.join(
-            F.broadcast(seq_df), F.col("__mor_fp") == F.col("__seq_fp"), "left"
+            F.broadcast(seq_df), F.col("__fp") == F.col("__seq_fp"), "left"
         ).drop("__seq_fp")
         groups: dict[tuple, list[dict]] = {}
         for d in eq_dels:
@@ -1352,7 +1347,7 @@ def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
                 cond = F.col(c).eqNullSafe(F.col(f"__eq_{c}")) & cond
             df = df.join(F.broadcast(keys), cond, "left_anti")
         df = df.drop("__data_seq")
-    return df.drop("__mor_fp")
+    return df
 
 
 def _merged_scan(spark: SparkSession, paths: list[str]):
@@ -1431,12 +1426,9 @@ def read_iceberg_table(
     "open every footer" into "plan from metadata"; the caller still
     applies the exact row filter (bounds are a superset guarantee).
 
-    v2 merge-on-read: the snapshot's POSITION and EQUALITY delete
-    files are applied at scan time by :func:`_apply_deletes` —
-    distributed anti-joins against the scan's ``_metadata`` columns
-    (position) and the table key columns with the sequence-number
-    bound (equality); nothing is rewritten (spec §Row-Level
-    Deletes)."""
+    The rows are :func:`_visible_scan`'s — the scan the row-level DML
+    shares: v2/v3 delete files applied at scan time, evolved and
+    renamed columns, partition fill and v3 defaults and row ids."""
     if timestamp_ms is not None:
         if snapshot_id is not None or version is not None:
             raise ValueError(
@@ -1451,68 +1443,53 @@ def read_iceberg_table(
             )
         snapshot_id = iceberg_ref_snapshot(path, ref)
     meta = _load_metadata(path, version)
-    schema = _spark_schema(meta)
     if with_row_ids and int(meta.get("format-version", 1)) < 3:
         raise IcebergProtocolError(
             "with_row_ids requires format-version 3 row lineage "
             "(upgrade_iceberg_format_version)"
         )
-    sid_used, files, deletes = _snapshot_files(
-        path, meta, snapshot_id, predicates
-    )
-    if not files:
-        out_schema = schema
+    planned = _snapshot_files(path, meta, snapshot_id, predicates)
+    if not planned[1]:
+        out_schema = _spark_schema(meta)
         if with_row_ids:
             out_schema = T.StructType(
-                schema.fields
-                + [T.StructField("_row_id", T.LongType()),
-                   T.StructField("_last_updated_sequence_number",
-                                 T.LongType())]
+                out_schema.fields
+                + [T.StructField(c, T.LongType()) for c in _LINEAGE_COLS]
             )
         return spark.createDataFrame([], out_schema)
+    return _visible_scan(spark, path, meta, planned, row_ids=with_row_ids)
 
-    def _cast(df: DataFrame) -> DataFrame:
-        extra = []
-        if with_row_ids:
-            extra = [
-                F.col("_row_id").cast("long").alias("_row_id"),
-                F.col("_last_updated_sequence_number").cast("long")
-                .alias("_last_updated_sequence_number"),
-            ]
-        return df.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name)
-              for f in schema.fields],
-            *extra,
-        )
 
-    def _strip_deleted(df: DataFrame) -> DataFrame:
-        # must run directly on the parquet scan (before any select
-        # that drops ``_metadata``)
-        return _apply_deletes(spark, df, files, deletes, meta)
+def _visible_scan(spark: SparkSession, path: str, meta: dict, planned: tuple,
+                  keys: bool = False, row_ids: bool = False) -> DataFrame:
+    """Distributed scan of the VISIBLE rows of a planned snapshot
+    ``(snapshot id, data files, delete files)`` (:func:`_snapshot_files`,
+    at least one data file) — the one scan behind
+    :func:`read_iceberg_table` and the row-level DML of
+    :mod:`row_dml`. Columns are the table schema's, typed per it;
+    ``keys`` adds the ``__fp``/``__pos`` scan keys, ``row_ids`` the v3
+    lineage columns.
 
-    # mergeSchema unions the file footers, so files written BEFORE an
-    # add-column evolution null-fill the new columns per file (the
-    # spec's read semantics for appended field ids); renamed columns
-    # coalesce their historical names (schema.name-mapping.default)
+    - mergeSchema unions the file footers, so files written BEFORE an
+      add-column evolution null-fill the new columns per file (the
+      spec's read semantics for appended field ids); renamed columns
+      coalesce their historical names (schema.name-mapping.default).
+    - Position, deletion-vector and equality deletes are applied by
+      :func:`_apply_deletes` (spec §Row-Level Deletes).
+    - Identity-partition source columns a file omits come from the
+      manifest's partition tuple; v3 files predating a column read its
+      initial-default; v3 row ids derive from first_row_id + position.
+
+    A scan that needs none of the file-keyed steps (no deletes, no
+    fill, no defaults, no keys or row ids) plans no ``_metadata``
+    column and no join."""
+    sid_used, files, deletes = planned
+    schema = _spark_schema(meta)
+    names = {f.name for f in schema.fields}
     cands = _name_candidates(meta)
-    df = _strip_deleted(
-        _unify_renamed(
-            _merged_scan(spark, sorted(p for p, _, _ in files)),
-            cands,
-        )
-    )
-    part_keys = set()
-    for _p, part, _s in files:
-        part_keys.update((part or {}).keys())
+    df = _unify_renamed(_merged_scan(spark, sorted(p for p, _, _ in files)),
+                        cands)
     scanned_cols = set(df.columns)
-    for f in schema.fields:
-        if f.name not in df.columns:
-            # column in NO data file: either evolution added it after
-            # every present file was written (reads NULL), or it is an
-            # identity-partition source every file omits (the
-            # coalesce below fills it from the manifest tuple)
-            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-
     # Identity-partition source columns may be ABSENT from any SUBSET
     # of the data files: hive-migrated foreign files (add_files) omit
     # them, engine-written files keep them, and one table holds both
@@ -1520,62 +1497,57 @@ def read_iceberg_table(
     # partition tuple per file via ONE broadcast map (metadata-scale,
     # a row per file) and COALESCE — a row can only sit in a
     # directory whose tuple matches its own value, so the coalesce is
-    # exact. Replaces the old per-partition-group scan union (which
-    # was also wrong for the mixed case: it only triggered when the
-    # column was missing from EVERY file). GATED so pure engine-
-    # written tables (every file carries every column) pay no extra
-    # join: runs only when a source column is absent from the merged
-    # footprint, or the table is marked migrated (add_files sets the
-    # property — its foreign files may omit columns that OTHER files
-    # carry, invisible to merged-schema inference).
+    # exact. GATED so pure engine-written tables (every file carries
+    # every column) pay no extra join: runs only when a source column
+    # is absent from the merged footprint, or the table is marked
+    # migrated (add_files sets the property — its foreign files may
+    # omit columns that OTHER files carry, invisible to merged-schema
+    # inference).
     migrated = (meta.get("properties") or {}).get(
         "spark-graft.migrated"
     ) == "true"
+    part_keys = {k for _p, part, _s in files for k in (part or {})}
     fill = sorted(
         k for k in part_keys
-        if k in {f.name for f in schema.fields}
-        and (migrated or k not in scanned_cols)
+        if k in names and (migrated or k not in scanned_cols)
     )
-    if fill and any(
+    if not any(
         (part or {}).get(c) is not None for _p, part, _s in files for c in fill
     ):
-        from pyspark.sql.types import StringType as _Str
-        from pyspark.sql.types import StructField as _SF
-        from pyspark.sql.types import StructType as _ST
-
-        pv_rows = [
-            tuple(
-                [_norm_fp_py(p)]
-                + [
-                    None if (part or {}).get(c) is None
-                    else str((part or {}).get(c))
-                    for c in fill
-                ]
-            )
-            for p, part, _s in files
-        ]
-        pv_df = spark.createDataFrame(
-            pv_rows,
-            _ST(
-                [_SF("__pv_key", _Str())]
-                + [_SF(f"__pv_{c}", _Str()) for c in fill]
+        fill = []
+    defaults = _field_defaults(meta)
+    if keys or deletes or fill or defaults or row_ids:
+        df = with_scan_keys(df)
+    df = _apply_deletes(spark, df, files, deletes, meta)
+    for f in schema.fields:
+        if f.name not in df.columns:
+            # column in NO data file: either evolution added it after
+            # every present file was written (reads NULL), or it is an
+            # identity-partition source every file omits (filled below)
+            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
+    if fill:
+        pv_df = local_frame(
+            spark, [
+                tuple(
+                    [_norm_fp_py(p)]
+                    + [None if (part or {}).get(c) is None
+                       else str((part or {}).get(c)) for c in fill]
+                )
+                for p, part, _s in files
+            ],
+            T.StructType(
+                [T.StructField("__pv_key", T.StringType())]
+                + [T.StructField(f"__pv_{c}", T.StringType()) for c in fill]
             ),
         )
-        df = df.withColumn("__pv_fp", file_key())
         df = df.join(
-            F.broadcast(pv_df),
-            F.col("__pv_fp") == F.col("__pv_key"),
-            "left",
-        ).drop("__pv_key", "__pv_fp")
-        types = {f.name: f.dataType for f in schema.fields}
+            F.broadcast(pv_df), F.col("__fp") == F.col("__pv_key"), "left"
+        )
         for c in fill:
             df = df.withColumn(
                 c,
-                F.coalesce(
-                    F.col(c), F.col(f"__pv_{c}").cast(types[c])
-                ),
-            ).drop(f"__pv_{c}")
-    defaults = _field_defaults(meta)
+                F.coalesce(F.col(c), F.col(f"__pv_{c}").cast(schema[c].dataType)),
+            )
     if defaults:
         # v3 §Default Values: rows from files that PREDATE the column
         # read initial-default, not NULL — decided per FILE by footer
@@ -1583,71 +1555,57 @@ def read_iceberg_table(
         # so new files storing explicit NULLs keep them
         import pyarrow.parquet as pq
 
-        cands = _name_candidates(meta)
         pres_rows = []
         for p, _part, _s in files:
             try:
-                names = set(pq.read_schema(p).names)
+                present = set(pq.read_schema(p).names)
             except Exception:
-                names = set()
-            row = [_norm_fp_py(p)]
-            for c in defaults:
-                hit = c in names or any(
-                    h in names for h in cands.get(c, [])
-                )
-                row.append(1 if hit else 0)
-            pres_rows.append(tuple(row))
-        pres_df = spark.createDataFrame(
-            pres_rows,
+                present = set()
+            pres_rows.append(tuple(
+                [_norm_fp_py(p)]
+                + [int(any(h in present for h in cands.get(c, [c])))
+                   for c in defaults]
+            ))
+        pres_df = local_frame(
+            spark, pres_rows,
             ", ".join(["__dflt_fp string"]
                       + [f"__has_{i} int" for i in range(len(defaults))]),
         )
-        df = df.withColumn(
-            "__dflt_key", file_key()
-        ).join(
-            F.broadcast(pres_df),
-            F.col("__dflt_key") == F.col("__dflt_fp"), "left",
-        ).drop("__dflt_fp", "__dflt_key")
+        df = df.join(
+            F.broadcast(pres_df), F.col("__fp") == F.col("__dflt_fp"), "left",
+        )
         for i, (c, (dv, typ)) in enumerate(defaults.items()):
             df = df.withColumn(
                 c,
                 F.when(F.col(f"__has_{i}") == 0, F.lit(dv).cast(typ))
                 .otherwise(F.col(c)),
-            ).drop(f"__has_{i}")
-    if with_row_ids:
+            )
+    extra = ["__fp", "__pos"] if keys else []
+    if row_ids:
         # v3 row lineage: _row_id = first_row_id + position for files
         # carrying a lineage range (pre-upgrade files read NULL — the
-        # spec's "row ids unavailable"); rewritten (compacted) files
-        # carry MATERIALIZED _row_id/_last_updated_sequence_number
+        # spec's "row ids unavailable"); rewritten (compacted, updated)
+        # files carry MATERIALIZED _row_id/_last_updated_sequence_number
         # columns which win via coalesce
-        rl_rows = _first_row_ids(path, meta, sid_used)
-        rl_df = spark.createDataFrame(
-            rl_rows,
+        rl_df = local_frame(
+            spark, _first_row_ids(path, meta, sid_used),
             "__rl_key string, __rl_first long, __rl_seq long",
         )
-        mat_id = (
-            F.col("_row_id") if "_row_id" in df.columns
-            else F.lit(None).cast("long")
+        mat_id, mat_seq = [
+            F.col(c) if c in df.columns else F.lit(None).cast("long")
+            for c in _LINEAGE_COLS
+        ]
+        df = df.join(
+            F.broadcast(rl_df), F.col("__fp") == F.col("__rl_key"), "left"
+        ).select(
+            "*",
+            F.coalesce(mat_id, F.col("__rl_first") + F.col("__pos"))
+            .alias("__row_id"),
+            F.coalesce(mat_seq, F.col("__rl_seq")).alias("__row_seq"),
         )
-        mat_seq = (
-            F.col("_last_updated_sequence_number")
-            if "_last_updated_sequence_number" in df.columns
-            else F.lit(None).cast("long")
-        )
-        df = df.withColumn(
-            "__rl_fp", file_key()
-        ).withColumn(
-            "__rl_pos", F.col("_metadata.row_index")
-        ).join(
-            F.broadcast(rl_df), F.col("__rl_fp") == F.col("__rl_key"), "left"
-        ).withColumn(
-            "_row_id",
-            F.coalesce(mat_id, F.col("__rl_first") + F.col("__rl_pos")),
-        ).withColumn(
-            "_last_updated_sequence_number",
-            F.coalesce(mat_seq, F.col("__rl_seq")),
-        ).drop("__rl_key", "__rl_first", "__rl_seq", "__rl_fp", "__rl_pos")
-    return _cast(df)
+        extra += [F.col("__row_id").cast("long").alias(_LINEAGE_COLS[0]),
+                  F.col("__row_seq").cast("long").alias(_LINEAGE_COLS[1])]
+    return df.select(*typed_columns(df, schema), *extra)
 
 
 def _first_row_ids(path: str, meta: dict,
@@ -1797,6 +1755,93 @@ def _manifest_entry_schema_json(
             ],
         }
     )
+
+
+def _write_manifest(path: str, prev: dict | None, snapshot_id: int,
+                    seq: int | None, content: int, files: list[dict],
+                    schema_node: dict, spec: tuple | None = None) -> dict:
+    """Write one manifest whose entries ADD ``files`` (``data_file``
+    records without the constant fields; ``content`` 0 = data, 1 =
+    deletes) and return its manifest-list row. ``seq`` None writes a v1
+    manifest, else one of the table's format version (at least 2 —
+    row-level deletes upgrade a v1 table). ``spec`` = (partition fields
+    ``[(name, iceberg type, field id)]``, spec fields, spec id) defaults
+    to the table's current spec; a delete file spans partitions, so
+    its tuple defaults to all-null (readers apply deletes by path or
+    key, never by tuple)."""
+    fv = 1 if seq is None else max(2, int(prev.get("format-version", 2)))
+    part_fields, spec_fields, spec_id = spec or (
+        [(e["name"], e["ice"], e["fid"]) for e in _spec_entries_from_meta(prev)],
+        _spec_fields(prev), _default_spec_id(prev),
+    )
+    manifest_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
+    os.makedirs(_meta_dir(path), exist_ok=True)
+    dump_avro(
+        manifest_path,
+        _manifest_entry_schema_json(
+            part_fields, with_content=fv >= 2, with_v3=fv >= 3
+        ),
+        [
+            {
+                "status": _ADDED,
+                "snapshot_id": snapshot_id,
+                "data_file": {
+                    "content": content,
+                    "file_format": "PARQUET",
+                    "partition": {name: None for name, _i, _f in part_fields},
+                    "block_size_in_bytes": 64 * 1024 * 1024,
+                    **f,
+                },
+            }
+            for f in files
+        ],
+        extra_meta={
+            "schema": json.dumps(schema_node),
+            "partition-spec": json.dumps(spec_fields),
+            "partition-spec-id": str(spec_id),
+            "format-version": str(fv),
+            "content": "deletes" if content else "data",
+        },
+    )
+    row = {
+        "manifest_path": manifest_path,
+        "manifest_length": os.path.getsize(manifest_path),
+        "partition_spec_id": spec_id,
+        "added_snapshot_id": snapshot_id,
+        "added_data_files_count": len(files),
+        "existing_data_files_count": 0,
+        "deleted_data_files_count": 0,
+        "added_rows_count": sum(int(f["record_count"]) for f in files),
+        "existing_rows_count": 0,
+        "deleted_rows_count": 0,
+    }
+    if fv >= 2:
+        row.update(
+            {"content": content, "sequence_number": seq,
+             "min_sequence_number": seq}
+        )
+    return row
+
+
+def _data_file(p: str, part: dict, n: int, size: int, lo, hi) -> dict:
+    """A staged data file (:func:`_stage_data_files`) as a manifest
+    ``data_file`` record for :func:`_write_manifest`."""
+    return {"file_path": p, "partition": part, "record_count": n,
+            "file_size_in_bytes": size, "lower_bounds": lo,
+            "upper_bounds": hi}
+
+
+def _number_rows(files: list[dict], cursor: int | None) -> int | None:
+    """Format v3 row lineage: give each added data file (a manifest
+    ``data_file`` record) an explicit ``first_row_id`` range from the
+    table's next-row-id ``cursor`` — row i of the file has ``_row_id`` =
+    first_row_id + i → the advanced cursor (None, a table without
+    lineage, passes through)."""
+    if cursor is not None:
+        for f in files:
+            f["first_row_id"] = cursor
+            cursor += int(f["record_count"])
+    return cursor
 
 
 def _bounds_avro(name: str, kid: int, vid: int) -> dict:
@@ -2348,73 +2393,20 @@ def _commit_snapshot(
 
     # ---- manifest for the new files
     snapshot_id = now_ms * 1000 + new_version
-    os.makedirs(_meta_dir(path), exist_ok=True)
-    manifest_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-    entries = [
-        {
-            "status": _ADDED,
-            "snapshot_id": snapshot_id,
-            "data_file": {
-                "file_path": p,
-                "file_format": "PARQUET",
-                "partition": part,
-                "record_count": n,
-                "file_size_in_bytes": size,
-                "block_size_in_bytes": 64 * 1024 * 1024,
-                "lower_bounds": lo,
-                "upper_bounds": hi,
-            },
-        }
-        for p, part, n, size, lo, hi in new_files
+    files = [_data_file(*f) for f in new_files]
+    first_row_id = int((prev or {}).get("next-row-id", 0)) if fv >= 3 else None
+    next_row_id = _number_rows(files, first_row_id)
+    spec_list = [
+        {"name": e["name"], "transform": e["transform"],
+         "source-id": field_ids[e["source"]], "field-id": e["fid"]}
+        for e in spec_entries
     ]
-    # format v3 row lineage: every added data file gets an explicit
-    # first_row_id range from the table's next-row-id cursor; row i
-    # of the file has _row_id = first_row_id + i
-    first_row_id = None
-    next_row_id = None
-    if fv >= 3:
-        first_row_id = int((prev or {}).get("next-row-id", 0))
-        cursor = first_row_id
-        for e in entries:
-            e["data_file"]["first_row_id"] = cursor
-            cursor += int(e["data_file"]["record_count"])
-        next_row_id = cursor
-    spec_json = json.dumps(
-        [
-            {"name": e["name"], "transform": e["transform"],
-             "source-id": field_ids[e["source"]], "field-id": e["fid"]}
-            for e in spec_entries
-        ]
-    )
     cur_spec_id = _default_spec_id(prev) if prev else 0
-    dump_avro(
-        manifest_path,
-        _manifest_entry_schema_json(part_fields, with_v3=(fv >= 3)),
-        entries,
-        extra_meta={
-            "schema": json.dumps(_schema_struct(schema, field_ids, prev)),
-            "partition-spec": spec_json,
-            "partition-spec-id": str(cur_spec_id),
-            "format-version": "1",
-            "content": "data",
-        },
+    new_manifest = _write_manifest(
+        path, prev, snapshot_id, seq, 0, files,
+        _schema_struct(schema, field_ids, prev),
+        (part_fields, spec_list, cur_spec_id),
     )
-    new_manifest = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": cur_spec_id,
-        "added_snapshot_id": snapshot_id,
-        "added_data_files_count": len(new_files),
-        "existing_data_files_count": 0,
-        "deleted_data_files_count": 0,
-        "added_rows_count": sum(n for _, _, n, _, _, _ in new_files),
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    if fv >= 2:
-        new_manifest.update(
-            {"content": 0, "sequence_number": seq, "min_sequence_number": seq}
-        )
 
     # ---- manifest list: fast-append on top of the current
     # snapshot's manifests, or fresh for overwrite/first commit
@@ -2498,14 +2490,14 @@ def _commit_snapshot(
         "current-schema-id": 0,
         "sort-orders": sort_orders,
         "default-sort-order-id": default_sort,
-        "partition-spec": json.loads(spec_json),
+        "partition-spec": spec_list,
         # spec EVOLUTION: a table that evolved its partition spec
         # keeps EVERY spec in the list (old manifests reference old
         # spec-ids) — rebuild only on creation
         "partition-specs": (
             prev["partition-specs"]
             if prev and prev.get("partition-specs")
-            else [{"spec-id": 0, "fields": json.loads(spec_json)}]
+            else [{"spec-id": 0, "fields": spec_list}]
         ),
         "default-spec-id": _default_spec_id(prev) if prev else 0,
         "last-partition-id": max(
@@ -2564,93 +2556,150 @@ def _commit_snapshot(
 
 
 def delete_iceberg_rows(spark: SparkSession, path: str, condition: str) -> int:
-    """MERGE-ON-READ DELETE (Iceberg v2): commit a POSITION-delete
-    file for every current row matching ``condition`` — no data file
-    is rewritten. Returns the new metadata version (or the current
-    one unchanged when nothing matches).
+    """MERGE-ON-READ DELETE (Iceberg v2/v3): commit the current rows
+    matching ``condition`` as deletes — no data file is rewritten.
+    Returns the new metadata version (or the current one unchanged
+    when nothing matches). The statement itself is
+    :func:`row_dml.delete`, over the rows readers see.
 
-    Mechanics per the spec (§Row-Level Deletes / §Position Delete
-    Files): the matching rows' ``(file_path, pos)`` keys are computed
-    DISTRIBUTED from the scan's ``_metadata`` columns, written as a
-    sorted parquet delete file under ``data/``, registered in a
-    delete manifest (``content=1``, ``data_file.content=1``), and the
-    new snapshot's manifest list carries the previous data manifests
-    plus the delete manifest; the table metadata upgrades to
-    ``format-version: 2`` with a ``last-sequence-number``. Readers
-    here (:func:`read_iceberg_table`, the ``iceberglog`` DataSource)
-    apply the deletes at scan time; :func:`write_iceberg_table`
-    continues to work on the v2 table (appends carry the delete
-    manifests forward and advance the sequence number;
-    ``compact_iceberg_table`` rewrites the rows with deletes applied,
-    leaving a clean delete-free snapshot).
+    Mechanics per the spec (§Row-Level Deletes): a v2 table gets a
+    sorted POSITION-delete file, a v3 table one puffin DELETION VECTOR
+    per affected data file, registered in a delete manifest; the new
+    snapshot's manifest list carries the previous manifests plus that
+    one, and a v1 table upgrades to ``format-version: 2`` with a
+    ``last-sequence-number``. Readers here (:func:`read_iceberg_table`,
+    the ``iceberglog`` DataSource) apply the deletes at scan time;
+    ``compact_iceberg_table`` rewrites the rows with deletes applied.
 
-    Scope: ``condition`` references data-file columns (our writer
-    stores ALL schema columns in data files); position deletes apply
-    by exact file path, so data sequence numbers are not consulted —
-    correct unless a foreign writer re-uses a deleted file's path for
-    NEW rows after the delete, which no known writer does (uuid file
-    names)."""
-    base, prev = _load_latest(path)
-    parent_id, files, existing = _snapshot_files(path, prev, None, None)
-    if not files:
-        return base
+    Position deletes apply by exact file path, so data sequence
+    numbers are not consulted — correct unless a foreign writer
+    re-uses a deleted file's path for NEW rows after the delete, which
+    no known writer does (uuid file names)."""
+    return row_dml.delete(_IcebergLog(spark, path), condition)
 
-    scan = with_scan_keys(_merged_scan(spark, sorted(p for p, _, _ in files)))
-    # renamed columns: fold historical names into the current ones so
-    # the caller's condition (current names) reaches pre-rename files
-    scan = _unify_renamed(scan, _name_candidates(prev))
-    # rows already deleted (position OR equality) are invisible —
-    # don't re-delete them
-    scan = _apply_deletes(spark, scan, files, existing, prev)
-    hits = scan.filter(condition).select(
-        F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
-    )
 
-    now_ms = int(time.time() * 1000)
-    new_version = base + 1
-    snapshot_id = now_ms * 1000 + new_version
-    seq = int(prev.get("last-sequence-number", 0)) + 1
-    if int(prev.get("format-version", 1)) >= 3:
-        # format v3: deletes are puffin DELETION VECTORS (one roaring
-        # bitmap per data file), never new position-delete parquets
-        new_manifest, n_deleted, replaced = _dv_delete_manifest(
-            hits, path, prev, snapshot_id, seq, existing
+def update_iceberg_rows(spark: SparkSession, path: str, condition: str,
+                        set_exprs: dict[str, str]) -> int:
+    """MERGE-ON-READ UPDATE: ONE snapshot carrying deletes for every
+    visible row matching ``condition`` (as :func:`delete_iceberg_rows`)
+    plus new data files holding those rows with ``set_exprs`` (column
+    → SQL expression over the old row) applied — untouched files never
+    rewritten, cost O(matched), sequence number shared by both halves.
+    On a v3 table an updated row keeps its ``_row_id`` (spec §Row
+    Lineage; its sequence number is the update's). Returns the new
+    metadata version (unchanged when nothing matches). The statement
+    itself is :func:`row_dml.update`."""
+    return row_dml.update(_IcebergLog(spark, path), condition, set_exprs)
+
+
+class _IcebergLog:
+    """:class:`row_dml.TableLog` over an Iceberg table's current
+    snapshot: kills become v3 puffin deletion vectors or a v2
+    position-delete file, inserts a data manifest, both in ONE
+    :func:`_commit_v2_tail` snapshot."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark, self.path = spark, path
+        self.version, self.meta = _load_latest(path)
+        self.planned = _snapshot_files(path, self.meta, None, None)
+        self.schema = _spark_schema(self.meta)
+        self.row_ids = int(self.meta.get("format-version", 1)) >= 3
+
+    def scan(self, keys: bool, row_ids: bool) -> DataFrame | None:
+        if not self.planned[1]:
+            return None
+        return _visible_scan(self.spark, self.path, self.meta, self.planned,
+                             keys=keys, row_ids=row_ids)
+
+    def commit(self, kills: dict[str, list[int]], inserts: DataFrame | None,
+               operation: str, params: dict) -> int:
+        path, prev, base = self.path, self.meta, self.version
+        parent_id, _files, existing = self.planned
+        now_ms = int(time.time() * 1000)
+        snapshot_id = now_ms * 1000 + base + 1
+        seq = int(prev.get("last-sequence-number", 0)) + 1
+        field_ids = _resolved_field_ids(prev, self.schema)
+        node = _schema_struct(self.schema, field_ids, prev)
+        manifests, summary, transform = [], {}, None
+        first_row_id = next_row_id = (
+            int(prev.get("next-row-id", 0)) if self.row_ids else None
         )
-        if new_manifest is None:
+        if inserts is not None:
+            files = []
+            for f in _stage_data_files(
+                inserts, path, _spec_entries_from_meta(prev),
+                _scalar_ice_types(self.schema), field_ids, schema_node=node,
+            ):
+                if f[2] == 0:
+                    os.unlink(f[0])
+                    continue
+                files.append(_data_file(*f))
+            next_row_id = _number_rows(files, first_row_id)
+            if files:
+                manifests.append(
+                    _write_manifest(path, prev, snapshot_id, seq, 0, files, node)
+                )
+                summary["added-data-files"] = len(files)
+                summary["added-records"] = sum(f["record_count"] for f in files)
+        if kills:
+            if self.row_ids:  # format v3: puffin deletion vectors
+                deletes, replaced = _deletion_vectors(
+                    path, kills, existing, snapshot_id, seq
+                )
+                transform = _drop_superseded_dvs(path, replaced)
+            else:
+                deletes = [_position_delete_file(path, kills)]
+            manifests.append(
+                _write_manifest(path, prev, snapshot_id, seq, 1, deletes, node)
+            )
+            summary["deleted-records"] = sum(len(p) for p in kills.values())
+            summary["added-delete-files"] = len(deletes)
+        if not manifests:
             return base
         return _commit_v2_tail(
-            path, base, prev, parent_id, snapshot_id, seq, now_ms,
-            [new_manifest], "delete",
-            {"deleted-records": n_deleted, "added-delete-files": 1},
-            carried_transform=_drop_superseded_dvs(path, replaced),
+            path, base, prev, parent_id, snapshot_id, seq, now_ms, manifests,
+            "delete" if inserts is None else "overwrite",
+            {**summary, **params},
+            carried_transform=transform, first_row_id=first_row_id,
+            next_row_id=next_row_id,
         )
-    new_manifest, n_deleted = _pos_delete_manifest(
-        hits, path, prev, snapshot_id, seq
-    )
-    if new_manifest is None:
-        return base
-    return _commit_v2_tail(
-        path, base, prev, parent_id, snapshot_id, seq, now_ms,
-        [new_manifest], "delete",
-        {"deleted-records": n_deleted, "added-delete-files": 1},
-    )
 
 
-def _dv_delete_manifest(hits: DataFrame, path: str, prev: dict,
-                        snapshot_id: int, seq: int,
-                        existing: list[dict]):
-    """Write ``hits`` (``file_path``, ``pos`` rows) as format-v3
-    DELETION VECTORS: one puffin file holding one
-    ``deletion-vector-v1`` roaring-bitmap blob per affected data
-    file, plus the ``content=1`` delete manifest whose entries carry
-    ``referenced_data_file``/``content_offset``/
-    ``content_size_in_bytes`` (spec field-ids 143-145). A data file's
-    previous DV is MERGED into the new one (the spec allows at most
-    one live DV per file; the superseded entry is dropped from the
-    carried manifests by ``_drop_superseded_dvs``). Existing v2
-    position/equality delete FILES are left untouched — readers keep
-    applying them alongside. → (manifest-list row, n_new_deletes,
-    replaced_refs)."""
+def _position_delete_file(path: str, kills: dict[str, list[int]]) -> dict:
+    """Write ``kills`` as ONE v2 POSITION-delete parquet, sorted by
+    (file_path, pos) as the spec asks → its ``data_file`` record. The
+    positions are driver-side already (bitmap-scale), so the file is
+    one local write, not a Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = sorted({(fp, int(p)) for fp, ps in kills.items() for p in ps})
+    out = os.path.join(path, _DATA, f"delete-{uuid.uuid4().hex}.parquet")
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    pq.write_table(
+        pa.table({
+            "file_path": pa.array([fp for fp, _p in rows], pa.string()),
+            "pos": pa.array([p for _fp, p in rows], pa.int64()),
+        }),
+        out,
+    )
+    return {"file_path": out, "record_count": len(rows),
+            "file_size_in_bytes": os.path.getsize(out)}
+
+
+def _deletion_vectors(path: str, kills: dict[str, list[int]],
+                      existing: list[dict], snapshot_id: int,
+                      seq: int) -> tuple[list[dict], set[str]]:
+    """Write ``kills`` as format-v3 DELETION VECTORS: one puffin file
+    holding one ``deletion-vector-v1`` roaring-bitmap blob per affected
+    data file → (the ``data_file`` records of the delete manifest,
+    carrying ``referenced_data_file``/``content_offset``/
+    ``content_size_in_bytes`` — spec field-ids 143-145; the data files
+    whose previous DV this replaces). A data file's previous DV is
+    MERGED into the new one (the spec allows at most one live DV per
+    file; ``_drop_superseded_dvs`` drops the superseded entry from the
+    carried manifests). Existing v2 position/equality delete FILES are
+    left untouched — readers keep applying them alongside."""
     from .puffin import (
         DV_BLOB_TYPE,
         decode_dv_blob,
@@ -2659,17 +2708,7 @@ def _dv_delete_manifest(hits: DataFrame, path: str, prev: dict,
         write_puffin,
     )
 
-    # bitmap-scale by the same contract as the Delta DV writer: only
-    # (file, positions) keys land on the driver
-    per_file: dict[str, set[int]] = {}
-    for r in hits.groupBy("file_path").agg(
-        F.collect_list("pos").alias("positions")
-    ).collect():
-        per_file[r["file_path"]] = {int(p) for p in r["positions"]}
-    if not per_file:
-        return None, 0, set()
-    n_new = sum(len(v) for v in per_file.values())
-
+    per_file = {fp: {int(p) for p in ps} for fp, ps in kills.items()}
     prev_dvs: dict[str, dict] = {}
     for d in sorted(
         (d for d in existing if d.get("dv")),
@@ -2677,7 +2716,7 @@ def _dv_delete_manifest(hits: DataFrame, path: str, prev: dict,
     ):
         prev_dvs[_norm_fp_py(d["dv"]["referenced"])] = d
     replaced: set[str] = set()
-    for ref in list(per_file):
+    for ref in per_file:
         old = prev_dvs.get(_norm_fp_py(ref))
         if old:
             per_file[ref] |= set(decode_dv_blob(read_blob(
@@ -2706,65 +2745,19 @@ def _dv_delete_manifest(hits: DataFrame, path: str, prev: dict,
             for ref in refs
         ],
     )
-
-    schema = _spark_schema(prev)
-    spec_fields = _spec_fields(prev)
-    field_ids = _resolved_field_ids(prev, schema)
-    part_fields = [
-        (e["name"], e["ice"], e["fid"]) for e in _spec_entries_from_meta(prev)
-    ]
-    manifest_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-    dump_avro(
-        manifest_path,
-        _manifest_entry_schema_json(
-            part_fields, with_content=True, with_v3=True
-        ),
-        [
-            {
-                "status": _ADDED,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 1,
-                    "file_path": puffin_path,
-                    "file_format": "PUFFIN",
-                    "partition": {name: None for name, _i, _f in part_fields},
-                    "record_count": len(per_file[ref]),
-                    "file_size_in_bytes": os.path.getsize(puffin_path),
-                    "block_size_in_bytes": 64 * 1024 * 1024,
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                    "first_row_id": None,
-                    "referenced_data_file": ref,
-                    "content_offset": m["offset"],
-                    "content_size_in_bytes": m["length"],
-                },
-            }
-            for ref, m in zip(refs, metas)
-        ],
-        extra_meta={
-            "schema": json.dumps(_schema_struct(schema, field_ids, prev)),
-            "partition-spec": json.dumps(spec_fields),
-            "partition-spec-id": str(_default_spec_id(prev)),
-            "format-version": _fv_str(prev),
-            "content": "deletes",
-        },
-    )
-    total = sum(len(v) for v in per_file.values())
-    return {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": _default_spec_id(prev),
-        "added_snapshot_id": snapshot_id,
-        "added_data_files_count": len(refs),
-        "existing_data_files_count": 0,
-        "deleted_data_files_count": 0,
-        "added_rows_count": total,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-        "content": 1,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-    }, n_new, replaced
+    size = os.path.getsize(puffin_path)
+    return [
+        {
+            "file_path": puffin_path,
+            "file_format": "PUFFIN",
+            "record_count": len(per_file[ref]),
+            "file_size_in_bytes": size,
+            "referenced_data_file": ref,
+            "content_offset": m["offset"],
+            "content_size_in_bytes": m["length"],
+        }
+        for ref, m in zip(refs, metas)
+    ], replaced
 
 
 def _drop_superseded_dvs(path: str, replaced: set[str]):
@@ -2838,233 +2831,6 @@ def _drop_superseded_dvs(path: str, replaced: set[str]):
         return out
 
     return transform
-
-
-def _pos_delete_manifest(hits: DataFrame, path: str, prev: dict,
-                         snapshot_id: int, seq: int):
-    """Write ``hits`` (``file_path``, ``pos`` rows) as a spec-sorted
-    POSITION-delete parquet + its ``content=1`` manifest →
-    (manifest-list row, n_deleted), or (None, 0) when nothing
-    matched. The delete file spans partitions: null partition tuple
-    (readers apply position deletes by exact path, never by tuple)."""
-    # spec: position delete files are sorted by (file_path, pos)
-    staged = stage_files(
-        hits.repartition(1).sortWithinPartitions("file_path", "pos"),
-        path, dest_dir=_DATA, prefix="delete",
-    )[0]
-    n_deleted = staged.stats.num_rows
-    if n_deleted == 0:
-        os.unlink(staged.path)
-        return None, 0
-
-    spec_fields = _spec_fields(prev)
-    schema = _spark_schema(prev)
-    ice_types = _scalar_ice_types(schema)
-    part_fields = [
-        (e["name"], e["ice"], e["fid"]) for e in _spec_entries_from_meta(prev)
-    ]
-    manifest_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-    dump_avro(
-        manifest_path,
-        _manifest_entry_schema_json(part_fields, with_content=True),
-        [
-            {
-                "status": _ADDED,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 1,
-                    "file_path": staged.path,
-                    "file_format": "PARQUET",
-                    "partition": {name: None for name, _i, _f in part_fields},
-                    "record_count": n_deleted,
-                    "file_size_in_bytes": staged.size,
-                    "block_size_in_bytes": 64 * 1024 * 1024,
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                },
-            }
-        ],
-        extra_meta={
-            "schema": json.dumps(
-                _schema_struct(schema, _resolved_field_ids(prev, schema), prev)
-            ),
-            "partition-spec": json.dumps(spec_fields),
-            "partition-spec-id": str(_default_spec_id(prev)),
-            "format-version": _fv_str(prev),
-            "content": "deletes",
-        },
-    )
-    return {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": _default_spec_id(prev),
-        "added_snapshot_id": snapshot_id,
-        "added_data_files_count": 1,
-        "existing_data_files_count": 0,
-        "deleted_data_files_count": 0,
-        "added_rows_count": n_deleted,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-        "content": 1,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-    }, n_deleted
-
-
-def update_iceberg_rows(spark: SparkSession, path: str, condition: str,
-                        set_exprs: dict[str, str]) -> int:
-    """MERGE-ON-READ UPDATE for Iceberg v2: ONE snapshot carrying a
-    POSITION-delete file for every visible row matching ``condition``
-    plus new data files holding those rows with ``set_exprs``
-    (column → SQL expression over the old row) applied — untouched
-    files never rewritten, cost O(matched), sequence number shared by
-    both halves (position deletes apply by exact file path, so the
-    new files are untouched by construction). Returns the new
-    metadata version (unchanged when nothing matches)."""
-    base, prev = _load_latest(path)
-    parent_id, files, existing = _snapshot_files(path, prev, None, None)
-    if not files:
-        return base
-    schema = _spark_schema(prev)
-    cols = [f.name for f in schema.fields]
-    unknown = [c for c in set_exprs if c not in cols]
-    if unknown:
-        raise ValueError(f"SET columns {unknown} not in table schema {cols}")
-
-    scan = with_scan_keys(_merged_scan(spark, sorted(p for p, _, _ in files)))
-    scan = _unify_renamed(scan, _name_candidates(prev))
-    scan = _apply_deletes(spark, scan, files, existing, prev)
-    hits = scan.filter(condition)
-
-    now_ms = int(time.time() * 1000)
-    new_version = base + 1
-    snapshot_id = now_ms * 1000 + new_version
-    seq = int(prev.get("last-sequence-number", 0)) + 1
-    carried_transform = None
-    if int(prev.get("format-version", 1)) >= 3:
-        del_manifest, n_updated, replaced = _dv_delete_manifest(
-            hits.select(F.col("__fp").alias("file_path"),
-                        F.col("__pos").alias("pos")),
-            path, prev, snapshot_id, seq, existing,
-        )
-        carried_transform = _drop_superseded_dvs(path, replaced) \
-            if del_manifest is not None else None
-    else:
-        del_manifest, n_updated = _pos_delete_manifest(
-            hits.select(F.col("__fp").alias("file_path"),
-                        F.col("__pos").alias("pos")),
-            path, prev, snapshot_id, seq,
-        )
-    if del_manifest is None:
-        return base
-
-    updated = hits.select(
-        *[
-            (F.expr(set_exprs[f.name]) if f.name in set_exprs
-             else F.col(f.name)).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-    )
-    spec_fields = _spec_fields(prev)
-    spec_entries = _spec_entries_from_meta(prev)
-    ice_types = _scalar_ice_types(schema)
-    field_ids = _resolved_field_ids(prev, schema)
-    part_fields = [(e["name"], e["ice"], e["fid"]) for e in spec_entries]
-    new_files = _stage_data_files(
-        updated, path, spec_entries, ice_types, field_ids,
-        schema_node=_schema_struct(schema, field_ids, prev),
-    )
-    fri = (
-        int(prev.get("next-row-id", 0))
-        if int(prev.get("format-version", 1)) >= 3 else None
-    )
-    data_manifest = _data_manifest_row(
-        path, new_files, snapshot_id, seq, schema, spec_fields, part_fields,
-        field_ids, spec_id=_default_spec_id(prev), prev=prev,
-        first_row_id_start=fri,
-    )
-    return _commit_v2_tail(
-        path, base, prev, parent_id, snapshot_id, seq, now_ms,
-        [data_manifest, del_manifest], "overwrite",
-        {
-            "updated-records": n_updated,
-            "added-data-files": len(new_files),
-            "added-delete-files": 1,
-            "update-predicate": condition,
-        },
-        carried_transform=carried_transform,
-        first_row_id=fri,
-        next_row_id=(
-            None if fri is None
-            else fri + sum(n for _, _, n, _, _, _ in new_files)
-        ),
-    )
-
-
-def _data_manifest_row(path: str, new_files: list, snapshot_id: int,
-                       seq: int, schema: T.StructType, spec_fields: list,
-                       part_fields: list,
-                       field_ids: dict[str, int] | None = None,
-                       spec_id: int = 0, prev: dict | None = None,
-                       first_row_id_start: int | None = None) -> dict:
-    """Write a v2 DATA manifest (entry content=0) for already-staged
-    files → its manifest-list row. ``first_row_id_start`` (format v3
-    row lineage): assign explicit ``first_row_id`` ranges from the
-    table's next-row-id cursor."""
-    entries = [
-        {
-            "status": _ADDED,
-            "snapshot_id": snapshot_id,
-            "data_file": {
-                "content": 0,
-                "file_path": p,
-                "file_format": "PARQUET",
-                "partition": part_vals,
-                "record_count": n,
-                "file_size_in_bytes": size,
-                "block_size_in_bytes": 64 * 1024 * 1024,
-                "lower_bounds": lo,
-                "upper_bounds": hi,
-            },
-        }
-        for p, part_vals, n, size, lo, hi in new_files
-    ]
-    if first_row_id_start is not None:
-        cursor = int(first_row_id_start)
-        for e in entries:
-            e["data_file"]["first_row_id"] = cursor
-            cursor += int(e["data_file"]["record_count"])
-    manifest_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-    dump_avro(
-        manifest_path,
-        _manifest_entry_schema_json(
-            part_fields, with_content=True,
-            with_v3=(first_row_id_start is not None),
-        ),
-        entries,
-        extra_meta={
-            "schema": json.dumps(_schema_struct(schema, field_ids, prev)),
-            "partition-spec": json.dumps(spec_fields),
-            "partition-spec-id": str(spec_id),
-            "format-version": _fv_str(prev),
-            "content": "data",
-        },
-    )
-    return {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": spec_id,
-        "added_snapshot_id": snapshot_id,
-        "added_data_files_count": len(new_files),
-        "existing_data_files_count": 0,
-        "deleted_data_files_count": 0,
-        "added_rows_count": sum(n for _, _, n, _, _, _ in new_files),
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-    }
 
 
 def _commit_v2_tail(path: str, base: int, prev: dict, parent_id,
@@ -4182,8 +3948,6 @@ def upsert_iceberg_table(df: DataFrame, path: str, key_cols: list[str]) -> int:
     df = _align_to_schema(df, schema)
 
     seq = int(prev.get("last-sequence-number", 0)) + 1
-    spec_fields = _spec_fields(prev)
-    spec_entries = _spec_entries_from_meta(prev)
     ice_types = _scalar_ice_types(schema)
     field_ids = _resolved_field_ids(prev, schema)
     if extra:
@@ -4200,15 +3964,14 @@ def upsert_iceberg_table(df: DataFrame, path: str, key_cols: list[str]) -> int:
                 _max_field_id(evolved),
             ),
         }
-    part_fields = [(e["name"], e["ice"], e["fid"]) for e in spec_entries]
     now_ms = int(time.time() * 1000)
-    new_version = base + 1
-    snapshot_id = now_ms * 1000 + new_version
+    snapshot_id = now_ms * 1000 + base + 1
+    node = _schema_struct(schema, field_ids, prev)
 
     # ---- data files at the new sequence number
     new_files = _stage_data_files(
-        df, path, spec_entries, ice_types, field_ids,
-        schema_node=_schema_struct(schema, field_ids, prev),
+        df, path, _spec_entries_from_meta(prev), ice_types, field_ids,
+        schema_node=node,
     )
 
     # ---- equality-delete file: distinct incoming keys (sorted —
@@ -4226,69 +3989,23 @@ def upsert_iceberg_table(df: DataFrame, path: str, key_cols: list[str]) -> int:
     )[0]
     n_keys = staged.stats.num_rows
 
-    entry_schema = _manifest_entry_schema_json(part_fields, with_content=True)
-    manifest_meta = {
-        "schema": json.dumps(_schema_struct(schema, field_ids, prev)),
-        "partition-spec": json.dumps(spec_fields),
-        "partition-spec-id": str(_default_spec_id(prev)),
-        "format-version": _fv_str(prev),
-    }
-    fri = (
+    first_row_id = (
         int(prev.get("next-row-id", 0))
         if int(prev.get("format-version", 1)) >= 3 else None
     )
-    new_manifests: list[dict] = [
-        _data_manifest_row(
-            path, new_files, snapshot_id, seq, schema, spec_fields,
-            part_fields, field_ids, spec_id=_default_spec_id(prev), prev=prev,
-            first_row_id_start=fri,
-        )
+    files = [_data_file(*f) for f in new_files]
+    next_row_id = _number_rows(files, first_row_id)
+    new_manifests = [
+        _write_manifest(path, prev, snapshot_id, seq, 0, files, node)
     ]
-
     if n_keys:
-        del_manifest = os.path.join(
-            _meta_dir(path), f"{uuid.uuid4().hex}-m1.avro"
-        )
-        dump_avro(
-            del_manifest,
-            entry_schema,
-            [
-                {
-                    "status": _ADDED,
-                    "snapshot_id": snapshot_id,
-                    "data_file": {
-                        "content": 2,
-                        "file_path": staged.path,
-                        "file_format": "PARQUET",
-                        # delete spans partitions: null tuple (readers
-                        # apply equality deletes by key + seq bound)
-                        "partition": {name: None for name, _i, _f in part_fields},
-                        "record_count": n_keys,
-                        "file_size_in_bytes": staged.size,
-                        "block_size_in_bytes": 64 * 1024 * 1024,
-                        "lower_bounds": None,
-                        "upper_bounds": None,
-                        "equality_ids": [field_ids[c] for c in key_cols],
-                    },
-                }
-            ],
-            extra_meta={**manifest_meta, "content": "deletes"},
-        )
-        new_manifests.append({
-            "manifest_path": del_manifest,
-            "manifest_length": os.path.getsize(del_manifest),
-            "partition_spec_id": _default_spec_id(prev),
-            "added_snapshot_id": snapshot_id,
-            "added_data_files_count": 1,
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "added_rows_count": n_keys,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "content": 1,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-        })
+        new_manifests.append(_write_manifest(
+            path, prev, snapshot_id, seq, 1,
+            [{"content": 2, "file_path": staged.path, "record_count": n_keys,
+              "file_size_in_bytes": staged.size,
+              "equality_ids": [field_ids[c] for c in key_cols]}],
+            node,
+        ))
     else:
         os.unlink(staged.path)
 
@@ -4301,11 +4018,7 @@ def upsert_iceberg_table(df: DataFrame, path: str, key_cols: list[str]) -> int:
             "added-delete-files": 1 if n_keys else 0,
             "upsert-keys": ",".join(key_cols),
         },
-        first_row_id=fri,
-        next_row_id=(
-            None if fri is None
-            else fri + sum(n for _, _, n, _, _, _ in new_files)
-        ),
+        first_row_id=first_row_id, next_row_id=next_row_id,
     )
 
 

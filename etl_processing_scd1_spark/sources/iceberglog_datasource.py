@@ -29,6 +29,7 @@ from pyspark.sql.types import StructType
 
 from .avro import load_avro
 from .iceberg import (
+    _field_defaults,
     _field_names_by_id,
     _load_metadata,
     _name_candidates,
@@ -124,6 +125,20 @@ def _resolve_map(meta: dict) -> dict:
     }
 
 
+def _file_constants(meta: dict):
+    """partition tuple → the per-file constants of a data file, the
+    same for all three planners: its non-null partition values over
+    the v3 §Default Values initial-defaults (the executor fills a
+    constant ONLY when the file's footer lacks the column — files
+    predating the column read the default, newer files' explicit NULLs
+    stay NULL)."""
+    defaults = {c: v for c, (v, _t) in _field_defaults(meta).items()}
+    return lambda part: {
+        **defaults,
+        **{c: v for c, v in (part or {}).items() if v is not None},
+    }
+
+
 class IcebergLogDataSource(LogDataSource):
     """``format("iceberglog")`` — see module docstring. Options:
     ``path`` (required); batch: ``versionAsOf`` (metadata version),
@@ -148,11 +163,7 @@ class IcebergLogDataSource(LogDataSource):
         return iceberg_table_version(self._path())
 
     def snapshot_files(self, predicates: dict) -> list:
-        from .iceberg import (
-            _field_defaults,
-            _resolve_delete_file_columns,
-            iceberg_ref_snapshot,
-        )
+        from .iceberg import _resolve_delete_file_columns, iceberg_ref_snapshot
 
         path = self._path()
         sid = self.options.get("snapshotid")
@@ -227,17 +238,11 @@ class IcebergLogDataSource(LogDataSource):
                    for d in eq_dels if d["seq"] > file_seq]
             return (out, None) if out else None
 
-        resolve = _resolve_map(meta)
-        # v3 §Default Values: column -> initial-default for columns
-        # this file may predate (filled ONLY when the footer lacks the
-        # column — newer files' explicit NULLs stay NULL)
-        defaults = {c: v for c, (v, _t) in _field_defaults(meta).items()}
+        resolve, constants = _resolve_map(meta), _file_constants(meta)
         return [
             LogFile(
-                p,
-                {**defaults,
-                 **{c: v for c, v in (part or {}).items() if v is not None}},
-                resolve, exclude=by_file.get(p), row_filter=eq_for(seq),
+                p, constants(part), resolve,
+                exclude=by_file.get(p), row_filter=eq_for(seq),
             )
             for p, part, seq in sorted(files)
         ]
@@ -252,7 +257,7 @@ class IcebergLogDataSource(LogDataSource):
         seen = {
             s["snapshot-id"] for s in (start_meta or {}).get("snapshots", [])
         }
-        resolve = _resolve_map(end_meta)
+        resolve, constants = _resolve_map(end_meta), _file_constants(end_meta)
         parts = []
         for s in end_meta.get("snapshots", []):
             sid = s["snapshot-id"]
@@ -270,7 +275,8 @@ class IcebergLogDataSource(LogDataSource):
                 _, entries = load_avro(_norm_path(mf["manifest_path"], path))
                 parts += [
                     LogFile(_norm_path(e["data_file"]["file_path"], path),
-                            e["data_file"].get("partition"), resolve)
+                            constants(e["data_file"].get("partition")),
+                            resolve)
                     for e in entries
                     if e["status"] == 0 and e.get("snapshot_id") == sid
                     and e["data_file"].get("content", 0) == 0
@@ -289,10 +295,11 @@ class IcebergLogDataSource(LogDataSource):
 
         if hi < 1:
             return []
-        resolve = _resolve_map(_load_metadata(self._path(), hi))
+        meta = _load_metadata(self._path(), hi)
+        resolve, constants = _resolve_map(meta), _file_constants(meta)
         return [
             LogFile(
-                e["path"], e["partition"], resolve,
+                e["path"], constants(e["partition"]), resolve,
                 include=e.get("include"), exclude=e.get("exclude"),
                 change=("insert" if e["type"] == "insert" else "delete",
                         int(e["version"])),

@@ -14,7 +14,8 @@ that does not depend on the format.
   directory being registered in place.
 - ``file_key``/``with_scan_keys``: the ``__fp``/``__pos`` keys of a
   Parquet scan row (plain absolute file path, row position) that
-  deletion vectors, delete files and per-file maps join on.
+  deletion vectors, delete files and per-file maps join on;
+  ``typed_columns`` projects a scan onto the table schema.
 - ``sweep_orphans``: delete files no commit references.
 - ``put_if_absent``: the atomic commit primitive.
 - ``cluster_files``: z-order (or coalesce) a rewrite into
@@ -271,6 +272,25 @@ def with_scan_keys(df: DataFrame) -> DataFrame:
     return df.withColumn("__fp", file_key()).withColumn(
         "__pos", F.col("_metadata.row_index")
     )
+
+
+def typed_columns(df: DataFrame, schema: StructType,
+                  source: dict[str, str] | None = None) -> list:
+    """``df`` projected onto ``schema``'s fields in order: each field
+    from its column in ``df`` (``source`` maps a field to another
+    column name, e.g. a column-mapped physical one), cast only where
+    the scanned type differs — every cast costs py4j round trips when
+    the plan is built."""
+    have = {f.name: f.dataType for f in df.schema.fields}
+    out = []
+    for f in schema.fields:
+        name = (source or {}).get(f.name, f.name)
+        c = F.col(name)
+        out.append(
+            (c if have.get(name) == f.dataType else c.cast(f.dataType))
+            .alias(f.name)
+        )
+    return out
 
 
 def sweep_orphans(path: str, log_dir: str, keep: set[str],

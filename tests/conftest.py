@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -27,7 +28,9 @@ def spark_jobs_and_tasks(spark, fn) -> tuple[int, int]:
     through a job group (AQE stage jobs inherit it from the submitting
     thread)."""
     sc = spark.sparkContext
-    group = f"count-jobs-{id(fn)}"
+    # a fresh name per probe: ``id(fn)`` of a collected lambda is
+    # reused, and the group would then also count an earlier probe's jobs
+    group = f"count-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "job-count probe")
     try:
         fn()

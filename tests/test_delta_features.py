@@ -265,6 +265,29 @@ class TestRowTracking:
             if k != 5:
                 assert upd[k] == after[k]
 
+    def test_merge_preserves_ids(self, spark, tmp_path):
+        """A MERGE-changed row keeps its row id like an UPDATEd one; a
+        merge-inserted row gets a fresh id past every existing one."""
+        from etl_processing_scd1_spark.sources.delta import (
+            enable_row_tracking,
+            merge_delta_table,
+        )
+
+        path = str(tmp_path / "rt_merge")
+        write_delta_table(_df(spark, 0, 8), path)
+        enable_row_tracking(spark, path)
+        before = self._ids(spark, path)
+        src = spark.createDataFrame(
+            [(5, 999), (6, 60), (20, 200)], _df(spark, 0, 1).schema
+        )
+        v = merge_delta_table(spark, src, path, ["k"])
+        got = self._ids(spark, path)
+        assert got[5] == (before[5][0], v)                    # changed
+        assert got[6] == before[6]                            # identical
+        assert got[20][0] > max(i for i, _ in before.values())
+        assert got[20][1] == v
+        assert len({i for i, _ in got.values()}) == len(got)
+
     def test_optimize_materializes_ids(self, spark, tmp_path):
         from etl_processing_scd1_spark.sources.delta import (
             enable_row_tracking,

@@ -1039,6 +1039,27 @@ class TestPositionDeletes:
             k for k in range(3, 20) if k != 15
         ]
 
+    def test_dml_sees_a_column_no_file_holds(self, spark, tmp_path):
+        """DELETE and UPDATE scan the rows readers see: a column added
+        after every data file was written reads NULL in both, so a
+        condition or a rewrite may name it."""
+        from etl_processing_scd1_spark.sources.iceberg import (
+            add_iceberg_column,
+            delete_iceberg_rows,
+            update_iceberg_rows,
+        )
+
+        path = str(tmp_path / "pd_note")
+        write_iceberg_table(_df(spark, 0, 5), path)
+        add_iceberg_column(path, "note", "string")
+        update_iceberg_rows(spark, path, "k = 1", {"v": "111"})
+        delete_iceberg_rows(spark, path, "note IS NULL AND k = 2")
+        got = sorted(
+            (r.k, r.v, r.note) for r in read_iceberg_table(spark, path).collect()
+        )
+        assert got == [(0, 0, None), (1, 111, None), (3, 30, None),
+                       (4, 40, None)]
+
 
 class TestEqualityDeletes:
     """v2 merge-on-read EQUALITY deletes: ``upsert_iceberg_table``

@@ -191,6 +191,23 @@ class TestRowLineage:
         for k in after:
             assert after[k] == before[k]
 
+    def test_update_keeps_row_id(self, spark, tmp_path):
+        """Spec v3 §Row Lineage: an updated row keeps its ``_row_id``;
+        its sequence number is the update's (written NULL, inherited
+        from the new file)."""
+        path = str(tmp_path / "rl_upd")
+        write_iceberg_table(_df(spark, 0, 1), path)
+        upgrade_iceberg_format_version(path, 3)
+        write_iceberg_table(_df(spark, 1, 9), path, mode="append")
+        before = self._ids(spark, path)
+        assert before[4] == (3, 1)
+        update_iceberg_rows(spark, path, "k = 4", {"v": "-4"})
+        after = self._ids(spark, path)
+        assert after[4] == (3, 2)
+        for k in after:
+            if k != 4:
+                assert after[k] == before[k]
+
     def test_compaction_materializes_ids(self, spark, tmp_path):
         path = str(tmp_path / "rl3")
         write_iceberg_table(_df(spark, 0, 3), path)          # no lineage
@@ -278,6 +295,64 @@ class TestDefaultValues:
         assert [r.note for r in got.collect()] == [None, None, None]
         with pytest.raises(ValueError, match="already exists"):
             add_iceberg_column(path, "note", "string")
+
+    def _defaulted(self, spark, tmp_path):
+        """k 0-4 written before ``score`` (default 100) exists, k 5-6
+        appended after (write-default)."""
+        from etl_processing_scd1_spark.sources.iceberg import (
+            add_iceberg_column,
+        )
+
+        path = str(tmp_path / "dflt_dml")
+        write_iceberg_table(_df(spark, 0, 5), path)
+        upgrade_iceberg_format_version(path, 3)
+        add_iceberg_column(path, "score", "long", default=100)
+        write_iceberg_table(_df(spark, 5, 7), path, mode="append")
+        return path
+
+    def test_dml_sees_initial_default(self, spark, tmp_path):
+        """DELETE and UPDATE see the rows readers see: files predating
+        ``score`` read its initial-default, so a condition on it
+        matches and an update keeps it."""
+        path = self._defaulted(spark, tmp_path)
+        delete_iceberg_rows(spark, path, "score = 100 AND k = 2")
+        update_iceberg_rows(spark, path, "k = 1", {"v": "111"})
+        got = {r.k: (r.v, r.score)
+               for r in read_iceberg_table(spark, path).collect()}
+        assert got == {k: (111 if k == 1 else k * 10, 100)
+                       for k in range(7) if k != 2}
+
+    def test_streams_read_initial_default(self, spark, tmp_path):
+        """The appends stream and the change feed plan their files with
+        the same per-file constants as the batch read."""
+        from etl_processing_scd1_spark.sources import ensure_datasources
+
+        path = self._defaulted(spark, tmp_path)
+        ensure_datasources(spark)
+        batch = sorted((r.k, r.v, r.score)
+                       for r in read_iceberg_table(spark, path).collect())
+        assert {s for _k, _v, s in batch} == {100}
+        got: list = []
+        q = (
+            spark.readStream.format("iceberglog").load(path)
+            .writeStream.foreachBatch(
+                lambda b, _bid: got.extend(
+                    (r.k, r.v, r.score) for r in b.collect()
+                )
+            )
+            .trigger(availableNow=True)
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .start()
+        )
+        q.awaitTermination(180)
+        assert sorted(got) == batch
+        cdf = (
+            spark.read.format("iceberglog")
+            .option("readChangeFeed", "true")
+            .option("startingVersion", 1)
+            .load(path)
+        )
+        assert sorted((r.k, r.v, r.score) for r in cdf.collect()) == batch
 
 
 class TestVacuumPuffin:

@@ -3,7 +3,10 @@ its oracle on DuckDB over the same parquet, compare row count, sorted
 column names, and an order-insensitive canonical value hash —
 approximating the driver's CORRECTNESS gate for fast iteration.
 
-Usage: python tools/check.py [query ...] [--sf DIR]
+Usage: python tools/check.py [query ...] [--match REGEX] [--sf DIR]
+
+``--match`` adds every registry name the regular expression matches
+(``re.search``) to the explicit names; with neither, every query runs.
 """
 
 from __future__ import annotations
@@ -14,6 +17,7 @@ import decimal
 import hashlib
 import math
 import os
+import re
 import sys
 import time
 
@@ -61,6 +65,10 @@ def frame_digest(cols: list[str], rows: list[tuple]) -> str:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
+    ap.add_argument(
+        "--match", metavar="REGEX",
+        help="also run every registry query whose name matches REGEX",
+    )
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument(
         "--bare",
@@ -113,7 +121,13 @@ def main() -> int:
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
-    names = args.names or list(QUERIES)
+    names = list(args.names)
+    if args.match:
+        names += [
+            n for n in QUERIES if re.search(args.match, n) and n not in names
+        ]
+    elif not names:
+        names = list(QUERIES)
     failures = 0
     for name in names:
         if name not in QUERIES:
