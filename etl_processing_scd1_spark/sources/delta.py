@@ -68,6 +68,7 @@ from .table_files import (
     FooterStats,
     as_nullable,
     cluster_files,
+    per_file,
     put_if_absent,
     scan_footers_distributed,
     stage_files,
@@ -664,23 +665,22 @@ def _physical_read_schema(snap: DeltaSnapshot) -> StructType:
 
 
 def _external_scan(spark: SparkSession, path: str, snap: DeltaSnapshot,
-                   files: dict[str, dict]) -> DataFrame:
+                   files: dict[str, dict], read_schema: StructType) -> DataFrame:
     """Parquet scan when any active file lives OUTSIDE the table root
     (spec: ``add.path`` may be absolute — how a shallow CLONE
     references the source's files): no ``basePath``/directory
-    inference is possible across roots, so partition columns are
-    attached from the log's ``partitionValues`` — the authoritative
-    source — via one broadcast file→tuple map (metadata-scale, one
-    row per file). Returns PHYSICAL column names plus materialized
-    ``__fp``/``__pos`` keys (derived from ``_metadata`` on the raw
-    scan, BEFORE any join — downstream DV anti-joins reuse them;
-    partition values arrive as strings for the caller's schema
-    cast)."""
+    inference is possible across roots, so ``read_schema``'s
+    partition columns are attached from the log's ``partitionValues``
+    — the authoritative source — via one broadcast file→tuple map
+    (metadata-scale, one row per file). Returns PHYSICAL column names
+    plus materialized ``__fp``/``__pos`` keys (derived from
+    ``_metadata`` on the raw scan, BEFORE any join — downstream DV
+    anti-joins reuse them; partition values arrive as strings for the
+    caller's schema cast)."""
     part_phys = [
         (snap.column_mapping or {}).get(c, c) for c in snap.partition_columns
     ]
-    full = _physical_read_schema(snap)
-    data_fields = [f for f in full.fields if f.name not in part_phys]
+    data_fields = [f for f in read_schema.fields if f.name not in part_phys]
     paths = sorted(os.path.abspath(os.path.join(path, p)) for p in files)
     df = with_scan_keys(
         spark.read.schema(StructType(data_fields)).parquet(*paths)
@@ -732,21 +732,16 @@ def _visible_scan(spark: SparkSession, path: str, snap: DeltaSnapshot,
     files = snap.files if files is None else files
     mat = _rt_mat_cols(snap.metadata) if row_ids else None
     abs_to_rel = {os.path.abspath(os.path.join(path, p)): p for p in files}
+    read_schema = _physical_read_schema(snap)
+    if mat:
+        read_schema = StructType(
+            read_schema.fields
+            + [StructField(mat[0], LongType()), StructField(mat[1], LongType())]
+        )
     if any(os.path.isabs(p) for p in files):
-        if row_ids:
-            raise DeltaProtocolError(
-                "row-id reads over absolute-path (cloned) file entries "
-                "are not supported"
-            )
-        df = _external_scan(spark, path, snap, files)  # has __fp/__pos
+        # the external scan already carries __fp/__pos
+        df = _external_scan(spark, path, snap, files, read_schema)
     else:
-        read_schema = _physical_read_schema(snap)
-        if mat:
-            read_schema = StructType(
-                read_schema.fields
-                + [StructField(mat[0], LongType()),
-                   StructField(mat[1], LongType())]
-            )
         df = spark.read.option("basePath", path).schema(read_schema) \
             .parquet(*sorted(abs_to_rel))
     dead_keys = [
@@ -776,22 +771,14 @@ def _visible_scan(spark: SparkSession, path: str, snap: DeltaSnapshot,
                 f"files without baseRowId (pre-enablement snapshot?): "
                 f"{missing_base[:3]}"
             )
-        bdf = local_frame(
-            spark, [
-                (ap, int(files[rel]["baseRowId"]),
-                 int(files[rel]["defaultRowCommitVersion"]))
-                for ap, rel in abs_to_rel.items()
-            ],
-            "__base_fp string, __base_id long, __base_ver long",
+        base_id, base_ver = (
+            per_file({ap: int(files[rel][k]) for ap, rel in abs_to_rel.items()})
+            for k in ("baseRowId", "defaultRowCommitVersion")
         )
-        df = df.join(
-            F.broadcast(bdf), F.col("__fp") == F.col("__base_fp"), "left"
+        df = df.withColumn(
+            "_row_id", F.coalesce(F.col(mat[0]), base_id + F.col("__pos")),
         ).withColumn(
-            "_row_id",
-            F.coalesce(F.col(mat[0]), F.col("__base_id") + F.col("__pos")),
-        ).withColumn(
-            "_row_commit_version",
-            F.coalesce(F.col(mat[1]), F.col("__base_ver")),
+            "_row_commit_version", F.coalesce(F.col(mat[1]), base_ver),
         )
         extra += ["_row_id", "_row_commit_version"]
     return df.select(
@@ -815,11 +802,11 @@ class _DeltaLog:
         self.row_ids = _rt_mat_cols(snap.metadata) is not None
         self.extra_actions = list(extra_actions or [])
 
-    def scan(self, keys: bool, row_ids: bool) -> DataFrame | None:
+    def scan(self, row_ids: bool) -> DataFrame | None:
         if not self.snap.files:
             return None
         return _visible_scan(self.spark, self.path, self.snap,
-                             keys=keys, row_ids=row_ids)
+                             keys=True, row_ids=row_ids)
 
     def commit(self, kills: dict[str, list[int]], inserts: DataFrame | None,
                operation: str, params: dict) -> int:

@@ -63,6 +63,7 @@ from .table_files import (
     FooterStats,
     as_nullable,
     cluster_files,
+    per_file,
     put_if_absent,
     scan_footers_distributed,
     stage_files,
@@ -1587,21 +1588,18 @@ def _visible_scan(spark: SparkSession, path: str, meta: dict, planned: tuple,
         # spec's "row ids unavailable"); rewritten (compacted, updated)
         # files carry MATERIALIZED _row_id/_last_updated_sequence_number
         # columns which win via coalesce
-        rl_df = local_frame(
-            spark, _first_row_ids(path, meta, sid_used),
-            "__rl_key string, __rl_first long, __rl_seq long",
+        lineage = _first_row_ids(path, meta, sid_used)
+        first, seq = (
+            per_file({fp: row[i] for fp, *row in lineage}) for i in (0, 1)
         )
         mat_id, mat_seq = [
             F.col(c) if c in df.columns else F.lit(None).cast("long")
             for c in _LINEAGE_COLS
         ]
-        df = df.join(
-            F.broadcast(rl_df), F.col("__fp") == F.col("__rl_key"), "left"
-        ).select(
+        df = df.select(
             "*",
-            F.coalesce(mat_id, F.col("__rl_first") + F.col("__pos"))
-            .alias("__row_id"),
-            F.coalesce(mat_seq, F.col("__rl_seq")).alias("__row_seq"),
+            F.coalesce(mat_id, first + F.col("__pos")).alias("__row_id"),
+            F.coalesce(mat_seq, seq).alias("__row_seq"),
         )
         extra += [F.col("__row_id").cast("long").alias(_LINEAGE_COLS[0]),
                   F.col("__row_seq").cast("long").alias(_LINEAGE_COLS[1])]
@@ -2605,11 +2603,11 @@ class _IcebergLog:
         self.schema = _spark_schema(self.meta)
         self.row_ids = int(self.meta.get("format-version", 1)) >= 3
 
-    def scan(self, keys: bool, row_ids: bool) -> DataFrame | None:
+    def scan(self, row_ids: bool) -> DataFrame | None:
         if not self.planned[1]:
             return None
         return _visible_scan(self.spark, self.path, self.meta, self.planned,
-                             keys=keys, row_ids=row_ids)
+                             keys=True, row_ids=row_ids)
 
     def commit(self, kills: dict[str, list[int]], inserts: DataFrame | None,
                operation: str, params: dict) -> int:

@@ -18,7 +18,9 @@ A rewritten row keeps its row identity (Delta row tracking, Iceberg
 v3 row lineage): when the log keeps row ids, the rows handed to
 ``commit`` carry ``_row_id`` — the old id for a rewritten row, NULL
 for a new one — and the format stores it as its materialized row-id
-column.
+column. The scan derives ids from per-file constants
+(:func:`table_files.per_file`), so the kill collection, which reads
+only ``__fp``/``__pos``, prunes them and pays nothing for them.
 """
 
 from __future__ import annotations
@@ -41,10 +43,10 @@ class TableLog(Protocol):
     #: whether rows carry a stable ``_row_id``
     row_ids: bool
 
-    def scan(self, keys: bool, row_ids: bool) -> DataFrame | None:
-        """The visible rows, typed per ``schema`` (None when the table
-        has no data file); ``keys`` adds ``__fp``/``__pos``,
-        ``row_ids`` adds ``_row_id``."""
+    def scan(self, row_ids: bool) -> DataFrame | None:
+        """The visible rows, typed per ``schema``, with their
+        ``__fp``/``__pos`` scan keys (None when the table has no data
+        file); ``row_ids`` adds ``_row_id``."""
 
     def commit(self, kills: dict[str, list[int]], inserts: DataFrame | None,
                operation: str, params: dict) -> int:
@@ -75,7 +77,7 @@ def _row(log: TableLog, values: dict[str, Column],
 
 def delete(log: TableLog, condition: str) -> int:
     """DELETE WHERE ``condition`` → the new version."""
-    scan = log.scan(keys=True, row_ids=False)
+    scan = log.scan(row_ids=False)
     kills = _kill_positions(scan.filter(condition)) if scan is not None else {}
     if not kills:
         return log.version
@@ -91,7 +93,7 @@ def update(log: TableLog, condition: str, set_exprs: dict[str, str],
     unknown = [c for c in set_exprs if c not in cols]
     if unknown:
         raise ValueError(f"SET columns {unknown} not in table schema {cols}")
-    scan = log.scan(keys=True, row_ids=log.row_ids)
+    scan = log.scan(row_ids=log.row_ids)
     if scan is None:
         return log.version
     hits = scan.filter(condition)
@@ -151,7 +153,7 @@ def merge(log: TableLog, source: DataFrame, keys: list[str],
     cols = log.schema.fieldNames()
     types = {f.name: f.dataType for f in log.schema.fields}
     payload = [c for c in cols if c not in keys]
-    t = log.scan(keys=True, row_ids=log.row_ids).alias("t")
+    t = log.scan(row_ids=log.row_ids).alias("t")
     s = source.alias("s")
     key_cond = None
     for k in keys:

@@ -15,6 +15,7 @@ that does not depend on the format.
 - ``file_key``/``with_scan_keys``: the ``__fp``/``__pos`` keys of a
   Parquet scan row (plain absolute file path, row position) that
   deletion vectors, delete files and per-file maps join on;
+  ``per_file`` looks a per-file constant up by ``__fp``;
   ``typed_columns`` projects a scan onto the table schema.
 - ``sweep_orphans``: delete files no commit references.
 - ``put_if_absent``: the atomic commit primitive.
@@ -36,7 +37,7 @@ import uuid
 from typing import NamedTuple
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -272,6 +273,24 @@ def with_scan_keys(df: DataFrame) -> DataFrame:
     return df.withColumn("__fp", file_key()).withColumn(
         "__pos", F.col("_metadata.row_index")
     )
+
+
+def per_file(values: dict[str, int | None]) -> Column:
+    """The long constant of the scanned row's file: ``values`` (one
+    entry per file keyed by :func:`file_key`'s form; NULL for a file
+    it maps to None or omits) looked up by ``__fp``. The optimizer
+    folds the map into one literal, so the lookup costs no join and no
+    Spark job, and a plan that never reads the column prunes it. The
+    map is built from two joined strings (NUL never occurs in a path)
+    so that planning costs a few py4j calls whatever the file count."""
+    known = {fp: v for fp, v in values.items() if v is not None}
+    if not known:
+        return F.lit(None).cast("long")
+    return F.map_from_arrays(
+        F.split(F.lit("\0".join(known)), "\0"),
+        F.split(F.lit(",".join(map(str, known.values()))), ",")
+        .cast("array<bigint>"),
+    )[F.col("__fp")]
 
 
 def typed_columns(df: DataFrame, schema: StructType,

@@ -288,6 +288,44 @@ class TestRowTracking:
         assert got[20][1] == v
         assert len({i for i, _ in got.values()}) == len(got)
 
+    def test_merge_into_clone_preserves_ids(self, spark, tmp_path):
+        """A shallow clone references the source's files by absolute
+        path and copies their row ids: MERGE and UPDATE on the clone
+        keep a rewritten row's id, including one materialized in a
+        source file by an earlier UPDATE."""
+        from etl_processing_scd1_spark.sources.delta import (
+            clone_delta_table,
+            enable_row_tracking,
+            merge_delta_table,
+            update_delta_rows,
+        )
+
+        src = str(tmp_path / "rt_src")
+        write_delta_table(_df(spark, 0, 8), src)
+        enable_row_tracking(spark, src)
+        update_delta_rows(spark, src, "k = 2", {"v": "-2"})
+        before = self._ids(spark, src)
+        dst = str(tmp_path / "rt_clone")
+        clone_delta_table(spark, src, dst)
+        assert {k: i for k, (i, _v) in self._ids(spark, dst).items()} \
+            == {k: i for k, (i, _v) in before.items()}
+        rows = spark.createDataFrame(
+            [(2, 222), (5, 999), (20, 200)], _df(spark, 0, 1).schema
+        )
+        v = merge_delta_table(spark, rows, dst, ["k"])
+        got = self._ids(spark, dst)
+        assert got[2] == (before[2][0], v)
+        assert got[5] == (before[5][0], v)
+        assert got[20][0] > max(i for i, _ in before.values())
+        v2 = update_delta_rows(spark, dst, "k = 6", {"v": "-6"})
+        got2 = self._ids(spark, dst)
+        assert got2[6] == (before[6][0], v2)
+        assert len({i for i, _ in got2.values()}) == len(got2) == 9
+        vals = {r.k: r.v for r in read_delta_table(spark, dst).collect()}
+        assert vals == {**{k: k * 10 for k in range(8)},
+                        2: 222, 5: 999, 6: -6, 20: 200}
+        assert self._ids(spark, src) == before        # source untouched
+
     def test_optimize_materializes_ids(self, spark, tmp_path):
         from etl_processing_scd1_spark.sources.delta import (
             enable_row_tracking,
