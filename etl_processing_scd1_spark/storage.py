@@ -46,6 +46,10 @@ class Warehouse:
         #: first past the retention count at every publish.
         self.retain_versions = retain_versions
         os.makedirs(root, exist_ok=True)
+        #: staged name (``<table>`` or ``<table>@append``) -> staging
+        #: dir. A run may stage from several threads at once, but each
+        #: name is staged by exactly one thread; publish() swaps in
+        #: sorted name order, never in the order the writes finished.
         self._staged: dict[str, str] = {}
         self._staged_schema: dict[str, StructType] = {}
         self._recover_interrupted_publish()
@@ -489,7 +493,10 @@ class Warehouse:
         prev_manifest = self.manifest()
         prev_run_id = (prev_manifest or {}).get("run_id")
         inflight = self._begin_publish(run_id, prev_run_id)
-        for name, staged in self._staged.items():
+        # a fixed swap order: a crash mid-publish leaves the same
+        # partial state however the run's concurrent writes finished
+        for name in sorted(self._staged):
+            staged = self._staged[name]
             if name.endswith("@append"):
                 table = name[: -len("@append")]
                 live = self._live(table)

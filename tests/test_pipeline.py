@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import threading
 
 import pytest
 
@@ -220,6 +221,10 @@ PROBE_JOBS_PER_DAY = 113
 #: Python-worker task per partition — and the watermarks took four
 #: chained shuffles; as LocalRelations with one upsert it takes 52
 MAX_TASKS_PER_DAY = 59
+#: jobs the same day costs (local[4]) with one action per output: a
+#: count below it means jobs ran outside the probe's job group — a
+#: write thread that did not inherit the caller's local properties
+MIN_JOBS_PER_DAY = 33
 
 
 def test_run_day_job_count(spark, tmp_path, bank):
@@ -240,8 +245,108 @@ def test_run_day_job_count(spark, tmp_path, bank):
 
     day(0)  # bootstrap
     jobs, tasks = spark_jobs_and_tasks(spark, lambda: day(1))
-    assert jobs <= 0.4 * PROBE_JOBS_PER_DAY, jobs
+    assert MIN_JOBS_PER_DAY <= jobs <= 0.4 * PROBE_JOBS_PER_DAY, jobs
     assert tasks <= MAX_TASKS_PER_DAY, tasks
+
+
+#: the writes of run_day's first wave: they read no other write's output
+WAVE1 = ("terminals", "clients", "accounts", "cards", "transactions", "blacklist")
+
+
+def _spy_wave1(wh: Warehouse, before, after=lambda name: None) -> None:
+    """Wrap ``wh.stage``/``wh.stage_append`` of the wave-1 tables in
+    ``before(name)`` and ``after(name)`` (``del wh.stage,
+    wh.stage_append`` removes the spies)."""
+
+    def spying(write):
+        def spy(name, df, **kwargs):
+            if name in WAVE1:
+                before(name)
+            write(name, df, **kwargs)
+            if name in WAVE1:
+                after(name)
+        return spy
+
+    wh.stage, wh.stage_append = spying(wh.stage), spying(wh.stage_append)
+
+
+def test_wave1_writes_overlap(spark, tmp_path, bank):
+    """The 4 dim merges and 2 fact appends of a non-bootstrap day are
+    in flight at once: each waits at a 6-party barrier before writing,
+    which only breaks (timeout) when the writes run one at a time."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    drop = str(tmp_path / "drop")
+    os.makedirs(drop)
+    for i in (0, 1):
+        _write_day_files(drop, i)
+    run_day(spark, wh, drop_dir=drop, bank_sources=bank,
+            run_ts=dt.datetime.combine(DAYS[0], dt.time(23, 55)), day=DAYS[0])
+    barrier = threading.Barrier(len(WAVE1), timeout=60)
+    arrived = []
+
+    def meet(name):
+        arrived.append(name)
+        barrier.wait()
+
+    _spy_wave1(wh, meet)
+    report = run_day(spark, wh, drop_dir=drop, bank_sources=bank,
+                     run_ts=dt.datetime.combine(DAYS[1], dt.time(23, 55)), day=DAYS[1])
+    assert sorted(arrived) == sorted(WAVE1)
+    assert report.dim_counts["terminals"]["inserted"] == 1
+    assert report.fact_appended == {"transactions": 10, "blacklist": 2}
+
+
+def _live_state(root: str) -> dict[str, bytes]:
+    """Every published file (manifest and live tables) by path."""
+    state = {}
+    for dirpath, dirs, files in os.walk(root):
+        if ".staging" in dirs:
+            dirs.remove(".staging")
+        for fn in files:
+            path = os.path.join(dirpath, fn)
+            with open(path, "rb") as fh:
+                state[os.path.relpath(path, root)] = fh.read()
+    return state
+
+
+def test_failed_wave1_write_publishes_nothing(spark, tmp_path, bank):
+    """One wave-1 write raising: run_day re-raises it only once every
+    other write of the wave has finished (no write thread outlives
+    the call), nothing is published, and a rerun of the day reports
+    what an uninterrupted run reports."""
+    drop = str(tmp_path / "drop")
+    os.makedirs(drop)
+    for i in (0, 1):
+        _write_day_files(drop, i)
+
+    def day(wh, i):
+        return run_day(spark, wh, drop_dir=drop, bank_sources=bank,
+                       run_ts=dt.datetime.combine(DAYS[i], dt.time(23, 55)), day=DAYS[i])
+
+    clean = Warehouse(spark, str(tmp_path / "clean"))
+    day(clean, 0)
+    want = day(clean, 1)
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    day(wh, 0)
+    before = _live_state(wh.root)
+    threads, finished = [], []
+
+    def start(name):
+        threads.append(threading.current_thread())
+        if name == "accounts":
+            raise RuntimeError("injected write failure")
+
+    _spy_wave1(wh, start, finished.append)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        day(wh, 1)
+    assert sorted(finished) == sorted(set(WAVE1) - {"accounts"})
+    assert len(threads) == len(WAVE1)
+    assert not any(t.is_alive() for t in threads)
+    assert _live_state(wh.root) == before
+
+    del wh.stage, wh.stage_append
+    assert day(wh, 1) == want
 
 
 def test_fact_anti_join_prunes_fact_days(spark, tmp_path, bank):

@@ -5,6 +5,10 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
 
 from etl_processing_scd1_spark.storage import Warehouse
 
@@ -33,6 +37,59 @@ def test_swap_and_append_publish(spark, tmp_path):
     manifest = json.load(open(str(tmp_path / "wh" / "_manifest.json")))
     assert manifest["run_id"] == "r2"
     assert manifest["tables"] == ["dim", "fact"]
+
+
+def test_concurrent_stages_all_publish(spark, tmp_path):
+    """Tables staged from more threads than cores, with the interpreter
+    switching threads as often as it can: every one is recorded and
+    published, each with its own rows."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    names = [f"t{i}" for i in range(8)]
+
+    def write(i: int) -> None:
+        df = spark.range(i + 1)
+        if i % 2:
+            wh.stage_append(names[i], df)
+        else:
+            wh.stage(names[i], df)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(len(names)) as pool:
+            futures = [pool.submit(write, i) for i in range(len(names))]
+            for f in futures:
+                f.result(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert wh.publish(run_id="r1")["tables"] == names
+    assert [wh.read(n).count() for n in names] == list(range(1, len(names) + 1))
+
+
+def test_publish_swaps_in_name_order(spark, tmp_path, monkeypatch):
+    """publish swaps staged tables in name order, not in the order they
+    were staged: a crash mid-publish leaves the same tables live
+    whichever of a run's concurrent writes finished first."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    for name in ("c", "a", "b"):
+        wh.stage(name, spark.range(1))
+    staging = os.path.join(wh.root, ".staging")
+    swapped = []
+    rename = os.rename
+
+    def crashing_rename(src, dst):
+        if os.path.dirname(src) == staging:
+            swapped.append(os.path.basename(dst))
+            if len(swapped) == 2:
+                raise OSError("crash mid-publish")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="crash mid-publish"):
+        wh.publish(run_id="r1")
+    monkeypatch.undo()
+    assert swapped == ["a", "b"]
+    assert [Warehouse(spark, wh.root).exists(n) for n in "abc"] == [True, False, False]
 
 
 def test_partitioned_append_prunes(spark, tmp_path):
