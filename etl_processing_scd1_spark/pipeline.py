@@ -19,7 +19,10 @@ On a small day the run is mostly per-job driver work (planning,
 broadcasts, commit renames), so the writes of a wave overlap instead
 of queuing. The writes themselves, their plans and jobs, the
 stage-then-swap publish and every report number are those of a
-serial run; only the wall-clock order differs.
+serial run; only the wall-clock order differs. Publish swaps wave 1's
+tables before wave 2's (``Warehouse.end_stage_round``). A failing
+write is re-raised once its wave has finished, and the run's staged
+tables are discarded unpublished.
 
 Differences from the reference, all documented in SURVEY §7:
 intended (not bugged) file routing and rule-1 predicate; one
@@ -204,19 +207,9 @@ def run_day(
         warehouse.stage_append(fact_name, new_rows, partition_cols=partition_cols)
         return observed(appended, rows=0)["rows"]
 
-    # ---- wave 1: the dims and facts depend on no other write ------------
-    dims = [n for n in schemas.DIM_KEYS if n in staged]
-    facts = [n for n in fact_ids if n in staged]
-    results = _run_wave(
-        spark, [partial(merge_dim, n) for n in dims] + [partial(append_fact, n) for n in facts]
-    )
-    watermarks: dict[str, dt.datetime | None] = {}
-    for dim_name, (counts, wm) in zip(dims, results):
-        report.dim_counts[dim_name] = counts
-        watermarks[dim_name] = wm
-    report.fact_appended = dict(zip(facts, results[len(dims):]))
-
     # ---- watermarks (G5): after wave 1 observed them --------------------
+    watermarks: dict[str, dt.datetime | None] = {}
+
     def write_meta() -> None:
         # one seed relation for every dim: one union+groupBy, one shuffle
         warehouse.stage("meta", upsert_watermark(spark, meta, "warehouse", watermarks))
@@ -257,8 +250,25 @@ def run_day(
         # zero counts omitted, as a groupBy over the events would
         return {t: n for t, n in observed(events).items() if n}
 
-    # ---- wave 2: meta and the fraud report -------------------------------
-    _, report.fraud_events = _run_wave(spark, [write_meta, write_fraud])
+    # ---- the writes: wave 1, the dims and facts, depend on no other
+    # write; wave 2, meta and the fraud report, on wave 1 -----------------
+    dims = [n for n in schemas.DIM_KEYS if n in staged]
+    facts = [n for n in fact_ids if n in staged]
+    try:
+        results = _run_wave(
+            spark, [partial(merge_dim, n) for n in dims] + [partial(append_fact, n) for n in facts]
+        )
+        # derived tables swap after their inputs at publish
+        warehouse.end_stage_round()
+        for dim_name, (counts, wm) in zip(dims, results):
+            report.dim_counts[dim_name] = counts
+            watermarks[dim_name] = wm
+        report.fact_appended = dict(zip(facts, results[len(dims):]))
+        _, report.fraud_events = _run_wave(spark, [write_meta, write_fraud])
+    except BaseException:
+        # a failed run publishes nothing, now or with the next run
+        warehouse.discard_staged()
+        raise
 
     # ---- commit (G6) -----------------------------------------------------
     warehouse.publish(run_id=run_ts.strftime("%Y%m%d%H%M%S"))

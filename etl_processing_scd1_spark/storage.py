@@ -48,10 +48,13 @@ class Warehouse:
         os.makedirs(root, exist_ok=True)
         #: staged name (``<table>`` or ``<table>@append``) -> staging
         #: dir. A run may stage from several threads at once, but each
-        #: name is staged by exactly one thread; publish() swaps in
-        #: sorted name order, never in the order the writes finished.
+        #: name is staged by exactly one thread; publish() swaps round
+        #: by round (end_stage_round), in name order within a round,
+        #: never in the order the writes finished.
         self._staged: dict[str, str] = {}
         self._staged_schema: dict[str, StructType] = {}
+        self._staged_round: dict[str, int] = {}
+        self._round = 0
         self._recover_interrupted_publish()
 
     def _recover_interrupted_publish(self) -> None:
@@ -249,6 +252,7 @@ class Warehouse:
         self._record_schema(path, df.schema)
         self._staged[name] = path
         self._staged_schema[name] = df.schema
+        self._staged_round[name] = self._round
 
     def stage_ordered(
         self, name: str, df: DataFrame, order_cols: list[str], num_files: int | None = None
@@ -413,6 +417,30 @@ class Warehouse:
         writer.parquet(path)
         self._staged[f"{name}@append"] = path
         self._staged_schema[f"{name}@append"] = df.schema
+        self._staged_round[f"{name}@append"] = self._round
+
+    def end_stage_round(self) -> None:
+        """publish() swaps every table staged so far before any table
+        staged after this call. A run that stages concurrently calls
+        it between dependent rounds of writes (run_day: after the dims
+        and facts, before ``meta`` and ``rep_fraud``, which derive from
+        them), so a crash mid-publish never leaves a derived table
+        live ahead of its inputs. Within a round tables swap in name
+        order, whatever thread finished first."""
+        self._round += 1
+
+    def discard_staged(self) -> None:
+        """Drop everything staged since the last publish, unpublished.
+        A run that fails before its publish calls it: otherwise the
+        next publish on this Warehouse would also swap in the failed
+        run's staged tables, and same-run readers (staged_view) would
+        see them."""
+        for path in self._staged.values():
+            shutil.rmtree(path, ignore_errors=True)
+        self._staged.clear()
+        self._staged_schema.clear()
+        self._staged_round.clear()
+        self._round = 0
 
     _INFLIGHT = "_inflight.json"
 
@@ -493,9 +521,10 @@ class Warehouse:
         prev_manifest = self.manifest()
         prev_run_id = (prev_manifest or {}).get("run_id")
         inflight = self._begin_publish(run_id, prev_run_id)
-        # a fixed swap order: a crash mid-publish leaves the same
-        # partial state however the run's concurrent writes finished
-        for name in sorted(self._staged):
+        # a fixed swap order, inputs before what derives from them: a
+        # crash mid-publish leaves the same partial state however the
+        # run's concurrent writes finished
+        for name in sorted(self._staged, key=lambda n: (self._staged_round[n], n)):
             staged = self._staged[name]
             if name.endswith("@append"):
                 table = name[: -len("@append")]
@@ -564,8 +593,7 @@ class Warehouse:
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         os.replace(tmp, os.path.join(self.root, "_manifest.json"))
-        self._staged.clear()
-        self._staged_schema.clear()
+        self.discard_staged()
         staging_root = os.path.join(self.root, ".staging")
         if os.path.isdir(staging_root):
             shutil.rmtree(staging_root, ignore_errors=True)

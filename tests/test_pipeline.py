@@ -349,6 +349,47 @@ def test_failed_wave1_write_publishes_nothing(spark, tmp_path, bank):
     assert day(wh, 1) == want
 
 
+def test_failed_run_stages_nothing_for_the_next(spark, tmp_path, bank):
+    """The writes a failed run did stage never reach a later run on the
+    same Warehouse, also in tables that run does not stage: a day with
+    the bank extracts only publishes and reports as on a Warehouse
+    that never saw the failure."""
+    drop = str(tmp_path / "drop")
+    os.makedirs(drop)
+    for i in (0, 1):
+        _write_day_files(drop, i)
+
+    def files_day(wh, i):
+        return run_day(spark, wh, drop_dir=drop, bank_sources=bank,
+                       run_ts=dt.datetime.combine(DAYS[i], dt.time(23, 55)), day=DAYS[i])
+
+    def bank_day(wh):
+        return run_day(spark, wh, bank_sources=bank,
+                       run_ts=dt.datetime.combine(DAYS[1], dt.time(23, 55)), day=DAYS[1])
+
+    clean = Warehouse(spark, str(tmp_path / "clean"))
+    files_day(clean, 0)
+    want = bank_day(clean)
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    files_day(wh, 0)
+
+    def fail(name):
+        if name == "accounts":
+            raise RuntimeError("injected write failure")
+
+    _spy_wave1(wh, fail)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        files_day(wh, 1)
+    del wh.stage, wh.stage_append
+    assert os.listdir(os.path.join(wh.root, ".staging")) == []
+
+    assert bank_day(wh) == want
+    assert wh.manifest()["tables"] == clean.manifest()["tables"]
+    for name in ("transactions", "terminals", "blacklist", "rep_fraud"):
+        assert wh.read(name).count() == clean.read(name).count(), name
+
+
 def test_fact_anti_join_prunes_fact_days(spark, tmp_path, bank):
     """The incremental dedup's anti join scans only the fact days the
     staged batch covers: the fact-side scan of the transactions table

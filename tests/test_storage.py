@@ -66,13 +66,16 @@ def test_concurrent_stages_all_publish(spark, tmp_path):
     assert [wh.read(n).count() for n in names] == list(range(1, len(names) + 1))
 
 
-def test_publish_swaps_in_name_order(spark, tmp_path, monkeypatch):
-    """publish swaps staged tables in name order, not in the order they
-    were staged: a crash mid-publish leaves the same tables live
-    whichever of a run's concurrent writes finished first."""
+def test_publish_swaps_round_by_round_in_name_order(spark, tmp_path, monkeypatch):
+    """publish swaps staged tables round by round, in name order within
+    a round, not in the order they were staged: a crash mid-publish
+    leaves the same tables live whichever of a run's concurrent writes
+    finished first, and never a derived table ahead of its inputs."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    for name in ("c", "a", "b"):
+    for name in ("c", "a"):
         wh.stage(name, spark.range(1))
+    wh.end_stage_round()
+    wh.stage("b", spark.range(1))  # derived from a and c
     staging = os.path.join(wh.root, ".staging")
     swapped = []
     rename = os.rename
@@ -80,7 +83,7 @@ def test_publish_swaps_in_name_order(spark, tmp_path, monkeypatch):
     def crashing_rename(src, dst):
         if os.path.dirname(src) == staging:
             swapped.append(os.path.basename(dst))
-            if len(swapped) == 2:
+            if len(swapped) == 3:
                 raise OSError("crash mid-publish")
         rename(src, dst)
 
@@ -88,8 +91,22 @@ def test_publish_swaps_in_name_order(spark, tmp_path, monkeypatch):
     with pytest.raises(OSError, match="crash mid-publish"):
         wh.publish(run_id="r1")
     monkeypatch.undo()
-    assert swapped == ["a", "b"]
-    assert [Warehouse(spark, wh.root).exists(n) for n in "abc"] == [True, False, False]
+    assert swapped == ["a", "c", "b"]
+    assert [Warehouse(spark, wh.root).exists(n) for n in "abc"] == [True, False, True]
+
+
+def test_discarded_stage_is_not_published(spark, tmp_path):
+    """What a failed run staged and discarded neither reaches the next
+    publish nor stays in the staging area."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.stage("x", spark.range(1))
+    wh.stage_append("f", spark.range(1))
+    wh.discard_staged()
+    assert os.listdir(os.path.join(wh.root, ".staging")) == []
+    assert wh.staged_view("x") is None
+    wh.stage("y", spark.range(2))
+    assert wh.publish(run_id="r1")["tables"] == ["y"]
+    assert not wh.exists("x") and not wh.exists("f")
 
 
 def test_partitioned_append_prunes(spark, tmp_path):

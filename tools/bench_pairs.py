@@ -9,11 +9,12 @@ exported with ``git archive`` into a temporary directory (the same
 files a clean checkout of the ref holds). Only the JSON line each run
 prints last on stdout is read; nothing under ``perfbench/`` is edited.
 
-Prints every run, each side's median and quartiles per end-to-end
-metric, and for ``--metric`` the number of pairs the change won and
-the verdict of the claim rule: a gain counts only if the change wins
-at least 9 of 10 pairs (ties count for neither side) and the medians
-differ by more than the parent's interquartile range.
+The run length is BENCHMARK.json's ``run_seconds``. Prints every run,
+then per end-to-end metric each side's median and quartiles, the
+number of pairs the change won and the verdict of the claim rule: a
+gain counts only over at least 10 pairs, if the change wins at least 9
+in 10 of them (ties count for neither side) and the medians differ by
+more than the parent's interquartile range.
 """
 
 from __future__ import annotations
@@ -39,11 +40,11 @@ def export_ref(ref: str, dest: str) -> None:
     subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
 
 
-def run_once(tree: str, args) -> dict:
+def run_once(tree: str, args, seconds: int) -> dict:
     """One benchmark run in ``tree``; its stdout JSON result."""
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", args.workload,
-        "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0",
+        "--seed", str(args.seed), "--seconds", str(seconds), "--trace", "0",
     ]
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
@@ -61,12 +62,13 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 
 def verdict(parent: list[float], change: list[float], lower_is_better: bool) -> tuple[int, bool]:
-    """Pairs the change won, and whether the claim rule holds."""
+    """Pairs the change won, and whether the claim rule holds (never
+    over fewer than 10 pairs)."""
     sign = 1 if lower_is_better else -1
     wins = sum(sign * (p - c) > 0 for p, c in zip(parent, change))
     p1, pm, p3 = quartiles(parent)
     gap = sign * (pm - statistics.median(change))
-    return wins, wins >= 0.9 * len(parent) and gap > p3 - p1
+    return wins, len(parent) >= 10 and wins >= 0.9 * len(parent) and gap > p3 - p1
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -75,12 +77,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=int, default=20)
-    ap.add_argument("--metric", default="total_s", help="the claimed end-to-end metric")
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        better = {m["name"]: m["better"] for m in json.load(fh)["end_to_end"]}
+        bench = json.load(fh)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
     tmp = tempfile.mkdtemp(prefix="bench_pairs-")
     try:
         parent_tree = os.path.join(tmp, "parent")
@@ -91,7 +92,7 @@ def main(argv: list[str] | None = None) -> int:
         for i in range(args.pairs):
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
-                res = run_once(trees[side], args)
+                res = run_once(trees[side], args, bench["run_seconds"])
                 results[side].append(res)
                 values = " ".join(
                     f"{n}={m['value']:.3f}" for n, m in sorted(res["metrics"].items())
@@ -102,21 +103,22 @@ def main(argv: list[str] | None = None) -> int:
         shutil.rmtree(tmp, ignore_errors=True)
 
     cpus = len(os.sched_getaffinity(0))
-    print(f"\n{args.workload} seed {args.seed}, {args.pairs} pairs, {cpus} cpus")
+    all_correct = all(r["correct"] for side in results.values() for r in side)
+    print(f"\n{args.workload} seed {args.seed}, {args.pairs} pairs, {cpus} cpus, "
+          f"every run correct: {all_correct}")
     for name in sorted(better):
-        for side in ("parent", "change"):
-            q1, med, q3 = quartiles([r["metrics"][name]["value"] for r in results[side]])
+        values = {
+            side: [r["metrics"][name]["value"] for r in results[side]] for side in results
+        }
+        for side, xs in values.items():
+            q1, med, q3 = quartiles(xs)
             print(f"{name:10s} {side:6s} median {med:.3f}  q1 {q1:.3f}  q3 {q3:.3f}  "
                   f"iqr {q3 - q1:.3f}")
-    parent = [r["metrics"][args.metric]["value"] for r in results["parent"]]
-    change = [r["metrics"][args.metric]["value"] for r in results["change"]]
-    wins, claimed = verdict(parent, change, better[args.metric] == "lower")
-    med_p, med_c = statistics.median(parent), statistics.median(change)
-    all_correct = all(r["correct"] for side in results.values() for r in side)
-    print(f"{args.metric}: change won {wins}/{args.pairs} pairs; median "
-          f"{med_p:.3f} -> {med_c:.3f} ({(med_c - med_p) / med_p:+.1%}); "
-          f"every run correct: {all_correct}")
-    print(f"verdict: {'GAIN' if claimed and all_correct else 'NO CLAIM'}")
+        wins, claimed = verdict(values["parent"], values["change"], better[name] == "lower")
+        med_p, med_c = statistics.median(values["parent"]), statistics.median(values["change"])
+        print(f"{name:10s} change won {wins}/{args.pairs} pairs; median {med_p:.3f} -> "
+              f"{med_c:.3f} ({(med_c - med_p) / med_p:+.1%}); verdict: "
+              f"{'GAIN' if claimed and all_correct else 'NO CLAIM'}")
     return 0
 
 
