@@ -7,6 +7,9 @@ functional recompute over a Parquet warehouse:
   2 facts → advance watermarks → run fraud rules 1-3 appending to
   the accumulating report → atomic multi-table publish.
 
+The three fraud rules are one plan (``plans.fraud_events``): one scan
+of the fact history, one ``lag`` window, one star join.
+
 The eight writes of a run go out in two dependency waves, each
 wave's writes concurrently from driver threads (one per write):
 
@@ -47,7 +50,7 @@ from . import schemas
 from .observe import observed
 from .operators import append_dedup, scd1_merge, upsert_watermark
 from .operators.meta import empty_meta
-from .plans import fraud_type1, fraud_type2, fraud_type3
+from .plans import fraud_events
 from .plans.fraud import EVENT_TYPES
 from .sources import read_blacklist_excel, read_transactions_csv, read_xlsx
 from .sources.readers import archive_file, scan_drop_dir
@@ -236,14 +239,9 @@ def run_day(
             current("blacklist"),
         )
         events = Observation()
-        new_events = (
-            fraud_type1(tx, cards, accounts, clients, blacklist)
-            .unionByName(fraud_type2(tx, cards, accounts, clients))
-            .unionByName(fraud_type3(tx, cards, accounts, clients, terminals))
-            .observe(
-                events,
-                *[F.count(F.when(F.col("event_type") == t, 1)).alias(t) for t in EVENT_TYPES],
-            )
+        new_events = fraud_events(tx, cards, accounts, clients, terminals, blacklist).observe(
+            events,
+            *[F.count(F.when(F.col("event_type") == t, 1)).alias(t) for t in EVENT_TYPES],
         )
         # accumulating report: append-only, O(new events) per run (A10)
         warehouse.stage_append("rep_fraud", new_events)

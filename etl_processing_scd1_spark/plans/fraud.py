@@ -1,9 +1,34 @@
-"""The three fraud report rules (SURVEY.md §2.H) as DataFrame plans.
+"""The three fraud report rules (SURVEY.md §2.H), one plan for all three.
 
-Each rule is star-join denormalization (C5-C7) + a rule predicate,
-projected onto the report schema ``(event_dt, passport, fio, phone,
-event_type, report_dt)`` (main.ddl:196-203). Deviations from the
-as-written reference, per SURVEY §7:
+Each rule is a predicate over the star join of the fact with cards,
+accounts and clients (C5-C7), projected onto the report schema
+``(event_dt, passport, fio, phone, event_type, report_dt)``
+(main.ddl:196-203). The predicates and the projection are SQL text,
+defined once below. :func:`fraud_events` evaluates all three rules in
+one plan; ``fraud_type1..3`` build one rule each, in the reference's
+shape, from the same text.
+
+fraud_events, in order:
+
+1. one scan of ``fact ⟕ terminals``, projected to the columns the
+   rules and the report need, and ONE window per space-stripped card
+   for both ``lag(city)`` and ``lag(trans_date)``. Rule 3's flag is
+   computed here, before the star join, so a dim fan-out cannot shift
+   ``lag``;
+2. one star join;
+3. one left join of the distinct blacklisted passports;
+4. ``explode(filter(array(CASE … '1' END, CASE … '2' END, CASE … '3'
+   END), e -> e IS NOT NULL))``: one event per rule a row trips, none
+   for a NULL predicate.
+
+Rule 3 as written flags the fact rows whose id is ``IN`` the set of
+hopping transactions; fraud_events flags each row in place. The two
+agree while ``trans_id`` is unique in the fact. The fact's append-dedup
+keeps it unique under the source protocol that re-deliveries carry the
+same business dates — the protocol the ``p_day`` prune of
+``pipeline.run_day``'s fact append already assumes.
+
+Deviations from the as-written reference, per SURVEY §7:
 
 - H1 implements the *intended* predicate (expired OR blacklisted
   passport) by default; ``fraud_type1(as_written=True)`` reproduces
@@ -14,23 +39,63 @@ as-written reference, per SURVEY §7:
 - ``fio`` uses NULL-propagating concat (D3 semantics).
 
 Scale design: the dims (terminals/cards/accounts/clients ≈ 10²-10⁵
-rows against a 10¹⁰-row fact) broadcast — every join below is a
-broadcast hash join with NO shuffle of the fact. Rule 3's window is
-the one unavoidable shuffle (partition by card); it reuses one
-partitioning for both lag computations.
+rows against a 10¹⁰-row fact) and the blacklist broadcast — every join
+below is a broadcast hash join with NO shuffle of the fact. Rule 3's
+window is the one unavoidable shuffle (partition by card).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions import day_of, fio, hours_between, normalize_card_num, trim_key
 
 EVENT_EXPIRED_OR_BLACKLISTED = "1"
 EVENT_EXPIRED_CONTRACT = "2"
 EVENT_CITY_VELOCITY = "3"
 EVENT_TYPES = (EVENT_EXPIRED_OR_BLACKLISTED, EVENT_EXPIRED_CONTRACT, EVENT_CITY_VELOCITY)
+
+#: rule 1 over the star join and the left-joined blacklist ``bl``:
+#: passport expired or blacklisted (H1, main.py:397-415, intended
+#: predicate; B6's IN-subquery decorrelated into the left join)
+EXPIRED_OR_BLACKLISTED = (
+    "(dcl.passport_valid_to IS NOT NULL AND dcl.passport_valid_to < ft.trans_date)"
+    " OR bl.passport_num IS NOT NULL"
+)
+#: rule 2 over the star join: expired account contract (H2,
+#: main.py:418-434). No NULL guard on valid_to: NULL → not flagged
+#: (3-valued logic), as written
+EXPIRED_CONTRACT = "da.valid_to < ft.trans_date"
+#: previous city and time of each transaction on its card: the
+#: space-stripped key of rule 3 (C7, main.py:458), ties on the time
+#: broken by id
+_PREV_ON_CARD = "OVER (PARTITION BY translate(card_num, ' ', '') ORDER BY trans_date, trans_id)"
+
+
+def _city_hop(max_gap_hours: float) -> str:
+    """Rule 3 over the lag columns: the LATER transaction of a card
+    seen in two cities within ``max_gap_hours`` (H3, main.py:437-467;
+    E1/E2; hours as ``extract(epoch …)/3600``, D8). A NULL id matches
+    no ``IN``, so it is never flagged."""
+    return (
+        "trans_id IS NOT NULL AND prev_city IS NOT NULL AND city <> prev_city"
+        " AND (unix_timestamp(trans_date) - unix_timestamp(prev_date)) / 3600D"
+        f" < {float(max_gap_hours)!r}D"
+    )
+
+
+def _report(event_type: str) -> list[str]:
+    """The report projection over the star join; ``event_type`` is SQL
+    text."""
+    return [
+        "ft.trans_date AS event_dt",
+        "dcl.passport_num AS passport",
+        # ``||`` semantics (D3): a NULL patronymic nulls the fio
+        "concat(dcl.last_name, ' ', dcl.first_name, ' ', dcl.patronymic) AS fio",
+        "dcl.phone AS phone",
+        f"{event_type} AS event_type",
+        # the transaction's day (D6, main.py:404)
+        "CAST(to_date(ft.trans_date) AS TIMESTAMP) AS report_dt",
+    ]
 
 
 def star_denormalize(
@@ -39,33 +104,75 @@ def star_denormalize(
     accounts: DataFrame,
     clients: DataFrame,
 ) -> DataFrame:
-    """fact ⟕ cards ⟕ accounts ⟕ clients (C5).
+    """fact ⟕ cards ⟕ accounts ⟕ clients (C5), aliased ``ft``, ``dc``,
+    ``da``, ``dcl``.
 
     Key normalization per the reference: card join on trim (C6,
     main.py:407), account join on trim (main.py:409). All dims
     broadcast explicitly — their statistics may be absent when read
-    from fresh staging. Rule 3 joins terminals itself, on raw id.
+    from fresh staging.
     """
-    t = transactions.alias("ft")
-    dc = F.broadcast(cards.alias("dc"))
-    da = F.broadcast(accounts.alias("da"))
-    dcl = F.broadcast(clients.alias("dcl"))
     return (
-        t.join(dc, trim_key(F.col("ft.card_num")) == trim_key(F.col("dc.card_num")), "left")
-        .join(da, trim_key(F.col("dc.account_num")) == trim_key(F.col("da.account_num")), "left")
-        .join(dcl, F.col("da.client") == F.col("dcl.client_id"), "left")
+        transactions.alias("ft")
+        .join(
+            F.broadcast(cards.alias("dc")),
+            F.expr("trim(ft.card_num) = trim(dc.card_num)"),
+            "left",
+        )
+        .join(
+            F.broadcast(accounts.alias("da")),
+            F.expr("trim(dc.account_num) = trim(da.account_num)"),
+            "left",
+        )
+        .join(F.broadcast(clients.alias("dcl")), F.expr("da.client = dcl.client_id"), "left")
     )
 
 
-def _report_projection(event_type: str) -> list[Column]:
-    return [
-        F.col("ft.trans_date").alias("event_dt"),
-        F.col("dcl.passport_num").alias("passport"),
-        fio(F.col("dcl.last_name"), F.col("dcl.first_name"), F.col("dcl.patronymic")).alias("fio"),
-        F.col("dcl.phone").alias("phone"),
-        F.lit(event_type).alias("event_type"),
-        day_of(F.col("ft.trans_date")).cast("timestamp").alias("report_dt"),
-    ]
+def _with_blacklist(star: DataFrame, blacklist: DataFrame) -> DataFrame:
+    """``star`` ⟕ the distinct blacklisted passports, aliased ``bl``."""
+    listed = blacklist.selectExpr("passport_num").distinct().alias("bl")
+    return star.join(F.broadcast(listed), F.expr("dcl.passport_num = bl.passport_num"), "left")
+
+
+def _with_prev_city(transactions: DataFrame, terminals: DataFrame) -> DataFrame:
+    """``(trans_id, trans_date, card_num, city, prev_city, prev_date)``:
+    fact ⟕ terminals on raw id, and both lags over one window."""
+    return (
+        transactions.alias("ft")
+        .join(F.broadcast(terminals.alias("dt")), F.expr("ft.terminal = dt.terminal_id"), "left")
+        .selectExpr("ft.trans_id", "ft.trans_date", "ft.card_num", "dt.terminal_city AS city")
+        .selectExpr(
+            "*",
+            f"lag(city) {_PREV_ON_CARD} AS prev_city",
+            f"lag(trans_date) {_PREV_ON_CARD} AS prev_date",
+        )
+    )
+
+
+def fraud_events(
+    transactions: DataFrame,
+    cards: DataFrame,
+    accounts: DataFrame,
+    clients: DataFrame,
+    terminals: DataFrame,
+    blacklist: DataFrame,
+    max_gap_hours: float = 1.0,
+) -> DataFrame:
+    """Rules 1-3 in one plan: the same event multiset as the union of
+    ``fraud_type1``, ``fraud_type2`` and ``fraud_type3`` while
+    ``trans_id`` is unique in the fact (module docstring), from one
+    scan of the fact."""
+    hops = _with_prev_city(transactions, terminals).selectExpr(
+        "trans_date", "card_num", f"{_city_hop(max_gap_hours)} AS hop"
+    )
+    flagged = _with_blacklist(star_denormalize(hops, cards, accounts, clients), blacklist)
+    rules = {
+        EVENT_EXPIRED_OR_BLACKLISTED: EXPIRED_OR_BLACKLISTED,
+        EVENT_EXPIRED_CONTRACT: EXPIRED_CONTRACT,
+        EVENT_CITY_VELOCITY: "ft.hop",
+    }
+    events = ", ".join(f"CASE WHEN {p} THEN '{t}' END" for t, p in rules.items())
+    return flagged.selectExpr(*_report(f"explode(filter(array({events}), e -> e IS NOT NULL))"))
 
 
 def fraud_type1(
@@ -76,11 +183,8 @@ def fraud_type1(
     blacklist: DataFrame,
     as_written: bool = False,
 ) -> DataFrame:
-    """Rule 1 — transaction while passport expired or blacklisted
-    (H1, main.py:397-415, intended predicate).
-
-    Blacklist membership is a left-semi join (B6's IN-subquery
-    decorrelated); the blacklist is dimension-sized → broadcast semi.
+    """Rule 1 alone — transaction while passport expired or
+    blacklisted (:data:`EXPIRED_OR_BLACKLISTED`).
 
     ``as_written=True`` is the bug-compat mode reproducing the
     reference's ``WHERE 1=1 OR expired OR listed`` (main.py:412-413):
@@ -91,22 +195,10 @@ def fraud_type1(
     modes side by side; production uses the default.
     """
     star = star_denormalize(transactions, cards, accounts, clients)
+    report = _report(f"'{EVENT_EXPIRED_OR_BLACKLISTED}'")
     if as_written:
-        return star.select(_report_projection(EVENT_EXPIRED_OR_BLACKLISTED))
-    expired = (
-        F.col("dcl.passport_valid_to").isNotNull()
-        & (F.col("dcl.passport_valid_to") < F.col("ft.trans_date"))
-    )
-    listed = blacklist.select(F.col("passport_num").alias("__bl_passport__")).distinct()
-    flagged = (
-        star.join(
-            F.broadcast(listed),
-            F.col("dcl.passport_num") == F.col("__bl_passport__"),
-            "left",
-        )
-        .filter(expired | F.col("__bl_passport__").isNotNull())
-    )
-    return flagged.select(_report_projection(EVENT_EXPIRED_OR_BLACKLISTED))
+        return star.selectExpr(*report)
+    return _with_blacklist(star, blacklist).filter(EXPIRED_OR_BLACKLISTED).selectExpr(*report)
 
 
 def fraud_type2(
@@ -115,12 +207,12 @@ def fraud_type2(
     accounts: DataFrame,
     clients: DataFrame,
 ) -> DataFrame:
-    """Rule 2 — transaction on an expired account contract (H2,
-    main.py:418-434). No NULL guard on valid_to: NULL → not flagged
-    (3-valued logic) — preserved as written."""
-    star = star_denormalize(transactions, cards, accounts, clients)
-    return star.filter(F.col("da.valid_to") < F.col("ft.trans_date")).select(
-        _report_projection(EVENT_EXPIRED_CONTRACT)
+    """Rule 2 alone — transaction on an expired account contract
+    (:data:`EXPIRED_CONTRACT`)."""
+    return (
+        star_denormalize(transactions, cards, accounts, clients)
+        .filter(EXPIRED_CONTRACT)
+        .selectExpr(*_report(f"'{EVENT_EXPIRED_CONTRACT}'"))
     )
 
 
@@ -132,44 +224,17 @@ def fraud_type3(
     terminals: DataFrame,
     max_gap_hours: float = 1.0,
 ) -> DataFrame:
-    """Rule 3 — operations in different cities within one hour (H3,
-    main.py:437-467; E1/E2).
-
-    ``lag(city)``/``lag(ts)`` per card ordered by trans_date; flag the
-    LATER transaction of a city-hopping pair. The card join here uses
-    space-stripped equality (C7, main.py:458) — the reference's rule-3
-    variant. Semi join back to the fact then star join for client
-    attributes, exactly the CTE→IN shape of the reference.
-
-    One shuffle: Window.partitionBy(card). The semi join back is a
-    broadcast (flagged ids are rare by construction).
-    """
-    t = transactions.alias("ft")
-    dt_ = F.broadcast(terminals.alias("dt"))
-    with_city = t.join(dt_, F.col("ft.terminal") == F.col("dt.terminal_id"), "left").select(
-        F.col("ft.trans_id").alias("trans_id"),
-        F.col("ft.trans_date").alias("trans_date"),
-        normalize_card_num(F.col("ft.card_num")).alias("card_key"),
-        F.col("dt.terminal_city").alias("city"),
+    """Rule 3 alone — operations in different cities within
+    ``max_gap_hours``, in the reference's CTE→IN shape: the hopping
+    transactions' ids, then a semi join of the star join on them
+    (broadcast: flagged ids are rare by construction)."""
+    hopping = _with_prev_city(transactions, terminals).filter(_city_hop(max_gap_hours))
+    return (
+        star_denormalize(transactions, cards, accounts, clients)
+        .join(
+            F.broadcast(hopping.selectExpr("trans_id").alias("hop")),
+            F.expr("ft.trans_id = hop.trans_id"),
+            "left_semi",
+        )
+        .selectExpr(*_report(f"'{EVENT_CITY_VELOCITY}'"))
     )
-    w = Window.partitionBy("card_key").orderBy("trans_date", "trans_id")
-    pre = with_city.select(
-        "trans_id",
-        "trans_date",
-        "city",
-        F.lag("city").over(w).alias("prev_city"),
-        F.lag("trans_date").over(w).alias("prev_date"),
-    )
-    hopping = pre.filter(
-        F.col("prev_city").isNotNull()
-        & (F.col("city") != F.col("prev_city"))
-        & (hours_between("trans_date", "prev_date") < F.lit(max_gap_hours))
-    ).select("trans_id")
-
-    star = star_denormalize(transactions, cards, accounts, clients)
-    flagged = star.join(
-        F.broadcast(hopping),
-        F.col("ft.trans_id") == hopping["trans_id"],
-        "left_semi",
-    )
-    return flagged.select(_report_projection(EVENT_CITY_VELOCITY))

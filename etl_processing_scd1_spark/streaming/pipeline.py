@@ -203,7 +203,7 @@ def streaming_velocity_rule(
     """H3's city-velocity rule as a streaming aggregate: a session
     window (``gap`` inactivity) per key; sessions spanning >1 distinct
     state value within the gap are the streaming flag. The batch
-    lag() formulation (plans.fraud.fraud_type3) remains the exact
+    lag() formulation (plans.fraud_events) remains the exact
     per-transaction attribution; this is the bounded-state stream
     variant (E2 → session_window, SURVEY §2.I)."""
     return (

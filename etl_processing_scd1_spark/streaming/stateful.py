@@ -92,8 +92,9 @@ def streaming_velocity_stateful(
 
     Input stream must carry (key, id, ts, state) columns; output is
     one row per flagged event with the previous state and gap —
-    byte-identical semantics to plans.fraud.fraud_type3's lag()
-    formulation, but incremental with O(keys) state.
+    byte-identical semantics to rule 3's lag() formulation in
+    plans.fraud (``fraud_events``, ``fraud_type3``), but incremental
+    with O(keys) state.
     """
     from pyspark.sql import functions as F
 

@@ -1,16 +1,19 @@
 """Fraud rules on a reference-shaped synthetic warehouse (FIXTURES.md
 §1.4 planted events): expired passport, blacklisted passport, expired
 account contract, city-hop velocity — including the trim/space join-key
-normalization and NULL-propagating fio."""
+normalization and NULL-propagating fio — and the fused builder that
+evaluates all three rules in one plan."""
 
 from __future__ import annotations
 
 import datetime as dt
 import functools
+from collections import Counter
+from decimal import Decimal
 
 from pyspark.sql import functions as F
 
-from etl_processing_scd1_spark.plans import fraud_type1, fraud_type2, fraud_type3
+from etl_processing_scd1_spark.plans import fraud_events, fraud_type1, fraud_type2, fraud_type3
 
 D = dt.datetime
 TX = functools.partial(D, 2021, 3, 1)
@@ -100,3 +103,77 @@ def test_rule3_city_velocity_flags_later_tx(spark):
     assert rows[0]["event_dt"] == TX(11, 30, 0)
     assert rows[0]["passport"] == "2222 222222"
     assert rows[0]["event_type"] == "3"
+
+
+def _warehouse_with_edges(spark):
+    """The fixture plus the corners where one fused plan could part
+    from the three rules built alone."""
+    tx, cards, accounts, clients, terminals, blacklist = _warehouse(spark)
+    clients = clients.unionByName(spark.createDataFrame(
+        [
+            ("C4", "Orlov", "Oleg", "O", dt.date(1985, 4, 4),
+             "4444 444444", dt.date(2019, 1, 1), "+7 444"),   # expired passport
+            ("C5", "Kozlov", "K", "K", dt.date(1975, 5, 5),
+             "5555 555555", None, "+7 555"),                  # NULL passport_valid_to
+        ],
+        clients.schema,
+    ))
+    accounts = accounts.unionByName(spark.createDataFrame(
+        [
+            ("ACC4", dt.date(2020, 1, 1), "C4"),  # expired contract
+            ("ACC5", None, "C5"),                 # NULL valid_to
+        ],
+        accounts.schema,
+    ))
+    cards = cards.unionByName(spark.createDataFrame(
+        [
+            ("4444 5555 6666 7777", "ACC4"),
+            # trims to card 1111's key: every card-1111 row fans out to C1 and C5
+            ("1111 2222 3333 4444  ", "ACC5"),
+        ],
+        cards.schema,
+    ))
+    one = Decimal("1.00000")
+    tx = tx.unionByName(spark.createDataFrame(
+        [
+            # card 4444 (C4): T6 trips rules 1+2, T7 (a hop) rules 1+2+3
+            ("T6", TX(13, 0, 0), one, "4444 5555 6666 7777", "PAYMENT", "SUCCESS", "A1"),
+            ("T7", TX(13, 20, 0), one, "4444 5555 6666 7777", "PAYMENT", "SUCCESS", "A2"),
+            # a hop on the fanned-out card 1111: flagged on both star rows
+            ("T8", TX(14, 0, 0), one, "1111 2222 3333 4444", "PAYMENT", "SUCCESS", "A1"),
+            ("T9", TX(14, 30, 0), one, "1111 2222 3333 4444", "PAYMENT", "SUCCESS", "A2"),
+            # an unknown terminal (NULL city) before Kazan: no hop
+            ("T10", TX(15, 0, 0), one, "9999 0000 1111 2222", "PAYMENT", "SUCCESS", "ZZ"),
+            ("T11", TX(15, 10, 0), one, "9999 0000 1111 2222", "PAYMENT", "SUCCESS", "A2"),
+            # equal times on card 5555: the id orders T12 (Moscow) before
+            # T13 (Kazan), so T13 hops and T14 (Kazan again) does not
+            ("T13", TX(16, 0, 0), one, "5555 6666 7777 8888", "PAYMENT", "SUCCESS", "A2"),
+            ("T12", TX(16, 0, 0), one, "5555 6666 7777 8888", "PAYMENT", "SUCCESS", "A1"),
+            ("T14", TX(16, 30, 0), one, "5555 6666 7777 8888", "PAYMENT", "SUCCESS", "A2"),
+        ],
+        tx.schema,
+    ))
+    return tx, cards, accounts, clients, terminals, blacklist
+
+
+def test_fraud_events_equal_the_three_rules(spark):
+    tx, cards, accounts, clients, terminals, blacklist = _warehouse_with_edges(spark)
+    fused = fraud_events(tx, cards, accounts, clients, terminals, blacklist)
+    union = (
+        fraud_type1(tx, cards, accounts, clients, blacklist)
+        .unionByName(fraud_type2(tx, cards, accounts, clients))
+        .unionByName(fraud_type3(tx, cards, accounts, clients, terminals))
+    )
+    assert fused.columns == union.columns
+    events = Counter(map(tuple, fused.collect()))
+    assert events == Counter(map(tuple, union.collect()))
+
+    def types_at(hour, minute):
+        return sorted(r[4] for r in events.elements() if r[0] == TX(hour, minute, 0))
+
+    assert types_at(13, 0) == ["1", "2"]
+    assert types_at(13, 20) == ["1", "2", "3"]  # one row, three rules, three events
+    assert types_at(14, 30) == ["1", "3", "3"]  # the C1 and C5 star rows; C1 expired
+    assert types_at(15, 10) == ["2"]            # NULL previous city: no hop
+    assert types_at(16, 0) == ["1", "1", "3"]   # blacklisted C2; T13 hops
+    assert types_at(16, 30) == ["1"]

@@ -153,6 +153,9 @@ def test_three_day_replay(spark, tmp_path, bank):
 
     # facts accumulate 10/day; blacklist 2 → 4 → 6 (anti-join dedup)
     assert wh.read("transactions").count() == 30
+    # trans_id stays unique (and non-NULL) in the fact: rule 3 flags rows
+    # in place, which matches the reference's IN only under this invariant
+    assert wh.read("transactions").selectExpr("count(DISTINCT trans_id)").first()[0] == 30
     assert [r.fact_appended["blacklist"] for r in reports] == [2, 2, 2]
     assert wh.read("blacklist").count() == 6
 
@@ -216,15 +219,17 @@ def test_backlog_single_run_processes_all_days(spark, tmp_path, bank):
 #: watermark, a count per fact, a groupBy of the fraud events and a
 #: schema-inference job per table read
 PROBE_JOBS_PER_DAY = 113
-#: the same day completed 67 tasks (local[4]) while the XLSX rows and
-#: every watermark seed entered through createDataFrame(list) — one
-#: Python-worker task per partition — and the watermarks took four
-#: chained shuffles; as LocalRelations with one upsert it takes 52
-MAX_TASKS_PER_DAY = 59
-#: jobs the same day costs (local[4]) with one action per output: a
+#: tasks the same day completes (local[4]). It took 67 while the XLSX
+#: rows and every watermark seed entered through createDataFrame(list)
+#: — one Python-worker task per partition — and the watermarks took
+#: four chained shuffles; 52 as LocalRelations with one upsert, while
+#: the three fraud rules were three plans over five fact scans
+MAX_TASKS_PER_DAY = 44
+#: jobs the same day costs (local[4]) with one action per output and
+#: one plan for the three fraud rules (33 while they were three): a
 #: count below it means jobs ran outside the probe's job group — a
 #: write thread that did not inherit the caller's local properties
-MIN_JOBS_PER_DAY = 33
+MIN_JOBS_PER_DAY = 30
 
 
 def test_run_day_job_count(spark, tmp_path, bank):
@@ -423,19 +428,17 @@ def test_fact_anti_join_prunes_fact_days(spark, tmp_path, bank):
     assert report.fact_appended["transactions"] == 10
 
 
-def test_run_day_writes_no_python_rdd(spark, tmp_path, bank):
-    """Driver-side rows (the XLSX snapshots, the watermark seed, the
-    empty tables of the bootstrap) enter as LocalRelations: no plan
-    run_day writes, on the bootstrap day or after it, scans a Python
-    RDD — no stage of the run waits on a Python worker."""
+def _written_plans(spark, tmp_path, bank) -> list[tuple[str, object]]:
+    """``(table, QueryExecution)`` of every write of a bootstrap day and
+    the non-bootstrap day after it, in write order."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     drop = str(tmp_path / "drop")
     os.makedirs(drop)
-    plans: list[tuple[str, str]] = []
+    plans: list[tuple[str, object]] = []
 
     def spying(write):
         def spy(name, df, **kwargs):
-            plans.append((name, df._jdf.queryExecution().toString()))
+            plans.append((name, df._jdf.queryExecution()))
             write(name, df, **kwargs)
         return spy
 
@@ -446,10 +449,33 @@ def test_run_day_writes_no_python_rdd(spark, tmp_path, bank):
             spark, wh, drop_dir=drop, bank_sources=bank,
             run_ts=dt.datetime.combine(DAYS[i], dt.time(23, 55)), day=DAYS[i],
         )
+    return plans
+
+
+def test_run_day_writes_no_python_rdd(spark, tmp_path, bank):
+    """Driver-side rows (the XLSX snapshots, the watermark seed, the
+    empty tables of the bootstrap) enter as LocalRelations: no plan
+    run_day writes, on the bootstrap day or after it, scans a Python
+    RDD — no stage of the run waits on a Python worker."""
+    plans = _written_plans(spark, tmp_path, bank)
     written = sorted({name for name, _ in plans})
     assert written == sorted(schemas.WAREHOUSE), written
-    for name, plan in plans:
+    for name, qe in plans:
+        plan = qe.toString()
         assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, (name, plan)
+
+
+def test_fraud_report_scans_transactions_once(spark, tmp_path, bank):
+    """The three fraud rules share one plan: a non-bootstrap day's
+    rep_fraud write reads the transactions once — the live fact and
+    the day's staged increment, one relation each — and runs rule 3's
+    lag window once."""
+    plans = _written_plans(spark, tmp_path, bank)
+    plan = [qe for name, qe in plans if name == "rep_fraud"][-1].optimizedPlan().toString()
+    nodes = [line.lstrip(" :+-") for line in plan.splitlines()]
+    tx_relations = [n for n in nodes if n.startswith("Relation ") and "trans_id#" in n]
+    assert len(tx_relations) == 2, plan
+    assert len([n for n in nodes if n.startswith("Window ")]) == 1, plan
 
 
 def _bank_at(spark, clients_ts, accounts_ts, cards_ts):
