@@ -12,8 +12,8 @@ composable, idiomatic Spark DataFrame operators, designed for
                    dedup (exact/MinHash/SimHash), similarity search,
                    text analysis, multimodal column plumbing.
 - ``functions``  — scalar helpers mirroring the reference's SQL
-                   function surface (null-safe diff, fio concat,
-                   day truncation, serial dates, ...).
+                   function surface (comma decimals, serial dates,
+                   card normalization, hours-between, ...).
 - ``plans``      — the three fraud report rules and star-join plans.
 - ``streaming``  — Structured Streaming equivalents of the daily
                    batch cycle (file source, dedup with watermark,

@@ -1,8 +1,6 @@
 from .scalars import (
     comma_decimal,
-    day_of,
     excel_serial_to_date,
-    fio,
     filename_business_date,
     hours_between,
     normalize_card_num,
@@ -11,9 +9,7 @@ from .scalars import (
 
 __all__ = [
     "comma_decimal",
-    "day_of",
     "excel_serial_to_date",
-    "fio",
     "filename_business_date",
     "hours_between",
     "normalize_card_num",

@@ -51,18 +51,6 @@ def filename_business_date(path_col: Column | str, pattern: str = r"_(\d{8})\.")
     return F.to_date(F.regexp_extract(c, pattern, 1), "ddMMyyyy")
 
 
-def fio(last: Column | str, first: Column | str, patronymic: Column | str) -> Column:
-    """Full-name concatenation ``last || ' ' || first || ' ' || patronymic``.
-
-    Reference D3 (main.py:401,422,452). Deliberately ``concat`` (NULL
-    propagating), not ``concat_ws``: a NULL patronymic nulls the whole
-    fio in the reference's ``||`` semantics — preserved and tested
-    (SURVEY §7 known-hard list).
-    """
-    cols = [F.col(c) if isinstance(c, str) else c for c in (last, first, patronymic)]
-    return F.concat(cols[0], F.lit(" "), cols[1], F.lit(" "), cols[2])
-
-
 def trim_key(col: Column | str) -> Column:
     """BPCHAR blank-pad normalization for join keys (D4, main.py:407)."""
     c = F.col(col) if isinstance(col, str) else col
@@ -79,13 +67,6 @@ def normalize_card_num(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.translate(c, " ", "")
-
-
-def day_of(ts: Column | str) -> Column:
-    """Truncate a timestamp to its date (D6: the reference round-trips
-    through to_char/to_date, main.py:404)."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.to_date(c)
 
 
 def hours_between(ts_a: Column | str, ts_b: Column | str) -> Column:

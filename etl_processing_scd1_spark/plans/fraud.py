@@ -69,18 +69,14 @@ EXPIRED_CONTRACT = "da.valid_to < ft.trans_date"
 #: space-stripped key of rule 3 (C7, main.py:458), ties on the time
 #: broken by id
 _PREV_ON_CARD = "OVER (PARTITION BY translate(card_num, ' ', '') ORDER BY trans_date, trans_id)"
-
-
-def _city_hop(max_gap_hours: float) -> str:
-    """Rule 3 over the lag columns: the LATER transaction of a card
-    seen in two cities within ``max_gap_hours`` (H3, main.py:437-467;
-    E1/E2; hours as ``extract(epoch …)/3600``, D8). A NULL id matches
-    no ``IN``, so it is never flagged."""
-    return (
-        "trans_id IS NOT NULL AND prev_city IS NOT NULL AND city <> prev_city"
-        " AND (unix_timestamp(trans_date) - unix_timestamp(prev_date)) / 3600D"
-        f" < {float(max_gap_hours)!r}D"
-    )
+#: rule 3 over the lag columns: the LATER transaction of a card seen
+#: in two cities within one hour (H3, main.py:437-467; E1/E2; hours as
+#: ``extract(epoch …)/3600``, D8). A NULL id matches no ``IN``, so it
+#: is never flagged
+CITY_HOP = (
+    "trans_id IS NOT NULL AND prev_city IS NOT NULL AND city <> prev_city"
+    " AND (unix_timestamp(trans_date) - unix_timestamp(prev_date)) / 3600D < 1.0D"
+)
 
 
 def _report(event_type: str) -> list[str]:
@@ -89,11 +85,14 @@ def _report(event_type: str) -> list[str]:
     return [
         "ft.trans_date AS event_dt",
         "dcl.passport_num AS passport",
-        # ``||`` semantics (D3): a NULL patronymic nulls the fio
+        # ``last || ' ' || first || ' ' || patronymic`` (D3,
+        # main.py:401,422,452): ``concat``, not ``concat_ws``, so a NULL
+        # patronymic nulls the whole fio, as in the reference
         "concat(dcl.last_name, ' ', dcl.first_name, ' ', dcl.patronymic) AS fio",
         "dcl.phone AS phone",
         f"{event_type} AS event_type",
-        # the transaction's day (D6, main.py:404)
+        # the transaction's day: the reference round-trips through
+        # to_char/to_date (D6, main.py:404)
         "CAST(to_date(ft.trans_date) AS TIMESTAMP) AS report_dt",
     ]
 
@@ -156,14 +155,13 @@ def fraud_events(
     clients: DataFrame,
     terminals: DataFrame,
     blacklist: DataFrame,
-    max_gap_hours: float = 1.0,
 ) -> DataFrame:
     """Rules 1-3 in one plan: the same event multiset as the union of
     ``fraud_type1``, ``fraud_type2`` and ``fraud_type3`` while
     ``trans_id`` is unique in the fact (module docstring), from one
     scan of the fact."""
     hops = _with_prev_city(transactions, terminals).selectExpr(
-        "trans_date", "card_num", f"{_city_hop(max_gap_hours)} AS hop"
+        "trans_date", "card_num", f"{CITY_HOP} AS hop"
     )
     flagged = _with_blacklist(star_denormalize(hops, cards, accounts, clients), blacklist)
     rules = {
@@ -222,13 +220,12 @@ def fraud_type3(
     accounts: DataFrame,
     clients: DataFrame,
     terminals: DataFrame,
-    max_gap_hours: float = 1.0,
 ) -> DataFrame:
-    """Rule 3 alone — operations in different cities within
-    ``max_gap_hours``, in the reference's CTE→IN shape: the hopping
+    """Rule 3 alone — operations in different cities within one hour
+    (:data:`CITY_HOP`), in the reference's CTE→IN shape: the hopping
     transactions' ids, then a semi join of the star join on them
     (broadcast: flagged ids are rare by construction)."""
-    hopping = _with_prev_city(transactions, terminals).filter(_city_hop(max_gap_hours))
+    hopping = _with_prev_city(transactions, terminals).filter(CITY_HOP)
     return (
         star_denormalize(transactions, cards, accounts, clients)
         .join(
