@@ -184,8 +184,10 @@ TABLES = [
 ]
 
 
-def run_bench(spark, sf_dir: str, runs: int) -> dict[str, dict[str, float]]:
-    """Per-query best-of-``runs`` wall seconds for the headline set at
+def run_bench(
+    spark, sf_dir: str, runs: int, names: list[str] = HEADLINE
+) -> dict[str, dict[str, float]]:
+    """Per-query best-of-``runs`` wall seconds for the ``names`` set at
     ``sf_dir``, measured in BOTH windows every round (the r5→r6
     trendline broke when the timed window silently changed —
     BASELINE.md:31-36 — so both are now first-class):
@@ -198,7 +200,7 @@ def run_bench(spark, sf_dir: str, runs: int) -> dict[str, dict[str, float]]:
 
     Best-of is selected on the TOTAL; exec is that same run's
     execute slice (windows stay mutually consistent). Shared by the
-    CLI entry below and tools/bench_scaling."""
+    CLI entry below, tools/bench_scaling and tools/bench_subset."""
     from etl_processing_scd1_spark.operators.dedup import release_cached
     from etl_processing_scd1_spark.registry import EXTRA_QUERIES, QUERIES
 
@@ -209,7 +211,7 @@ def run_bench(spark, sf_dir: str, runs: int) -> dict[str, dict[str, float]]:
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
 
     timings: dict[str, dict[str, float]] = {}
-    for name in HEADLINE:
+    for name in names:
         # label jobs per query (guide §1.5) so UI/eventlog stage
         # attribution is readable; thread-local, no timing effect
         spark.sparkContext.setJobDescription(f"bench:{name}")

@@ -14,6 +14,16 @@ bounds batch size); dropDuplicates state is bounded by the watermark
 horizon; the SCD1 foreachBatch sink reuses the batch merge operator
 so batch and streaming share one code path (and one test surface) —
 the Kappa-style design Spark's availableNow trigger exists for.
+
+Runner contract: every ``streaming_*_sink`` starts its query through
+:func:`_drain`. The query drains what the source holds at start
+under ``trigger(availableNow=True)`` and stops; each micro-batch goes
+to the sink's per-batch function via ``foreachBatch``. A micro-batch
+with no rows is skipped before the sink sees it (a header-only drop
+file arrives as one), so no sink merges, appends or commits a table
+version for it. ``foreachBatch`` is at-least-once: a batch retried
+after a failure runs again, and each sink states how its writes stay
+idempotent under that retry.
 """
 
 from __future__ import annotations
@@ -27,6 +37,29 @@ from pyspark.sql.streaming import StreamingQuery
 from .. import schemas
 from ..functions import comma_decimal
 from ..operators import scd1_merge
+from ..session import local_frame
+
+
+def _drain(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    mode: str,
+) -> StreamingQuery:
+    """Start ``stream`` into ``fn`` under the module's runner contract;
+    ``mode`` is the sink's output mode ("update" or "append")."""
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        if batch.take(1):
+            fn(batch, batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_transactions_source(
@@ -106,7 +139,6 @@ def streaming_scd1_sink(
     key: str,
     compare_cols: list[str],
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """SCD1 merge as a foreachBatch sink: each micro-batch is a
     staging increment merged with the batch operator (delete_missing
@@ -121,14 +153,7 @@ def streaming_scd1_sink(
             ).merged
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, merge_batch, checkpoint_dir, "update")
 
 
 def streaming_enrich(
@@ -230,13 +255,12 @@ def streaming_sketch_sink(
     read_registers: Callable[[], DataFrame],
     write_registers: Callable[[DataFrame], None],
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Incremental distinct-count maintenance: each micro-batch's HLL
     registers (operators.sketches.hll_registers, ≤256 rows) merge
     into the stored register table by per-bucket max — O(batch) work
     per trigger, never a rescan of history, and the merge is
-    idempotent so at-least-once redelivery cannot inflate the count
+    idempotent so a retried batch cannot inflate the count
     (contrast a stored exact distinct, which must either rescan or
     keep the full key set in state)."""
     from ..operators.sketches import hll_merge, hll_registers
@@ -244,14 +268,7 @@ def streaming_sketch_sink(
     def merge_batch(batch: DataFrame, _batch_id: int) -> None:
         write_registers(hll_merge(read_registers(), hll_registers(batch, key_col)))
 
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, merge_batch, checkpoint_dir, "update")
 
 
 def streaming_near_dedup_sink(
@@ -261,7 +278,6 @@ def streaming_near_dedup_sink(
     id_col: str,
     text_col: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     min_jaccard_pct: int = 50,
 ) -> StreamingQuery:
     """Continuous corpus admission with near-duplicate screening: the
@@ -283,8 +299,6 @@ def streaming_near_dedup_sink(
 
     def screen_batch(batch: DataFrame, _batch_id: int) -> None:
         batch = batch.select(id_col, text_col)
-        if batch.isEmpty():
-            return
         corpus = read_corpus()
         with consuming(
             near_dedup_incremental(
@@ -325,14 +339,7 @@ def streaming_near_dedup_sink(
             clean = batch.join(F.broadcast(dup_ids), id_col, "left_anti")
             admit(clean, dups)
 
-    writer = (
-        stream.writeStream.foreachBatch(screen_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, screen_batch, checkpoint_dir, "update")
 
 
 def streaming_scd2_sink(
@@ -343,7 +350,6 @@ def streaming_scd2_sink(
     compare_cols: list[str],
     checkpoint_dir: str,
     effective_ts_fn: Callable[[DataFrame, int], "object"],
-    available_now: bool = True,
 ) -> StreamingQuery:
     """SCD TYPE 2 history accrual as a foreachBatch sink — each
     micro-batch closes changed versions at the batch's effective
@@ -371,14 +377,7 @@ def streaming_scd2_sink(
             if res.cached is not None:
                 res.cached.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, merge_batch, checkpoint_dir, "update")
 
 
 def streaming_ivfpq_sink(
@@ -390,7 +389,6 @@ def streaming_ivfpq_sink(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     m: int = 4,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Keep an IVF-PQ index FRESH as vectors stream in: each
     micro-batch is centroid-assigned, residual-coded against the
@@ -416,14 +414,11 @@ def streaming_ivfpq_sink(
         F.array(*[F.lit(cid) for cid, _v in crows]),
         F.array(*[F.array(*[F.lit(float(x)) for x in v]) for _cid, v in crows]),
     )
-    cb_rows = codebook.select(id_col, "res").collect()
+    cb_rows = [(r[0], list(r[1])) for r in codebook.select(id_col, "res").collect()]
 
     def encode_batch(batch: DataFrame, _bid: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        cb = spark.createDataFrame(
-            [(r[0], list(r[1])) for r in cb_rows], f"{id_col} long, res array<double>"
+        cb = local_frame(
+            batch.sparkSession, cb_rows, f"{id_col} long, res array<double>"
         )
         assigned = assign_centroid(batch, centroids, id_col=id_col, vec_col=vec_col)
         res = assigned.select(
@@ -441,14 +436,7 @@ def streaming_ivfpq_sink(
         )
         write_codes(codes)
 
-    writer = (
-        stream.writeStream.foreachBatch(encode_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, encode_batch, checkpoint_dir, "append")
 
 
 def streaming_postings_sink(
@@ -458,7 +446,6 @@ def streaming_postings_sink(
     id_col: str = "doc_id",
     text_col: str = "text",
     split_pattern: str = r"\s+",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Keep a POSITIONAL POSTINGS INDEX fresh as documents stream in —
     the phrase-search twin of the IVF-PQ maintenance sink. Postings
@@ -481,20 +468,11 @@ def streaming_postings_sink(
     from ..operators.text import build_postings
 
     def append_postings(batch: DataFrame, _bid: int) -> None:
-        if not batch.take(1):
-            return
         write_postings(
             build_postings(batch, id_col, text_col, split_pattern=split_pattern)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(append_postings)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, append_postings, checkpoint_dir, "append")
 
 
 def streaming_winnow_index_sink(
@@ -505,7 +483,6 @@ def streaming_winnow_index_sink(
     text_col: str = "text",
     k: int = 8,
     window: int = 4,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Keep a WINNOWING FINGERPRINT INDEX fresh as documents stream
     in — the dedup twin of the phrase-search postings sink.
@@ -529,20 +506,11 @@ def streaming_winnow_index_sink(
     from ..operators.text import winnow_fingerprint_rows
 
     def append_rows(batch: DataFrame, _bid: int) -> None:
-        if not batch.take(1):
-            return
         write_rows(
             winnow_fingerprint_rows(batch, id_col, text_col, k=k, window=window)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(append_rows)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, append_rows, checkpoint_dir, "append")
 
 
 def streaming_bpe_tokenize_sink(
@@ -552,7 +520,6 @@ def streaming_bpe_tokenize_sink(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Apply-side BPE token counting over a document stream under a
     FROZEN trained vocabulary — the same freeze contract as the
@@ -580,10 +547,7 @@ def streaming_bpe_tokenize_sink(
     vrows = [(r[0], int(r[1])) for r in vocab_counts.collect()]
 
     def tokenize_batch(batch: DataFrame, _bid: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        counts = spark.createDataFrame(vrows, "word string, __ntok__ long")
+        counts = local_frame(batch.sparkSession, vrows, "word string, __ntok__ long")
         words = batch.select(
             F.col(id_col),
             F.explode(
@@ -602,14 +566,7 @@ def streaming_bpe_tokenize_sink(
         )
         write_counts(out)
 
-    writer = (
-        stream.writeStream.foreachBatch(tokenize_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, tokenize_batch, checkpoint_dir, "append")
 
 
 def streaming_nb_counts_sink(
@@ -620,7 +577,6 @@ def streaming_nb_counts_sink(
     id_col: str = "doc_id",
     text_col: str = "text",
     class_col: str = "lang",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Keep a Naive Bayes MODEL fresh as labeled documents stream in.
     The model is its sufficient statistics — (class, term, c) token
@@ -640,20 +596,11 @@ def streaming_nb_counts_sink(
     from ..operators.text import nb_token_counts
 
     def append_stats(batch: DataFrame, _bid: int) -> None:
-        if not batch.take(1):
-            return
         counts, priors = nb_token_counts(batch, id_col, text_col, class_col)
         write_counts(counts)
         write_priors(priors)
 
-    writer = (
-        stream.writeStream.foreachBatch(append_stats)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, append_stats, checkpoint_dir, "append")
 
 
 def streaming_dsir_counts_sink(
@@ -664,7 +611,6 @@ def streaming_dsir_counts_sink(
     text_col: str = "text",
     target_col: str = "lang",
     target_value: str = "en",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Keep a DSIR importance model fresh as documents stream in. The
     model's sufficient statistics are per-bucket SUMS — (bucket, ct,
@@ -681,22 +627,13 @@ def streaming_dsir_counts_sink(
     from ..operators.dsir import dsir_bucket_counts
 
     def append_stats(batch: DataFrame, _bid: int) -> None:
-        if not batch.take(1):
-            return
         write_counts(
             dsir_bucket_counts(
                 batch, id_col, text_col, F.col(target_col) == target_value
             )
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(append_stats)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, append_stats, checkpoint_dir, "append")
 
 
 def streaming_fs_linkage_sink(
@@ -709,7 +646,6 @@ def streaming_fs_linkage_sink(
     match_threshold_milli: int,
     possible_threshold_milli: int,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuous entity resolution: the streaming form of
     ``record_linkage_fs``, shaped like the near-dedup admission sink.
@@ -730,8 +666,6 @@ def streaming_fs_linkage_sink(
     from ..operators.linkage import fs_score_pairs
 
     def link_batch(batch: DataFrame, _batch_id: int) -> None:
-        if not batch.take(1):
-            return
         pairs = candidates(batch, read_reference())
         emit_links(
             fs_score_pairs(
@@ -742,14 +676,7 @@ def streaming_fs_linkage_sink(
         )
         append_reference(batch)
 
-    writer = (
-        stream.writeStream.foreachBatch(link_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, link_batch, checkpoint_dir, "update")
 
 
 def streaming_cooccurrence_sink(
@@ -760,7 +687,6 @@ def streaming_cooccurrence_sink(
     checkpoint_dir: str,
     basket_col: str = "basket_id",
     item_col: str = "item",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Keep market-basket co-occurrence counts fresh as basket
     memberships stream in — the streaming form of the
@@ -787,8 +713,6 @@ def streaming_cooccurrence_sink(
     from ..operators.mining import incremental_cooccurrence_counts
 
     def count_batch(batch: DataFrame, _bid: int) -> None:
-        if not batch.take(1):
-            return
         b = batch.select(basket_col, item_col).distinct()
         new = b.join(read_seen(), [basket_col, item_col], "left_anti").persist()
         try:
@@ -803,14 +727,7 @@ def streaming_cooccurrence_sink(
         finally:
             new.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(count_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, count_batch, checkpoint_dir, "update")
 
 
 def streaming_skyline_sink(
@@ -821,7 +738,6 @@ def streaming_skyline_sink(
     group_col: str,
     min_col: str,
     max_col: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain a per-group 2-D Pareto skyline as points stream in —
     exact incremental view maintenance, not an approximation:
@@ -846,8 +762,6 @@ def streaming_skyline_sink(
     from ..operators.mining import pareto_skyline_2d
 
     def fold_batch(batch: DataFrame, _bid: int) -> None:
-        if not batch.take(1):
-            return
         # full-schema union: pareto_skyline_2d passes non-dimension
         # columns (ids, payloads) through, so the maintained relation
         # keeps them. Rows are multiset semantics — a source that can
@@ -858,14 +772,7 @@ def streaming_skyline_sink(
             pareto_skyline_2d(candidates, group_col, min_col, max_col)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, fold_batch, checkpoint_dir, "update")
 
 
 def streaming_ols_sink(
@@ -875,7 +782,6 @@ def streaming_ols_sink(
     group_col: str,
     x_col: str,
     y_col: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Keep a per-group OLS regression model fresh as rows stream in.
     The model is its sufficient statistics — (group, n, Σx, Σy, Σxx,
@@ -891,7 +797,7 @@ def streaming_ols_sink(
 
     Write contract (r7 advisor): ``write_stats(stats, batch_id)``
     receives the micro-batch id so the caller can make the append
-    idempotent under foreachBatch's at-least-once retry — write each
+    idempotent under retry — write each
     batch's partials to a per-batch-id slot (overwrite on retry,
     e.g. ``.../batch=<id>``), never a blind append: a retried batch
     that blind-appends double-counts its sums and silently corrupts
@@ -900,18 +806,9 @@ def streaming_ols_sink(
     from ..operators.stats import ols_stats
 
     def append_stats(batch: DataFrame, bid: int) -> None:
-        if not batch.take(1):
-            return
         write_stats(ols_stats(batch, group_col, x_col, y_col), bid)
 
-    writer = (
-        stream.writeStream.foreachBatch(append_stats)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, append_stats, checkpoint_dir, "append")
 
 
 def streaming_components_sink(
@@ -919,7 +816,6 @@ def streaming_components_sink(
     read_star: Callable[[], DataFrame],
     write_star: Callable[[DataFrame], None],
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain connected components as EDGES stream in — exact
     incremental view maintenance: a component's star (every node →
@@ -945,8 +841,6 @@ def streaming_components_sink(
     from ..operators.graph import connected_components_star
 
     def fold_batch(batch: DataFrame, _bid: int) -> None:
-        if not batch.take(1):
-            return
         prior = read_star().select("id_a", "id_b")
         cand = prior.unionByName(batch.select("id_a", "id_b"))
         nodes = (
@@ -962,14 +856,7 @@ def streaming_components_sink(
             )
             write_star(star)
 
-    writer = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, fold_batch, checkpoint_dir, "update")
 
 
 def streaming_delta_sink(
@@ -978,14 +865,13 @@ def streaming_delta_sink(
     checkpoint_dir: str,
     app_id: str | None = None,
     partition_by: list[str] | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Exactly-once micro-batch appends into a Delta table via the
     spec's ``txn`` action (``sources/delta.py``): every commit
     records (appId, batch_id), and the sink SKIPS any micro-batch
     whose id is ≤ the table's committed watermark for this appId —
-    so foreachBatch's at-least-once redelivery (checkpoint lost,
-    batch retried) cannot double-append rows. This is the same
+    so a replayed batch (checkpoint lost, batch retried) cannot
+    double-append rows. This is the same
     mechanism real Delta streaming sinks use, and unlike the
     versioned-slot contract of the OLS/skyline sinks it needs no
     caller cooperation: idempotence lives in the table's own log.
@@ -1000,8 +886,6 @@ def streaming_delta_sink(
     app = app_id or f"stream-{checkpoint_dir}"
 
     def append_batch(batch: DataFrame, bid: int) -> None:
-        if not batch.take(1):
-            return
         if bid <= delta_last_txn_version(batch.sparkSession, table_path, app):
             return  # replayed micro-batch: already in the log
         write_delta_table(
@@ -1012,14 +896,7 @@ def streaming_delta_sink(
             txn=(app, bid),
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, append_batch, checkpoint_dir, "append")
 
 
 def streaming_iceberg_sink(
@@ -1028,7 +905,6 @@ def streaming_iceberg_sink(
     checkpoint_dir: str,
     app_id: str | None = None,
     partition_by: list[str] | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Exactly-once micro-batch appends into an Iceberg table
     (``sources/iceberg.py``), the lakehouse twin of
@@ -1037,8 +913,8 @@ def streaming_iceberg_sink(
     — the spec's free-form summary map, the same slot Flink's Iceberg
     sink uses for its checkpoint id — and the sink SKIPS any
     micro-batch whose id is ≤ the table's committed watermark for
-    this app (``iceberg_last_batch_id``). foreachBatch's
-    at-least-once redelivery therefore cannot double-append:
+    this app (``iceberg_last_batch_id``). A replayed batch
+    therefore cannot double-append:
     idempotence lives in the table's own metadata. Concurrent-writer
     races surface as ``IcebergConcurrentCommit`` from the
     put-if-absent commit; Structured Streaming retries the batch and
@@ -1048,8 +924,6 @@ def streaming_iceberg_sink(
     app = app_id or f"stream-{checkpoint_dir}"
 
     def append_batch(batch: DataFrame, bid: int) -> None:
-        if not batch.take(1):
-            return
         if bid <= iceberg_last_batch_id(table_path, app):
             return  # replayed micro-batch: already committed
         write_iceberg_table(
@@ -1060,11 +934,4 @@ def streaming_iceberg_sink(
             extra_summary={"streaming-app-id": app, "streaming-batch-id": bid},
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, append_batch, checkpoint_dir, "append")

@@ -674,6 +674,10 @@ class TestDeltaLogDataSource:
             while time.time() < deadline and \
                     sum(len(ks) for _, ks in batches) < 10:
                 time.sleep(0.2)
+            # the rows arrive inside the last batch's function, before
+            # Spark commits that batch; stopping then would leave it
+            # uncommitted, and the restart below would replay it
+            q.processAllAvailable()
         finally:
             q.stop()
         fed = [(bid, ks) for bid, ks in batches if ks]

@@ -84,6 +84,9 @@ def test_streaming_scd1_foreachbatch(spark, tmp_path):
     drop = tmp_path / "drop3"
     drop.mkdir()
     _tx_file(str(drop / "transactions_a.txt"), [("T1", "2021-03-01 10:00:00", "1,00")])
+    # header only: under maxFilesPerTrigger=1 it reaches the sink as a
+    # 0-row micro-batch, which must not merge and rewrite the dim
+    _tx_file(str(drop / "transactions_b.txt"), [])
     dim_path = str(tmp_path / "dim")
 
     # dim state: card_num -> last oper_type/terminal, merged per micro-batch
@@ -95,19 +98,23 @@ def test_streaming_scd1_foreachbatch(spark, tmp_path):
     def read_dim():
         return spark.read.parquet(dim_path)
 
+    writes = []
+
     def write_dim(df):
+        writes.append(1)
         df.write.mode("overwrite").parquet(dim_path + ".next")
         spark.read.parquet(dim_path + ".next").write.mode("overwrite").parquet(dim_path)
 
-    stream = stream_transactions_source(spark, str(drop)).select(
-        "trans_id", "card_num", "terminal"
-    )
+    stream = stream_transactions_source(
+        spark, str(drop), max_files_per_trigger=1
+    ).select("trans_id", "card_num", "terminal")
     q = streaming_scd1_sink(
         stream, read_dim, write_dim, key="trans_id",
         compare_cols=["card_num", "terminal"],
         checkpoint_dir=str(tmp_path / "ck3"),
     )
     q.awaitTermination(120)
+    assert len(writes) == 1
     out = spark.read.parquet(dim_path).collect()
     assert [r["trans_id"] for r in out] == ["T1"]
     assert out[0]["update_dt"] is None

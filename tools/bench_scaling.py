@@ -46,14 +46,10 @@ def main() -> int:
     ap.add_argument("--queries", nargs="*", default=None)
     args = ap.parse_args()
 
-    import bench as bench_mod
-    from bench import run_bench
+    from bench import HEADLINE, run_bench
     from etl_processing_scd1_spark.session import get_spark
 
-    headline = args.queries or bench_mod.HEADLINE
-    if args.queries:
-        # run_bench iterates bench.HEADLINE — narrow it for a subset run
-        bench_mod.HEADLINE = args.queries
+    headline = args.queries or HEADLINE
 
     spark = get_spark("bench-scaling")
     spark.sparkContext.setLogLevel("ERROR")
@@ -65,7 +61,7 @@ def main() -> int:
             print(f"  sf{sf}: no data dir ({d}), skipping", file=sys.stderr)
             continue
         print(f"== sf{sf} ({d})", file=sys.stderr)
-        results[sf] = run_bench(spark, d, args.runs)
+        results[sf] = run_bench(spark, d, args.runs, headline)
         print(
             json.dumps(
                 {"sf": sf, "total": round(sum(t["total"] for t in results[sf].values()), 3)}

@@ -1,7 +1,7 @@
-"""Fresh-process subset bench: the exact bench.py methodology (engine
-session, warm-up read, clearCache per run, noop sink, best-of-N
-total/exec, release_cached) over just the named queries — for fast
-optimization A/Bs whose numbers are comparable to the full bench.
+"""Fresh-process subset bench: ``bench.run_bench`` (warm-up read,
+clearCache per run, noop sink, best-of-N total/exec, release_cached)
+over just the named queries — for fast optimization A/Bs whose
+numbers are comparable to the full bench.
 
 Usage: python tools/bench_subset.py [--sf DIR] [--runs N] q1 q2 ...
 """
@@ -12,7 +12,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,32 +27,13 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    from etl_processing_scd1_spark.operators.dedup import release_cached
-    from etl_processing_scd1_spark.registry import EXTRA_QUERIES, QUERIES
+    from bench import run_bench
     from etl_processing_scd1_spark.session import get_spark
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark("bench-subset", extra_conf=extra or None)
     spark.sparkContext.setLogLevel("ERROR")
-    allq = {**QUERIES, **EXTRA_QUERIES}
-    spark.read.parquet(os.path.join(args.sf, "lineitem.parquet")).count()
-
-    out = {}
-    for name in args.names:
-        best_total, best_exec = float("inf"), float("inf")
-        for _ in range(args.runs):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = allq[name](spark, args.sf)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            if t2 - t0 < best_total:
-                best_total, best_exec = t2 - t0, t2 - t1
-            release_cached(df)
-        out[name] = {"total": round(best_total, 3), "exec": round(best_exec, 3)}
-        print(f"  {name}: total {best_total:.3f}s exec {best_exec:.3f}s",
-              file=sys.stderr)
+    out = run_bench(spark, args.sf, args.runs, args.names)
     print(json.dumps(out))
     return 0
 
