@@ -106,16 +106,6 @@ def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame
     )
 
 
-def char_shingles(df: DataFrame, text_col: str, k: int = 8) -> DataFrame:
-    """Explode a text column into its distinct character k-grams
-    (``doc shingle`` relation). Used where a row-per-shingle relation
-    is genuinely needed; the dedup pipeline itself keeps shingles as
-    per-row ARRAYS (shingle_sets) to avoid the explode shuffle."""
-    return df.select(
-        "*", F.explode(shingle_set_col(text_col, k)).alias("shingle")
-    )
-
-
 def shingle_set_col(text_col: str, k: int = 8):
     """array<string> of distinct char k-grams — a narrow expression,
     no explode, no shuffle; the whole MinHash pipeline runs on it."""

@@ -1,7 +1,6 @@
 from .readers import (
     read_blacklist_excel,
     read_jdbc_table,
-    read_parquet_table,
     read_transactions_csv,
     read_xlsx,
     scan_drop_dir,
@@ -10,7 +9,6 @@ from .readers import (
 __all__ = [
     "read_blacklist_excel",
     "read_jdbc_table",
-    "read_parquet_table",
     "read_transactions_csv",
     "read_xlsx",
     "scan_drop_dir",

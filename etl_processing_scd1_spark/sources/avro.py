@@ -371,21 +371,6 @@ def loads_avro(raw: bytes):
     return meta, records
 
 
-def dumps_avro(schema_json: str, records, *, codec: str = "deflate",
-               extra_meta: dict | None = None) -> bytes:
-    """:func:`dump_avro` into bytes (shard writers / tests)."""
-    import tempfile
-
-    with tempfile.NamedTemporaryFile(suffix=".avro", delete=False) as f:
-        tmp = f.name
-    try:
-        dump_avro(tmp, schema_json, records, codec=codec, extra_meta=extra_meta)
-        with open(tmp, "rb") as f:
-            return f.read()
-    finally:
-        os.unlink(tmp)
-
-
 def read_avro_header(path: str) -> dict:
     """Header metadata map only (schema probe) — reads the file's
     prefix, never the data blocks."""

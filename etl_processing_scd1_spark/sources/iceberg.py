@@ -46,6 +46,7 @@ the scan parallelizes as any parquet read.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
@@ -81,6 +82,9 @@ _ADDED, _EXISTING, _DELETED = 0, 1, 2
 
 #: spec-reserved metadata column names materialized by v3 rewrites
 _LINEAGE_COLS = ("_row_id", "_last_updated_sequence_number")
+#: the spec's fixed position-delete file columns (§Position Delete Files)
+_POS_DELETE_SCHEMA = "file_path string, pos long"
+_EPOCH_DAY = datetime.date(1970, 1, 1)
 
 
 class IcebergProtocolError(RuntimeError):
@@ -436,13 +440,9 @@ def _gate_retired_names(prev: dict, extra: list[str]) -> None:
     current_ids = set(_field_names_by_id(prev))
     retired = {
         n
-        for m in json.loads(
-            (prev.get("properties") or {}).get(
-                "schema.name-mapping.default", "[]"
-            )
-        )
-        if int(m["field-id"]) not in current_ids
-        for n in (m.get("names") or [])
+        for fid, ns in _mapping_names_by_id(prev).items()
+        if fid not in current_ids
+        for n in ns
     }
     clash = sorted(set(extra) & retired)
     if clash:
@@ -1164,15 +1164,13 @@ def _field_names_by_id(meta: dict) -> dict[int, str]:
 def _unify_renamed(df: DataFrame, cands: dict[str, list[str]]) -> DataFrame:
     """Fold historical column names into the CURRENT name: a renamed
     column's pre-rename files carry the old parquet name (rename is
-    metadata-only), so after a mergeSchema scan each row has exactly
-    one of the names non-null — coalesce resolves it declaratively,
-    one scan, no per-file branching."""
+    metadata-only), and the scan reads every name of the history
+    (:func:`_read_schema`), so each row has at most one of them
+    non-null — coalesce resolves it declaratively, one scan, no
+    per-file branching."""
     for name, ns in cands.items():
-        present = [n for n in ns if n in df.columns]
-        if present and present != [name]:
-            df = df.withColumn(
-                name, F.coalesce(*[F.col(n) for n in present])
-            )
+        if len(ns) > 1:
+            df = df.withColumn(name, F.coalesce(*[F.col(n) for n in ns]))
     return df
 
 
@@ -1188,6 +1186,20 @@ def _mapping_names_by_id(meta: dict) -> dict[int, list[str]]:
             )
         )
     }
+
+
+def _name_mapping(meta: dict | None, names: list[tuple[int, str]]) -> str:
+    """``meta``'s ``schema.name-mapping.default`` with each ``(field id,
+    name)`` of ``names`` added to that field's name history, as the
+    property's JSON."""
+    mapping = _mapping_names_by_id(meta or {})
+    for fid, name in names:
+        ns = mapping.setdefault(fid, [])
+        if name not in ns:
+            ns.append(name)
+    return json.dumps(
+        [{"field-id": fid, "names": ns} for fid, ns in sorted(mapping.items())]
+    )
 
 
 def _resolve_delete_file_columns(d_path: str, ids: list[int],
@@ -1248,20 +1260,20 @@ def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
                    deletes: list[dict], meta: dict) -> DataFrame:
     """Apply a snapshot's v2 merge-on-read delete files to a parquet
     scan carrying the ``__fp``/``__pos`` scan keys (a step of
-    :func:`_visible_scan`).
+    :func:`_visible_scan`). Every delete file is read with a schema
+    known on the driver, so no read infers one from footers.
 
     - POSITION deletes (content=1): distributed anti-join on
       ``(file_path, pos)`` against ``_metadata`` — the delete side is
       metadata-scale parquet, so Catalyst/AQE broadcasts it.
     - EQUALITY deletes (content=2): each data row gets its file's
-      data sequence number (broadcast join against the metadata-scale
-      (path, seq) list), then one anti-join per distinct
-      ``equality_ids`` set with null-safe key equality AND
-      ``data_seq < delete_seq`` — the strict bound is what lets a
-      key deleted in snapshot N and re-inserted in snapshot N+1
-      survive (spec §Scan Planning). The equality keys are join keys,
-      so this stays a broadcast HASH join with the seq bound as a
-      residual condition — never a cross product."""
+      data sequence number (a :func:`per_file` lookup), then one
+      anti-join per distinct ``equality_ids`` set with null-safe key
+      equality AND ``data_seq < delete_seq`` — the strict bound is
+      what lets a key deleted in snapshot N and re-inserted in
+      snapshot N+1 survive (spec §Scan Planning). The equality keys
+      are join keys, so this stays a broadcast HASH join with the seq
+      bound as a residual condition — never a cross product."""
     if not deletes:
         return df
     pos_paths = sorted(
@@ -1272,9 +1284,11 @@ def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
     if pos_paths or dvs:
         keys = None
         if pos_paths:
-            keys = spark.read.parquet(*pos_paths).select(
-                _norm_fp(F.col("file_path").cast("string")).alias("__del_fp"),
-                F.col("pos").cast("long").alias("__del_pos"),
+            keys = spark.read.schema(_POS_DELETE_SCHEMA).parquet(
+                *pos_paths
+            ).select(
+                _norm_fp(F.col("file_path")).alias("__del_fp"),
+                F.col("pos").alias("__del_pos"),
             )
         if dvs:
             from .puffin import decode_dv_blob, read_blob
@@ -1305,16 +1319,10 @@ def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
         )
     if eq_dels:
         by_id = _field_names_by_id(meta)
-        seq_df = local_frame(
-            spark, [(p, int(s)) for p, _part, s in files],
-            T.StructType([
-                T.StructField("__seq_fp", T.StringType(), False),
-                T.StructField("__data_seq", T.LongType(), False),
-            ]),
-        )
-        df = df.join(
-            F.broadcast(seq_df), F.col("__fp") == F.col("__seq_fp"), "left"
-        ).drop("__seq_fp")
+        schema = _spark_schema(meta)
+        df = df.withColumn("__data_seq", per_file(
+            {_norm_fp_py(p): int(s) for p, _part, s in files}
+        ))
         groups: dict[tuple, list[dict]] = {}
         for d in eq_dels:
             groups.setdefault(tuple(sorted(d["equality_ids"])), []).append(d)
@@ -1325,12 +1333,6 @@ def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
                     f"equality delete references unknown field ids {unknown}"
                 )
             cols = [by_id[i] for i in ids]
-            absent = [c for c in cols if c not in df.columns]
-            if absent:
-                raise IcebergProtocolError(
-                    f"equality delete on columns {absent} not present in "
-                    "the data files of this read"
-                )
             keys = None
             for d in sorted(ds, key=lambda d: (d["seq"], d["path"])):
                 # the delete file's key columns resolve through field
@@ -1339,7 +1341,9 @@ def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
                 sel = _resolve_delete_file_columns(
                     d["path"], list(ids), by_id, meta
                 )
-                k = spark.read.parquet(d["path"]).select(
+                k = spark.read.schema(T.StructType([
+                    T.StructField(sel[c], schema[c].dataType) for c in cols
+                ])).parquet(d["path"]).select(
                     *[F.col(sel[c]).alias(f"__eq_{c}") for c in cols]
                 ).withColumn("__eq_seq", F.lit(int(d["seq"])).cast("long"))
                 keys = k if keys is None else keys.unionByName(k)
@@ -1349,39 +1353,6 @@ def _apply_deletes(spark: SparkSession, df: DataFrame, files: list,
             df = df.join(F.broadcast(keys), cond, "left_anti")
         df = df.drop("__data_seq")
     return df
-
-
-def _merged_scan(spark: SparkSession, paths: list[str]):
-    """mergeSchema parquet scan that tolerates a MIX of field-id-
-    stamped files (engine-written) and id-less files (migrated via
-    add_files, pre-drop legacy): plain mergeSchema inference carries
-    ``parquet.field.id`` into the read schema, and Spark then refuses
-    every id-less file ("read schema expects field Ids"). Inference
-    runs once (footers only), the id metadata is stripped, and the
-    actual scan resolves columns BY NAME — correct for both kinds of
-    file, with rename history handled by ``_unify_renamed`` above
-    this."""
-    inferred = spark.read.option("mergeSchema", "true").parquet(
-        *paths
-    ).schema
-
-    def strip(dt: T.DataType) -> T.DataType:
-        # struct MEMBERS carry parquet.field.id metadata too (nested
-        # footer stamping) — a top-level-only strip leaves the read
-        # schema "expecting field Ids" whenever merge order starts
-        # from a stamped file, and the scan then refuses id-less
-        # files nondeterministically
-        if isinstance(dt, T.StructType):
-            return T.StructType(
-                [T.StructField(f.name, strip(f.dataType), True) for f in dt.fields]
-            )
-        if isinstance(dt, T.ArrayType):
-            return T.ArrayType(strip(dt.elementType), True)
-        if isinstance(dt, T.MapType):
-            return T.MapType(strip(dt.keyType), strip(dt.valueType), True)
-        return dt
-
-    return spark.read.schema(strip(inferred)).parquet(*paths)
 
 
 def iceberg_snapshot_at_timestamp(path: str, ts_ms: int) -> int:
@@ -1429,7 +1400,10 @@ def read_iceberg_table(
 
     The rows are :func:`_visible_scan`'s — the scan the row-level DML
     shares: v2/v3 delete files applied at scan time, evolved and
-    renamed columns, partition fill and v3 defaults and row ids."""
+    renamed columns, partition fill and v3 defaults and row ids. The
+    whole read is planned from the metadata file and the manifests,
+    so building it runs no Spark job; the rows are read only when the
+    DataFrame is."""
     if timestamp_ms is not None:
         if snapshot_id is not None or version is not None:
             raise ValueError(
@@ -1461,6 +1435,31 @@ def read_iceberg_table(
     return _visible_scan(spark, path, meta, planned, row_ids=with_row_ids)
 
 
+def _read_schema(schema: T.StructType, cands: dict[str, list[str]],
+                 row_ids: bool) -> T.StructType:
+    """The data files' read schema, from the table metadata alone: the
+    current fields of ``schema``; each historical name of a renamed
+    field (``cands``, :func:`_name_candidates`), typed as that field
+    (:func:`_unify_renamed` folds it back); and the v3 lineage columns
+    when ``row_ids``. Spark resolves the columns by name and reads one
+    a file lacks as NULL, so planning the scan opens no footer: a
+    column added after a file was written, or an identity-partition
+    source a migrated file omits, reads NULL there."""
+    fields = list(schema.fields)
+    seen = {f.name.lower() for f in fields}
+    extra = [
+        (h, schema[name].dataType)
+        for name, hist in cands.items() for h in hist[1:]
+    ]
+    if row_ids:
+        extra += [(c, T.LongType()) for c in _LINEAGE_COLS]
+    for name, dt in extra:
+        if name.lower() not in seen:
+            seen.add(name.lower())
+            fields.append(T.StructField(name, dt, True))
+    return T.StructType(fields)
+
+
 def _visible_scan(spark: SparkSession, path: str, meta: dict, planned: tuple,
                   keys: bool = False, row_ids: bool = False) -> DataFrame:
     """Distributed scan of the VISIBLE rows of a planned snapshot
@@ -1471,116 +1470,58 @@ def _visible_scan(spark: SparkSession, path: str, meta: dict, planned: tuple,
     ``keys`` adds the ``__fp``/``__pos`` scan keys, ``row_ids`` the v3
     lineage columns.
 
-    - mergeSchema unions the file footers, so files written BEFORE an
-      add-column evolution null-fill the new columns per file (the
-      spec's read semantics for appended field ids); renamed columns
+    Like Delta's, the scan is planned from the table's own metadata
+    (here: metadata file and manifests), so building it runs no Spark
+    job.
+
+    - The read schema is :func:`_read_schema`'s: files written BEFORE
+      an add-column evolution read the new column as NULL (the spec's
+      read semantics for appended field ids), and renamed columns
       coalesce their historical names (schema.name-mapping.default).
+    - Per-file constants are :func:`per_file` lookups on ``__fp``.
+      An identity-partition source column is filled from the
+      manifest's partition tuple wherever the file holds NULL: a row
+      can only sit in a file whose tuple matches its own value, so
+      the coalesce is exact, and it reconstitutes the column for
+      migrated files that omit it. v3 files predating a column read
+      its initial-default (the file's column presence comes from its
+      footer, read on the driver). v3 row ids derive from
+      first_row_id + position.
     - Position, deletion-vector and equality deletes are applied by
       :func:`_apply_deletes` (spec §Row-Level Deletes).
-    - Identity-partition source columns a file omits come from the
-      manifest's partition tuple; v3 files predating a column read its
-      initial-default; v3 row ids derive from first_row_id + position.
 
     A scan that needs none of the file-keyed steps (no deletes, no
-    fill, no defaults, no keys or row ids) plans no ``_metadata``
-    column and no join."""
+    partition values, no defaults, no keys or row ids) plans no
+    ``_metadata`` column and no join."""
     sid_used, files, deletes = planned
     schema = _spark_schema(meta)
-    names = {f.name for f in schema.fields}
     cands = _name_candidates(meta)
-    df = _unify_renamed(_merged_scan(spark, sorted(p for p, _, _ in files)),
-                        cands)
-    scanned_cols = set(df.columns)
-    # Identity-partition source columns may be ABSENT from any SUBSET
-    # of the data files: hive-migrated foreign files (add_files) omit
-    # them, engine-written files keep them, and one table holds both
-    # after any post-migrate write. Attach the manifest's typed
-    # partition tuple per file via ONE broadcast map (metadata-scale,
-    # a row per file) and COALESCE — a row can only sit in a
-    # directory whose tuple matches its own value, so the coalesce is
-    # exact. GATED so pure engine-written tables (every file carries
-    # every column) pay no extra join: runs only when a source column
-    # is absent from the merged footprint, or the table is marked
-    # migrated (add_files sets the property — its foreign files may
-    # omit columns that OTHER files carry, invisible to merged-schema
-    # inference).
-    migrated = (meta.get("properties") or {}).get(
-        "spark-graft.migrated"
-    ) == "true"
-    part_keys = {k for _p, part, _s in files for k in (part or {})}
-    fill = sorted(
-        k for k in part_keys
-        if k in names and (migrated or k not in scanned_cols)
+    df = _unify_renamed(
+        spark.read.schema(_read_schema(schema, cands, row_ids))
+        .parquet(*sorted(p for p, _, _ in files)),
+        cands,
     )
-    if not any(
-        (part or {}).get(c) is not None for _p, part, _s in files for c in fill
-    ):
-        fill = []
-    defaults = _field_defaults(meta)
-    if keys or deletes or fill or defaults or row_ids:
+    fill: dict[str, dict[str, object]] = {}
+    for p, part, _s in files:
+        for c, v in (part or {}).items():
+            if c in cands and v is not None:
+                if isinstance(schema[c].dataType, T.DateType):
+                    v = _EPOCH_DAY + datetime.timedelta(days=int(v))
+                fill.setdefault(c, {})[_norm_fp_py(p)] = v
+    lacking = _files_lacking_defaults(meta, files, cands)
+    if keys or deletes or fill or lacking or row_ids:
         df = with_scan_keys(df)
+    for c, vals in sorted(fill.items()):
+        df = df.withColumn(
+            c, F.coalesce(F.col(c), per_file(vals, schema[c].dataType))
+        )
+    for c, (dv, typ, fps) in lacking.items():
+        df = df.withColumn(
+            c,
+            F.when(per_file(dict.fromkeys(fps, 1)) == 1, F.lit(dv).cast(typ))
+            .otherwise(F.col(c)),
+        )
     df = _apply_deletes(spark, df, files, deletes, meta)
-    for f in schema.fields:
-        if f.name not in df.columns:
-            # column in NO data file: either evolution added it after
-            # every present file was written (reads NULL), or it is an
-            # identity-partition source every file omits (filled below)
-            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    if fill:
-        pv_df = local_frame(
-            spark, [
-                tuple(
-                    [_norm_fp_py(p)]
-                    + [None if (part or {}).get(c) is None
-                       else str((part or {}).get(c)) for c in fill]
-                )
-                for p, part, _s in files
-            ],
-            T.StructType(
-                [T.StructField("__pv_key", T.StringType())]
-                + [T.StructField(f"__pv_{c}", T.StringType()) for c in fill]
-            ),
-        )
-        df = df.join(
-            F.broadcast(pv_df), F.col("__fp") == F.col("__pv_key"), "left"
-        )
-        for c in fill:
-            df = df.withColumn(
-                c,
-                F.coalesce(F.col(c), F.col(f"__pv_{c}").cast(schema[c].dataType)),
-            )
-    if defaults:
-        # v3 §Default Values: rows from files that PREDATE the column
-        # read initial-default, not NULL — decided per FILE by footer
-        # column presence (footer-only driver reads, metadata-scale),
-        # so new files storing explicit NULLs keep them
-        import pyarrow.parquet as pq
-
-        pres_rows = []
-        for p, _part, _s in files:
-            try:
-                present = set(pq.read_schema(p).names)
-            except Exception:
-                present = set()
-            pres_rows.append(tuple(
-                [_norm_fp_py(p)]
-                + [int(any(h in present for h in cands.get(c, [c])))
-                   for c in defaults]
-            ))
-        pres_df = local_frame(
-            spark, pres_rows,
-            ", ".join(["__dflt_fp string"]
-                      + [f"__has_{i} int" for i in range(len(defaults))]),
-        )
-        df = df.join(
-            F.broadcast(pres_df), F.col("__fp") == F.col("__dflt_fp"), "left",
-        )
-        for i, (c, (dv, typ)) in enumerate(defaults.items()):
-            df = df.withColumn(
-                c,
-                F.when(F.col(f"__has_{i}") == 0, F.lit(dv).cast(typ))
-                .otherwise(F.col(c)),
-            )
     extra = ["__fp", "__pos"] if keys else []
     if row_ids:
         # v3 row lineage: _row_id = first_row_id + position for files
@@ -1592,17 +1533,11 @@ def _visible_scan(spark: SparkSession, path: str, meta: dict, planned: tuple,
         first, seq = (
             per_file({fp: row[i] for fp, *row in lineage}) for i in (0, 1)
         )
-        mat_id, mat_seq = [
-            F.col(c) if c in df.columns else F.lit(None).cast("long")
-            for c in _LINEAGE_COLS
+        mat_id, mat_seq = map(F.col, _LINEAGE_COLS)
+        extra += [
+            F.coalesce(mat_id, first + F.col("__pos")).alias(_LINEAGE_COLS[0]),
+            F.coalesce(mat_seq, seq).alias(_LINEAGE_COLS[1]),
         ]
-        df = df.select(
-            "*",
-            F.coalesce(mat_id, first + F.col("__pos")).alias("__row_id"),
-            F.coalesce(mat_seq, seq).alias("__row_seq"),
-        )
-        extra += [F.col("__row_id").cast("long").alias(_LINEAGE_COLS[0]),
-                  F.col("__row_seq").cast("long").alias(_LINEAGE_COLS[1])]
     return df.select(*typed_columns(df, schema), *extra)
 
 
@@ -3387,6 +3322,36 @@ def _field_defaults(meta: dict) -> dict[str, tuple]:
     return out
 
 
+def _files_lacking_defaults(meta: dict, files: list,
+                            cands: dict[str, list[str]]) -> dict[str, tuple]:
+    """v3 §Default Values: rows from a file that PREDATES a column read
+    its initial-default, not NULL. Decided per FILE by footer column
+    presence under any of the column's names (footer-only driver
+    reads, metadata-scale), so new files storing explicit NULLs keep
+    them. → column → (initial-default, Spark type, the :func:`_norm_fp_py`
+    paths of the files without it), for the columns some file lacks."""
+    defaults = _field_defaults(meta)
+    if not defaults:
+        return {}
+    import pyarrow.parquet as pq
+
+    present = {}
+    for p, _part, _s in files:
+        try:
+            present[_norm_fp_py(p)] = set(pq.read_schema(p).names)
+        except (OSError, ValueError):  # unreadable footer: holds nothing
+            present[_norm_fp_py(p)] = set()
+    out = {}
+    for c, (dv, typ) in defaults.items():
+        fps = [
+            fp for fp, names in present.items()
+            if not any(h in names for h in cands.get(c, [c]))
+        ]
+        if fps:
+            out[c] = (dv, typ, fps)
+    return out
+
+
 def _fill_missing_with_defaults(df: DataFrame, schema: T.StructType,
                                 prev: dict | None) -> DataFrame:
     """Fill schema columns the incoming batch omits: the field's
@@ -3734,25 +3699,12 @@ def rename_iceberg_column(path: str, old: str, new: str) -> int:
     # name mapping: every field keeps its full name history keyed by
     # field id, so files written under ANY historical name resolve
     props = dict(prev.get("properties") or {})
-    mapping = {
-        int(m["field-id"]): list(m.get("names") or [])
-        for m in json.loads(props.get("schema.name-mapping.default", "[]"))
-    }
-    for f in fields:
-        ns = mapping.setdefault(int(f["id"]), [])
-        if f["name"] not in ns:
-            ns.append(f["name"])
-    renamed_id = None
+    props["schema.name-mapping.default"] = _name_mapping(
+        prev, [(int(f["id"]), f["name"]) for f in fields] + [(old_id, new)]
+    )
     for f in fields:
         if f["name"] == old:
             f["name"] = new
-            renamed_id = int(f["id"])
-    ns = mapping.setdefault(renamed_id, [])
-    if new not in ns:
-        ns.append(new)
-    props["schema.name-mapping.default"] = json.dumps(
-        [{"field-id": fid, "names": ns} for fid, ns in sorted(mapping.items())]
-    )
 
     new_schema = {**schema, "fields": fields}
     meta = dict(prev)
@@ -3834,16 +3786,8 @@ def drop_iceberg_column(path: str, name: str) -> int:
     # retire the id but KEEP its name history in the mapping — the
     # add-column reuse gate reads it
     props = dict(prev.get("properties") or {})
-    mapping = {
-        int(m["field-id"]): list(m.get("names") or [])
-        for m in json.loads(props.get("schema.name-mapping.default", "[]"))
-    }
-    for f in fields:
-        ns = mapping.setdefault(int(f["id"]), [])
-        if f["name"] not in ns:
-            ns.append(f["name"])
-    props["schema.name-mapping.default"] = json.dumps(
-        [{"field-id": fid, "names": ns} for fid, ns in sorted(mapping.items())]
+    props["schema.name-mapping.default"] = _name_mapping(
+        prev, [(int(f["id"]), f["name"]) for f in fields]
     )
 
     new_schema = {
@@ -3867,14 +3811,7 @@ def _name_candidates(meta: dict) -> dict[str, list[str]]:
     (current first), from ``schema.name-mapping.default``. Fields
     never renamed map to just their own name."""
     by_id = _field_names_by_id(meta)
-    mapping = {
-        int(m["field-id"]): list(m.get("names") or [])
-        for m in json.loads(
-            (meta.get("properties") or {}).get(
-                "schema.name-mapping.default", "[]"
-            )
-        )
-    }
+    mapping = _mapping_names_by_id(meta)
     out = {}
     for fid, name in by_id.items():
         hist = [n for n in mapping.get(fid, []) if n != name]
@@ -4598,29 +4535,10 @@ def add_parquet_files_iceberg(
 
     # name-mapping: REQUIRED for the added files — they carry no
     # parquet field ids, so id-first readers fall back to these names
-    mapping = {
-        int(m["field-id"]): list(m.get("names") or [])
-        for m in json.loads(
-            ((prev or {}).get("properties") or {}).get(
-                "schema.name-mapping.default", "[]"
-            )
-        )
-    }
-    for name, fid in field_ids.items():
-        ns = mapping.setdefault(fid, [])
-        if name not in ns:
-            ns.append(name)
     props = {
-        "schema.name-mapping.default": json.dumps(
-            [
-                {"field-id": fid, "names": ns}
-                for fid, ns in sorted(mapping.items())
-            ]
+        "schema.name-mapping.default": _name_mapping(
+            prev, [(fid, name) for name, fid in field_ids.items()]
         ),
-        # read-side marker: migrated files may omit identity-partition
-        # source columns that OTHER files carry — the reader's
-        # manifest-tuple coalesce must stay on for this table
-        "spark-graft.migrated": "true",
     }
     return _commit_snapshot(
         path, schema, spec_entries, "append", new_files,
@@ -4701,28 +4619,12 @@ def uniform_iceberg_metadata(spark: SparkSession, delta_path: str) -> int:
 
     # Delta data files carry no Iceberg field ids, and partitioned
     # layouts omit the partition source columns from the files —
-    # exactly the add_files read contract (name mapping + the
-    # manifest-tuple coalesce marker)
-    mapping = {
-        int(m["field-id"]): list(m.get("names") or [])
-        for m in json.loads(
-            ((prev or {}).get("properties") or {}).get(
-                "schema.name-mapping.default", "[]"
-            )
-        )
-    }
-    for name, fid in field_ids.items():
-        ns = mapping.setdefault(fid, [])
-        if name not in ns:
-            ns.append(name)
+    # exactly the add_files read contract (name mapping; the reader
+    # fills the partition columns from the manifest tuples)
     props = {
-        "schema.name-mapping.default": json.dumps(
-            [
-                {"field-id": fid, "names": ns}
-                for fid, ns in sorted(mapping.items())
-            ]
+        "schema.name-mapping.default": _name_mapping(
+            prev, [(fid, name) for name, fid in field_ids.items()]
         ),
-        "spark-graft.migrated": "true",
         "delta.universalFormat.enabledFormats": "iceberg",
     }
     return _commit_snapshot(

@@ -60,11 +60,6 @@ def read_transactions_csv(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan (A2 analog for the driver testdata)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def read_jdbc_table(
     spark: SparkSession,
     url: str,

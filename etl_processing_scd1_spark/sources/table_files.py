@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    DataType,
     MapType,
     NumericType,
     StructField,
@@ -275,21 +276,25 @@ def with_scan_keys(df: DataFrame) -> DataFrame:
     )
 
 
-def per_file(values: dict[str, int | None]) -> Column:
-    """The long constant of the scanned row's file: ``values`` (one
+def per_file(values: dict[str, object], dtype: DataType | str = "bigint") -> Column:
+    """The ``dtype`` constant of the scanned row's file: ``values`` (one
     entry per file keyed by :func:`file_key`'s form; NULL for a file
-    it maps to None or omits) looked up by ``__fp``. The optimizer
-    folds the map into one literal, so the lookup costs no join and no
-    Spark job, and a plan that never reads the column prunes it. The
-    map is built from two joined strings (NUL never occurs in a path)
+    it maps to None or omits) looked up by ``__fp``. Each value is
+    written as a string Spark casts to ``dtype`` (``str(v)``: a date
+    goes in as its ISO form). The optimizer folds the map into one
+    literal, so the lookup costs no join and no Spark job, and a plan
+    that never reads the column prunes it. The keys and the values
+    are each one string joined on NUL (which never occurs in a path)
     so that planning costs a few py4j calls whatever the file count."""
     known = {fp: v for fp, v in values.items() if v is not None}
     if not known:
-        return F.lit(None).cast("long")
+        return F.lit(None).cast(dtype)
+    if isinstance(dtype, DataType):
+        dtype = dtype.simpleString()
     return F.map_from_arrays(
         F.split(F.lit("\0".join(known)), "\0"),
-        F.split(F.lit(",".join(map(str, known.values()))), ",")
-        .cast("array<bigint>"),
+        F.split(F.lit("\0".join(map(str, known.values()))), "\0")
+        .cast(f"array<{dtype}>"),
     )[F.col("__fp")]
 
 

@@ -163,13 +163,10 @@ class Warehouse:
         if self.exists(name):
             live = self._live(name)
             if self._has_parquet_parts(live):
-                stored = self._recorded_schema(live)
-                reader = self.spark.read if stored is None else self.spark.read.schema(stored)
-                df = reader.parquet(live)
+                df = self._scan(live)
                 if schema is None:
                     return df
-                stored = stored or df.schema
-                _check_types(name, stored, schema)
+                _check_types(name, self._recorded_schema(live) or df.schema, schema)
                 if df.columns != [f.name for f in schema.fields]:
                     have = set(df.columns)
                     df = df.select(
@@ -186,6 +183,18 @@ class Warehouse:
         return local_frame(self.spark, [], schema)
 
     _SCHEMA = "_schema.json"
+
+    def _scan(self, root: str, files: list[str] | None = None) -> DataFrame:
+        """The table directory ``root`` (or only its ``files``) read
+        with the schema recorded beside it and ``basePath`` at the
+        root, so hive partition directories read as columns and no
+        footer-inference job runs; a directory without the record
+        falls back to inference."""
+        stored = self._recorded_schema(root)
+        reader = self.spark.read.option("basePath", root)
+        if stored is not None:
+            reader = reader.schema(stored)
+        return reader.parquet(*(files or [root]))
 
     def _recorded_schema(self, path: str) -> StructType | None:
         side = os.path.join(path, self._SCHEMA)
@@ -301,7 +310,7 @@ class Warehouse:
 
         self.stage(name, df)
         staged = self._staged[name]
-        rel = self.spark.read.parquet(staged)
+        rel = self._scan(staged)
         pos_cols = [
             (
                 F.conv(
@@ -386,11 +395,7 @@ class Warehouse:
             for f, bits_set in meta["files"].items()
             if pos.issubset(bits_set)
         ]
-        df = (
-            self.spark.read.parquet(*admitted)
-            if admitted
-            else self.spark.read.parquet(live).limit(0)
-        )
+        df = self._scan(live, admitted) if admitted else self._scan(live).limit(0)
         return df.filter(F.col(meta["key_col"]).cast("string") == str(value))
 
     def stage_append(
@@ -638,7 +643,7 @@ class Warehouse:
         # that run — the retained dir is the true as-of state
         vdir = f"{self._live(name)}.v_{run_id}"
         if os.path.isdir(vdir):
-            return self.spark.read.parquet(vdir)
+            return self._scan(vdir)
         m = self.manifest()
         if m and m.get("run_id") == run_id:
             return self.read(name)
@@ -670,7 +675,7 @@ class Warehouse:
                     if (mm := stamp.fullmatch(fn)) and mm.group(1) <= run_id
                 ]
                 if files:
-                    return self.spark.read.parquet(*files)
+                    return self._scan(live, files)
         raise KeyError(
             f"no retained version of {name!r} for run {run_id!r} "
             f"(retain_versions={self.retain_versions})"

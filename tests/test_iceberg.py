@@ -337,6 +337,48 @@ class TestForeignTable:
         assert _rows(got) == _rows(_df(spark, 0, 30))
 
 
+class TestMetadataPlannedScan:
+    def test_read_builds_without_spark_jobs(self, spark, tmp_path):
+        """The scan is planned from the table metadata alone: on a
+        table with an identity partition, a renamed column, a position
+        delete and an equality delete, building the read runs no Spark
+        job (no footer inference, no per-file join input), and the
+        rows are the visible ones."""
+        from etl_processing_scd1_spark.sources.iceberg import (
+            _load_metadata,
+            _snapshot_files,
+            delete_iceberg_rows,
+            rename_iceberg_column,
+            upsert_iceberg_table,
+        )
+
+        from .conftest import spark_jobs
+
+        path = str(tmp_path / "planned")
+        write_iceberg_table(_df(spark, 0, 12), path, partition_by=["part"])
+        rename_iceberg_column(path, "v", "val")
+        upsert_iceberg_table(                      # equality delete on k
+            spark.range(8, 14).select(
+                F.col("id").alias("k"),
+                (F.col("id") * 10 + 1).alias("val"),
+                (F.col("id") % 3).cast("string").alias("part"),
+            ),
+            path, ["k"],
+        )
+        delete_iceberg_rows(spark, path, "k = 2")  # position delete
+        deletes = _snapshot_files(path, _load_metadata(path), None)[2]
+        assert sorted(d["content"] for d in deletes) == [1, 2]
+
+        got = []
+        assert spark_jobs(
+            spark, lambda: got.append(read_iceberg_table(spark, path))
+        ) == 0
+        assert sorted((r.k, r.val, r.part) for r in got[0].collect()) == sorted(
+            [(k, k * 10, str(k % 3)) for k in range(8) if k != 2]
+            + [(k, k * 10 + 1, str(k % 3)) for k in range(8, 14)]
+        )
+
+
 class TestAvroDistributedScan:
     def test_multi_file_parse_nullable_union_and_source_file(self, spark, tmp_path):
         import json

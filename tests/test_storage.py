@@ -326,6 +326,26 @@ def test_append_table_time_travel_via_run_stamps(spark, tmp_path):
     assert asof.count() == 2
     assert {r.run for r in asof.collect()} == {"r1"}
 
+    # a hive-partitioned append table (run_day's fact layout): the as-of
+    # subset keeps the partition column, typed as recorded
+    wp = Warehouse(spark, str(tmp_path / "whp"))
+    for run, n in (("r1", 2), ("r2", 3)):
+        wp.stage_append(
+            "facts",
+            spark.createDataFrame(
+                [(run, i, f"2024-01-0{i % 2 + 1}") for i in range(n)],
+                "run string, i int, p_day string",
+            ),
+            partition_cols=["p_day"],
+        )
+        wp.publish(run_id=run)
+    assert wp.read("facts").columns == ["run", "i", "p_day"]
+    asof = wp.read_as_of("facts", "r1")
+    assert asof.schema == wp.read("facts").schema
+    assert sorted(tuple(r) for r in asof.collect()) == [
+        ("r1", 0, "2024-01-01"), ("r1", 1, "2024-01-02"),
+    ]
+
 
 def test_interrupted_publish_with_retention_preserves_version(spark, tmp_path):
     """Crash between swap and version-rename: recovery must finish the
